@@ -7,31 +7,33 @@ PySpark-native rebuild of the reference's storage2/SDK capability surface
 |-----------------------|---------------------------------|------|
 | append/overwrite      | transaction.go:32-82            | Spark write + manifest commit |
 | delete(predicate)     | sdk/dataset.go:1132             | deletion-vector sidecars (deletion_bitmap.go:31) |
-| update(predicate)     | update.go:20-82                 | copy-on-write fragment rewrite |
-| merge insert (upsert) | merge_insert.go:19-134          | key join + rewrite/append |
+| update(predicate)     | update.go:20-82                 | deletion vectors + appended row images |
+| merge insert (upsert) | merge_insert.go:19-134          | pruned key join + deletion vectors + append |
 | time travel / tags    | version.go:20-42, tags.go:9-32  | manifest per version + _refs.json |
 | optimistic commit     | commit_txn.go:11, conflict.go:81| O_EXCL manifest create + diff rebase |
-| compaction            | compaction_planner.go:34-254    | bin-packed rewrite commit |
+| compaction            | compaction_planner.go:34-254    | size-tiered bin-packed rewrite commit |
 | vacuum                | cleanup.go:17-101               | retention sweep of unreferenced files |
 | statistics            | statistics.go:16-165            | parquet-footer stats in the manifest |
 | file pruning          | zonemap_index.go:18-63          | manifest min/max pruning before the scan |
 | schema evolution      | sdk/dataset.go:623-816          | manifest schema rewrite + scan-time defaults |
 
-Scale design: every data movement is a Spark job over only the affected
-fragments (copy-on-write touches matched files, merge-on-read deletion
-vectors avoid rewrites entirely); metadata is O(fragments) JSON on the
-driver. Commits are a single atomic file create, so writers on a shared
-store (S3 conditional put / HDFS rename) follow the identical protocol.
+Scale design: every commit costs O(rows changed): DELETE, UPDATE and MERGE
+write deletion vectors plus the new rows, never rewrite a fragment, and
+compaction rewrites a file only once as many smaller bytes join it;
+metadata is O(fragments) JSON on the driver. Commits are a single atomic
+file create, so writers on a shared store (S3 conditional put / HDFS
+rename) follow the identical protocol.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import shutil
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,6 +93,19 @@ def _stat_key(v: Any) -> Any:
 
 _BITMAP_MAX_NDV = 64
 
+# compaction: files below this size form one tier (they always bin
+# together), and a fragment is rewritten once this share of its rows is
+# deleted (Lance's materialize-deletions threshold)
+_TIER_FLOOR_BYTES = 1 << 20
+_REWRITE_DELETED_FRAC = 0.1
+
+# rows per file written for deletion sidecars and update images: tiny
+# statements land as one file, huge ones do not serialize through one task
+_ROWS_PER_FILE = 10_000_000
+# at most this many literal values travel in a plan as an IN list; beyond
+# it ids ship as a broadcast relation and keys prune by [min, max]
+_IN_LIST_MAX = 10_000
+
 # Detached-txn expiry grace: file-reclaiming paths (vacuum unpinning,
 # cleanup_expired) act only this many seconds AFTER expires_at, while
 # commit_staged refuses exactly AT expires_at — so a commit that passed its
@@ -106,6 +121,25 @@ _CLAIM_TTL = 900.0
 _INFLIGHT_TTL = 24 * 3600.0
 
 
+def _open_parquet(path: str):
+    """(pyarrow ParquetFile, size in bytes) for a local path or a URI-rooted
+    dataset's file (s3://, s3a://): ParquetFile alone treats a URI as a
+    local path, so URIs resolve through pyarrow's own filesystem layer.
+    s3a:// is Hadoop's connector name for the same bucket; pyarrow knows
+    it as s3://."""
+    import pyarrow.parquet as pq
+
+    if "://" not in path:
+        return pq.ParquetFile(path), os.path.getsize(path)
+    from pyarrow import fs as pafs
+
+    filesystem, inner = pafs.FileSystem.from_uri(path.replace("s3a://", "s3://", 1))
+    return (
+        pq.ParquetFile(filesystem.open_input_file(inner)),
+        filesystem.get_file_info(inner).size,
+    )
+
+
 def _collect_stats(
     local_path: str, bitmap_columns: list[str] | None = None
 ) -> tuple[int, int, dict[str, dict[str, Any]]]:
@@ -118,23 +152,7 @@ def _collect_stats(
     when min/max ranges interleave and the zonemap cannot. The set is read
     from the column data (one local column scan at write time) and dropped
     if NDV exceeds a bound — a wide set would neither compress nor prune."""
-    import pyarrow.parquet as pq
-
-    if "://" in local_path:
-        # URI-rooted datasets (s3://, s3a://): resolve through pyarrow's
-        # own filesystem layer — ParquetFile alone treats a URI as a
-        # local path. s3a:// is Hadoop's connector name for the same
-        # bucket; pyarrow knows it as s3://
-        from pyarrow import fs as pafs
-
-        filesystem, inner = pafs.FileSystem.from_uri(
-            local_path.replace("s3a://", "s3://", 1)
-        )
-        pf = pq.ParquetFile(filesystem.open_input_file(inner))
-        nbytes = filesystem.get_file_info(inner).size
-    else:
-        pf = pq.ParquetFile(local_path)
-        nbytes = os.path.getsize(local_path)
+    pf, nbytes = _open_parquet(local_path)
     md = pf.metadata
     stats: dict[str, dict[str, Any]] = {}
     for ci in range(md.num_columns):
@@ -212,6 +230,9 @@ class _Txn:
     added: list[Fragment] = field(default_factory=list)
     removed_ids: set[int] = field(default_factory=set)
     new_deletes: dict[int, list[str]] = field(default_factory=dict)
+    # fragment id -> rows its new_deletes delete (absent: unknown, e.g. a
+    # stage written before the count was kept)
+    deleted_rows: dict[int, int] = field(default_factory=dict)
     schema_json: str | None = None
     column_defaults: dict[str, str] | None = None
     column_mapping: dict[str, str] | None = None
@@ -786,14 +807,14 @@ class Dataset:
                 if f.id in txn.removed_ids:
                     continue
                 if f.id in txn.new_deletes:
-                    f = Fragment(
-                        id=f.id,
-                        path=f.path,
-                        rows=f.rows,
-                        bytes=f.bytes,
-                        stats=f.stats,
+                    n = txn.deleted_rows.get(f.id)
+                    f = replace(
+                        f,
                         deletion_files=list(f.deletion_files) + txn.new_deletes[f.id],
-                        row_start=f.row_start,
+                        deleted_rows=(
+                            None if n is None or f.deleted_rows is None
+                            else f.deleted_rows + n
+                        ),
                     )
                 fragments.append(f)
             added = list(txn.added)
@@ -804,21 +825,7 @@ class Dataset:
                 # a duplicated id would drop BOTH fragments). Reassign from
                 # the rebased base, like the reference's conflict.go rebase.
                 nid = base.max_fragment_id + 1
-                reassigned: list[Fragment] = []
-                for f in added:
-                    reassigned.append(
-                        Fragment(
-                            id=nid,
-                            path=f.path,
-                            rows=f.rows,
-                            bytes=f.bytes,
-                            stats=f.stats,
-                            deletion_files=list(f.deletion_files),
-                            row_start=f.row_start,
-                        )
-                    )
-                    nid += 1
-                added = reassigned
+                added = [replace(f, id=nid + i) for i, f in enumerate(added)]
             fragments.extend(added)
         maxid = max(
             [base.max_fragment_id] + [f.id for f in fragments], default=0
@@ -838,15 +845,7 @@ class Dataset:
             for f in sorted(
                 (f for f in fragments if f.row_start == -1), key=lambda x: x.id
             ):
-                resolved[f.id] = Fragment(
-                    id=f.id,
-                    path=f.path,
-                    rows=f.rows,
-                    bytes=f.bytes,
-                    stats=f.stats,
-                    deletion_files=list(f.deletion_files),
-                    row_start=next_rid,
-                )
+                resolved[f.id] = replace(f, row_start=next_rid)
                 next_rid += f.rows
             fragments = [resolved.get(f.id, f) for f in fragments]
         if txn.stats_patch:
@@ -865,17 +864,7 @@ class Dataset:
                     stats.setdefault(c, {"min": None, "max": None, "nulls": 0})[
                         "distinct"
                     ] = vals
-                patched.append(
-                    Fragment(
-                        id=f.id,
-                        path=f.path,
-                        rows=f.rows,
-                        bytes=f.bytes,
-                        stats=stats,
-                        deletion_files=list(f.deletion_files),
-                        row_start=f.row_start,
-                    )
-                )
+                patched.append(replace(f, stats=stats))
             fragments = patched
         indexes = {n: dict(d) for n, d in base.indexes.items()}
         if txn.index_put:
@@ -990,6 +979,17 @@ class Dataset:
 
     # ----------------------------------------------------------------- scan
     @staticmethod
+    def _quoted_end(pred: str, i: int) -> int:
+        """Index just past the string literal opening at ``pred[i]``, with
+        Spark's lexing: a backslash escapes the next character, so ``\\'``
+        does not close the literal (``''`` reads as two adjacent literals,
+        which splits the same way)."""
+        q, j, n = pred[i], i + 1, len(pred)
+        while j < n and pred[j] != q:
+            j += 2 if pred[j] == "\\" else 1
+        return min(j + 1, n)
+
+    @staticmethod
     def _split_top_level_and(pred: str) -> list[str] | None:
         """Split a predicate on TOP-LEVEL (paren-depth 0, outside quotes)
         AND keywords. Returns None when a top-level OR exists: with
@@ -999,7 +999,7 @@ class Dataset:
         is fine — ``(a = 1 OR b = 2) AND c = 3`` still requires c = 3."""
         parts: list[str] = []
         buf: list[str] = []
-        depth, quote = 0, None
+        depth = 0
         i, n = 0, len(pred)
         up = pred.upper()
 
@@ -1012,16 +1012,10 @@ class Dataset:
 
         while i < n:
             ch = pred[i]
-            if quote:
-                buf.append(ch)
-                if ch == quote:
-                    quote = None
-                i += 1
-                continue
             if ch in ("'", '"'):
-                quote = ch
-                buf.append(ch)
-                i += 1
+                j = Dataset._quoted_end(pred, i)
+                buf.append(pred[i:j])
+                i = j
                 continue
             if ch == "(":
                 depth += 1
@@ -1064,7 +1058,7 @@ class Dataset:
                 vals = []
                 for lit in im.group(2).split(","):
                     lit = lit.strip()
-                    if lit.startswith("'") and lit.endswith("'"):
+                    if re.fullmatch(r"'[^'\\]*'", lit):
                         vals.append(lit[1:-1])
                     elif re.fullmatch(r"-?\d+", lit):
                         vals.append(int(lit))
@@ -1077,7 +1071,7 @@ class Dataset:
                     out.append((im.group(1), "in", vals))
                 continue
             m = re.match(
-                r"^\s*(\w+)\s*(>=|<=|<>|!=|=|<|>)\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$",
+                r"^\s*(\w+)\s*(>=|<=|<>|!=|=|<|>)\s*('[^'\\]*'|-?\d+(?:\.\d+)?)\s*$",
                 part,
             )
             if not m:
@@ -1107,7 +1101,7 @@ class Dataset:
         the residual filter."""
         import re
 
-        lit = r"(?:'[^']*'|-?\d+(?:\.\d+)?)"
+        lit = r"(?:'[^'\\]*'|-?\d+(?:\.\d+)?)"
         pat = re.compile(
             rf"(?is)\b(\w+)\s+BETWEEN\s+({lit})\s+AND\s+({lit})"
         )
@@ -1115,9 +1109,8 @@ class Dataset:
         i, n = 0, len(pred)
         while i < n:
             ch = pred[i]
-            if ch == "'":
-                j = pred.find("'", i + 1)
-                j = n if j < 0 else j + 1
+            if ch in ("'", '"'):
+                j = Dataset._quoted_end(pred, i)
                 out.append(pred[i:j])
                 i = j
                 continue
@@ -1215,27 +1208,49 @@ class Dataset:
             intervals, ((rid, rid) for rid in ids), hits
         )
 
+    def _uncovered(self, name: str, stop_early: bool = False) -> list[Fragment] | None:
+        """Fragments of this version whose live rows index ``name`` may
+        lack — None when a manifest since its covers_version was vacuumed
+        (coverage unprovable). Walks the history once: a fragment is
+        covered if it was in the covers_version manifest and has lost rows
+        since, never gained them (its deletion files only grew), or if a
+        compaction ("rewrite") produced it from inputs that were all
+        covered — rewrites keep stable row ids and live rows. Everything
+        else (appends, update images, merges, restores) is uncovered.
+        ``stop_early`` returns at the first uncovered fragment seen."""
+        cv = self.manifest.indexes[name]["covers_version"]
+        try:
+            prev = self._load(cv) if cv != self.version else self.manifest
+            covered = {f.id: set(f.deletion_files) for f in prev.fragments}
+            for v in range(cv + 1, self.version + 1):
+                cur = self._load(v) if v != self.version else self.manifest
+                prev_ids = prev.fragment_ids()
+                inputs_covered = cur.operation == "rewrite" and (
+                    prev_ids - cur.fragment_ids() <= covered.keys()
+                )
+                nxt = {}
+                for f in cur.fragments:
+                    dels, was = set(f.deletion_files), covered.get(f.id)
+                    if (was is not None and dels >= was) or (
+                        inputs_covered and f.id not in prev_ids
+                    ):
+                        nxt[f.id] = dels
+                    elif stop_early:
+                        return [f]
+                covered, prev = nxt, cur
+        except FileNotFoundError:
+            return None
+        return [f for f in self.manifest.fragments if f.id not in covered]
+
     def _routing_usable(self, name: str) -> bool:
         """True when an index is sound for SCAN ROUTING even if not
         strictly fresh: probes may return a SUPERSET of live matches
-        (deleted rows' ids are harmless — the deletion-vector anti-join and
-        the residual filter drop them) but must never MISS one. That holds
-        as long as no operation since covers_version added rows or changed
-        indexed values: deletes only remove rows, compaction ("rewrite")
-        only repacks the same rows under their stable row ids, and index
-        commits touch no data. Appends/updates/overwrites/merges/restores
-        disqualify (new or changed keys the index has never seen)."""
-        desc = self.manifest.indexes.get(name)
-        if desc is None:
+        (deleted or superseded rows' ids are harmless — the deletion-vector
+        anti-join and the residual filter drop them) but must never MISS
+        one. That holds while no fragment is uncovered (see _uncovered)."""
+        if name not in self.manifest.indexes:
             return False
-        for v in range(desc["covers_version"] + 1, self.version + 1):
-            try:
-                op = self._load(v).operation
-            except FileNotFoundError:
-                return False  # vacuumed history: can't prove soundness
-            if op not in ("index", "delete", "rewrite"):
-                return False
-        return True
+        return self._uncovered(name, stop_early=True) == []
 
     @staticmethod
     def _trace_entry(
@@ -1733,22 +1748,14 @@ class Dataset:
         else:
             paths = [os.path.join(self.path, f.path) for f in sel]
             df = self.spark.read.schema(self._read_schema(schema)).parquet(*paths)
-            del_files = sorted({d for f in sel for d in f.deletion_files})
-            if del_files:
+            if any(f.deletion_files for f in sel):
                 # consume the _metadata pseudo-column before any projection
                 # (_to_logical) can cut it off the file-source relation
                 df = df.withColumn(
                     _FILE_COL,
                     F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
                 ).withColumn(_POS_COL, F.col("_metadata.row_index"))
-                dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
-                    *[os.path.join(self.path, d) for d in del_files]
-                )
-                df = df.join(
-                    dels,
-                    (df[_FILE_COL] == dels["file"]) & (df[_POS_COL] == dels["pos"]),
-                    "left_anti",
-                ).drop(_FILE_COL, _POS_COL)
+                df = self._drop_deleted(df, sel).drop(_FILE_COL, _POS_COL)
             df = self._to_logical(df)
         for colname, default_expr in m.column_defaults.items():
             if colname in df.columns:
@@ -1883,7 +1890,7 @@ class Dataset:
                     & (F.col(_ROWID) <= F.col("__run_hi")),
                     "leftsemi",
                 )
-        elif len(idset) > 10_000:
+        elif len(idset) > _IN_LIST_MAX:
             # a literal IN list this size bloats the plan (and its
             # serialized form) linearly — ship the ids once as a broadcast
             # relation instead; the semi join stays a single scan
@@ -1923,33 +1930,23 @@ class Dataset:
             )
             .withColumn(_POS_COL, F.col("_metadata.row_index"))
         )
-        df = self._to_logical(df)
-        del_files = sorted({d for f in frags for d in f.deletion_files})
-        if del_files:
-            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
-                *[os.path.join(self.path, d) for d in del_files]
-            )
-            df = df.join(
-                dels,
-                (df[_FILE_COL] == dels["file"]) & (df[_POS_COL] == dels["pos"]),
-                "left_anti",
-            )
+        df = self._drop_deleted(self._to_logical(df), frags)
         if with_row_id:
             # file -> row_start lookup as a broadcast join, not a map
             # literal: O(fragments) can reach 10^5 at scale and a giant
             # create_map expression tree would choke Catalyst, while a
-            # broadcast hash join of a kilobyte-sized table is free
+            # broadcast hash join of a kilobyte-sized table is free. Built
+            # from Arrow: a DataFrame of Python rows costs a Python worker
+            # round trip on every scan
+            import pyarrow as pa
+
             starts = self.spark.createDataFrame(
-                [
-                    (os.path.basename(f.path), f.row_start)
-                    for f in frags
-                ],
-                StructType(
-                    [
-                        StructField("__ds_rs_file", StringType(), False),
-                        StructField("__ds_rs_start", LongType(), True),
-                    ]
-                ),
+                pa.table({
+                    "__ds_rs_file": pa.array(
+                        [os.path.basename(f.path) for f in frags], pa.string()
+                    ),
+                    "__ds_rs_start": pa.array([f.row_start for f in frags], pa.int64()),
+                })
             )
             df = df.join(
                 F.broadcast(starts),
@@ -1964,6 +1961,38 @@ class Dataset:
                 ),
             ).drop("__ds_rs_file", "__ds_rs_start", _ROWID_STORED)
         return df
+
+    def _drop_deleted(self, df: DataFrame, frags: list[Fragment]) -> DataFrame:
+        """Apply the fragments' deletion vectors to a scan carrying the
+        lineage columns. Up to ``_IN_LIST_MAX`` deleted rows (the manifest
+        counts them) are read from the sidecars by the driver and dropped
+        by a literal (file, position) filter — no join, so no extra Spark
+        job on every read; more take a left-anti join with the sidecars."""
+        del_files = sorted({d for f in frags for d in f.deletion_files})
+        if not del_files:
+            return df
+        counts = [f.deleted_rows for f in frags if f.deletion_files]
+        if None in counts or sum(counts) > _IN_LIST_MAX:
+            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
+                *[os.path.join(self.path, d) for d in del_files]
+            )
+            return df.join(
+                dels,
+                (df[_FILE_COL] == dels["file"]) & (df[_POS_COL] == dels["pos"]),
+                "left_anti",
+            )
+        names = {os.path.basename(f.path) for f in frags}
+        by_file: dict[str, list[int]] = {}
+        for d in del_files:
+            t = _open_parquet(os.path.join(self.path, d))[0].read(columns=["file", "pos"])
+            for fn, pos in zip(t.column("file").to_pylist(), t.column("pos").to_pylist()):
+                if fn in names:
+                    by_file.setdefault(fn, []).append(pos)
+        dead = None
+        for fn, ps in sorted(by_file.items()):
+            c = (F.col(_FILE_COL) == fn) & F.col(_POS_COL).isin(sorted(ps))
+            dead = c if dead is None else dead | c
+        return df if dead is None else df.filter(~dead)
 
     def _frag_by_basename(self) -> dict[str, Fragment]:
         return {os.path.basename(f.path): f for f in self.manifest.fragments}
@@ -2022,158 +2051,329 @@ class Dataset:
         scan_frags, _ = self.plan_scan(predicate, use_indexes=False)
         if not scan_frags:
             return self
-        scan = self._scan_with_lineage(scan_frags)
-        # persisted: the per-file count job below materializes the matched
-        # rows once, and the deletion-file write re-reads the CACHE instead
-        # of re-evaluating the predicate scan (r2 judge finding: two full
-        # scans of the matched fragments per delete)
-        hits = (
-            scan.filter(F.expr(predicate))
-            .select(F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos"))
-            .persist()
+        plan = self._plan_hits(
+            m,
+            self._scan_with_lineage(scan_frags)
+            .filter(F.expr(predicate))
+            .select(F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos")),
         )
-        try:
-            return self._delete_with_hits(m, hits)
-        finally:
-            hits.unpersist()
-
-    def _delete_with_hits(self, m: Manifest, hits: DataFrame) -> "Dataset":
-        plan = self._plan_delete(m, hits)
         if plan is None:
             return self
-        dead_ids, new_deletes = plan
+        dead_ids, new_deletes, deleted_rows = plan
         self._commit(
             _Txn(
                 op="delete",
                 read_version=self.version,
                 removed_ids=dead_ids,
                 new_deletes=new_deletes,
+                deleted_rows=deleted_rows,
             )
         )
         return self
 
-    def _plan_delete(
-        self, m: Manifest, hits: DataFrame
-    ) -> tuple[set[int], dict[int, list[str]]] | None:
-        """Materialize deletion sidecars for ``hits`` and return the manifest
-        diff (fully-dead fragment ids, fragment -> deletion files) WITHOUT
-        committing — shared by the immediate delete() and the detached
-        stage_delete()."""
-        # driver_sized (here and on the sibling metadata collects below):
-        # the answer is a per-file count map bounded by fragment count, so
-        # AQE's per-stage jobs are pure scheduler latency — one multi-stage
-        # job instead of 2-3 sequential ones per collect
+    def _few_rows(self, df: DataFrame):
+        """``df``'s rows as an Arrow table when it has at most
+        ``_IN_LIST_MAX`` of them, else None. A statement-sized result moves
+        to the driver in one scan, so the rest of its commit needs no
+        shuffle and no second scan; a DataFrame made back from the table
+        (``spark.createDataFrame(table, schema)``) runs without Python
+        workers."""
         with driver_sized(self.spark):
-            per_file = {
-                r["file"]: r["cnt"]
-                for r in hits.groupBy("file")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-        if not per_file:
-            return None
-        by_name = self._frag_by_basename()
-        # live row counts in ONE job: read every deletion file once and
-        # aggregate per target file, instead of a Spark job per fragment
-        live = {os.path.basename(f.path): f.rows for f in m.fragments}
-        all_dels = sorted({d for f in m.fragments for d in f.deletion_files})
-        if all_dels:
+            t = df.limit(_IN_LIST_MAX + 1).toArrow()
+        return t if t.num_rows <= _IN_LIST_MAX else None
+
+    @staticmethod
+    def _pairs(t, file_col: str, pos_col: str) -> list[tuple[str, int]]:
+        return list(zip(t.column(file_col).to_pylist(), t.column(pos_col).to_pylist()))
+
+    def _plan_hits(self, m: Manifest, hits: DataFrame):
+        """_plan_delete over a (file, pos) DataFrame: few hits go through
+        the driver; many stay distributed, persisted so the count and the
+        sidecar write share one scan."""
+        t = self._few_rows(hits)
+        if t is not None:
+            return self._plan_delete(m, self._pairs(t, "file", "pos"))
+        hits = hits.persist()
+        try:
+            return self._plan_delete(m, hits)
+        finally:
+            hits.unpersist()
+
+    def _deleted_counts(self, frags: list[Fragment]) -> dict[int, int]:
+        """Rows each fragment's sidecars delete: the manifest's count, or,
+        for fragments committed before the count was kept, one distributed
+        pass over just their sidecars."""
+        out = {f.id: f.deleted_rows for f in frags if f.deleted_rows is not None}
+        unknown = {os.path.basename(f.path): f.id for f in frags if f.deleted_rows is None}
+        if unknown:
+            sidecars = sorted(
+                {d for f in frags if f.deleted_rows is None for d in f.deletion_files}
+            )
             dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
-                *[os.path.join(self.path, d) for d in all_dels]
+                *[os.path.join(self.path, d) for d in sidecars]
             )
             with driver_sized(self.spark):
-                del_counts = dels.groupBy("file").agg(
-                    F.count(F.lit(1)).alias("cnt")
-                ).collect()
-            for r in del_counts:
-                if r["file"] in live:
-                    live[r["file"]] -= r["cnt"]
+                rows = (
+                    dels.filter(F.col("file").isin(list(unknown)))
+                    .groupBy("file")
+                    .agg(F.count_distinct("pos").alias("cnt"))
+                    .collect()
+                )
+            out.update({fid: 0 for fid in unknown.values()})
+            out.update({unknown[r["file"]]: r["cnt"] for r in rows})
+        return out
+
+    def _plan_delete(
+        self, m: Manifest, hits: DataFrame | list[tuple[str, int]]
+    ) -> tuple[set[int], dict[int, list[str]], dict[int, int]] | None:
+        """Materialize deletion sidecars for ``hits`` — distinct (file,
+        pos) rows, as a DataFrame or, when few, a driver-side list — and
+        return the manifest diff WITHOUT committing: fully-dead fragment
+        ids, fragment -> deletion files, and fragment -> rows deleted.
+        Shared by delete(), the merge-on-read UPDATE/MERGE and the detached
+        stage_delete()."""
+        if isinstance(hits, list):
+            hits = sorted(set(hits))
+            per_file: dict[str, int] = {}
+            for fn, _ in hits:
+                per_file[fn] = per_file.get(fn, 0) + 1
+        else:
+            # driver_sized: the answer is a per-file count map bounded by
+            # fragment count, so AQE's per-stage jobs are pure scheduler
+            # latency — one multi-stage job instead of 2-3 sequential ones
+            with driver_sized(self.spark):
+                per_file = {
+                    r["file"]: r["cnt"]
+                    for r in hits.groupBy("file")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .collect()
+                }
+        if not per_file:
+            return None
+        by_name = {os.path.basename(f.path): f for f in m.fragments}
+        hit = {fn: by_name[fn] for fn in per_file}
+        # live rows from the manifest's deleted-row counts: no sidecar reads
+        deleted = self._deleted_counts(list(hit.values()))
         dead_ids = {
-            by_name[fn].id for fn, cnt in per_file.items() if cnt >= live[fn]
+            f.id for fn, f in hit.items() if per_file[fn] >= f.rows - deleted[f.id]
         }
-        partial = {fn for fn in per_file if by_name[fn].id not in dead_ids}
-        new_deletes: dict[int, list[str]] = {}
-        if partial:
-            staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-            # size-gated partition count: vector-sized deletes get the single
-            # tidy sidecar, but a billion-row delete must not serialize
-            # through one task — (file,pos) rows pack ~10M per healthy
-            # parquet partition
-            total = sum(per_file[fn] for fn in partial)
-            nparts = max(1, -(-total // 10_000_000))
-            hits.filter(F.col("file").isin(*partial)).coalesce(nparts).write.parquet(
-                staging
+        partial = {fn for fn, f in hit.items() if f.id not in dead_ids}
+        names: list[str] = []
+        if partial and isinstance(hits, list):
+            # a vector-sized sidecar is written by the driver: no Spark job
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            keep = [(fn, pos) for fn, pos in hits if fn in partial]
+            buf = pa.BufferOutputStream()
+            pq.write_table(
+                pa.table({
+                    "file": pa.array([fn for fn, _ in keep], pa.string()),
+                    "pos": pa.array([pos for _, pos in keep], pa.int64()),
+                }),
+                buf,
             )
+            names = [f"deletes/{uuid.uuid4().hex}.parquet"]
+            self._data_store.put_bytes(
+                os.path.join(self.path, names[0]), buf.getvalue().to_pybytes()
+            )
+        elif partial:
+            staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
+            # size-gated partition count: a billion-row delete must not
+            # serialize through one task
+            total = sum(per_file[fn] for fn in partial)
+            hits.filter(F.col("file").isin(*partial)).coalesce(
+                -(-total // _ROWS_PER_FILE)
+            ).write.parquet(staging)
             st = self._data_store
-            names: list[str] = []
             for part in sorted(p for p in st.list(staging) if p.endswith(".parquet")):
                 name = f"deletes/{uuid.uuid4().hex}.parquet"
                 st.move(os.path.join(staging, part), os.path.join(self.path, name))
                 names.append(name)
             st.delete_prefix(staging)
-            new_deletes = {by_name[fn].id: list(names) for fn in partial}
-        return dead_ids, new_deletes
+        new_deletes = {hit[fn].id: list(names) for fn in partial}
+        return dead_ids, new_deletes, {f.id: per_file[fn] for fn, f in hit.items()}
+
+    def _replace_rows(
+        self,
+        op: str,
+        m: Manifest,
+        matched: DataFrame | None,
+        images: list | None = None,
+        delete_matched: bool = True,
+        inserts=None,
+        few=None,
+    ) -> "Dataset":
+        """The merge-on-read commit behind UPDATE and MERGE (reference
+        storage2 deletion files + append, update.go / merge_insert.go):
+        ``matched`` target rows (lineage columns attached) are deleted
+        through deletion sidecars, their new ``images`` (columns selected
+        over a matched row) are appended keeping each row's stable id in
+        ``__rowid``, and ``inserts(matched)`` adds new rows that take fresh
+        ids at commit. One manifest commit lands it all, so the work is
+        O(rows changed), never O(fragment). ``few`` is ``matched``'s rows
+        as an Arrow table when the caller already holds them."""
+        if matched is not None and few is None:
+            # statement-sized matches move to the driver in one scan; the
+            # sidecar, images and inserts then come from local rows
+            few = self._few_rows(matched)
+            matched = (
+                self.spark.createDataFrame(few, schema=matched.schema)
+                if few is not None
+                else matched.persist()
+            )
+        try:
+            plan = None
+            if matched is not None and delete_matched:
+                if few is not None:
+                    plan = self._plan_delete(m, self._pairs(few, _FILE_COL, _POS_COL))
+                else:
+                    hits = matched.select(
+                        F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos")
+                    )
+                    # a source key matching twice must not count its row twice
+                    plan = self._plan_delete(
+                        m, hits if op == "update" else hits.distinct()
+                    )
+            dead_ids, new_deletes, deleted_rows = plan or (set(), {}, {})
+            added: list[Fragment] = []
+            if images is not None and plan is not None:
+                # images carry their ids physically (Array segment)
+                rid = [F.col(_ROWID).alias(_ROWID_STORED)] if m.row_ids else []
+                n = sum(deleted_rows.values())
+                added = self._write_fragments(
+                    matched.select(*images, *rid).coalesce(-(-n // _ROWS_PER_FILE)),
+                    start_id=m.max_fragment_id + 1,
+                )
+            if inserts is not None:
+                new = self._write_fragments(
+                    inserts(matched), start_id=m.max_fragment_id + 1 + len(added)
+                )
+                for f in new if m.row_ids else []:
+                    f.row_start = -1  # fresh Range segment allocated at commit
+                added += new
+            if not (added or plan):
+                return self
+            # crash window: sidecars and new rows are on disk, no manifest
+            # references them — the table still reads as before the
+            # statement and vacuum reclaims the orphans
+            fault_point("dml.files_written")
+            self._commit(
+                _Txn(
+                    op=op,
+                    read_version=m.version,
+                    added=added,
+                    removed_ids=dead_ids,
+                    new_deletes=new_deletes,
+                    deleted_rows=deleted_rows,
+                )
+            )
+            return self
+        finally:
+            if matched is not None and few is None:
+                matched.unpersist()
 
     def update(self, assignments: dict[str, str], predicate: str) -> "Dataset":
-        """Copy-on-write UPDATE (reference: update.go:20-82): only fragments
-        containing matches are rewritten; the rest are untouched metadata."""
+        """Merge-on-read UPDATE (reference update.go:20-82): the matched
+        rows are deleted through deletion sidecars and their new images
+        appended under the same stable row ids, in one commit."""
         m = self.manifest
-        # zonemap pre-prune, as in delete(): find-affected only scans
-        # fragments whose stats admit a match
+        fields = self.schema.fields
+        names = [f.name for f in fields]
+        unknown = set(assignments) - set(names)
+        if unknown:
+            raise ValueError(
+                f"UPDATE assigns unknown column(s) {sorted(unknown)}; "
+                f"table has {names}"
+            )
+        # zonemap pre-prune, as in delete(): only fragments whose stats
+        # admit a match are scanned
         scan_frags, _ = self.plan_scan(predicate, use_indexes=False)
         if not scan_frags:
             return self
-        scan = self._scan_with_lineage(scan_frags)
+        matched = self._scan_with_lineage(scan_frags, with_row_id=m.row_ids).filter(
+            F.expr(predicate)
+        )
+        # ONE select: SQL UPDATE evaluates every assignment against the OLD
+        # row (SET a = b, b = a swaps)
+        images = [
+            F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
+            if f.name in assignments
+            else F.col(f.name)
+            for f in fields
+        ]
+        return self._replace_rows("update", m, matched, images)
+
+    def _source_key_filters(
+        self, source: DataFrame, keys: list[str]
+    ):
+        """(prunable conjuncts every target row matching some ``source``
+        row satisfies, the source, the source's rows as an Arrow table when
+        it is small). A small source — at most ``_IN_LIST_MAX`` rows — is
+        read once into a local relation and prunes by an IN-list of its
+        key values; a larger one prunes by each key's [min, max]. Only keys
+        of the table's own integral, string or date type prune; any other
+        key would be compared after a cast the manifest stats do not
+        model."""
+        from pyspark.sql.types import DateType, IntegralType
+
+        rows = self._few_rows(source)
+        if rows is not None:
+            source = self.spark.createDataFrame(rows, schema=source.schema)
+        tgt = {f.name: f.dataType for f in self.schema.fields}
+        src = {f.name: f.dataType for f in source.schema.fields}
+        cols = [
+            k for k in keys
+            if src.get(k) == tgt.get(k)
+            and isinstance(tgt[k], (IntegralType, StringType, DateType))
+        ]
+        if rows is not None:
+            return [
+                (c, "in", sorted({v for v in rows.column(c).to_pylist() if v is not None}))
+                for c in cols
+            ], source, rows
+        if not cols:
+            return [], source, None
         with driver_sized(self.spark):
-            affected = {
-                r[_FILE_COL]
-                for r in scan.filter(F.expr(predicate))
-                .select(_FILE_COL)
-                .distinct()
-                .collect()
-            }
-        if not affected:
-            return self
-        by_name = self._frag_by_basename()
-        aff_frags = [by_name[fn] for fn in sorted(affected)]
-        rewritten = self._scan_with_lineage(
-            aff_frags, with_row_id=m.row_ids
-        ).drop(_FILE_COL, _POS_COL)
-        if m.row_ids:
-            # rewrites mix rows from many source positions, so the new files
-            # carry ids physically (Array segment: row_start stays None)
-            rewritten = rewritten.withColumnRenamed(_ROWID, _ROWID_STORED)
-        # ONE select, not sequential withColumn: SQL UPDATE evaluates the
-        # predicate AND every assignment expression against the OLD row —
-        # chained withColumns would re-evaluate both against columns already
-        # mutated by earlier assignments (SET a = 2, b = -1 WHERE a = 1
-        # would skip b; SET a = b, b = a would fail to swap)
-        unknown = set(assignments) - set(rewritten.columns)
-        if unknown:
-            # dict-driven select would silently DROP these (the chained
-            # withColumn it replaced failed loudly at analysis time)
-            raise ValueError(
-                f"UPDATE assigns unknown column(s) {sorted(unknown)}; "
-                f"table has {[f.name for f in self.schema.fields]}"
-            )
-        cond = F.expr(predicate)
-        assigned = {
-            col: F.when(cond, F.expr(expr)).otherwise(F.col(col))
-            for col, expr in assignments.items()
-        }
-        rewritten = rewritten.select(
-            *[assigned.get(c, F.col(c)).alias(c) for c in rewritten.columns]
+            b = source.agg(
+                *[F.min(c) for c in cols], *[F.max(c) for c in cols]
+            ).collect()[0]
+        out: list[tuple[str, str, Any]] = []
+        for i, c in enumerate(cols):
+            if b[i] is None:
+                return [(c, "in", [])], source, None  # all-NULL keys match nothing
+            out += [(c, ">=", b[i]), (c, "<=", b[len(cols) + i])]
+        return out, source, None
+
+    @staticmethod
+    def _match_on_driver(cand, src_t, keys: list[str], upd: list[str]):
+        """Hash-match candidate target rows with source rows (both Arrow
+        tables, keys of one simple type on both sides): returns the matched
+        pairs — candidate columns plus ``__src_<c>`` for each ``upd``
+        column — and the source rows no candidate matched. NULL keys match
+        nothing, as in SQL."""
+        import pyarrow as pa
+
+        def key_tuples(t):
+            return list(zip(*[t.column(k).to_pylist() for k in keys]))
+
+        src_keys = key_tuples(src_t)
+        at: dict[tuple, list[int]] = {}
+        for j, key in enumerate(src_keys):
+            if None not in key:
+                at.setdefault(key, []).append(j)
+        pairs = [(i, j) for i, key in enumerate(key_tuples(cand)) for j in at.get(key, ())]
+        ci = pa.array([i for i, _ in pairs], pa.int64())
+        si = pa.array([j for _, j in pairs], pa.int64())
+        matched = pa.Table.from_arrays(
+            cand.take(ci).columns + src_t.select(upd).take(si).columns,
+            names=cand.column_names + [f"__src_{c}" for c in upd],
         )
-        frags = self._write_fragments(rewritten, start_id=m.max_fragment_id + 1)
-        self._commit(
-            _Txn(
-                op="update",
-                read_version=self.version,
-                added=frags,
-                removed_ids={f.id for f in aff_frags},
-            )
+        hit = {src_keys[j] for _, j in pairs}
+        unmatched = pa.array(
+            [j for j, key in enumerate(src_keys) if key not in hit], pa.int64()
         )
-        return self
+        return matched, src_t.take(unmatched)
 
     def merge_insert(
         self,
@@ -2192,8 +2392,11 @@ class Dataset:
         non-key columns; every other target column is preserved — the shape
         an upsert needs when it must not clobber e.g. created_at.
 
-        Copy-on-write: fragments with key matches are rewritten via a join
-        against the (broadcastable) source; unmatched source rows append."""
+        Merge-on-read: only the fragments the source's key IN-list (or
+        key range) cannot prune are scanned — a small source's candidate
+        rows are read once and matched on the driver, a large one is
+        joined; matched rows are deleted through sidecars, their images
+        and the unmatched source rows appended, all in one commit."""
         if update_columns is not None:
             if when_matched != "update":
                 raise ValueError(
@@ -2206,90 +2409,87 @@ class Dataset:
             bad = [c for c in update_columns if c not in known]
             if bad:
                 raise ValueError(f"unknown update_columns: {bad}")
-        m = self.manifest
-        scan = self._scan_with_lineage(m.fragments)
-        src = source
-        skeys = [F.col(k) for k in keys]
-        removed: set[int] = set()
-        added: list[Fragment] = []
-        next_id = m.max_fragment_id + 1
+        if when_matched not in (None, "update", "delete"):
+            raise ValueError(when_matched)
         if when_matched is None and when_not_matched is None:
             return self  # both DO NOTHING: no scan, no empty commit
-        # the matched-files probe is a full-fact semi join — only pay it
-        # when a matched clause will actually consume it (an insert-only
-        # MERGE at 100 TB must not scan the fact twice)
-        if when_matched:
-            with driver_sized(self.spark):
-                matched_files = {
-                    r[_FILE_COL]
-                    for r in scan.join(src, keys, "left_semi")
-                    .select(_FILE_COL)
-                    .distinct()
-                    .collect()
-                }
-        else:
-            matched_files = set()
-        if matched_files and when_matched:
-            by_name = self._frag_by_basename()
-            aff = [by_name[fn] for fn in sorted(matched_files)]
-            tgt = self._scan_with_lineage(aff, with_row_id=m.row_ids).drop(
-                _FILE_COL, _POS_COL
-            )
-            if m.row_ids:
-                # updated rows KEEP their ids (update is not delete+insert
-                # for row-id purposes — rowids.go semantics)
-                tgt = tgt.withColumnRenamed(_ROWID, _ROWID_STORED)
-            if when_matched == "update":
-                non_keys = [
-                    c for c in tgt.columns if c not in keys and c != _ROWID_STORED
-                ]
-                # UpdateColumns subset (merge_insert.go:97): only the named
-                # columns take source values; the rest keep target values
-                upd = non_keys if update_columns is None else [
-                    c for c in non_keys if c in update_columns
-                ]
-                src_renamed = src.select(
-                    *skeys, *[F.col(c).alias(f"__src_{c}") for c in upd]
-                )
-                joined = tgt.join(src_renamed, keys, "left")
-                out = joined.select(
-                    *keys,
-                    *[
-                        (
-                            F.coalesce(F.col(f"__src_{c}"), F.col(c))
-                            if c in upd
-                            else F.col(c)
-                        ).alias(c)
-                        for c in non_keys
-                    ],
-                    *([F.col(_ROWID_STORED)] if m.row_ids else []),
-                ).select(*tgt.columns)
-            elif when_matched == "delete":
-                out = tgt.join(src, keys, "left_anti")
-            else:
-                raise ValueError(when_matched)
-            new_frags = self._write_fragments(out, start_id=next_id)
-            next_id += len(new_frags)
-            added.extend(new_frags)
-            removed = {f.id for f in aff}
-        if when_not_matched == "insert":
-            inserts = src.join(scan.select(*keys), keys, "left_anti").select(
-                *self.schema.fieldNames()
-            )
-            ins_frags = self._write_fragments(inserts, start_id=next_id)
-            if m.row_ids:
-                for f in ins_frags:
-                    f.row_start = -1  # new rows: fresh Range at commit
-            added.extend(ins_frags)
-        self._commit(
-            _Txn(
-                op="merge",
-                read_version=self.version,
-                added=added,
-                removed_ids=removed,
-            )
+        m = self.manifest
+        fields = self.schema.fields
+        names = [f.name for f in fields]
+        filters, source, src_t = self._source_key_filters(source, keys)
+        small = src_t is not None
+        frags, _ = self.plan_scan(filters, use_indexes=False)
+        upd = []
+        if when_matched == "update":
+            upd = [
+                c for c in names
+                if c not in keys and (update_columns is None or c in update_columns)
+            ]
+        images = None
+        if when_matched == "update":
+            images = [
+                F.col(f"__src_{f.name}").cast(f.dataType).alias(f.name)
+                if f.name in upd
+                else F.col(f.name)
+                for f in fields
+            ]
+        scan = (
+            self._scan_with_lineage(frags, with_row_id=m.row_ids) if frags else None
         )
-        return self
+        cand = None
+        if small and scan is not None and len(filters) == len(keys):
+            # every key prunes by an IN-list: read the candidate rows once
+            # and match them against the source on the driver
+            cand = self._few_rows(
+                scan.filter(
+                    functools.reduce(
+                        lambda a, b: a & b,
+                        [F.col(c).isin(vals) for c, _, vals in filters],
+                    )
+                )
+            )
+        if cand is not None:
+            matched_t, new_t = self._match_on_driver(cand, src_t, keys, upd)
+            matched = self.spark.createDataFrame(
+                matched_t,
+                schema=StructType(
+                    scan.schema.fields
+                    + [
+                        StructField(f"__src_{c}", source.schema[c].dataType)
+                        for c in upd
+                    ]
+                ),
+            )
+
+            def inserts(_):
+                return self.spark.createDataFrame(
+                    new_t.select(source.columns), schema=source.schema
+                ).select(*[F.col(f.name).cast(f.dataType) for f in fields]).coalesce(1)
+
+        else:
+            matched_t = None
+            src = source.select(*keys, *[F.col(c).alias(f"__src_{c}") for c in upd])
+            matched = (
+                scan.join(F.broadcast(src) if small else src, keys)
+                if scan is not None
+                else None
+            )
+
+            def inserts(matched):
+                new = source.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+                if matched is not None:
+                    hit = matched.select(*keys).distinct()
+                    new = new.join(
+                        F.broadcast(hit) if small else hit, keys, "left_anti"
+                    ).select(*names)
+                return new.coalesce(1) if small else new
+
+        return self._replace_rows(
+            "merge", m, matched, images,
+            delete_matched=when_matched is not None,
+            inserts=inserts if when_not_matched == "insert" else None,
+            few=matched_t,
+        )
 
     # ------------------------------------------------- schema evolution
     def add_column(self, name: str, dtype: str, default: str = "NULL") -> "Dataset":
@@ -2597,8 +2797,13 @@ class Dataset:
         materializing their deletion vectors; commit as a rewrite. Logical
         content is unchanged.
 
-        - "binpack": greedily pack fragments smaller than target_bytes into
-          ~target_bytes bins (the default maintenance pass).
+        - "binpack": size-tiered bins of fragments smaller than
+          target_bytes (the default maintenance pass): smallest first, a
+          fragment joins a bin only while the bin already holds at least
+          its bytes (files under ``_TIER_FLOOR_BYTES`` always do), so a
+          pass rewrites the small new files, not the table. A fragment
+          with ``_REWRITE_DELETED_FRAC`` of its rows deleted is rewritten
+          too, alone if no bin took it.
         - "count": rewrite ALL fragments into target_files files — the
           table-level re-layout (e.g. before a bucketed publish).
         - "zorder": rewrite ALL fragments range-partitioned + sorted on a
@@ -2670,25 +2875,38 @@ class Dataset:
             return self
         if strategy != "binpack":
             raise ValueError(f"unknown compaction strategy {strategy!r}")
-        small = [f for f in m.fragments if f.bytes < target_bytes]
-        if len(small) < 2:
-            return self
+        # size-tiered bins, smallest first: a fragment joins the bin only
+        # while the bin already holds at least its bytes (files under
+        # _TIER_FLOOR_BYTES are one tier), so a large file is rewritten
+        # only once as many smaller bytes join it — each byte is rewritten
+        # O(log table) times, and a pass costs O(new data), not O(table)
         bins: list[list[Fragment]] = []
         cur: list[Fragment] = []
         size = 0
-        for f in sorted(small, key=lambda x: x.bytes):
-            if cur and size + f.bytes > target_bytes:
+        for f in sorted(
+            (f for f in m.fragments if f.bytes < target_bytes), key=lambda x: x.bytes
+        ):
+            if cur and (
+                size + f.bytes > target_bytes or max(size, _TIER_FLOOR_BYTES) < f.bytes
+            ):
                 bins.append(cur)
                 cur, size = [], 0
             cur.append(f)
             size += f.bytes
-        if cur:
-            bins.append(cur)
+        bins.append(cur)
         bins = [b for b in bins if len(b) >= 2]
+        # a fragment is also rewritten, alone if no bin took it, once
+        # _REWRITE_DELETED_FRAC of its rows are deleted (materializing them)
+        binned = {f.id for b in bins for f in b}
+        deleted = self._deleted_counts([f for f in m.fragments if f.deletion_files])
+        bins += [
+            [f] for f in m.fragments
+            if f.id not in binned
+            and deleted.get(f.id, 0) >= _REWRITE_DELETED_FRAC * f.rows
+        ]
         if not bins:
             return self
         added: list[Fragment] = []
-        next_id = m.max_fragment_id + 1
         for b in bins:
             df = (
                 self._scan_with_lineage(b, with_row_id=m.row_ids)
@@ -2697,9 +2915,7 @@ class Dataset:
             )
             if m.row_ids:
                 df = df.withColumnRenamed(_ROWID, _ROWID_STORED)
-            frags = self._write_fragments(df, start_id=next_id)
-            next_id += len(frags)
-            added.extend(frags)
+            added += self._write_fragments(df, start_id=m.max_fragment_id + 1 + len(added))
         self._commit(
             _Txn(
                 op="rewrite",
@@ -2964,14 +3180,10 @@ class Dataset:
         # written before kinds existed (legacy-permissive in on_branch)
         ds._handler.put(ds._branches_path, "[]")
         frags = [
-            Fragment(
-                id=f.id,
+            replace(
+                f,
                 path=os.path.join(self.path, f.path),
-                rows=f.rows,
-                bytes=f.bytes,
-                stats=f.stats,
                 deletion_files=[os.path.join(self.path, d) for d in f.deletion_files],
-                row_start=f.row_start,
             )
             for f in src.fragments
         ]
@@ -3312,19 +3524,25 @@ class Dataset:
     def refresh_index(self, name: str) -> "Dataset":
         """Catch a stale index up to the table head INCREMENTALLY
         (reference incremental_index.go:28-253 buffered inserts, surfaced
-        at the table lifecycle): when only APPENDs landed since the index's
-        covers_version, the new fragments' rows are insert()ed into the
-        persisted index (buffered — probes fold the pending tail in) and
-        the descriptor advances, restoring ``index_fresh`` and with it
-        automatic scan routing. No rebuild, no old-data rescan: the work is
-        O(new rows).
+        at the table lifecycle): the rows of every fragment the index does
+        not cover (see _uncovered) are insert()ed into the persisted index
+        (buffered — probes fold the pending tail in) and the descriptor
+        advances, restoring ``index_fresh`` and with it automatic scan
+        routing. No rebuild, no rescan of covered data: the work is
+        O(rows changed).
 
-        Anything other than appends (delete/update/overwrite/compaction)
-        can change or remove already-indexed keys, which a buffered insert
-        cannot retract — refresh then raises and the caller rebuilds
-        (drop_index + create_index). Bitmap/bloom indexes maintain
-        themselves through the write-path declarations, so refresh just
-        advances their descriptors."""
+        Row-id scalar indexes (btree, rtree, row-granular bitmap keyed by
+        ``_rowid``) refresh after ANY history — delete, update, merge,
+        compaction — because their invariant is "index ⊇ live (key, row
+        id) pairs": entries of deleted or superseded rows stay behind, and
+        every probe is rechecked by the deletion vectors and the residual
+        filter, so a stale or re-inserted pair costs a read, never an
+        answer. ANN and FTS indexes (and scalar indexes keyed by another id
+        column) answer from their entries directly, so they refresh only
+        over appends; any other history raises ValueError and the caller
+        rebuilds (drop_index + create_index). Bloom and fragment-granular
+        bitmap indexes maintain themselves through the write-path
+        declarations, so refresh just advances their descriptors."""
         desc = self.manifest.indexes.get(name)
         if desc is None:
             raise ValueError(f"no index named {name!r}")
@@ -3346,49 +3564,48 @@ class Dataset:
             # new rows' ids.
             self._commit(txn)
             return self
-        try:
-            ops = [
-                self._load(v).operation for v in range(base_v + 1, self.version + 1)
-            ]
-        except FileNotFoundError as e:
+        uncovered = self._uncovered(name)
+        if uncovered is None:
             raise ValueError(
                 f"refresh_index({name!r}): intermediate manifests vacuumed; "
                 "rebuild with drop_index + create_index"
-            ) from e
-        non_append = [op for op in ops if op not in ("append", "index")]
-        if non_append:
-            raise ValueError(
-                f"refresh_index({name!r}): history since v{base_v} contains "
-                f"{sorted(set(non_append))} operations — already-indexed keys "
-                "may have changed; rebuild with drop_index + create_index"
             )
-        base_ids = {f.id for f in self._load(base_v).fragments}
-        new_frags = [f for f in self.manifest.fragments if f.id not in base_ids]
-        if new_frags:
-            id_col = desc.get("params", {}).get("id_col")
-            if id_col is None:
-                # legacy descriptor (created before id_col was persisted):
-                # mirror create_index's fallback chain EXACTLY — _ROWID only
-                # for the scalar/spatial kinds on row_ids tables, else the
-                # conventional name / first non-indexed column. A different
-                # chain here would insert new rows under a different id
-                # namespace than the build used (silent mixed-id index).
-                if kind in ("btree", "rtree", "bitmap") and self.manifest.row_ids:
-                    id_col = _ROWID
-                else:
-                    names = [f.name for f in self.schema.fields]
-                    conventional = "doc_id" if kind == "fts" else "vec_id"
-                    indexed = {c.strip() for c in desc["column"].split(",")}
-                    id_col = conventional if conventional in names else next(
-                        (n for n in names if n not in indexed), None
-                    )
+        id_col = desc.get("params", {}).get("id_col")
+        if id_col is None:
+            # legacy descriptor (created before id_col was persisted):
+            # mirror create_index's fallback chain EXACTLY — _ROWID only
+            # for the scalar/spatial kinds on row_ids tables, else the
+            # conventional name / first non-indexed column. A different
+            # chain here would insert new rows under a different id
+            # namespace than the build used (silent mixed-id index).
+            if kind in ("btree", "rtree", "bitmap") and self.manifest.row_ids:
+                id_col = _ROWID
+            else:
+                names = [f.name for f in self.schema.fields]
+                conventional = "doc_id" if kind == "fts" else "vec_id"
+                indexed = {c.strip() for c in desc["column"].split(",")}
+                id_col = conventional if conventional in names else next(
+                    (n for n in names if n not in indexed), None
+                )
+        if not (kind in ("btree", "rtree", "bitmap") and id_col == _ROWID):
+            ops = {
+                self._load(v).operation for v in range(base_v + 1, self.version + 1)
+            }
+            non_append = ops - {"append", "index"}
+            if non_append:
+                raise ValueError(
+                    f"refresh_index({name!r}): history since v{base_v} contains "
+                    f"{sorted(non_append)} operations — already-indexed entries "
+                    "may have changed; rebuild with drop_index + create_index"
+                )
+        if uncovered:
             if id_col is None:
                 raise ValueError(
                     f"refresh_index({name!r}): no id column derivable; "
                     "rebuild with drop_index + create_index"
                 )
             use_rowid = id_col == _ROWID
-            src = self._scan_with_lineage(new_frags, with_row_id=use_rowid).drop(
+            src = self._scan_with_lineage(uncovered, with_row_id=use_rowid).drop(
                 _FILE_COL, _POS_COL
             )
             if kind not in (
@@ -3599,17 +3816,13 @@ class Dataset:
         normal conflict matrix (fragments removed or re-deleted concurrently
         conflict, unrelated appends rebase)."""
         m = self.manifest
-        scan = self._scan_with_lineage(m.fragments)
-        hits = (
-            scan.filter(F.expr(predicate))
-            .select(F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos"))
-            .persist()
+        plan = self._plan_hits(
+            m,
+            self._scan_with_lineage(m.fragments)
+            .filter(F.expr(predicate))
+            .select(F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos")),
         )
-        try:
-            plan = self._plan_delete(m, hits)
-        finally:
-            hits.unpersist()
-        dead_ids, new_deletes = plan if plan is not None else (set(), {})
+        dead_ids, new_deletes, deleted_rows = plan or (set(), {}, {})
         sid = uuid.uuid4().hex
         payload = {
             "op": "delete",
@@ -3617,6 +3830,7 @@ class Dataset:
             **self._stage_meta(ttl_seconds),
             "removed_ids": sorted(dead_ids),
             "new_deletes": {str(fid): names for fid, names in new_deletes.items()},
+            "deleted_rows": {str(fid): n for fid, n in deleted_rows.items()},
         }
         self._write_stage(sid, payload)
         return sid
@@ -3977,6 +4191,9 @@ class Dataset:
                 removed_ids=set(payload["removed_ids"]),
                 new_deletes={
                     int(fid): names for fid, names in payload["new_deletes"].items()
+                },
+                deleted_rows={
+                    int(fid): n for fid, n in payload.get("deleted_rows", {}).items()
                 },
                 stream_commit=dedup,
             )

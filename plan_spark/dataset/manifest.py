@@ -29,6 +29,10 @@ class Fragment:
     stats: dict[str, dict[str, Any]] = field(default_factory=dict)
     # deletion-vector sidecars (relative paths), applied merge-on-read
     deletion_files: list[str] = field(default_factory=list)
+    # rows of this file the sidecars delete (reference DeletionFile
+    # num_deleted_rows); None when unknown (written before the count was
+    # kept) -- readers then count the sidecars themselves
+    deleted_rows: int | None = 0
     # stable-row-id segment descriptor (meaningful only when the manifest
     # has row_ids). The two segment kinds mirror the reference's
     # RowIdSequence (pkg/storage2/rowids.go:11-201):
@@ -97,6 +101,9 @@ class Manifest:
     @staticmethod
     def from_json(s: str) -> "Manifest":
         d = json.loads(s)
+        for f in d["fragments"]:
+            if "deleted_rows" not in f and f.get("deletion_files"):
+                f["deleted_rows"] = None
         d["fragments"] = [Fragment(**f) for f in d["fragments"]]
         return Manifest(**d)
 

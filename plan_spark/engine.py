@@ -1890,7 +1890,9 @@ class Engine:
         cols = p.paren_body() if p.has_paren() else None
         if p.try_kw("VALUES"):
             self._register_views()  # VALUES may contain scalar subqueries
-            rows_df = self.spark.sql(f"SELECT * FROM VALUES {p.rest()}")
+            # one partition, so one fragment: the row count is bounded by
+            # the statement text
+            rows_df = self.spark.sql(f"SELECT * FROM VALUES {p.rest()}").coalesce(1)
             self.insert_df(name, self._reorder_for_insert(name, rows_df, cols))
             return
         if p.peek_word() in ("SELECT", "WITH", "TABLE"):
@@ -2308,7 +2310,7 @@ class Engine:
             touch_fk = any(c in assignments for c in fk_cols)
             if entry.get("not_null") or entry.get("checks") or touch_fk:
                 # validate the POST-assignment rows (limit-1 witness jobs)
-                # before the copy-on-write commit — built with ONE select
+                # before the commit — built with ONE select
                 # so every assignment reads the OLD row, exactly mirroring
                 # Dataset.update (a chained withColumn here would validate
                 # a different post-image than the one that commits)
@@ -2838,8 +2840,10 @@ class Engine:
 
     def _stmt_refresh(self, s: str) -> None:
         """REFRESH INDEX i ON t — incremental catch-up of a stale index to
-        the table head (Dataset.refresh_index; appends-only histories
-        insert just the new rows, anything else instructs a rebuild)."""
+        the table head (Dataset.refresh_index): only the rows the index
+        does not cover are inserted. Row-id scalar indexes catch up after
+        any history; ANN/FTS indexes only over appends, else it raises and
+        the index must be rebuilt."""
         p = _Stmt(s)
         p.kw("REFRESH")
         p.kw("INDEX")

@@ -1,8 +1,9 @@
 """Randomized concurrent-interleaving property test for the optimistic
 commit protocol + conflict matrix (reference transaction_conflicts.go /
 detached_txn.go classes of bug): threads hammer ONE dataset with
-append / delete / compact / stage_append / commit_staged / cleanup /
-vacuum / filtered-probe / refresh_index in random order, every
+append / delete / update / merge / compact / stage_append /
+commit_staged / cleanup / vacuum / filtered-probe / refresh_index in
+random order, every
 ConflictError is legal, and afterwards the MANIFEST INVARIANTS must hold:
 
 1. version chain: every kept manifest loads, versions strictly increase,
@@ -121,8 +122,8 @@ def _run_storm(spark, path, commit_handler):
             ["append", "delete", "compact", "stage", "commit_staged",
              "cleanup", "vacuum", "probe", "refresh",
              "tag", "branch", "branch_write", "tag_write", "drop_ref",
-             "add_col"],
-            weights=[5, 2, 1, 2, 3, 1, 1, 2, 1, 2, 2, 3, 1, 1, 1],
+             "add_col", "update", "merge"],
+            weights=[5, 2, 1, 2, 3, 1, 1, 2, 1, 2, 2, 3, 1, 1, 1, 2, 2],
         )[0] for _ in range(ops_per_thread)]
         for _ in range(_THREADS)
     ]
@@ -151,6 +152,31 @@ def _run_storm(spark, path, commit_handler):
                     # deletes rarely fight (when they do, ConflictError is
                     # the correct answer)
                     ds.delete(f"k < 1000 AND k % {_THREADS} = {tid}")
+                elif op == "update":
+                    # merge-on-read: sidecars on the old rows plus images
+                    # under the same row ids; keys never change
+                    ds.update({"grp": "grp + 7"}, f"k < 1000 AND k % {_THREADS} = {tid}")
+                elif op == "merge":
+                    # upsert of five keys from this thread's slice of the
+                    # deletable subspace (updated, or re-inserted if a
+                    # delete took them) plus a fresh block that must land
+                    # whole; slices are tid-disjoint, so no two threads
+                    # race to insert the same key; columns other storm ops
+                    # added insert as NULL (read back as their default)
+                    k = key_block()
+                    src = spark.createDataFrame(
+                        [(tid + _THREADS * j, j) for j in range(5)]
+                        + [(k + j, j % 7) for j in range(10)],
+                        "k long, grp long",
+                    ).select(
+                        "k", "grp", *[
+                            F.lit(None).cast(f.dataType).alias(f.name)
+                            for f in ds.schema.fields if f.name not in ("k", "grp")
+                        ],
+                    )
+                    ds.merge_insert(src, keys=["k"], update_columns=["grp"])
+                    with lock:
+                        appended.add(k)
                 elif op == "compact":
                     ds.compact(strategy="count", target_files=2)
                 elif op == "stage":
@@ -193,8 +219,10 @@ def _run_storm(spark, path, commit_handler):
                     except Exception as e:
                         errors.append(f"probe: {type(e).__name__}: {e}")
                 elif op == "refresh":
-                    # legal outcomes: fresh no-op, incremental insert,
-                    # ValueError (non-append history -> rebuild) or
+                    # legal outcomes: fresh no-op, incremental insert of
+                    # the uncovered fragments (a row-id btree catches up
+                    # after any history), ValueError (a manifest since
+                    # covers_version was vacuumed -> rebuild) or
                     # ConflictError (claim held / descriptor moved)
                     ds.refresh_index("storm_bt")
                 elif op == "tag":

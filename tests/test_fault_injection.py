@@ -959,6 +959,47 @@ def test_graph_index_swap_crashes(spark):
     assert [r.c_id for r in fresh.search(q, top_k=5, nprobe=4).collect()] == want
 
 
+def test_dml_files_written_crash_reads_as_before(spark):
+    """UPDATE and MERGE die after their deletion sidecars and row images
+    are written but before the one manifest commit: the reopened table
+    reads exactly as before the statement, and vacuum reclaims the
+    orphaned files."""
+    path = _scratch("dml_files")
+    ds = _mk(spark, path)
+    before = sorted(map(tuple, ds.to_df(with_row_id=True).collect()))
+
+    def files():
+        return {
+            f"{sub}/{fn}"
+            for sub in ("data", "deletes")
+            for fn in os.listdir(os.path.join(path, sub))
+        }
+
+    kept, v = files(), ds.version
+    statements = [
+        lambda d: d.update({"grp": "grp + 100"}, "k < 50"),
+        lambda d: d.merge_insert(
+            spark.createDataFrame([(3, 9), (5000, 1)], "k long, grp long"),
+            keys=["k"],
+        ),
+    ]
+    for stmt in statements:
+        arm_fault("dml.files_written")
+        with pytest.raises(InjectedCrash):
+            stmt(Dataset.open(spark, path))
+        ds = Dataset.open(spark, path)
+        assert ds.version == v
+        _chain_consistent(ds)
+        assert sorted(map(tuple, ds.to_df(with_row_id=True).collect())) == before
+    orphans = files() - kept
+    assert any(o.startswith("data/") for o in orphans)
+    assert any(o.startswith("deletes/") for o in orphans)
+    removed = ds.vacuum(keep_versions=1, grace_seconds=0.0)
+    assert orphans <= set(removed)
+    assert files() == kept
+    assert sorted(map(tuple, Dataset.open(spark, path).to_df(with_row_id=True).collect())) == before
+
+
 def test_vacuum_reclaims_stale_staging_dirs(spark):
     """A writer that died mid-_write_fragments leaves its _staging_<uuid>
     dir (never referenced by any manifest). vacuum reclaims it only past

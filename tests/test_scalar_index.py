@@ -578,17 +578,55 @@ def test_refresh_index_restores_freshness_and_routing(spark):
     assert ds.version == v
 
 
-def test_refresh_index_refuses_after_delete(spark):
-    """A delete can orphan indexed keys a buffered insert cannot retract:
-    refresh must refuse and point at rebuild."""
+def test_refresh_index_after_any_history(spark):
+    """A row-id btree refreshes after DELETE, UPDATE, MERGE and compaction
+    (index ⊇ live (key, row id) pairs; probes are rechecked), inserting
+    only uncovered rows — and every index-routed point read equals an
+    unrouted scan, including keys an UPDATE moved and rows a MERGE
+    replaced or added."""
     from plan_spark.dataset import Dataset
 
-    path = _tmp("refresh_del")
+    path = _tmp("refresh_any")
     ds = _interleaved_ds(spark, path)
     ds.create_index("ki", kind="btree", column="k")
-    ds.delete("k < 8")
-    with pytest.raises(ValueError, match="rebuild"):
+    probes = [0, 5, 6, 7, 401, 402, 403, 500, 777, 5401, 5402, 20000, 20001]
+
+    def check(after):
         ds.refresh_index("ki")
+        assert ds.index_fresh("ki"), after
+        assert ds._routing_usable("ki"), after
+        for k in probes:
+            routed = sorted(map(tuple, ds.to_df(filters=f"k = {k}").collect()))
+            plain = sorted(
+                map(tuple, ds.to_df(filters=f"k = {k}", use_indexes=False).collect())
+            )
+            assert routed == plain, (after, k, routed, plain)
+
+    ds.delete("k < 8")
+    check("delete")
+    ds.update({"k": "k + 5000", "payload": "-1.0"}, "k = 401 OR k = 402")
+    check("update")
+    src = spark.createDataFrame(
+        [(403, 1.5), (500, 2.5), (20000, 3.5), (20001, 4.5)], "k long, payload double"
+    )
+    ds.merge_insert(src, keys=["k"])
+    check("merge")
+    ds.compact()
+    check("compact")
+    assert [r.k for r in ds.to_df(filters="k = 5401").collect()] == [5401]
+    assert Dataset.open(spark, path).to_df().count() == 1000 - 8 + 2
+    # FTS (like ANN) answers from its entries: it keeps the append-only rule
+    docs = Dataset.create(
+        spark, _tmp("refresh_any_fts"),
+        spark.createDataFrame(
+            [(1, "alpha beta"), (2, "gamma")], "doc_id long, text string"
+        ).coalesce(1),
+        row_ids=True,
+    )
+    docs.create_index("fi", kind="fts", column="text")
+    docs.delete("doc_id = 2")
+    with pytest.raises(ValueError, match="rebuild"):
+        docs.refresh_index("fi")
 
 
 def test_refresh_index_sql_face(spark):

@@ -302,3 +302,47 @@ class TestQuotedIdentRewrite:
         eng = Engine.__new__(Engine)  # no spark needed: no real clause
         s = "SELECT 'don\\'t FROM t VERSION AS OF 3' AS a FROM u"
         assert eng._rewrite_time_travel(s) == s
+
+
+# ------------------------------------------- predicate pruning vs literals
+@given(_ADVERSARIAL, st.integers(0, 9))
+@settings(max_examples=200, deadline=None)
+def test_pruning_conjuncts_never_come_from_inside_literals(content, k):
+    """The dataset layer's prunable conjuncts (the zonemap/index pruning
+    of DELETE, UPDATE and filtered scans) never read SQL text inside a
+    literal: with an escaped literal carrying anything, the only
+    conjuncts extracted are the real ones, and the literal's own conjunct
+    prunes nothing unless it is a plain literal."""
+    from plan_spark.dataset import Dataset
+
+    lit = _sql_quote(content)
+    got = Dataset._parse_filter_string(f"note = {lit} AND k = {k}")
+    plain = "\\" not in lit[1:-1] and "'" not in lit[1:-1]
+    want = ([("note", "=", content)] if plain else []) + [("k", "=", k)]
+    assert got == want, (lit, got)
+
+
+def test_backslash_escaped_literal_deletes_and_updates_its_row(spark):
+    """Regression: a literal whose escaped quote hides `AND k = 5 AND` used
+    to yield a fake `k = 5` conjunct that pruned the row's fragment, so
+    DELETE removed nothing and UPDATE changed nothing."""
+    import os
+    import shutil
+    import tempfile
+
+    from plan_spark.engine import Engine
+
+    pred = "note = 'a\\' AND k = 5 AND note = '"
+    d = tempfile.mkdtemp(prefix="plan_spark_escpred_")
+    try:
+        eng = Engine(spark, os.path.join(d, "wh"))
+        eng.sql("CREATE TABLE esc (k INT, note STRING)")
+        eng.sql("INSERT INTO esc VALUES (5, 'x'), (6, 'y')")
+        eng.sql("INSERT INTO esc VALUES (9, 'a\\' AND k = 5 AND note = ')")
+        assert eng.sql(f"SELECT k FROM esc WHERE {pred}").collect()[0].k == 9
+        eng.sql(f"UPDATE esc SET k = 10 WHERE {pred}")
+        assert sorted(r.k for r in eng.sql("SELECT k FROM esc").collect()) == [5, 6, 10]
+        eng.sql(f"DELETE FROM esc WHERE {pred}")
+        assert sorted(r.k for r in eng.sql("SELECT k FROM esc").collect()) == [5, 6]
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

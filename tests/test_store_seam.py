@@ -199,8 +199,9 @@ class TestDataPlaneThroughSeam:
         """append / delete / compact / index build / vacuum: every
         fragment landing is a Store.move, every vacuum removal a
         Store.delete, every staging sweep a Store.delete_prefix, every
-        _INFLIGHT sentinel a Store.put_bytes — verified by spying the
-        data-plane store for the dataset's whole lifecycle."""
+        _INFLIGHT sentinel and driver-written deletion sidecar a
+        Store.put_bytes — verified by spying the data-plane store for the
+        dataset's whole lifecycle."""
         spy = _SpyStore()
         monkeypatch.setattr(Dataset, "_data_store", property(lambda self: spy))
         p = str(tmp_path / "ds")
@@ -222,9 +223,10 @@ class TestDataPlaneThroughSeam:
         assert len(spy.moves) > n_create_moves
         assert all(d.startswith(p) for _, d in spy.moves)
         # partial WITHIN fragments (range() fragments are contiguous, so a
-        # suffix delete would kill whole files and skip the sidecar path)
+        # suffix delete would kill whole files and skip the sidecar path);
+        # a statement-sized sidecar is written by the driver in one put
         ds.delete("k % 10 = 3")
-        assert any("/deletes/" in d for _, d in spy.moves)
+        assert any(x.startswith(p) and "/deletes/" in x for x in spy.puts)
         ds.create_index("bt", kind="btree", column="k", n_runs=2)
         assert any(x.endswith("_INFLIGHT") for x in spy.puts)
         ds.compact()
