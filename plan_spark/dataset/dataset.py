@@ -84,6 +84,23 @@ _ROWID_STORED = "__rowid"  # physical column written by rewrites (Array segment)
 _ROWID = "_rowid"  # the exposed stable-row-id column name
 
 
+def _apply_filters(df: DataFrame, filters) -> DataFrame:
+    """``df`` filtered by (col, op, literal) conjuncts."""
+    for col, op, val in filters or []:
+        if op == "in":
+            df = df.filter(F.col(col).isin(*val))
+            continue
+        ops = {
+            "=": F.col(col) == val,
+            ">": F.col(col) > val,
+            ">=": F.col(col) >= val,
+            "<": F.col(col) < val,
+            "<=": F.col(col) <= val,
+        }
+        df = df.filter(ops[op])
+    return df
+
+
 def _stat_key(v: Any) -> Any:
     """Normalize a stat/filter value for ordering comparisons."""
     if isinstance(v, (_dt.datetime, _dt.date)):
@@ -93,10 +110,8 @@ def _stat_key(v: Any) -> Any:
 
 _BITMAP_MAX_NDV = 64
 
-# compaction: files below this size form one tier (they always bin
-# together), and a fragment is rewritten once this share of its rows is
-# deleted (Lance's materialize-deletions threshold)
-_TIER_FLOOR_BYTES = 1 << 20
+# compaction rewrites a fragment once this share of its rows is deleted
+# (Lance's materialize-deletions threshold)
 _REWRITE_DELETED_FRAC = 0.1
 
 # rows per file written for deletion sidecars and update images: tiny
@@ -1762,18 +1777,7 @@ class Dataset:
                 df = df.withColumn(
                     colname, F.coalesce(F.col(colname), F.expr(default_expr))
                 )
-        for col, op, val in filters or []:
-            if op == "in":
-                df = df.filter(F.col(col).isin(*val))
-                continue
-            ops = {
-                "=": F.col(col) == val,
-                ">": F.col(col) > val,
-                ">=": F.col(col) >= val,
-                "<": F.col(col) < val,
-                "<=": F.col(col) <= val,
-            }
-            df = df.filter(ops[op])
+        df = _apply_filters(df, filters)
         if pred_str is not None:
             df = df.filter(F.expr(pred_str))
         if columns is not None:
@@ -1964,18 +1968,18 @@ class Dataset:
 
     def _drop_deleted(self, df: DataFrame, frags: list[Fragment]) -> DataFrame:
         """Apply the fragments' deletion vectors to a scan carrying the
-        lineage columns. Up to ``_IN_LIST_MAX`` deleted rows (the manifest
-        counts them) are read from the sidecars by the driver and dropped
-        by a literal (file, position) filter — no join, so no extra Spark
-        job on every read; more take a left-anti join with the sidecars."""
+        lineage columns. When the sidecars they reference hold at most
+        ``_IN_LIST_MAX`` rows in all (their footers say), the driver reads
+        them and drops the rows by a literal (file, position) filter — no
+        join, so no extra Spark job on every read; bigger sidecars take a
+        left-anti join."""
         del_files = sorted({d for f in frags for d in f.deletion_files})
         if not del_files:
             return df
-        counts = [f.deleted_rows for f in frags if f.deletion_files]
-        if None in counts or sum(counts) > _IN_LIST_MAX:
-            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
-                *[os.path.join(self.path, d) for d in del_files]
-            )
+        paths = [os.path.join(self.path, d) for d in del_files]
+        sidecars = [_open_parquet(p)[0] for p in paths]
+        if sum(pf.metadata.num_rows for pf in sidecars) > _IN_LIST_MAX:
+            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(*paths)
             return df.join(
                 dels,
                 (df[_FILE_COL] == dels["file"]) & (df[_POS_COL] == dels["pos"]),
@@ -1983,16 +1987,27 @@ class Dataset:
             )
         names = {os.path.basename(f.path) for f in frags}
         by_file: dict[str, list[int]] = {}
-        for d in del_files:
-            t = _open_parquet(os.path.join(self.path, d))[0].read(columns=["file", "pos"])
+        for pf in sidecars:
+            t = pf.read(columns=["file", "pos"])
             for fn, pos in zip(t.column("file").to_pylist(), t.column("pos").to_pylist()):
                 if fn in names:
                     by_file.setdefault(fn, []).append(pos)
-        dead = None
-        for fn, ps in sorted(by_file.items()):
-            c = (F.col(_FILE_COL) == fn) & F.col(_POS_COL).isin(sorted(ps))
-            dead = c if dead is None else dead | c
-        return df if dead is None else df.filter(~dead)
+        if not by_file:
+            return df
+        # one SQL string, not a Column tree: each Column operator is a JVM
+        # round trip, and this runs on every read of a new table version.
+        # The position test comes first: it is a hash probe, while the
+        # file name is split out of the path per row
+        dead = " OR ".join(
+            "(`{}` IN ({}) AND `{}` = '{}')".format(
+                _POS_COL,
+                ", ".join(map(str, sorted(ps))),
+                _FILE_COL,
+                fn.replace("\\", "\\\\").replace("'", "\\'"),
+            )
+            for fn, ps in sorted(by_file.items())
+        )
+        return df.filter(~F.expr(dead))
 
     def _frag_by_basename(self) -> dict[str, Fragment]:
         return {os.path.basename(f.path): f for f in self.manifest.fragments}
@@ -2202,7 +2217,6 @@ class Dataset:
         images: list | None = None,
         delete_matched: bool = True,
         inserts=None,
-        few=None,
     ) -> "Dataset":
         """The merge-on-read commit behind UPDATE and MERGE (reference
         storage2 deletion files + append, update.go / merge_insert.go):
@@ -2211,9 +2225,9 @@ class Dataset:
         over a matched row) are appended keeping each row's stable id in
         ``__rowid``, and ``inserts(matched)`` adds new rows that take fresh
         ids at commit. One manifest commit lands it all, so the work is
-        O(rows changed), never O(fragment). ``few`` is ``matched``'s rows
-        as an Arrow table when the caller already holds them."""
-        if matched is not None and few is None:
+        O(rows changed), never O(fragment)."""
+        few = None
+        if matched is not None:
             # statement-sized matches move to the driver in one scan; the
             # sidecar, images and inserts then come from local rows
             few = self._few_rows(matched)
@@ -2306,15 +2320,14 @@ class Dataset:
 
     def _source_key_filters(
         self, source: DataFrame, keys: list[str]
-    ):
+    ) -> tuple[list[tuple[str, str, Any]], DataFrame, bool]:
         """(prunable conjuncts every target row matching some ``source``
-        row satisfies, the source, the source's rows as an Arrow table when
-        it is small). A small source — at most ``_IN_LIST_MAX`` rows — is
-        read once into a local relation and prunes by an IN-list of its
-        key values; a larger one prunes by each key's [min, max]. Only keys
-        of the table's own integral, string or date type prune; any other
-        key would be compared after a cast the manifest stats do not
-        model."""
+        row satisfies, the source, whether it is small). A small source —
+        at most ``_IN_LIST_MAX`` rows — is read once into a local relation
+        and prunes by an IN-list of its key values; a larger one prunes by
+        each key's [min, max]. Only keys of the table's own integral,
+        string or date type prune; any other key would be compared after a
+        cast the manifest stats do not model."""
         from pyspark.sql.types import DateType, IntegralType
 
         rows = self._few_rows(source)
@@ -2331,9 +2344,9 @@ class Dataset:
             return [
                 (c, "in", sorted({v for v in rows.column(c).to_pylist() if v is not None}))
                 for c in cols
-            ], source, rows
+            ], source, True
         if not cols:
-            return [], source, None
+            return [], source, False
         with driver_sized(self.spark):
             b = source.agg(
                 *[F.min(c) for c in cols], *[F.max(c) for c in cols]
@@ -2341,39 +2354,9 @@ class Dataset:
         out: list[tuple[str, str, Any]] = []
         for i, c in enumerate(cols):
             if b[i] is None:
-                return [(c, "in", [])], source, None  # all-NULL keys match nothing
+                return [(c, "in", [])], source, False  # all-NULL keys match nothing
             out += [(c, ">=", b[i]), (c, "<=", b[len(cols) + i])]
-        return out, source, None
-
-    @staticmethod
-    def _match_on_driver(cand, src_t, keys: list[str], upd: list[str]):
-        """Hash-match candidate target rows with source rows (both Arrow
-        tables, keys of one simple type on both sides): returns the matched
-        pairs — candidate columns plus ``__src_<c>`` for each ``upd``
-        column — and the source rows no candidate matched. NULL keys match
-        nothing, as in SQL."""
-        import pyarrow as pa
-
-        def key_tuples(t):
-            return list(zip(*[t.column(k).to_pylist() for k in keys]))
-
-        src_keys = key_tuples(src_t)
-        at: dict[tuple, list[int]] = {}
-        for j, key in enumerate(src_keys):
-            if None not in key:
-                at.setdefault(key, []).append(j)
-        pairs = [(i, j) for i, key in enumerate(key_tuples(cand)) for j in at.get(key, ())]
-        ci = pa.array([i for i, _ in pairs], pa.int64())
-        si = pa.array([j for _, j in pairs], pa.int64())
-        matched = pa.Table.from_arrays(
-            cand.take(ci).columns + src_t.select(upd).take(si).columns,
-            names=cand.column_names + [f"__src_{c}" for c in upd],
-        )
-        hit = {src_keys[j] for _, j in pairs}
-        unmatched = pa.array(
-            [j for j, key in enumerate(src_keys) if key not in hit], pa.int64()
-        )
-        return matched, src_t.take(unmatched)
+        return out, source, False
 
     def merge_insert(
         self,
@@ -2390,12 +2373,12 @@ class Dataset:
         ``update_columns`` (reference MatchedUpdateColumns,
         merge_insert.go:32,97) restricts the matched-row update to the named
         non-key columns; every other target column is preserved — the shape
-        an upsert needs when it must not clobber e.g. created_at.
+        an upsert needs when it must not clobber e.g. created_at. A matched
+        column takes the source's value, NULL included, as in SQL.
 
         Merge-on-read: only the fragments the source's key IN-list (or
-        key range) cannot prune are scanned — a small source's candidate
-        rows are read once and matched on the driver, a large one is
-        joined; matched rows are deleted through sidecars, their images
+        key range) cannot prune are joined with the source (broadcast when
+        small); matched rows are deleted through sidecars, their images
         and the unmatched source rows appended, all in one commit."""
         if update_columns is not None:
             if when_matched != "update":
@@ -2416,79 +2399,44 @@ class Dataset:
         m = self.manifest
         fields = self.schema.fields
         names = [f.name for f in fields]
-        filters, source, src_t = self._source_key_filters(source, keys)
-        small = src_t is not None
+        filters, source, small = self._source_key_filters(source, keys)
         frags, _ = self.plan_scan(filters, use_indexes=False)
         upd = []
+        images = None
         if when_matched == "update":
             upd = [
                 c for c in names
                 if c not in keys and (update_columns is None or c in update_columns)
             ]
-        images = None
-        if when_matched == "update":
             images = [
                 F.col(f"__src_{f.name}").cast(f.dataType).alias(f.name)
                 if f.name in upd
                 else F.col(f.name)
                 for f in fields
             ]
-        scan = (
-            self._scan_with_lineage(frags, with_row_id=m.row_ids) if frags else None
-        )
-        cand = None
-        if small and scan is not None and len(filters) == len(keys):
-            # every key prunes by an IN-list: read the candidate rows once
-            # and match them against the source on the driver
-            cand = self._few_rows(
-                scan.filter(
-                    functools.reduce(
-                        lambda a, b: a & b,
-                        [F.col(c).isin(vals) for c, _, vals in filters],
-                    )
-                )
-            )
-        if cand is not None:
-            matched_t, new_t = self._match_on_driver(cand, src_t, keys, upd)
-            matched = self.spark.createDataFrame(
-                matched_t,
-                schema=StructType(
-                    scan.schema.fields
-                    + [
-                        StructField(f"__src_{c}", source.schema[c].dataType)
-                        for c in upd
-                    ]
-                ),
-            )
-
-            def inserts(_):
-                return self.spark.createDataFrame(
-                    new_t.select(source.columns), schema=source.schema
-                ).select(*[F.col(f.name).cast(f.dataType) for f in fields]).coalesce(1)
-
-        else:
-            matched_t = None
+        matched = None
+        if frags:
             src = source.select(*keys, *[F.col(c).alias(f"__src_{c}") for c in upd])
-            matched = (
-                scan.join(F.broadcast(src) if small else src, keys)
-                if scan is not None
-                else None
+            # the key conjuncts also filter rows (parquet pushdown), so
+            # only candidate rows reach the join
+            scan = _apply_filters(
+                self._scan_with_lineage(frags, with_row_id=m.row_ids), filters
             )
+            matched = scan.join(F.broadcast(src) if small else src, keys)
 
-            def inserts(matched):
-                new = source.select(*[F.col(f.name).cast(f.dataType) for f in fields])
-                if matched is not None:
-                    hit = matched.select(*keys).distinct()
-                    new = new.join(
-                        F.broadcast(hit) if small else hit, keys, "left_anti"
-                    ).select(*names)
-                return new.coalesce(1) if small else new
+        def inserts(matched):
+            new = source.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+            if matched is not None:
+                hit = matched.select(*keys).distinct()
+                new = new.join(
+                    F.broadcast(hit) if small else hit, keys, "left_anti"
+                ).select(*names)
+            return new.coalesce(1) if small else new
 
         return self._replace_rows(
             "merge", m, matched, images,
             delete_matched=when_matched is not None,
             inserts=inserts if when_not_matched == "insert" else None,
-            few=matched_t,
         )
 
     # ------------------------------------------------- schema evolution
@@ -2798,12 +2746,12 @@ class Dataset:
         content is unchanged.
 
         - "binpack": size-tiered bins of fragments smaller than
-          target_bytes (the default maintenance pass): smallest first, a
-          fragment joins a bin only while the bin already holds at least
-          its bytes (files under ``_TIER_FLOOR_BYTES`` always do), so a
-          pass rewrites the small new files, not the table. A fragment
-          with ``_REWRITE_DELETED_FRAC`` of its rows deleted is rewritten
-          too, alone if no bin took it.
+          target_bytes (the default maintenance pass): a tier holds the
+          files under twice the bytes of its smallest file, and every tier
+          of two or more files is rewritten, so a pass rewrites the small
+          new files, not the table. A fragment with
+          ``_REWRITE_DELETED_FRAC`` of its rows deleted is rewritten too,
+          alone if no bin took it.
         - "count": rewrite ALL fragments into target_files files — the
           table-level re-layout (e.g. before a bucketed publish).
         - "zorder": rewrite ALL fragments range-partitioned + sorted on a
@@ -2875,25 +2823,25 @@ class Dataset:
             return self
         if strategy != "binpack":
             raise ValueError(f"unknown compaction strategy {strategy!r}")
-        # size-tiered bins, smallest first: a fragment joins the bin only
-        # while the bin already holds at least its bytes (files under
-        # _TIER_FLOOR_BYTES are one tier), so a large file is rewritten
-        # only once as many smaller bytes join it — each byte is rewritten
-        # O(log table) times, and a pass costs O(new data), not O(table)
+        # size tiers, smallest first: a tier holds the files under twice
+        # its smallest file's bytes, and a tier of two or more is rewritten
+        # (in bins of at most target_bytes). The output lands at least one
+        # tier up, so each byte is rewritten O(log table) times, a pass
+        # costs O(new data), and a table keeps about one file per tier
         bins: list[list[Fragment]] = []
-        cur: list[Fragment] = []
         size = 0
         for f in sorted(
             (f for f in m.fragments if f.bytes < target_bytes), key=lambda x: x.bytes
         ):
-            if cur and (
-                size + f.bytes > target_bytes or max(size, _TIER_FLOOR_BYTES) < f.bytes
+            if (
+                not bins
+                or f.bytes >= 2 * bins[-1][0].bytes
+                or size + f.bytes > target_bytes
             ):
-                bins.append(cur)
-                cur, size = [], 0
-            cur.append(f)
+                bins.append([])
+                size = 0
+            bins[-1].append(f)
             size += f.bytes
-        bins.append(cur)
         bins = [b for b in bins if len(b) >= 2]
         # a fragment is also rewritten, alone if no bin took it, once
         # _REWRITE_DELETED_FRAC of its rows are deleted (materializing them)
@@ -2906,16 +2854,19 @@ class Dataset:
         ]
         if not bins:
             return self
-        added: list[Fragment] = []
-        for b in bins:
-            df = (
+        # one partition per bin, unioned: every bin lands in one write job
+        df = functools.reduce(
+            DataFrame.union,
+            [
                 self._scan_with_lineage(b, with_row_id=m.row_ids)
                 .drop(_FILE_COL, _POS_COL)
                 .coalesce(1)
-            )
-            if m.row_ids:
-                df = df.withColumnRenamed(_ROWID, _ROWID_STORED)
-            added += self._write_fragments(df, start_id=m.max_fragment_id + 1 + len(added))
+                for b in bins
+            ],
+        )
+        if m.row_ids:
+            df = df.withColumnRenamed(_ROWID, _ROWID_STORED)
+        added = self._write_fragments(df, start_id=m.max_fragment_id + 1)
         self._commit(
             _Txn(
                 op="rewrite",

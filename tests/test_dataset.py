@@ -835,6 +835,104 @@ def test_merge_update_columns_preserves_rest(spark, tmp_path_ds, base_df):
         )
 
 
+def test_merge_matched_null_source_value_overwrites(spark, tmp_path_ds, base_df):
+    """A matched update takes the source's value even when it is NULL, as
+    SQL MERGE ... UPDATE SET val = s.val does; an unmatched NULL inserts."""
+    ds = Dataset.create(spark, tmp_path_ds, base_df)
+    src = spark.createDataFrame(
+        [(5, 5, None), (6, 6, 1.5), (2000, 0, None)], "id long, grp long, val double"
+    )
+    ds.merge_insert(src, keys=["id"])
+    got = {r["id"]: r["val"] for r in ds.to_df().filter("id IN (5, 6, 7, 2000)").collect()}
+    assert got == {5: None, 6: 1.5, 7: 17.5, 2000: None}
+    assert ds.count_rows() == 1001
+
+
+def _dml_story(spark, path, base_df):
+    """DELETE, UPDATE, MERGE (update+insert, delete, insert-only), a staged
+    delete, then every read: rows (without ids) after each step."""
+    ds = Dataset.create(spark, path, base_df.repartition(4), row_ids=True)
+
+    def rows(d):
+        return sorted(map(tuple, d.to_df().collect()))
+
+    def src(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id"), (F.col("id") % 3).alias("grp"), (F.col("id") * -1.0).alias("val")
+        )
+
+    seen = []
+    ds.delete("id % 7 = 0")
+    seen.append(rows(ds))
+    ds.update({"val": "val + 1", "grp": "grp + 100"}, "grp = 2")
+    seen.append(rows(ds))
+    ds.merge_insert(src(950, 1050), keys=["id"])
+    seen.append(rows(ds))
+    ds.merge_insert(src(100, 160), keys=["id"], when_matched="delete", when_not_matched=None)
+    seen.append(rows(ds))
+    ds.merge_insert(src(1040, 1080), keys=["id"], when_matched=None)
+    seen.append(rows(ds))
+    ds.commit_staged(ds.stage_delete("grp = 102"))
+    seen.append(rows(ds))
+    withids = ds.to_df(with_row_id=True).collect()
+    assert len({r["_rowid"] for r in withids}) == len(withids)
+    seen.append(sorted((r["id"], r["grp"], r["val"]) for r in withids))
+    seen.append(sorted(map(tuple, ds.to_df(filters="id >= 900 AND grp <> 1").collect())))
+    return seen
+
+
+def test_large_statement_path_matches_small(spark, tmp_path_ds, base_df, monkeypatch):
+    """Statements above the driver gate (_IN_LIST_MAX matched rows or
+    source rows, sidecars over it on read) take the distributed path:
+    persisted hits, Spark-written sidecars, a non-broadcast MERGE join and
+    the anti-join read. Shrinking the gate sends every step of the same
+    story there; the answers must equal the driver path's."""
+    import plan_spark.dataset.dataset as dsmod
+
+    small = _dml_story(spark, tmp_path_ds + "/small", base_df)
+    monkeypatch.setattr(dsmod, "_IN_LIST_MAX", 5)
+    large = _dml_story(spark, tmp_path_ds + "/large", base_df)
+    assert large == small
+    assert len(small[-1]) > 0 and len(small[0]) == 1000 - 143
+
+
+def test_binpack_tiers_merge_files_of_distinct_sizes(spark, tmp_path_ds):
+    """Size-tiered binpack over 1-10 MiB files of distinct sizes: each
+    tier (files under twice its smallest) of two or more is rewritten, the
+    fragment count stays about one per tier, and a new small file is
+    binned with its own tier, not with the table."""
+    import pytest as _pt
+
+    def part(seed, n):
+        return spark.range(n).select(F.rand(seed).alias("x")).coalesce(1)
+
+    n_rows = [140_000, 200_000, 290_000, 420_000, 610_000, 880_000]
+    ds = Dataset.create(spark, tmp_path_ds, part(0, n_rows[0]))
+    for i, n in enumerate(n_rows[1:], 1):
+        ds.append(part(i, n))
+    sizes = sorted(f.bytes for f in ds.manifest.fragments)
+    assert sizes[0] > 1 << 20 and sizes[-1] < 10 << 20
+    assert len(set(sizes)) == len(sizes)
+    want = ds.to_df().agg(F.count("*"), F.sum("x")).collect()[0]
+    ds.compact()
+    assert len(ds.manifest.fragments) < len(n_rows)
+    for _ in range(3):
+        ds.compact()
+    sizes = sorted(f.bytes for f in ds.manifest.fragments)
+    # settled: one file per 2x tier
+    assert all(b >= 2 * a for a, b in zip(sizes, sizes[1:]))
+    assert len(sizes) <= 3
+    got = ds.to_df().agg(F.count("*"), F.sum("x")).collect()[0]
+    assert got[0] == want[0] and got[1] == _pt.approx(want[1])
+    ds.compact()
+    assert ds.last_compaction_stats is None  # a settled table is left alone
+    ds.append(part(10, 1000))
+    ds.append(part(11, 1200))
+    ds.compact()
+    assert ds.last_compaction_stats["fragments_compacted"] == 2
+    assert ds.last_compaction_stats["bytes_read"] < 1 << 20
+
+
 def test_filter_parser_top_level_or_disables_pruning(spark, tmp_path_ds):
     """'a = 1 OR b = 2 AND c = 3' parses as a=1 OR (b=2 AND c=3): NO
     conjunct is individually required, so the parser must extract nothing

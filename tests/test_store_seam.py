@@ -23,6 +23,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import plan_spark.dataset.dataset as dataset_mod
 from plan_spark.dataset.commit import (
     CasCommitHandler,
     LocalCommitHandler,
@@ -227,10 +228,16 @@ class TestDataPlaneThroughSeam:
         # a statement-sized sidecar is written by the driver in one put
         ds.delete("k % 10 = 3")
         assert any(x.startswith(p) and "/deletes/" in x for x in spy.puts)
+        # above the driver gate, Spark writes the sidecar and it lands
+        # through Store.move
+        monkeypatch.setattr(dataset_mod, "_IN_LIST_MAX", 5)
+        ds.delete("k % 10 = 7")
+        assert any("/deletes/" in d for _, d in spy.moves)
+        monkeypatch.setattr(dataset_mod, "_IN_LIST_MAX", 10_000)
         ds.create_index("bt", kind="btree", column="k", n_runs=2)
         assert any(x.endswith("_INFLIGHT") for x in spy.puts)
         ds.compact()
         n_before = len(spy.deletes)
         ds.vacuum(grace_seconds=0.0)
         assert len(spy.deletes) > n_before, "vacuum removals via the seam"
-        assert ds.to_df().count() == 270
+        assert ds.to_df().count() == 240
