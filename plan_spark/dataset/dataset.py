@@ -34,6 +34,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass, field, replace
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,7 +53,7 @@ from plan_spark.dataset.commit import (
 )
 from plan_spark.dataset.manifest import Fragment, Manifest
 from plan_spark.faults import fault_point
-from plan_spark.session import driver_sized
+from plan_spark.session import driver_sized, parse_expression
 
 
 class ConflictError(Exception):
@@ -218,6 +219,47 @@ def _collect_stats(
 
 
 _NO_BOUNDS = object()
+
+# Catalyst comparison node -> conjunct operator (Dataset._parse_filter_string)
+_CMP_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+
+
+def _column(node: dict) -> str | None:
+    """The column a parsed node names when it is a single-part identifier.
+    Name parts print as ``[t, a]``, so a name holding ", " is not provably
+    one part and names nothing here."""
+    if not node["class"].endswith(".UnresolvedAttribute"):
+        return None
+    name = node["nameParts"][1:-1]
+    return None if ", " in name else name
+
+
+def _literal(node: dict) -> int | float | str | None:
+    """A parsed literal's value as the type fragment stats compare with —
+    integer types as int, double as float, string as str — or None when it
+    has no such value: NULL, typed (DATE, ...), boolean and non-literal
+    nodes, and a decimal that no int or float equals exactly."""
+    if not node["class"].endswith(".Literal") or node["value"] is None:
+        return None
+    dt, v = node["dataType"], node["value"]
+    if dt in ("byte", "short", "integer", "long"):
+        return int(v)
+    if dt == "double":
+        return float(v)
+    if dt == "string":
+        return v
+    if dt.startswith("decimal("):
+        d = Decimal(v)
+        if d == d.to_integral_value():
+            return int(d)
+        return float(d) if float(d) == d else None
+    return None
 
 
 def _conjunct_bounds(op: str, val):
@@ -994,162 +1036,55 @@ class Dataset:
 
     # ----------------------------------------------------------------- scan
     @staticmethod
-    def _quoted_end(pred: str, i: int) -> int:
-        """Index just past the string literal opening at ``pred[i]``, with
-        Spark's lexing: a backslash escapes the next character, so ``\\'``
-        does not close the literal (``''`` reads as two adjacent literals,
-        which splits the same way)."""
-        q, j, n = pred[i], i + 1, len(pred)
-        while j < n and pred[j] != q:
-            j += 2 if pred[j] == "\\" else 1
-        return min(j + 1, n)
-
-    @staticmethod
-    def _split_top_level_and(pred: str) -> list[str] | None:
-        """Split a predicate on TOP-LEVEL (paren-depth 0, outside quotes)
-        AND keywords. Returns None when a top-level OR exists: with
-        ``a = 1 OR b = 2 AND c = 3`` (== a=1 OR (b=2 AND c=3)) NO conjunct
-        is individually required, so treating any of them as a pruning
-        predicate would silently drop matching rows. OR inside parentheses
-        is fine — ``(a = 1 OR b = 2) AND c = 3`` still requires c = 3."""
-        parts: list[str] = []
-        buf: list[str] = []
-        depth = 0
-        i, n = 0, len(pred)
-        up = pred.upper()
-
-        def word_bounded(start: int, end: int) -> bool:
-            before_ok = start == 0 or not (
-                pred[start - 1].isalnum() or pred[start - 1] == "_"
-            )
-            after_ok = end >= n or not (pred[end].isalnum() or pred[end] == "_")
-            return before_ok and after_ok
-
-        while i < n:
-            ch = pred[i]
-            if ch in ("'", '"'):
-                j = Dataset._quoted_end(pred, i)
-                buf.append(pred[i:j])
-                i = j
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if depth == 0:
-                if up.startswith("OR", i) and word_bounded(i, i + 2):
-                    return None
-                if up.startswith("AND", i) and word_bounded(i, i + 3):
-                    parts.append("".join(buf))
-                    buf = []
-                    i += 3
-                    continue
-            buf.append(ch)
-            i += 1
-        parts.append("".join(buf))
-        return [p.strip() for p in parts if p.strip()]
-
-    @staticmethod
-    def _parse_filter_string(pred: str) -> list[tuple[str, str, Any]]:
-        """Extract prunable (col, op, literal) conjuncts from a predicate
-        string (reference filter_parser.go:23-346 — the same comparison
-        subset drives index/zonemap selection there). Anything the parser
-        does not recognize simply contributes no pruning, and a TOP-LEVEL
-        OR disables conjunct extraction entirely (none of the branches is
-        individually required); the FULL predicate is always applied as a
-        residual filter, so this is best-effort metadata pruning, never a
-        correctness surface."""
-        import re
-
-        parts = Dataset._split_top_level_and(
-            Dataset._rewrite_between(pred.strip())
-        )
-        if parts is None:
-            return []
+    def _parse_filter_string(
+        spark: SparkSession, pred: str
+    ) -> list[tuple[str, str, Any]]:
+        """Prunable (col, op, literal) conjuncts of a predicate string, read
+        off Spark's own parse of it (``parse_expression``): the parser and
+        session confs that apply the full predicate as the residual
+        ``F.expr``, so no conjunct can come from text Spark reads as a
+        literal. Only top-level AND is descended — an OR, NOT or any other
+        node contributes nothing — and a conjunct counts only as a
+        single-part column compared by = < <= > >=, IN or BETWEEN with
+        literals that compare exactly (``_literal``). The full predicate
+        always applies as a residual, so pruning may read too much, never
+        too little. Text Spark cannot parse raises its ParseException."""
+        nodes = parse_expression(spark, pred)
+        # kids[i]: node i's children; a reverse pass over the pre-order
+        # list has finished every child subtree when it reaches the parent
+        kids: list[list[int]] = [[] for _ in nodes]
+        done: list[int] = []
+        for i in range(len(nodes) - 1, -1, -1):
+            kids[i] = [done.pop() for _ in range(nodes[i]["num-children"])]
+            done.append(i)
         out: list[tuple[str, str, Any]] = []
-        for part in parts:
-            im = re.match(r"(?is)^\s*(\w+)\s+IN\s*\(([^()]*)\)\s*$", part)
-            if im:
-                vals = []
-                for lit in im.group(2).split(","):
-                    lit = lit.strip()
-                    if re.fullmatch(r"'[^'\\]*'", lit):
-                        vals.append(lit[1:-1])
-                    elif re.fullmatch(r"-?\d+", lit):
-                        vals.append(int(lit))
-                    elif re.fullmatch(r"-?\d+\.\d+", lit):
-                        vals.append(float(lit))
-                    else:
-                        vals = None  # unparseable member: contribute no pruning
-                        break
-                if vals:
-                    out.append((im.group(1), "in", vals))
+        todo = [0]
+        while todo:
+            i = todo.pop()
+            kind = nodes[i]["class"].rsplit(".", 1)[-1]
+            if kind == "And":
+                todo += reversed(kids[i])
                 continue
-            m = re.match(
-                r"^\s*(\w+)\s*(>=|<=|<>|!=|=|<|>)\s*('[^'\\]*'|-?\d+(?:\.\d+)?)\s*$",
-                part,
-            )
-            if not m:
+            args = [nodes[j] for j in kids[i]]
+            col = _column(args[0]) if args else None
+            vals = [_literal(a) for a in args[1:]]
+            if col is None or not vals or None in vals:
                 continue
-            col, op, lit = m.group(1), m.group(2), m.group(3)
-            if op in ("<>", "!="):
-                continue  # != can't prune on min/max
-            val: Any
-            if lit.startswith("'"):
-                val = lit[1:-1]
-            elif "." in lit:
-                val = float(lit)
-            else:
-                val = int(lit)
-            out.append((col, op, val))
+            if kind in _CMP_OPS:
+                out.append((col, _CMP_OPS[kind], vals[0]))
+            elif kind == "In":
+                out.append((col, "in", vals))
+            elif kind == "UnresolvedFunction" and len(vals) == 2 and (
+                nodes[i]["nameParts"].lower() == "[between]"
+            ):
+                out += [(col, ">=", vals[0]), (col, "<=", vals[1])]
         return out
-
-    @staticmethod
-    def _rewrite_between(pred: str) -> str:
-        """Rewrite ``col BETWEEN lit AND lit`` to ``col >= lit AND col <=
-        lit`` so the AND splitter doesn't cut BETWEEN in half (it splits on
-        every top-level AND) and both bounds prune. Quote-aware: a BETWEEN
-        inside a string literal is left alone (rewriting it would
-        fabricate conjuncts that wrongly prune). ``NOT BETWEEN`` cannot
-        prune on min/max and is skipped — the unrewritten text simply
-        contributes no conjunct, and the full predicate always applies as
-        the residual filter."""
-        import re
-
-        lit = r"(?:'[^'\\]*'|-?\d+(?:\.\d+)?)"
-        pat = re.compile(
-            rf"(?is)\b(\w+)\s+BETWEEN\s+({lit})\s+AND\s+({lit})"
-        )
-        out: list[str] = []
-        i, n = 0, len(pred)
-        while i < n:
-            ch = pred[i]
-            if ch in ("'", '"'):
-                j = Dataset._quoted_end(pred, i)
-                out.append(pred[i:j])
-                i = j
-                continue
-            m = pat.match(pred, i)
-            # keyword "columns" mean the match swallowed part of a larger
-            # construct (x NOT BETWEEN ... matches with col='NOT'): skip
-            if m and m.group(1).upper() not in ("NOT", "AND", "OR"):
-                col, lo, hi = m.group(1), m.group(2), m.group(3)
-                out.append(f"{col} >= {lo} AND {col} <= {hi}")
-                i = m.end()
-                continue
-            out.append(ch)
-            i += 1
-        return "".join(out)
-
-    @staticmethod
-    def _conjunct_bounds(op: str, val):
-        """(lo, hi) key bounds a conjunct admits, for index probing; the
-        _NO_BOUNDS sentinel means the operator can't bound a key range."""
-        return _conjunct_bounds(op, val)
 
     def _prunable(self, f: Fragment, filters) -> bool:
         """True if fragment stats prove no row can match (zonemap pruning —
-        reference zonemap_index.go:18-63, index_selector.go:36)."""
+        reference zonemap_index.go:18-63, index_selector.go:36). ``filters``
+        are (col, op, literal) conjuncts every matching row satisfies: a
+        caller's tuples or _parse_filter_string's reading of a predicate."""
         for col, op, val in filters or []:
             # stats are keyed by the stored (physical) column name
             st = f.stats.get(self._phys(col))
@@ -1617,8 +1552,9 @@ class Dataset:
     ):
         """(selected, pruned) fragments for a filtered scan — the engine's
         EXPLAIN surface for file pruning. ``filters`` is either a list of
-        (col, op, literal) tuples or a predicate string (conjuncts are
-        extracted for pruning, reference filter_parser.go).
+        (col, op, literal) tuples or a predicate string, whose prunable
+        conjuncts come from Spark's own parse of it
+        (_parse_filter_string; a string Spark cannot parse raises).
 
         ``use_indexes=True`` (default) additionally routes prunable
         conjuncts through EVERY fresh btree/rtree/bitmap index that clears the
@@ -1636,7 +1572,7 @@ class Dataset:
         and whether they are FRESH or need refresh/rebuild (the stale-
         fallback a caller must see before trusting search results)."""
         if isinstance(filters, str):
-            filters = self._parse_filter_string(filters)
+            filters = self._parse_filter_string(self.spark, filters)
         trace: list | None = [] if explain else None
         hits = (
             self._auto_index_hits(filters, trace=trace) if use_indexes else None
@@ -1707,8 +1643,9 @@ class Dataset:
         the residual filters) -> merge-on-read anti-join of deletion vectors.
 
         ``filters`` may be a list of (col, op, literal) tuples or a SQL
-        predicate string: the string prunes via its extractable conjuncts
-        and is applied in full as a residual filter.
+        predicate string: the string prunes via the conjuncts Spark's
+        parser finds in it (_parse_filter_string) and is applied in full
+        as a residual ``F.expr`` filter, read by the same parser.
 
         ``use_indexes=True`` (default) lets the scan planner route
         prunable conjuncts through every qualifying FRESH index

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from plan_spark.dataset import Dataset
-from plan_spark.session import driver_sized
+from plan_spark.session import driver_sized, parse_expression
 
 
 def _witness(rows) -> str:
@@ -56,6 +56,11 @@ _ANALYZABLE_TYPES = (
     "decimal", "string", "boolean", "date", "timestamp", "binary",
 )
 
+
+# a single-quoted string literal as Spark lexes it: a backslash escapes the
+# next character and '' is an adjacent literal — the one literal rule of the
+# statement-level regexes below, in step with _scan_top_level
+_STR_LIT = r"'(?:[^'\\]|\\.|'')*'"
 
 # a relation introduced by FROM/JOIN/, with an optional alias, preceding a
 # VERSION AS OF clause — shared by the numeric and tag rewrite forms so a
@@ -238,11 +243,11 @@ class _Stmt:
     def string_lit(self) -> str:
         """A single-quoted literal, decoded ('' doubling + backslashes)."""
         self._ws()
-        m = re.match(r"'((?:[^'\\]|\\.|'')*)'", self.s[self.i :])
+        m = re.match(_STR_LIT, self.s[self.i :])
         if not m:
             raise self.error("expected string literal")
         self.i += m.end()
-        return _unquote_sql(m.group(1))
+        return _unquote_sql(m.group(0)[1:-1])
 
     def paren_body(self) -> str:
         """Raw text inside the next balanced-paren group (quote-aware)."""
@@ -1051,18 +1056,30 @@ class Engine:
         self._drop_view_temps(name, schema)
 
     @staticmethod
-    def _check_mentions(col: str, check_sql: str) -> bool:
-        """Whether a CHECK expression's TEXT references ``col`` as an
-        identifier. String literals are blanked first ('' doubling kept
-        whole) so a column name appearing INSIDE a literal — e.g.
-        ``status IN ('k', 'v')`` vs a column named k — never blocks a
-        rename/drop; still conservative on identifiers (qualified or
-        quoted names match by word boundary). The literal pattern consumes
-        backslash escapes exactly like _split_statements does, so a
-        ``'a\\''`` literal cannot shift the boundary and blank a real
-        identifier after it."""
-        no_lits = re.sub(r"'(?:[^'\\]|\\.|'')*'", "''", check_sql)
-        return re.search(rf"\b{re.escape(col)}\b", no_lits) is not None
+    def _check_mentions(spark: SparkSession, col: str, check_sql: str) -> bool:
+        """Whether a CHECK expression references ``col``: some identifier
+        in Spark's own parse of it names ``col``, compared
+        case-insensitively as Spark resolves names. A name inside a literal
+        is literal text, so ``status IN ('k', 'v')`` never blocks renaming
+        a column k. Conservative: a qualified or nested name counts whole
+        and part by part, subquery plans are searched too, and so are
+        lambda variables (the parser makes every identifier in a lambda
+        body one, outer columns included)."""
+        want = col.lower()
+        todo: list = [parse_expression(spark, check_sql)]
+        while todo:
+            x = todo.pop()
+            if isinstance(x, list):
+                todo += x
+            elif isinstance(x, dict):
+                if x.get("class", "").endswith(
+                    (".UnresolvedAttribute", ".UnresolvedNamedLambdaVariable")
+                ):
+                    name = x["nameParts"][1:-1].lower()
+                    if want == name or want in name.split(", "):
+                        return True
+                todo += x.values()
+        return False
 
     def _view_dependents(self, name: str, schema: str, *, skip=None) -> list[str]:
         """Stored views whose SQL references the relation (table or view)
@@ -1294,7 +1311,7 @@ class Engine:
         _split_statements, so a ``'don\\'t'`` literal cannot desynchronize
         the boundary and let a double quote INSIDE a later string literal
         be rewritten to backticks."""
-        parts = re.split(r"('(?:[^'\\]|\\.|'')*')", s)
+        parts = re.split(f"({_STR_LIT})", s)
         for i in range(0, len(parts), 2):
             parts[i] = re.sub(
                 r'"((?:[^"]|"")*)"',
@@ -1351,7 +1368,7 @@ class Engine:
         # split on single-quoted literals ('' AND backslash escapes, same
         # scan as _split_statements) plus double-quoted identifiers,
         # rewriting only the code between them
-        parts = re.split(r"('(?:[^'\\]|\\.|'')*'|\"(?:[^\"]|\"\")*\")", s)
+        parts = re.split(f"({_STR_LIT}|" + r'"(?:[^"]|"")*")', s)
         for i in range(0, len(parts), 2):
             parts[i] = re.sub(
                 _TT_RELATION
@@ -1737,7 +1754,7 @@ class Engine:
                 # 'value not null here' is consumed whole — the NOT NULL /
                 # PRIMARY KEY lookahead never fires inside the literal.
                 dm = re.search(
-                    r"(?is)\s+DEFAULT\s+('(?:[^'\\]|\\.|'')*'|.+?)"
+                    rf"(?is)\s+DEFAULT\s+({_STR_LIT}|.+?)"
                     r"(?=\s+NOT\s+NULL\b|\s+PRIMARY\s+KEY\b|$)",
                     part,
                 )
@@ -2665,7 +2682,7 @@ class Engine:
             p.end()
             entry = self._entry(tbl, "main")
             if any(
-                self._check_mentions(col, chk)
+                self._check_mentions(self.spark, col, chk)
                 for chk in entry.get("checks") or []
             ):
                 # CHECKs are stored as SQL text — rewriting an expression is
@@ -2725,7 +2742,7 @@ class Engine:
             if any(col in u for u in entry.get("unique") or []):
                 holders.append("UNIQUE")
             if any(
-                self._check_mentions(col, chk)
+                self._check_mentions(self.spark, col, chk)
                 for chk in entry.get("checks") or []
             ):
                 holders.append("CHECK")

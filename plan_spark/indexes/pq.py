@@ -92,8 +92,11 @@ class PqIndex:
 
         from pyspark import inheritable_thread_target
 
+        # given the session, the wrapper also carries its job tags (not
+        # just local properties) into the pool threads
+        fit = inheritable_thread_target(spark)(_fit)
         with ThreadPoolExecutor(max_workers=min(4, m)) as pool:
-            models = list(pool.map(inheritable_thread_target(_fit), range(m)))
+            models = list(pool.map(fit, range(m)))
         codebooks = [
             [[float(x) for x in c] for c in mod.clusterCenters()] for mod in models
         ]

@@ -16,6 +16,7 @@ distributed DAG, so the session is where the scale knobs live:
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 from contextlib import contextmanager
@@ -80,6 +81,22 @@ def driver_sized(spark: SparkSession):
                 conf.set("spark.sql.adaptive.enabled", old)
             else:
                 _DS_STATE[key] = (depth - 1, old)
+
+
+def parse_expression(spark: SparkSession, text: str) -> list[dict]:
+    """Spark's own parse of the SQL expression ``text``: the unresolved
+    Catalyst tree as ``TreeNode.toJSON`` gives it, a pre-order list of
+    nodes in which each node's ``num-children`` subtrees follow it. No
+    analysis and no Spark job; text Spark cannot parse raises its
+    ``ParseException``.
+
+    The parser reads its confs (``spark.sql.parser.escapedStringLiterals``
+    and the like) from the thread's active session, so ``spark`` is made
+    active first, as DataFrame calls do for their own session: the tree
+    then decodes literals exactly as ``F.expr(text)`` on ``spark`` does."""
+    jss = spark._jsparkSession
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(jss)
+    return json.loads(jss.sessionState().sqlParser().parseExpression(text).toJSON())
 
 
 def get_spark(

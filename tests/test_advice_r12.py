@@ -28,8 +28,10 @@ from plan_spark.dataset import Dataset
 # ---------------------------------------------------------------------------
 
 
-def test_between_extracts_bounds():
-    p = Dataset._parse_filter_string
+def test_between_extracts_bounds(spark):
+    def p(pred):
+        return Dataset._parse_filter_string(spark, pred)
+
     assert p("x BETWEEN 1 AND 5") == [("x", ">=", 1), ("x", "<=", 5)]
     assert p("ts BETWEEN '2020-01-01' AND '2020-06-30'") == [
         ("ts", ">=", "2020-01-01"),

@@ -1,8 +1,9 @@
 """Regression tests for the round-8 ADVICE findings (all three fixed r9):
 
-1. engine._check_mentions must consume backslash-escaped quotes inside
-   string literals like the statement splitter does, so a ``'a\\''``
-   literal can't shift the blanking boundary and hide a real identifier.
+1. engine._check_mentions must read backslash-escaped quotes inside
+   string literals as Spark does, so a ``'a\\''`` literal can't hide a
+   real identifier after it (it now reads the CHECK through Spark's own
+   parser).
 2. faults.arm_fault must keep the firing MODE per site — arming 'b' in
    exit mode must not silently switch an already-armed 'a' to exit.
 3. A crashed publish_fences strands ``fences.parquet.tmp.<pid>.<tid>``;
@@ -23,23 +24,31 @@ from plan_spark.indexes.btree import recover_dir, sweep_dead_tmps
 
 
 class TestCheckMentionsEscapes:
-    def test_identifier_after_escaped_quote_literal_is_seen(self):
+    def test_identifier_after_escaped_quote_literal_is_seen(self, spark):
         # ADVICE repro: with the old pattern the literal boundary shifted
         # and `mycol` was blanked, letting RENAME/DROP proceed while a
         # stored CHECK still referenced it.
-        assert Engine._check_mentions("mycol", "c = 'a\\'' AND mycol = 'x'")
+        assert Engine._check_mentions(spark, "mycol", "c = 'a\\'' AND mycol = 'x'")
 
-    def test_name_inside_escaped_literal_not_a_mention(self):
-        assert not Engine._check_mentions("k", "c = 'it\\'s k' AND d = 2")
+    def test_name_inside_escaped_literal_not_a_mention(self, spark):
+        assert not Engine._check_mentions(spark, "k", "c = 'it\\'s k' AND d = 2")
 
-    def test_plain_literal_still_blanked(self):
-        assert not Engine._check_mentions("k", "status IN ('k', 'v')")
+    def test_plain_literal_still_blanked(self, spark):
+        assert not Engine._check_mentions(spark, "k", "status IN ('k', 'v')")
 
-    def test_doubled_quote_literal_still_blanked(self):
-        assert not Engine._check_mentions("k", "c = 'it''s k' AND d = 2")
+    def test_doubled_quote_literal_still_blanked(self, spark):
+        assert not Engine._check_mentions(spark, "k", "c = 'it''s k' AND d = 2")
 
-    def test_plain_mention_still_detected(self):
-        assert Engine._check_mentions("k", "k > 0 AND j < 'z'")
+    def test_plain_mention_still_detected(self, spark):
+        assert Engine._check_mentions(spark, "k", "k > 0 AND j < 'z'")
+
+    def test_mentions_resolve_like_spark(self, spark):
+        # names compare case-insensitively, and identifiers in lambda
+        # bodies and subqueries count
+        assert Engine._check_mentions(spark, "K", "k > 0")
+        assert Engine._check_mentions(spark, "k", "exists(arr, x -> x = k)")
+        assert Engine._check_mentions(spark, "k", "(SELECT max(k) FROM t) > 0")
+        assert not Engine._check_mentions(spark, "k", "upper(j) = 'K'")
 
 
 class TestPerSiteFaultMode:

@@ -938,15 +938,15 @@ def test_filter_parser_top_level_or_disables_pruning(spark, tmp_path_ds):
     conjunct is individually required, so the parser must extract nothing
     (pruning on c=3 dropped a-branch rows before this fix). OR inside
     parentheses still allows the outer conjunct."""
-    assert Dataset._parse_filter_string("a = 1 OR b = 2 AND c = 3") == []
-    assert Dataset._parse_filter_string("a = 1 AND b = 2 OR c = 3") == []
-    got = Dataset._parse_filter_string("(a = 1 OR b = 2) AND c = 3")
+    assert Dataset._parse_filter_string(spark, "a = 1 OR b = 2 AND c = 3") == []
+    assert Dataset._parse_filter_string(spark, "a = 1 AND b = 2 OR c = 3") == []
+    got = Dataset._parse_filter_string(spark, "(a = 1 OR b = 2) AND c = 3")
     assert ("c", "=", 3) in got
     # a column NAMED like the keyword must not split ('order_id', 'android')
-    got = Dataset._parse_filter_string("order_id = 5 AND android = 3")
+    got = Dataset._parse_filter_string(spark, "order_id = 5 AND android = 3")
     assert ("order_id", "=", 5) in got and ("android", "=", 3) in got
     # quoted literals containing ' OR ' are opaque
-    got = Dataset._parse_filter_string("a = 'x OR y' AND c = 3")
+    got = Dataset._parse_filter_string(spark, "a = 'x OR y' AND c = 3")
     assert ("c", "=", 3) in got
 
     # end-to-end: rows matching only the OR's left branch survive the scan
@@ -960,6 +960,27 @@ def test_filter_parser_top_level_or_disables_pruning(spark, tmp_path_ds):
     got_ids = sorted(r.id for r in ds.to_df(filters=pred).collect())
     want_ids = sorted(r.id for r in ds.to_df().filter(pred).collect())
     assert got_ids == want_ids and len(got_ids) > 0
+
+
+def test_filter_parser_keeps_only_exact_column_literal_conjuncts(spark):
+    """Conjuncts are read off Spark's parse: a literal counts only when an
+    int, float or str equals it exactly, only a single-part column on the
+    left counts, and text Spark cannot parse raises its parse error."""
+    from pyspark.errors import ParseException
+
+    def p(pred):
+        return Dataset._parse_filter_string(spark, pred)
+
+    assert p("a = 1.0 AND b IN (2, 2.5) AND c = 'x'") == [
+        ("a", "=", 1), ("b", "in", [2, 2.5]), ("c", "=", "x"),
+    ]
+    # no double equals the decimal; literal-first, qualified, NULL, boolean,
+    # typed and negated forms contribute nothing
+    assert p("b > 2.4999999999999999999") == []
+    assert p("5 < a AND t.a = 1 AND a = NULL AND a = true") == []
+    assert p("d = DATE '2020-01-01' AND NOT a = 1 AND a != 2") == []
+    with pytest.raises(ParseException):
+        p("a = = 1")
 
 
 def test_to_df_unknown_columns_raise_on_empty_scan(spark, tmp_path):

@@ -2,10 +2,12 @@
 conjunct predicates — a pruned scan returns exactly the rows of an
 unpruned scan with the same residual filter.
 
-The parser (dataset.py _parse_filter_string, reference filter_parser.go)
-is best-effort by design; what must NEVER happen is a fragment pruned that
-held a matching row. Random predicates over a multi-fragment dataset with
-interleaved / disjoint / boundary values probe exactly that."""
+The prunable conjuncts come from Spark's own parse of the predicate
+(Dataset._parse_filter_string walks the Catalyst tree); what must NEVER
+happen is a fragment pruned that held a matching row. Random predicates
+over a multi-fragment dataset with interleaved / disjoint / boundary
+values probe exactly that: comparisons either way round, IN, BETWEEN and
+NOT BETWEEN, a top-level OR, and decimals no double equals."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ import shutil
 import tempfile
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -21,28 +23,53 @@ from plan_spark.dataset import Dataset
 
 _COLS = ("a", "b", "s")
 
-_num_lit = st.integers(min_value=-5, max_value=25)
+# values of a near the fragment bounds of the layouts below (0-19, 15-39,
+# 40-59) are drawn often: the edges are where an unsound prune shows
+_num_lit = st.one_of(
+    st.integers(min_value=-5, max_value=25),
+    st.sampled_from([0, 15, 18, 19, 38, 39, 40, 58, 59]),
+)
 _str_lit = st.sampled_from(["x0", "x1", "x5", "zz", ""])
+# over-precise decimals round to a whole double. Spark compares the int
+# column a with them exactly, so a conjunct rounded to float would prune
+# the fragment whose bound is the rounded value (a > 18.9999999999999999999
+# drops the row a = 19); against the double column b Spark compares in
+# double, where either reading is sound
+_fraction = st.sampled_from(
+    ["", "", "", ".5", ".9999999999999999999", ".0000000000000000001"]
+)
+
+
+@st.composite
+def _literal(draw, col):
+    if col == "s":
+        return f"'{draw(_str_lit)}'"
+    return f"{draw(_num_lit)}{draw(_fraction)}"
+
+
+@st.composite
+def _comparison(draw):
+    col = draw(st.sampled_from(_COLS))
+    kind = draw(st.sampled_from(["cmp", "cmp", "in", "between", "literal_first"]))
+    if kind == "in":
+        lits = draw(st.lists(_literal(col), min_size=1, max_size=3))
+        return f"{col} IN ({', '.join(lits)})"
+    if kind == "between":
+        neg = draw(st.sampled_from(["", "NOT "]))
+        return f"{col} {neg}BETWEEN {draw(_literal(col))} AND {draw(_literal(col))}"
+    op = draw(st.sampled_from(["=", "<", "<=", ">", ">=", "!="]))
+    if kind == "literal_first":
+        return f"{draw(_literal(col))} {op} {col}"
+    return f"{col} {op} {draw(_literal(col))}"
 
 
 @st.composite
 def _conjunct(draw):
-    col = draw(st.sampled_from(_COLS))
-    kind = draw(st.sampled_from(["cmp", "in"]))
-    if kind == "in":
-        if col == "s":
-            vals = draw(st.lists(_str_lit, min_size=1, max_size=3))
-            lits = ", ".join(f"'{v}'" for v in vals)
-        else:
-            vals = draw(st.lists(_num_lit, min_size=1, max_size=3))
-            lits = ", ".join(str(v) for v in vals)
-        return f"{col} IN ({lits})"
-    op = draw(st.sampled_from(["=", "<", "<=", ">", ">=", "!="]))
-    if col == "s":
-        return f"{col} {op} '{draw(_str_lit)}'"
-    if col == "b" and draw(st.booleans()):
-        return f"{col} {op} {draw(_num_lit)}.5"
-    return f"{col} {op} {draw(_num_lit)}"
+    # one in five is an OR: at the top level of the predicate, no branch
+    # of it is individually required
+    if draw(st.integers(0, 4)) == 0:
+        return f"{draw(_comparison())} OR {draw(_comparison())}"
+    return draw(_comparison())
 
 
 _pred = st.lists(_conjunct(), min_size=1, max_size=3).map(" AND ".join)
@@ -71,6 +98,8 @@ def pruned_ds(spark):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(pred=_pred)
+@example(pred="a > 18.9999999999999999999")
+@example(pred="a < 0.0000000000000000001")
 def test_pruned_scan_equals_unpruned_scan(pruned_ds, pred):
     got = sorted(
         tuple(r) for r in pruned_ds.to_df(pred).select("a", "b", "s").collect()

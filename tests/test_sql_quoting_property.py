@@ -8,7 +8,7 @@ re-finding (regex backtracking into literals) shut permanently."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from plan_spark.engine import _find_top_level_kw, _split_top_level_commas
@@ -307,19 +307,92 @@ class TestQuotedIdentRewrite:
 # ------------------------------------------- predicate pruning vs literals
 @given(_ADVERSARIAL, st.integers(0, 9))
 @settings(max_examples=200, deadline=None)
-def test_pruning_conjuncts_never_come_from_inside_literals(content, k):
+def test_pruning_conjuncts_never_come_from_inside_literals(spark, content, k):
     """The dataset layer's prunable conjuncts (the zonemap/index pruning
-    of DELETE, UPDATE and filtered scans) never read SQL text inside a
-    literal: with an escaped literal carrying anything, the only
-    conjuncts extracted are the real ones, and the literal's own conjunct
-    prunes nothing unless it is a plain literal."""
+    of DELETE, UPDATE and filtered scans) come from Spark's parse of the
+    predicate, so SQL text inside a literal is never read as a conjunct:
+    an escaped literal carrying anything yields exactly its own decoded
+    value, and the real conjunct after it is found."""
     from plan_spark.dataset import Dataset
 
     lit = _sql_quote(content)
-    got = Dataset._parse_filter_string(f"note = {lit} AND k = {k}")
-    plain = "\\" not in lit[1:-1] and "'" not in lit[1:-1]
-    want = ([("note", "=", content)] if plain else []) + [("k", "=", k)]
-    assert got == want, (lit, got)
+    got = Dataset._parse_filter_string(spark, f"note = {lit} AND k = {k}")
+    assert got == [("note", "=", content), ("k", "=", k)], (lit, got)
+
+
+def test_conjuncts_read_literals_under_the_sessions_own_confs(spark):
+    """The parse runs under the given session's confs on any thread, as
+    that session's ``F.expr`` does: with escapedStringLiterals on, a
+    backslash stays literal text; the default session still unescapes."""
+    import threading
+
+    from plan_spark.dataset import Dataset
+
+    raw = spark.newSession()
+    raw.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    got = []
+    t = threading.Thread(
+        target=lambda: got.append(Dataset._parse_filter_string(raw, "n = 'a\\q'"))
+    )
+    t.start()
+    t.join(timeout=60)
+    assert got == [[("n", "=", "a\\q")]]
+    assert Dataset._parse_filter_string(raw, "n = 'a\\q'") == [("n", "=", "a\\q")]
+    assert Dataset._parse_filter_string(spark, "n = 'a\\q'") == [("n", "=", "aq")]
+
+
+# literal content that reads as predicate text: conjuncts, OR, BETWEEN and
+# comparisons on the table's own columns, between quotes and escapes
+_PREDICATE_TEXT = st.lists(
+    st.sampled_from(
+        list("ab'\"\\()=; ")
+        + [" AND ", " OR ", "k = 3", "k < 0", "note = ", " BETWEEN 1 AND 2"]
+    ),
+    min_size=0,
+    max_size=10,
+).map("".join)
+
+
+@given(_PREDICATE_TEXT, st.integers(4, 9))
+@example("a' AND k = 3 AND note = ", 5)  # the backslash-escape repro shape
+@settings(max_examples=8, deadline=None)
+def test_dml_with_adversarial_literal_affects_exactly_the_matching_rows(
+    spark, content, k
+):
+    """On a table of several fragments, UPDATE and DELETE with ``note =
+    <literal> AND k = K`` change exactly the rows an unpruned ``F.expr``
+    filter selects, whatever SQL text the literal carries: pruning may
+    skip a fragment only if it holds no matching row."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from plan_spark.dataset import Dataset
+
+    pred = f"note = {_sql_quote(content)} AND k = {k}"
+    schema = "i INT, k INT, note STRING, v INT"
+    # the planted match sits in a fragment of its own k; the others hold
+    # the same note under another k, and k = 3 / negative k rows that a
+    # conjunct faked from the literal's text would select instead
+    frags = [
+        [(0, k, content, 0), (1, k, "other", 0)],
+        [(2, k + 1, content, 0), (3, 3, content, 0)],
+        [(4, 3, "a", 0), (5, -1, "note = ", 0)],
+    ]
+    d = tempfile.mkdtemp(prefix="plan_spark_dmllit_")
+    try:
+        ds = Dataset.create(spark, d, spark.createDataFrame(frags[0], schema))
+        for rows in frags[1:]:
+            ds.append(spark.createDataFrame(rows, schema))
+        matched = {r.i for r in ds.to_df().filter(F.expr(pred)).collect()}
+        assert 0 in matched, (pred, matched)
+        ds.update({"v": "1"}, pred)
+        assert {r.i for r in ds.to_df().collect() if r.v == 1} == matched, pred
+        ds.delete(pred)
+        assert {r.i for r in ds.to_df().collect()} == set(range(6)) - matched, pred
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_backslash_escaped_literal_deletes_and_updates_its_row(spark):
