@@ -21,12 +21,13 @@ import json
 import os
 import re
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from plan_spark.dataset import Dataset
-from plan_spark.session import driver_sized, parse_expression
+from plan_spark.session import driver_sized, parse_expression, parse_plan, plan_frame
 
 
 def _witness(rows) -> str:
@@ -87,10 +88,11 @@ def _scan_top_level(s: str):
     the TOP LEVEL of the statement: outside single- and double-quoted
     spans (both the SQL '' doubling escape and Spark's default
     backslash escapes are honored — the MERGE scanner set the precedent)
-    and with the running parenthesis depth attached. Every operand split
-    in the statement grammar builds on this ONE scanner, so the
-    quoting/escaping rules can never drift between statement families
-    (the bug class three r5 review passes kept re-finding)."""
+    and outside backquoted identifiers, with the running parenthesis
+    depth attached. Every operand split in the statement grammar builds on
+    this ONE scanner, so the quoting/escaping rules can never drift
+    between statement families (a bug class that recurred while each
+    family split its own way)."""
     n, i, depth = len(s), 0, 0
     quote: str | None = None
     esc = False
@@ -99,14 +101,14 @@ def _scan_top_level(s: str):
         if esc:
             esc = False
         elif quote:
-            if ch == "\\":
+            if ch == "\\" and quote != "`":
                 esc = True
             elif ch == quote:
                 if quote == "'" and i + 1 < n and s[i + 1] == "'":
                     i += 2
                     continue
                 quote = None
-        elif ch in ("'", '"'):
+        elif ch in ("'", '"', "`"):
             quote = ch
         else:
             if ch == "(":
@@ -140,10 +142,9 @@ def _unquote_sql(body: str) -> str:
 
 def _iter_top_level_kw(s: str, kw: str):
     """Yield every index of a word-bounded, case-insensitive occurrence of
-    ``kw`` outside quoted literals and parentheses. The statement grammar's
-    keyword splits (SET ... WHERE ..., WHEN clauses) must use this, never a
-    regex: a non-greedy ``(.*?)\\s+WHERE`` happily matches inside
-    ``'a WHERE b'``."""
+    ``kw`` outside quoted literals and parentheses. MERGE's WHEN clauses
+    and CREATE TABLE's REFERENCES are found with this, never with a regex:
+    a non-greedy ``(.*?)\\s+WHEN`` happily matches inside ``'a WHEN b'``."""
     kl = len(kw)
     ku = kw.upper()
     n = len(s)
@@ -156,22 +157,25 @@ def _iter_top_level_kw(s: str, kw: str):
                 yield i
 
 
-def _find_top_level_kw(s: str, kw: str) -> int:
-    """Index of the first top-level occurrence of ``kw``; -1 when absent."""
-    return next(_iter_top_level_kw(s, kw), -1)
-
-
 class _Stmt:
-    """Cursor-based statement-head parser built on the shared top-level
-    scanner's quoting rules (_scan_top_level) — the r6 judge's
-    ``_parse_statement_head``. Every ``_stmt_*`` face parses its keyword/
-    name/literal head through this ONE cursor instead of a hand-rolled
-    regex, so keyword-boundary, quoting, and backtracking behavior can
-    never drift between statement families (the regex-head bug class:
-    ``\\s*`` heads silently accepting run-together keywords, non-greedy
-    captures matching inside literals). Expression text — SELECT bodies,
-    predicates, DEFAULT expressions — is handed through raw via ``rest()``
-    / ``paren_body()`` for Catalyst or the expression layer."""
+    """Cursor over a statement head, on the shared top-level scanner's
+    quoting rules (_scan_top_level).
+
+    Routing rule: a statement that is Spark grammar — CREATE TABLE (and
+    CTAS), INSERT, UPDATE, DELETE, CREATE INDEX, ALTER TABLE ... ADD
+    COLUMN — is read from Spark's own parse (``Engine._parse``); the
+    cursor only picks the statement family and reads the engine's dialect
+    around it: a DML ``t@branch`` ref (``quoted_ref``), CREATE TABLE's
+    trailing ``WITH (ENFORCE)``, and whether an INSERT source is VALUES
+    (read as written) or a query (read in the dialect, as top-level
+    queries are). It reads whole statements only where Spark cannot: the
+    verbs it has no grammar for (COPY, OPTIMIZE, VACUUM, RESTORE, TAG,
+    BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE) and the forms it
+    rejects or misreads (MERGE's ``ON k`` / ``UPDATE SET c`` / ``DO
+    NOTHING``, the other ALTER forms, ``DESCRIBE HISTORY``).
+    Keywords are word-bounded and literal-blind; expression text (SELECT
+    bodies, predicates) is handed through raw via ``rest()`` /
+    ``paren_body()``."""
 
     def __init__(self, s: str):
         self.s = s
@@ -233,12 +237,16 @@ class _Stmt:
             return a, self.ident("name")
         return None, a
 
-    def ref(self) -> str:
-        """``t`` or ``t@branch`` — the DML table token (_dataset_ref)."""
-        a = self.ident("table name")
+    def quoted_ref(self) -> tuple[str, str]:
+        """Read the DML table token, ``t`` or ``t@branch`` (_dataset_ref);
+        return it and the statement with it backquoted, the form in which
+        Spark's grammar reads ``t@branch`` as a one-part name."""
+        self._ws()
+        start = self.i
+        ref = self.ident("table name")
         if self.try_punct("@"):
-            return f"{a}@{self.ident('branch name')}"
-        return a
+            ref += "@" + self.ident("branch name")
+        return ref, f"{self.s[:start]}`{ref}` {self.s[self.i:]}"
 
     def string_lit(self) -> str:
         """A single-quoted literal, decoded ('' doubling + backslashes)."""
@@ -281,8 +289,8 @@ class _Stmt:
 
 def _split_top_level_commas(body: str) -> list[str]:
     """Split on commas outside parentheses and outside quoted literals —
-    a comma inside a DEFAULT 'x,y' literal, a "x,y" double-quoted string,
-    or a decimal(10,2) type must not split."""
+    a comma inside a DELIMITER ',' literal, a "x,y" double-quoted string,
+    or a parenthesised expression must not split."""
     cuts = [
         i for i, ch, depth in _scan_top_level(body) if ch == "," and depth == 0
     ]
@@ -292,6 +300,90 @@ def _split_top_level_commas(body: str) -> list[str]:
         prev = c + 1
     parts.append(body[prev:])
     return parts
+
+
+def _name(name: str, what: str) -> str:
+    """``name`` if it is a plain word, as engine names are; a quoted or
+    nested name is refused. A multipart name passes as
+    ``parts.mkString("\\n")``, so a qualified one is refused too."""
+    if not re.fullmatch(r"\w+", name):
+        raise ValueError(f"{what} must be a plain name, got {name!r}")
+    return name
+
+
+def _names(seq, what: str) -> list[str]:
+    """The plain names of a JVM ``Seq[String]`` of Spark's plan, read from
+    the plan itself: its printed trees elide long lists."""
+    n = seq.size()
+    names = seq.mkString("\n").split("\n") if n else []
+    if len(names) != n:
+        raise ValueError(f"{what} must be plain names, got {names}")
+    return [_name(x, what) for x in names]
+
+
+def _complete_references(body: str) -> str:
+    """Spark 4.1's parser fails (a NullPointerException) on ``REFERENCES
+    p`` without a column list, which the engine reads as the parent's
+    key: the list is written as ``(`*`)`` first, which ``_table_args``
+    reads back as that."""
+    for i in reversed(list(_iter_top_level_kw(body, "REFERENCES"))):
+        q = _Stmt(body[i:])
+        q.kw("REFERENCES")
+        q.ident("parent table")
+        if not q.has_paren():
+            body = f"{body[: i + q.i]} (`*`){body[i + q.i :]}"
+    return body
+
+
+def _table_args(plan) -> dict:
+    """``create_table``'s arguments from Spark's CreateTable plan: the
+    columns (type, COMMENT, DEFAULT as its source text, NOT NULL) and
+    every column- and table-level PRIMARY KEY / UNIQUE / CHECK (as its
+    source text) / FOREIGN KEY. Spark marks key columns non-nullable, so a
+    NOT NULL on a key column is the key's own, not a separate constraint."""
+    fields, defaults, not_null = [], {}, []
+    for col, *_ in json.loads(plan.toJSON())[0]["columns"]:
+        name = _name(col["name"], "column name")
+        if {"generationExpression", "identityColumnSpec"} & set(col):
+            raise ValueError(f"unsupported generated column {name}")
+        meta = dict(col["metadata"])
+        if "comment" in col:
+            meta["comment"] = col["comment"]
+        fields.append(
+            {"name": name, "type": col["dataType"], "nullable": True, "metadata": meta}
+        )
+        if "defaultValue" in col:
+            defaults[name] = col["defaultValue"][0]["originalSQL"]
+        if not col["nullable"]:
+            not_null.append(name)
+    pk, uniques, checks, fks = [], [], [], []
+    constraints = plan.tableSpec().constraints()
+    for i in range(constraints.size()):
+        c = constraints.apply(i)
+        kind = c.getClass().getSimpleName()
+        if kind == "PrimaryKeyConstraint":
+            pk = _names(c.columns(), "PRIMARY KEY columns")
+        elif kind == "UniqueConstraint":
+            uniques.append(_names(c.columns(), "UNIQUE columns"))
+        elif kind == "CheckConstraint":
+            checks.append(c.condition())
+        elif kind == "ForeignKeyConstraint":
+            parent = c.parentColumns()
+            fks.append({
+                "columns": _names(c.childColumns(), "FOREIGN KEY columns"),
+                "ref_table": _name(c.parentTableId().mkString("\n"), "REFERENCES table"),
+                "ref_columns": None if parent.mkString("\n") == "*"
+                else _names(parent, "REFERENCES columns"),
+            })
+    return {
+        "schema_ddl": StructType.fromJson({"fields": fields}),
+        "primary_key": pk or None,
+        "column_defaults": defaults or None,
+        "unique": uniques or None,
+        "not_null": [c for c in not_null if c not in pk] or None,
+        "checks": checks or None,
+        "foreign_keys": fks or None,
+    }
 
 
 class Engine:
@@ -398,7 +490,7 @@ class Engine:
     def create_table(
         self,
         name: str,
-        schema_ddl: str,
+        schema_ddl: str | StructType,
         schema: str = "main",
         primary_key: list[str] | None = None,
         column_defaults: dict[str, str] | None = None,
@@ -409,7 +501,7 @@ class Engine:
         foreign_keys: list[dict] | None = None,
     ) -> Dataset:
         """CREATE TABLE (reference builder_ddl.go:92). ``schema_ddl`` is a
-        Spark DDL string ("a INT, b STRING"). Constraints — PRIMARY KEY,
+        DDL string ("a INT, b STRING") or StructType. Constraints — PRIMARY KEY,
         UNIQUE sets, NOT NULL columns, CHECK expressions (the reference's
         full constraint surface, table_constraint.go:10-16) — are recorded
         as metadata; by default they are UNENFORCED, same stance as Spark/
@@ -452,7 +544,10 @@ class Engine:
                 "(PRIMARY KEY / UNIQUE / NOT NULL / CHECK / FOREIGN KEY)"
             )
         root = os.path.join(self.warehouse, schema, name)
-        struct = StructType.fromDDL(schema_ddl)
+        struct = (
+            schema_ddl if isinstance(schema_ddl, StructType)
+            else StructType.fromDDL(schema_ddl)
+        )
         known = {f.name for f in struct.fields}
         for cols in [primary_key or []] + list(unique or []):
             bad = [c for c in cols if c not in known]
@@ -754,15 +849,6 @@ class Engine:
                     f"{_witness(orphan)} has no match in "
                     f"{ref_table}{tuple(ref_cols)}"
                 )
-
-    @staticmethod
-    def _is_add_column(s: str) -> bool:
-        """ALTER TABLE t ADD COLUMN ... vs ADD <constraint> disambiguation."""
-        q = _Stmt(s)
-        q.kw("ALTER")
-        q.kw("TABLE")
-        q.ident("table name")
-        return q.try_kw("ADD", "COLUMN")
 
     def _validate_current_rows(self, tbl: str, entry: dict) -> None:
         """Validate the table's CURRENT rows against ``entry``'s declared
@@ -1558,18 +1644,27 @@ class Engine:
 
         Routing is first-token dispatch with HARD errors: a statement whose
         leading keyword the engine owns (CREATE/DROP/INSERT/COPY/DELETE/
-        UPDATE/ANALYZE) either matches the supported grammar exactly or
+        UPDATE/ANALYZE/...) either matches the supported grammar exactly or
         raises ValueError — it is never silently handed to Catalyst, where
         it would see temp views instead of the versioned tables and corrupt
         nothing but return wrong answers. Unrecognized leading keywords also
         raise. Multi-statement text raises (no implicit batching).
 
+        One grammar, Spark's: a statement Spark's parser reads — CREATE
+        TABLE (and CTAS), INSERT, UPDATE, DELETE, CREATE INDEX, ALTER TABLE
+        ... ADD COLUMN — is read from its parse (``_parse``), and text that
+        parse refuses raises ValueError with Spark's ParseException
+        chained. The statement cursor (``_Stmt``) reads only the engine's
+        own verbs and dialect forms (COPY, OPTIMIZE, VACUUM, RESTORE, TAG,
+        BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE, MERGE, the other
+        ALTER forms, ``t@branch`` refs, ``WITH (ENFORCE)``).
+
         Queries (SELECT/WITH/VALUES/TABLE/EXPLAIN): every catalog table is
         registered as a view and the text is delegated to Catalyst (the
         reference's parse/bind/optimize/execute, SURVEY.md §3.1 steps 3-9,
-        collapsed into one call). Statement literals and predicates are
-        still parsed by Spark (VALUES via a SELECT rewrite, predicates via
-        F.expr) — the engine never grows its own expression parser."""
+        collapsed into one call). Expression and query text inside a
+        statement reaches Catalyst as written — the engine never grows its
+        own expression parser."""
         stmts = self._split_statements(text)
         if not stmts:
             raise ValueError("empty SQL text")
@@ -1609,6 +1704,19 @@ class Engine:
 
     # ------------------------------------------------- statement handlers
     _QUERY_HEADS = ("SELECT", "WITH", "TABLE", "VALUES")
+
+    def _parse(self, text: str, kind: str):
+        """``parse_plan(text)``, the engine's one call of it: text Spark
+        cannot parse, or reads as other than plan node ``kind``, raises
+        ValueError (Spark's ParseException chained)."""
+        try:
+            plan = parse_plan(self.spark, text)
+        except ParseException as e:
+            msg = str(e).strip().splitlines()[0]
+            raise ValueError(f"unsupported statement {text[:120]!r}: {msg}") from e
+        if plan.nodeName() != kind:
+            raise ValueError(f"unsupported statement {text[:120]!r}")
+        return plan
 
     def _stmt_create(self, s: str) -> None:
         p = _Stmt(s)
@@ -1653,27 +1761,31 @@ class Engine:
             # index creation on the versioned table (reference
             # index_transaction.go; the SDK's CreateIndex surfaced through
             # the SQL front door). Two columns only for rtree (x, y).
-            idx = p.ident("index name")
-            p.kw("ON")
-            tbl = p.ident("table name")
-            p.kw("USING")
-            kind = p.ident("index kind")
-            cols = [c.strip() for c in p.paren_body().split(",")]
-            p.end()
-            if not cols or len(cols) > 2 or not all(
-                re.fullmatch(r"\w+", c) for c in cols
+            plan = self._parse(s, "CreateIndex")
+            kind = plan.indexType().lower()
+            if not kind:
+                raise ValueError(f"CREATE INDEX expected USING <kind>: {s[:120]!r}")
+            spec = plan.columns()
+            spec = [spec.apply(i) for i in range(spec.size())]
+            if plan.ignoreIfExists() or any(
+                not o.isEmpty() for o in [plan.properties()] + [c._2() for c in spec]
             ):
+                raise ValueError(f"unsupported CREATE INDEX form: {s[:120]!r}")
+            tbl = _name(plan.table().multipartIdentifier().mkString("\n"), "table name")
+            cols = [_name(c._1().name().mkString("\n"), "index column") for c in spec]
+            if len(cols) > 2:
                 raise ValueError(
                     f"CREATE INDEX takes one column (two for rtree), "
                     f"got ({', '.join(cols)})"
                 )
-            if len(cols) == 2 and kind.lower() != "rtree":
+            if len(cols) == 2 and kind != "rtree":
                 raise ValueError(
                     f"CREATE INDEX USING {kind}: only rtree takes two "
                     f"columns, got ({', '.join(cols)})"
                 )
             self.dataset(tbl).create_index(
-                idx, kind=kind.lower(), column=",".join(cols)
+                _name(plan.indexName(), "index name"), kind=kind,
+                column=",".join(cols),
             )
             self._registered.pop(("main", tbl), None)
             return
@@ -1685,12 +1797,12 @@ class Engine:
                 # statement, two commits
                 if schema_name is not None:
                     raise p.error("CTAS takes an unqualified table name")
-                if p.peek_word() not in self._QUERY_HEADS:
-                    raise p.error("expected a query after AS")
                 self._register_views()
-                # statement-embedded queries take the same time-travel
-                # rewrite as top-level ones (VERSION AS OF inside a CTAS)
-                df = self.spark.sql(self._prep_query(p.rest()))
+                # statement-embedded queries take the same time-travel and
+                # "ident" rewrite as top-level ones (VERSION AS OF inside a
+                # CTAS); the query runs as parsed
+                plan = self._parse(self._prep_query(s), "CreateTableAsSelect")
+                df = plan_frame(self.spark, plan.query())
                 ddl = ", ".join(
                     f"{f.name} {f.dataType.simpleString()}"
                     for f in df.schema.fields
@@ -1698,119 +1810,28 @@ class Engine:
                 self.create_table(name, ddl)
                 self.insert_df(name, df)
                 return
-            body = p.paren_body()
+            head = s[: p.i]
+            text = f"{head}({_complete_references(p.paren_body())})"
             # trailing WITH (ENFORCE) opts into PK validation (reference
             # pkg/storage/index.go:329 rejects duplicate keys; opt-in
-            # because enforced uniqueness costs a key-join per insert)
+            # because enforced uniqueness costs a key-join per insert) —
+            # engine dialect, so the cursor reads it and Spark parses the
+            # statement without it
             enforce = False
             if p.try_kw("WITH"):
                 if p.paren_body().strip().upper() != "ENFORCE":
                     raise p.error("expected WITH (ENFORCE)")
                 enforce = True
             p.end()
-            schema_name = schema_name or "main"
-            cols, pk = [], []
-            uniques: list[list[str]] = []
-            not_null: list[str] = []
-            checks: list[str] = []
-            fks: list[dict] = []
-            defaults: dict[str, str] = {}
-            for part in _split_top_level_commas(body):
-                part = part.strip()
-                pm = re.match(r"(?is)^PRIMARY\s+KEY\s*\((.*)\)$", part)
-                if pm:
-                    pk = [c.strip() for c in pm.group(1).split(",")]
-                    continue
-                um = re.match(r"(?is)^UNIQUE\s*\((.*)\)$", part)
-                if um:
-                    uniques.append([c.strip() for c in um.group(1).split(",")])
-                    continue
-                km = re.match(r"(?is)^CHECK\s*\((.*)\)$", part)
-                if km:
-                    checks.append(km.group(1).strip())
-                    continue
-                fm = re.match(
-                    r"(?is)^FOREIGN\s+KEY\s*\(([\w\s,]+)\)\s*REFERENCES\s+"
-                    r"(\w+)(?:\s*\(([\w\s,]+)\))?$",
-                    part,
-                )
-                if fm:
-                    fks.append(
-                        {
-                            "columns": [c.strip() for c in fm.group(1).split(",")],
-                            "ref_table": fm.group(2),
-                            "ref_columns": (
-                                [c.strip() for c in fm.group(3).split(",")]
-                                if fm.group(3)
-                                else None
-                            ),
-                        }
-                    )
-                    continue
-                # DEFAULT expr (builder_ddl.go declared defaults): recorded
-                # in the manifest, consumed by INSERT column-list resolution
-                # and emitted back by SHOW CREATE TABLE (round-trip DDL).
-                # The quoted-literal branch is tried FIRST so a default like
-                # 'value not null here' is consumed whole — the NOT NULL /
-                # PRIMARY KEY lookahead never fires inside the literal.
-                dm = re.search(
-                    rf"(?is)\s+DEFAULT\s+({_STR_LIT}|.+?)"
-                    r"(?=\s+NOT\s+NULL\b|\s+PRIMARY\s+KEY\b|$)",
-                    part,
-                )
-                dval = None
-                if dm:
-                    dval = dm.group(1).strip()
-                    part = (part[: dm.start()] + " " + part[dm.end():]).strip()
-                # column-level REFERENCES t(r) — stripped after the DEFAULT
-                # literal (a default like 'see references' never matches)
-                col_ref = None
-                rm = re.search(
-                    r"(?is)\s+REFERENCES\s+(\w+)\s*\(\s*(\w+)\s*\)", part
-                )
-                if rm:
-                    col_ref = (rm.group(1), rm.group(2))
-                    part = (part[: rm.start()] + " " + part[rm.end():]).strip()
-                cm = re.match(
-                    r"(?is)^(\w+)\s+(.+?)"
-                    r"(\s+PRIMARY\s+KEY|\s+NOT\s+NULL|\s+UNIQUE)*$",
-                    part,
-                )
-                if cm is None:
-                    raise ValueError(f"unsupported column definition: {part!r}")
-                colname, coltype = cm.group(1), cm.group(2)
-                # attribute keywords live AFTER the type text — search only
-                # there, so a nested type like struct<unique:int> can never
-                # fake a constraint
-                attrs = part[cm.end(2):]
-                if dval is not None:
-                    defaults[colname] = dval
-                if re.search(r"(?i)PRIMARY\s+KEY", attrs):
-                    pk.append(colname)
-                elif re.search(r"(?i)\bUNIQUE\b", attrs):
-                    uniques.append([colname])
-                if re.search(r"(?i)NOT\s+NULL", attrs):
-                    not_null.append(colname)
-                if col_ref is not None:
-                    fks.append(
-                        {
-                            "columns": [colname],
-                            "ref_table": col_ref[0],
-                            "ref_columns": [col_ref[1]],
-                        }
-                    )
-                cols.append(f"{colname} {coltype}")
+            plan = self._parse(text, "CreateTable")
+            # DEFAULT expr (builder_ddl.go declared defaults): recorded in
+            # the manifest, consumed by INSERT column-list resolution and
+            # emitted back by SHOW CREATE TABLE (round-trip DDL)
             self.create_table(
                 name,
-                ", ".join(cols),
-                schema=schema_name,
-                primary_key=pk or None,
-                column_defaults=defaults or None,
+                schema=schema_name or "main",
                 enforce_constraints=enforce,
-                unique=uniques or None,
-                not_null=not_null or None,
-                checks=checks or None,
-                foreign_keys=fks or None,
+                **_table_args(plan),
             )
             return
         raise ValueError(f"unsupported CREATE statement: {s[:120]!r}")
@@ -1850,7 +1871,7 @@ class Engine:
         raise ValueError(f"unsupported DROP statement: {s[:120]!r}")
 
     def _reorder_for_insert(
-        self, name: str, df: DataFrame, cols: str | None
+        self, name: str, df: DataFrame, listed: list[str] | None
     ) -> DataFrame:
         """Bind an insert source to the table schema. With an explicit
         column list ``(a, c)`` the source binds positionally to THOSE
@@ -1861,7 +1882,7 @@ class Engine:
         schema as before."""
         ds = self._dataset_ref(name)
         fields = ds.schema.fieldNames()
-        if cols is None:
+        if listed is None:
             if set(df.columns) == set(fields):
                 return df  # named source (SELECT output): insert_df binds by name
             if len(df.columns) != len(fields):
@@ -1870,12 +1891,11 @@ class Engine:
                     f"{name!r} has {len(fields)}"
                 )
             return df.toDF(*fields)  # anonymous source (VALUES): positional
-        listed = [c.strip() for c in cols.split(",")]
         unknown = [c for c in listed if c not in fields]
         if unknown:
             raise ValueError(f"INSERT column(s) {unknown} not in table {name!r}")
         if len(set(listed)) != len(listed):
-            raise ValueError(f"INSERT column list repeats a column: {cols!r}")
+            raise ValueError(f"INSERT column list repeats a column: {listed}")
         if len(df.columns) != len(listed):
             raise ValueError(
                 f"INSERT supplies {len(df.columns)} values for "
@@ -1896,29 +1916,27 @@ class Engine:
         return df.select(*exprs)
 
     def _stmt_insert(self, s: str) -> None:
-        # the cursor consumes a maximal \w+ as the table token, so a
-        # run-together "INSERT INTO ordersVALUES ..." reads as a table
-        # named ordersVALUES with nothing after it — a hard error, never a
-        # silent insert into `orders` (the r5 \s* backtracking bug class)
         p = _Stmt(s)
         p.kw("INSERT")
         p.kw("INTO")
-        name = p.ref()
-        cols = p.paren_body() if p.has_paren() else None
-        if p.try_kw("VALUES"):
-            self._register_views()  # VALUES may contain scalar subqueries
-            # one partition, so one fragment: the row count is bounded by
-            # the statement text
-            rows_df = self.spark.sql(f"SELECT * FROM VALUES {p.rest()}").coalesce(1)
-            self.insert_df(name, self._reorder_for_insert(name, rows_df, cols))
-            return
-        if p.peek_word() in ("SELECT", "WITH", "TABLE"):
-            self._register_views()
-            # INSERT INTO ... SELECT takes the time-travel rewrite too
-            src = self.spark.sql(self._prep_query(p.rest()))
-            self.insert_df(name, self._reorder_for_insert(name, src, cols))
-            return
-        raise p.error("expected VALUES or a query")
+        name, text = p.quoted_ref()
+        if p.has_paren():
+            p.paren_body()
+        values = p.peek_word() == "VALUES"
+        self._register_views()
+        # a query is read in the dialect (time travel, "x" names a column),
+        # as a top-level query is; VALUES as written ("x" is a string)
+        plan = self._parse(text if values else self._prep_query(text), "InsertIntoStatement")
+        if plan.byName() or not plan.partitionSpec().isEmpty():
+            raise ValueError(f"unsupported INSERT form: {s[:120]!r}")
+        cols = _names(plan.userSpecifiedCols(), "INSERT columns") or None
+        # the source runs as parsed (VALUES text can be long); VALUES in
+        # one partition, so one fragment: the row count is bounded by the
+        # statement
+        src = plan_frame(self.spark, plan.query())
+        if values:
+            src = src.coalesce(1)
+        self.insert_df(name, self._reorder_for_insert(name, src, cols))
 
     def _stmt_copy(self, s: str) -> None:
         p = _Stmt(s)
@@ -2248,14 +2266,16 @@ class Engine:
         p = _Stmt(s)
         p.kw("DELETE")
         p.kw("FROM")
-        name = p.ref()
+        name, text = p.quoted_ref()
+        plan = self._parse(text, "DeleteFromTable")
+        if plan.table().nodeName() != "UnresolvedRelation":
+            raise ValueError(f"unsupported DELETE form (table alias?): {s[:120]!r}")
+        # nothing but the WHERE clause follows the table; without one the
+        # condition is a made-up TRUE with no source text
         pred = None
-        if p.try_kw("WHERE"):
+        if plan.condition().origin().startIndex().isDefined():
+            p.kw("WHERE")
             pred = p.rest()
-            if not pred:
-                raise ValueError(f"DELETE has WHERE but no predicate: {s[:120]!r}")
-        else:
-            p.end()
         ds = self._dataset_ref(name)
         base = name.partition("@")[0]
         # branch-targeted deletes (t@b) validate like head deletes: this
@@ -2287,23 +2307,29 @@ class Engine:
     def _stmt_update(self, s: str) -> None:
         p = _Stmt(s)
         p.kw("UPDATE")
-        name = p.ref()
-        p.kw("SET")
-        rest = p.rest()
-        # the SET / WHERE boundary and the assignment commas are found with
-        # the quote+paren-aware tokenizer: literals like 'a, WHERE b' in an
-        # assignment expression must never split the statement
-        wi = _find_top_level_kw(rest, "WHERE")
-        sets = rest[:wi] if wi >= 0 else rest
-        pred = rest[wi + len("WHERE") :].strip() if wi >= 0 else "true"
-        if wi >= 0 and not pred:
-            raise ValueError(f"UPDATE has WHERE but no predicate: {s[:120]!r}")
-        assignments = {}
-        for a in _split_top_level_commas(sets):
-            if "=" not in a:
-                raise ValueError(f"UPDATE SET expects col = expr, got {a.strip()!r}")
-            col, expr = a.split("=", 1)
-            assignments[col.strip()] = expr.strip()
+        name, text = p.quoted_ref()
+        plan = self._parse(text, "UpdateTable")
+        sets = plan.assignments()
+        sets = [sets.apply(i) for i in range(sets.size())]
+        keys = [
+            _name(a.key().nameParts().mkString("\n"), "UPDATE SET column")
+            for a in sets
+        ]
+        # every Assignment's origin is the whole SET list (an expression
+        # node's may cover only its operator part, so values are not cut
+        # by theirs): it splits into exactly one `key = value` per
+        # assignment, and a WHERE clause is all that can follow it
+        origin = sets[0].origin()
+        start, end = origin.startIndex().get(), origin.stopIndex().get() + 1
+        parts = _split_top_level_commas(text[start:end])
+        if len(parts) != len(keys):
+            raise ValueError(f"unsupported UPDATE SET list: {s[:120]!r}")
+        assignments = {k: a.split("=", 1)[1].strip() for k, a in zip(keys, parts)}
+        pred = "true"
+        if plan.condition().isDefined():
+            q = _Stmt(text[end:])
+            q.kw("WHERE")
+            pred = q.rest()
         entry = self._entry(name.partition("@")[0], "main")
         if entry.get("enforce_pk"):
             keyed = (entry.get("primary_key") or []) + [
@@ -2586,8 +2612,23 @@ class Engine:
             entry["enforce_pk"] = enforce
             self._save_catalog()
             return
-        if p.peek_word() == "ADD" and not self._is_add_column(s):
-            p.kw("ADD")
+        if p.try_kw("ADD", "COLUMN"):
+            plan = self._parse(s, "AddColumns")
+            (col, *_), *more = json.loads(plan.toJSON())[0]["columnsToAdd"]
+            if more or not col["nullable"] or set(col) - {
+                "class", "num-children", "colName", "dataType", "nullable", "default",
+            }:
+                raise ValueError(f"unsupported ADD COLUMN form: {s[:120]!r}")
+            dtype = StructField.fromJson(
+                {"name": "_", "type": col["dataType"], "nullable": True, "metadata": {}}
+            ).dataType
+            self.dataset(tbl).add_column(
+                _name(col["colName"], "column name"),
+                dtype.simpleString(),
+                default=col["default"][0]["originalSQL"] if "default" in col else "NULL",
+            )
+            return
+        if p.try_kw("ADD"):
             p.try_kw("CONSTRAINT")
             entry = self._entry(tbl, "main")
             probe = dict(entry)
@@ -2719,18 +2760,6 @@ class Engine:
             if not ty:
                 raise ValueError(f"ALTER COLUMN missing type: {s[:120]!r}")
             self.dataset(tbl).alter_columns({"path": col, "data_type": ty})
-            return
-        if p.try_kw("ADD", "COLUMN"):
-            col = p.ident("column name")
-            tail = p.rest()
-            # type text runs to a top-level DEFAULT keyword (a DEFAULT
-            # inside the default expression's literal never splits)
-            di = _find_top_level_kw(tail, "DEFAULT")
-            ty = (tail[:di] if di >= 0 else tail).strip()
-            default = tail[di + len("DEFAULT") :].strip() if di >= 0 else None
-            if not ty or (di >= 0 and not default):
-                raise ValueError(f"unsupported ADD COLUMN form: {s[:120]!r}")
-            self.dataset(tbl).add_column(col, ty, default=default or "NULL")
             return
         if p.try_kw("DROP", "COLUMN"):
             col = p.ident("column name")

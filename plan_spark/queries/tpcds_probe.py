@@ -3745,6 +3745,7 @@ def tpcds_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             (F.col("l_shipdate") >= ts("1997-02-01"))
             & (F.col("l_shipdate") < ts("1997-05-02"))
+            & F.col("l_partkey").isNotNull()
         )
         .select(
             "l_partkey",
@@ -3756,6 +3757,8 @@ def tpcds_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans + two exchanges + the key join (guide §2.4). Identical math —
     # the window SUM is the same exact decimal sum the groupBy produced,
     # divided by the same count. Per-part groups are uniform (no skew key).
+    # A window keeps a NULL l_partkey group that the join drops, hence the
+    # IS NOT NULL above.
     w = Window.partitionBy("l_partkey")
     avg_disc = (
         F.sum("disc_amt").over(w).cast("double") / F.count(F.lit(1)).over(w)

@@ -52,97 +52,13 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 _loaded = False
 
-# The driver's correctness gate records the FIRST 50 registry entries in
-# insertion order. Names listed here are pulled to the front after module
-# import so the window always covers the least-recently-driver-verified
-# surface: queries whose implementation CHANGED this round (their prior
-# green rows are stale) outrank unchanged multi-round-green ones.
-_WINDOW_FIRST: tuple[str, ...] = (
-    # ---- round 12: CHANGED this round, plus the three rows the r11
-    # verdict asked fronted (percentile_exact, knn_ivf, dedup_embed) and
-    # the new never-driver-checked gate-crossing row. ----
-    "w_dist_bucketed",  # declared this round — no driver row yet
-    # seven probe fuses (duplicate fact scans removed; oracle unchanged)
-    "tpcds_q95",
-    "tpcds_q16",
-    "tpcds_q23",
-    "tpcds_q51",
-    "tpcds_q59",
-    "tpcds_q92",
-    "tpcds_q76",
-    # r11-verdict item 4 + the per-process ANN index scratch rebuild
-    "percentile_exact",
-    "knn_ivf",
-    "knn_bq",
-    "knn_ivf_hnsw",
-    "knn_ivf_pq",
-    "dedup_embed",
-    # streaming: no-data-batch skip (join/semi/dedup), bounds fold-in
-    # (outer/full), source-schema memoization (every row)
-    "stream_join",
-    "stream_semi_join",
-    "stream_dedup",
-    "stream_outer_join",
-    "stream_full_outer_join",
-    "stream_tumbling_agg",
-    "stream_sessionize",
-    "stream_curation",
-    "stream_enrich",
-    "stream_stateful",
-    # components id-type gate (advice fix)
-    "dedup_clusters",
-    "dedup_apply",
-    "dedup_embed_clusters",
-    # engine witness guards + COPY footer pinning (advice fixes)
-    "sql_lifecycle",
-    "sql_tpch_verbatim",
-    "sql_tpch_verbatim_q21",
-    "sql_tpcds_verbatim_q51",
-    # ---- round 12: stalest tail (newest driver green = r8) ----
-    "chunk_docs",
-    "dedup_exact",
-    "fingerprint",
-    "fts_bm25",
-    "json_props_agg",
-    "knn_brute",
-    "knn_filtered",
-    "lang_id",
-    "multimodal_audio",
-    "multimodal_dedup",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_resize",
-    "pack_sequences",
-    "q1",
-    "q5",
-    "rep_filter",
-    "sessionize",
-    "text_stats",
-)
-
-# Complementary: names pushed to the very END of the registry — queries
-# whose implementation is unchanged and already holds green driver rows
-# from earlier rounds (still hash-checked every pytest run), freeing
-# window slots for never-driver-checked or just-changed queries.
-# r8: empty — every row r7 pushed back here is deliberately FRONTED this
-# round (the r1-r3 verification-tail rotation); a name in both lists would
-# keep its front position anyway (dict.update preserves insertion order),
-# but listing them here again would misstate the intent.
-_WINDOW_LAST: tuple[str, ...] = ()
-
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module (triggering registration) and return the
     full registry."""
     global _loaded
     if not _loaded:
-        # imports populate REGISTRY via the @register decorator.
-        #
-        # Order matters: the driver's correctness gate records the first 50
-        # registry entries in insertion order, so the least-recently-driver-
-        # checked modules register first. tpch/analytics registered last:
-        # their rows are green in CORRECTNESS_r01+r02 and stay covered by
-        # tests/test_oracle.py (which checks ALL entries every run).
+        # imports populate REGISTRY via the @register decorator
         import plan_spark.queries.dataset_q  # noqa: F401
         import plan_spark.queries.pipeline_ops  # noqa: F401
         import plan_spark.queries.fts  # noqa: F401
@@ -153,13 +69,5 @@ def load_all() -> dict[str, QuerySpec]:
         import plan_spark.queries.text_ops  # noqa: F401
         import plan_spark.queries.analytics  # noqa: F401
         import plan_spark.queries.tpch  # noqa: F401
-
-        front = {n: REGISTRY[n] for n in _WINDOW_FIRST if n in REGISTRY}
-        back = {n: REGISTRY[n] for n in _WINDOW_LAST if n in REGISTRY}
-        rest = {n: s for n, s in REGISTRY.items() if n not in front and n not in back}
-        REGISTRY.clear()
-        REGISTRY.update(front)
-        REGISTRY.update(rest)
-        REGISTRY.update(back)
         _loaded = True
     return REGISTRY

@@ -21,7 +21,7 @@ import os
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # driver_sized nesting state per session: id(spark) -> (depth, saved AQE flag).
 _DS_LOCK = threading.Lock()
@@ -83,20 +83,45 @@ def driver_sized(spark: SparkSession):
                 _DS_STATE[key] = (depth - 1, old)
 
 
+def _parser(spark: SparkSession):
+    """The session's own Catalyst parser, with ``spark`` made the thread's
+    active session first: the parser reads its confs
+    (``spark.sql.parser.escapedStringLiterals`` and the like) from the
+    active session, as DataFrame calls do for their own session, so a
+    parse decodes literals exactly as ``F.expr``/``spark.sql`` on
+    ``spark`` does."""
+    jss = spark._jsparkSession
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(jss)
+    return jss.sessionState().sqlParser()
+
+
 def parse_expression(spark: SparkSession, text: str) -> list[dict]:
     """Spark's own parse of the SQL expression ``text``: the unresolved
     Catalyst tree as ``TreeNode.toJSON`` gives it, a pre-order list of
     nodes in which each node's ``num-children`` subtrees follow it. No
     analysis and no Spark job; text Spark cannot parse raises its
-    ``ParseException``.
+    ``ParseException``."""
+    return json.loads(_parser(spark).parseExpression(text).toJSON())
 
-    The parser reads its confs (``spark.sql.parser.escapedStringLiterals``
-    and the like) from the thread's active session, so ``spark`` is made
-    active first, as DataFrame calls do for their own session: the tree
-    then decodes literals exactly as ``F.expr(text)`` on ``spark`` does."""
+
+def parse_plan(spark: SparkSession, text: str):
+    """Spark's own parse of the SQL statement ``text`` under ``spark``'s
+    parser confs: the unresolved JVM plan. Its ``toJSON()`` is the tree as
+    ``parse_expression`` gives it (string lists past
+    ``spark.sql.debug.maxToStringFields`` elided, so read those from the
+    plan), and its statement and clause nodes' ``origin()`` locate their
+    source text in ``text`` (an expression node's may cover only its
+    operator part). No analysis and no Spark job; text Spark cannot parse
+    raises its ``ParseException``."""
+    return _parser(spark).parsePlan(text)
+
+
+def plan_frame(spark: SparkSession, plan) -> DataFrame:
+    """The DataFrame of a JVM plan from ``parse_plan``, analysed on
+    ``spark`` exactly as ``spark.sql`` analyses its own parse: parsed text
+    runs without being parsed a second time."""
     jss = spark._jsparkSession
-    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(jss)
-    return json.loads(jss.sessionState().sqlParser().parseExpression(text).toJSON())
+    return DataFrame(spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, plan), spark)
 
 
 def get_spark(

@@ -3,16 +3,36 @@ parquet tables — the engine-side replica of the driver's correctness gate."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
+from plan_spark.queries import vector_ops
 from plan_spark.registry import load_all
 from tests.conftest import SF_DIR, compare
 
 SPECS = sorted(load_all().values(), key=lambda s: s.name)
 
+# The embedding near-dup faces band their sign-LSH signature 4x6 — exactly
+# the oracle SQL's banding — only up to vector_ops._LSH_SMALL_N vectors;
+# past it they regroup 2x12 and return a subset of the oracle's pairs.
+_LSH_FACES = ("dedup_embed", "dedup_embed_clusters")
+
+
+def _check_oracle_scale(spark, name: str, sf_dir: str) -> None:
+    """Refuse an oracle comparison the query's plan cannot match: an LSH
+    face on more vectors than its oracle-identical arm covers."""
+    if name in _LSH_FACES:
+        n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+        assert n <= vector_ops._LSH_SMALL_N, (
+            f"{name}: {n} embeddings exceed _LSH_SMALL_N "
+            f"({vector_ops._LSH_SMALL_N}); the 2x12 banding does not match "
+            "the 4x6-banded oracle SQL"
+        )
+
 
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])
 def test_oracle(spark, ddb, spec):
+    _check_oracle_scale(spark, spec.name, SF_DIR)
     df = spec.fn(spark, SF_DIR)
     if spec.oracle is None:
         # rows-only check for non-SQL-expressible operators
@@ -21,3 +41,39 @@ def test_oracle(spark, ddb, spec):
         return
     want = ddb.execute(spec.oracle).df()
     compare(df, want, name=spec.name)
+
+
+def test_lsh_oracle_scale_guard_fails_loudly(spark, monkeypatch):
+    monkeypatch.setattr(vector_ops, "_LSH_SMALL_N", 1)
+    with pytest.raises(AssertionError, match="_LSH_SMALL_N"):
+        _check_oracle_scale(spark, "dedup_embed", SF_DIR)
+    _check_oracle_scale(spark, "knn_brute", SF_DIR)  # other rows: no guard
+
+
+def test_q92_ignores_null_partkey_rows(spark, tmp_path):
+    """q92's per-part window must drop NULL-l_partkey rows as the oracle's
+    join does: two NULL-key rows would otherwise form a group of their own
+    and add their excess (1.0) to the answer."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    day = dt.datetime(1997, 3, 1)
+    pq.write_table(
+        pa.table({
+            "l_partkey": pa.array([1, 1, None, None], pa.int64()),
+            "l_extendedprice": [100.0, 10.0, 10.0, 1.0],
+            "l_discount": [0.1, 0.1, 0.1, 0.1],
+            "l_shipdate": pa.array([day] * 4, pa.timestamp("us")),
+        }),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{tmp_path}/lineitem.parquet')"
+    )
+    spec = load_all()["tpcds_q92"]
+    want = con.execute(spec.oracle).df()
+    assert want["excess_discount"].tolist() == [10.0]
+    compare(spec.fn(spark, str(tmp_path)), want, name="tpcds_q92")

@@ -1,17 +1,17 @@
 """Property tests for the statement grammar's shared quote scanner
 (engine._scan_top_level and the operand splits built on it): for ANY
 string literal content — commas, keywords, parens, single/double quotes,
-backslashes — an UPDATE carrying it must round-trip the exact value, and
-the pure splitting helpers must agree with a character-level reference
-implementation. This pins the bug class the r5 review passes kept
-re-finding (regex backtracking into literals) shut permanently."""
+backslashes — an UPDATE or a column DEFAULT carrying it must round-trip
+the exact value, and the pure splitting helpers must agree with a
+character-level reference implementation. This pins the bug class of
+regex backtracking into literals shut permanently."""
 
 from __future__ import annotations
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from plan_spark.engine import _find_top_level_kw, _split_top_level_commas
+from plan_spark.engine import _split_top_level_commas
 
 # content drawn from the adversarial alphabet: quote chars, escapes,
 # separators, and the keywords the grammar splits on
@@ -39,18 +39,15 @@ def _sql_quote(value: str) -> str:
 )
 def test_split_helpers_never_cut_inside_literals(content):
     """A comma list whose middle element is an arbitrary quoted literal
-    must split into exactly three parts, with the literal intact; a WHERE
-    inside the literal must be invisible to the keyword finder while the
-    real trailing WHERE is found."""
+    (or backquoted identifier) must split into exactly three parts, with
+    the literal intact."""
     lit = _sql_quote(content)
     parts = _split_top_level_commas(f"a = 1, b = {lit}, c = 2")
     assert len(parts) == 3, parts
     assert parts[1].strip() == f"b = {lit}"
-    s = f"x = {lit} WHERE k = 1"
-    i = _find_top_level_kw(s, "WHERE")
-    assert i == len(f"x = {lit} "), (s, i)
-    # no top-level WHERE at all -> -1, whatever the literal contains
-    assert _find_top_level_kw(f"x = {lit}", "WHERE") == -1
+    ident = "`" + content.replace("`", "``") + "`"
+    parts = _split_top_level_commas(f"a = 1, b = {ident}, c = 2")
+    assert [p.strip() for p in parts] == ["a = 1", f"b = {ident}", "c = 2"]
 
 
 @given(st.lists(_ADVERSARIAL, min_size=1, max_size=3), _ADVERSARIAL)
@@ -83,6 +80,53 @@ def test_update_roundtrips_any_literal(spark, values, pred_lit):
             )
         got = {r.k: r.v for r in eng.sql("SELECT k, v FROM qp").collect()}
         assert got == {i: v for i, v in enumerate(values)}
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# literal content that reads as column-definition text: every attribute
+# and constraint keyword of CREATE TABLE, between quotes and escapes
+_COLUMN_TEXT = st.lists(
+    st.sampled_from(
+        list("ab,'\"\\()` ")
+        + [" NOT NULL", " PRIMARY KEY", " UNIQUE", " REFERENCES p(k)",
+           " DEFAULT ", " CHECK (k > 0)", ") WITH (ENFORCE"]
+    ),
+    min_size=0,
+    max_size=10,
+).map("".join)
+
+
+@given(_COLUMN_TEXT)
+@example("x NOT NULL PRIMARY KEY")
+@example("it\\'s UNIQUE REFERENCES p(k)")
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_column_default_literal_declares_nothing(spark, content):
+    """A DEFAULT literal carrying any column-definition text is one value:
+    INSERT without the column stores exactly the decoded literal, and the
+    table declares no NOT NULL, key, CHECK or FOREIGN KEY from its text."""
+    import os
+    import shutil
+    import tempfile
+
+    from plan_spark.engine import Engine
+
+    d = tempfile.mkdtemp(prefix="plan_spark_dflt_")
+    try:
+        eng = Engine(spark, os.path.join(d, "wh"))
+        eng.sql(f"CREATE TABLE t (k INT, v STRING DEFAULT {_sql_quote(content)})")
+        eng.sql("INSERT INTO t (k) VALUES (1)")
+        assert [tuple(r) for r in eng.sql("SELECT k, v FROM t").collect()] == [
+            (1, content)
+        ]
+        entry = eng._entry("t", "main")
+        for key in ("primary_key", "unique", "not_null", "checks", "foreign_keys"):
+            assert entry[key] == [], (key, entry[key])
+        assert not entry["enforce_pk"]
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
