@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the spark-graft harness (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+The harness runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row count, schema and an
+order-insensitive value hash).
 
 The engine lives in ``plan_spark/``; this module only adapts its
 registry (plan_spark/registry.py) to the driver's calling convention.

@@ -1,16 +1,13 @@
 """Benchmark harness: runs the declared query set at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+JSON line: {"metric", "value", "unit", "queries", "sf", "n_queries",
+"n_failed"}. It writes no file.
 
-Protocol (BASELINE.md): per-query wall time, median of 3 warm runs after one
-untimed warmup, single Spark session. The headline value is the sum of
-per-query medians over the whole declared set.
-
-Harness discontinuity (r11): plans execute through the noop sink instead
-of driver-side collect() (see _run), so row-preserving rows' recorded
-times dropped vs r1-r10 details — the operator is what's measured now,
-not driver materialization. Small-output rows (the canary q5 included)
-are unaffected within noise.
+Protocol: per query, one untimed warm-up, then the median wall time of
+$SPARK_GRAFT_BENCH_RUNS (default 3) warm runs, all in one Spark session;
+a query that raises records -1.0. The headline value is the sum of the
+per-query medians over the whole declared set. Naming queries on the
+command line (``python bench.py q1 q5``) times only those.
 """
 
 from __future__ import annotations
@@ -22,57 +19,21 @@ import sys
 import time
 
 
-def _repo_root() -> str:
-    return os.path.dirname(os.path.abspath(__file__))
-
-
-def _current_round() -> int:
-    """The driver writes BENCH_r{N}.json after each round's bench run, so the
-    in-flight round is 1 + the highest recorded N (1 if none exist yet)."""
-    import re
-
-    best = 0
-    for fn in os.listdir(_repo_root()):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fn)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
-
-
-def _latest_detail_file() -> str | None:
-    """Most recent prior round's bench_detail_r{N}.json, for the canary."""
-    import re
-
-    cur = _current_round()
-    found: list[tuple[int, str]] = []
-    for fn in os.listdir(_repo_root()):
-        m = re.fullmatch(r"bench_detail_r(\d+)\.json", fn)
-        if m and int(m.group(1)) < cur:
-            found.append((int(m.group(1)), fn))
-    if not found:
-        return None
-    return os.path.join(_repo_root(), max(found)[1])
-
-
 def _run(df) -> None:
     """Execute the FULL plan engine-side through the noop sink: every
     operator — output sort included — runs, but rows never ship to the
-    driver. The r10 verdict's harness finding: collect() made
-    row-preserving rows (w_running, sessionize, ds_* lifecycle) measure
-    driver materialization of 1.5M+ rows at sf10 instead of the operator.
-    A 100 TB pipeline lands results in a sink, never on the driver — the
-    noop sink is that shape with zero write cost."""
+    driver, so row-preserving queries measure the operator rather than
+    driver materialization of their output."""
     df.write.format("noop").mode("overwrite").save()
 
 
-def sweep(spark, specs, sf_dir: str, runs: int, warmup: bool = True) -> dict[str, float]:
+def sweep(spark, specs, sf_dir: str, runs: int) -> dict[str, float]:
     """One timed pass over ``specs``: median of ``runs`` warm executions per
     query (one untimed warmup first), -1.0 for a query that raises."""
     times: dict[str, float] = {}
     for name, spec in sorted(specs.items()):
         try:
-            if warmup:
-                _run(spec.fn(spark, sf_dir))  # plan + JIT + page cache
+            _run(spec.fn(spark, sf_dir))  # plan + JIT + page cache
             samples = []
             for _ in range(runs):
                 t0 = time.perf_counter()
@@ -94,28 +55,16 @@ def sweep(spark, specs, sf_dir: str, runs: int, warmup: bool = True) -> dict[str
     return times
 
 
-RESWEEP_SPREAD = 1.25
-
-
-def resweep_min(spark, specs, sf_dir: str, times: dict[str, float]) -> dict[str, float]:
-    """Self-correcting pass for a CONTENDED run (the r8/r9 phantom class):
-    when the end-of-run sentinel shows in-run numbers inflated vs the same
-    code re-timed minutes later, one more single-run sweep is taken and
-    each query reports min(in-run median, re-sweep) — the minimum is the
-    right estimator under one-sided contention noise (a box can only make
-    a query SLOWER, never faster than the code allows). The recorded
-    artifact then self-corrects instead of needing a quiet-run footnote."""
-    fresh = sweep(spark, specs, sf_dir, runs=1, warmup=False)
-    return {
-        n: (round(min(t, fresh[n]), 4) if t > 0 and fresh.get(n, -1) > 0 else t)
-        for n, t in times.items()
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    only = set(a for a in sys.argv[1:])
+    only = set(sys.argv[1:])
+    # Python workers unpickle plan_spark functions by module path: point
+    # them at this checkout whatever the working directory (set before the
+    # JVM starts, which hands its environment to the workers)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (os.path.dirname(os.path.abspath(__file__)), os.environ.get("PYTHONPATH")) if p
+    )
 
     from plan_spark.registry import load_all
     from plan_spark.session import get_spark
@@ -128,193 +77,18 @@ def main() -> None:
     if only:
         specs = {k: v for k, v in specs.items() if k in only}
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     times = sweep(spark, specs, sf_dir, runs)
-    total = round(sum(t for t in times.values() if t >= 0), 4)
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-
-    def _group(name: str) -> str:
-        """Module-family key: tpch rows are q1..q22; everything else keys
-        by its first underscore segment (tpcds, w, ds, sql, stream, dedup,
-        knn, fts, multimodal, ...)."""
-        return "tpch" if name[0] == "q" and name[1:].isdigit() else name.split("_", 1)[0]
-
-    # Per-GROUP canaries: the alphabetically-first query of each module
-    # family, so a prior-round comparison can localize box contention to
-    # the part of the run it hit (the r8 phantom was tpcds_*/w_* only —
-    # one global canary that ran early missed it).
-    group_canaries: dict[str, str] = {}
-    for name in sorted(times):
-        g = _group(name)
-        if g not in group_canaries and times[name] >= 0:
-            group_canaries[g] = name
-    canaries = {g: times[n] for g, n in sorted(group_canaries.items())}
-
-    # Load the previous round's full detail for delta analysis.
-    prev_times: dict[str, float] = {}
-    _pd = _latest_detail_file()
-    if _pd is not None:
-        try:
-            with open(_pd) as f:
-                _prev = json.load(f)
-            if _prev.get("sf") == sf_val:
-                prev_times = {
-                    k: v for k, v in _prev.get("queries", {}).items() if v and v > 0
-                }
-        except Exception:
-            prev_times = {}
-
-    # Contention sentinel: re-time the 3 queries with the largest
-    # vs-prior-round inflation at END of run. A same-code query that is
-    # 12x slower in-run but normal on the re-time was a CONTENDED BOX, not
-    # a regression (the r8 phantom: tpcds_q88 2.92s in the driver run,
-    # 0.23s same-code — one end-of-run re-time would have shown it).
-    recheck: dict[str, dict] = {}
-    contention_spread = None
-    if prev_times and not only:
-        deltas = sorted(
-            (
-                (times[n] / prev_times[n], n)
-                for n in times
-                if n in prev_times and times[n] > 0.05
-            ),
-            reverse=True,
-        )[:3]
-        for ratio, n in deltas:
-            try:
-                rs = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    _run(specs[n].fn(spark, sf_dir))
-                    rs.append(time.perf_counter() - t0)
-                rt = statistics.median(rs)
-                recheck[n] = {
-                    "inrun": times[n],
-                    "recheck": round(rt, 4),
-                    "vs_prev": round(ratio, 4),
-                }
-                try:
-                    spark.catalog.clearCache()
-                except Exception:
-                    pass
-            except Exception:
-                continue
-        spreads = [
-            r["inrun"] / r["recheck"] for r in recheck.values() if r["recheck"] > 0
-        ]
-        if spreads:
-            # >1 means the in-run time was inflated relative to the same
-            # code moments later: box contention, not code regression
-            contention_spread = round(max(spreads), 4)
-    # act on the sentinel: a spread past RESWEEP_SPREAD means the in-run
-    # numbers are contaminated — take one corrective min-sweep so the
-    # RECORDED headline is the self-corrected number (the r9 residual gap:
-    # the driver's artifact carried the contended total and needed a
-    # BASELINE.md footnote pointing at the quiet run)
-    contended_total = None
-    if contention_spread is not None and contention_spread > RESWEEP_SPREAD and not only:
-        contended_total = total
-        times = resweep_min(spark, specs, sf_dir, times)
-        total = round(sum(t for t in times.values() if t >= 0), 4)
-    # Canary normalization: q5 is a byte-stable query that has never changed;
-    # its ratio vs the previous round's detail file measures BOX speed, not
-    # engine speed (r4-r6 reviews all had to reconstruct this by hand).
-    canary = times.get("q5")
-    canary_prev = None
-    prev_detail = _latest_detail_file()
-    if prev_detail is not None:
-        try:
-            with open(prev_detail) as f:
-                prev = json.load(f)
-            # a box-speed ratio only means something at the same scale
-            if prev.get("sf") == sf_val:
-                canary_prev = prev.get("queries", {}).get("q5")
-        except Exception:
-            canary_prev = None
-    if canary_prev is None:
-        # No prior-round detail file (they only exist from r7 on, and a
-        # fresh clone may lack them): recover q5 from the newest prior
-        # driver BENCH record, whose `tail` embeds the per-query JSON —
-        # this is why BENCH_r07's headline printed canary null.
-        import re
-
-        cur = _current_round()
-        cands = sorted(
-            (int(m.group(1)), fn)
-            for fn in os.listdir(_repo_root())
-            for m in [re.fullmatch(r"BENCH_r(\d+)\.json", fn)]
-            if m and int(m.group(1)) < cur
-        )
-        for _, fn in reversed(cands):
-            try:
-                txt = open(os.path.join(_repo_root(), fn)).read()
-                if json.loads(txt).get("sf") != sf_val:
-                    continue  # box-speed ratio needs same-scale runs
-                m = re.search(r'\\?"q5\\?": ([0-9.]+)', txt)
-                if m:
-                    canary_prev = float(m.group(1))
-                    break
-            except Exception:
-                continue
-    canary_ratio = (
-        round(canary / canary_prev, 4)
-        if canary and canary_prev and canary > 0 and canary_prev > 0
-        else None
-    )
-    # ONE self-contained JSON line, per-query map included — the driver
-    # contract ({"metric", "value", "unit", "queries", "sf"}). r11's PERF
-    # comparator produced an empty per_query/geomean because the queries
-    # map lived on a separate stdout line the driver's parse never joined
-    # to the headline; folding it in (compact separators, 3-decimal times)
-    # makes the parsed BENCH record carry the whole comparison input.
-    headline = json.dumps(
-        {
-            "metric": "declared-query-set total wall time (median of "
-            f"{runs} warm runs per query)",
-            "value": total,
-            "unit": "sec",
-            "queries": {n: (round(t, 3) if t > 0 else t) for n, t in times.items()},
-            "sf": sf_val,
-            "n_queries": len(times),
-            "n_failed": sum(1 for t in times.values() if t < 0),
-            "canary_q5": canary,
-            "canary_vs_prev_round": canary_ratio,
-            "contention_spread": contention_spread,
-            "contended_total": contended_total,  # non-null = resweep fired
-            "recheck": recheck,
-        },
-        separators=(",", ":"),
-    )
-    # Full per-query detail persists to the repo root (the driver keeps only
-    # ~2 KB of stdout tail, which hid half the per-query numbers from the
-    # r6 judge). Round-stamped alongside the driver's BENCH_r{N}.json.
-    detail_path = f"bench_detail_r{_current_round():02d}.json"
-    if not only:  # partial runs (bench.py q1 q5 ...) must not clobber detail
-        try:
-            with open(detail_path, "w") as f:
-                json.dump(
-                    {
-                        "queries": times,
-                        "sf": sf_val,
-                        "total": total,
-                        "runs": runs,
-                        "group_canaries": canaries,
-                        "recheck": recheck,
-                        "contention_spread": contention_spread,
-                        "contended_total": contended_total,
-                    },
-                    f,
-                    indent=1,
-                    sort_keys=True,
-                )
-        except Exception as e:
-            print(f"bench: detail write failed: {e}", file=sys.stderr)
-    # Printed FIRST and LAST: the driver parses full stdout (its BENCH_r11
-    # "parsed" field held the complete final line), but its log keeps only a
-    # ~2 KB tail — printing the line twice means a human reading either end
-    # of the log sees it, and the final line is always complete JSON.
-    print(headline)
-    print(headline)
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    line = {
+        "metric": f"declared-query-set total wall time (median of {runs} warm runs per query)",
+        "value": round(sum(t for t in times.values() if t >= 0), 4),
+        "unit": "sec",
+        "queries": {n: (round(t, 3) if t > 0 else t) for n, t in times.items()},
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "n_queries": len(times),
+        "n_failed": sum(1 for t in times.values() if t < 0),
+    }
+    print(json.dumps(line, separators=(",", ":")))
     spark.stop()
 
 

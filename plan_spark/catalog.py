@@ -41,12 +41,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# resolved base relations, keyed by (application, sf_dir, table). A real
-# catalog resolves a table name to its schema + file layout once, not per
-# query: spark.read.parquet re-lists the path and re-reads footers on every
-# call (~100 ms here), which a 6-table join pays 6 times over. DataFrames
-# are immutable plans, so handing out the same object is safe.
-_RESOLVED: dict[tuple[str, str, str], DataFrame] = {}
+# resolved base relations, keyed by (application, session, sf_dir, table).
+# A real catalog resolves a table name to its schema + file layout once, not
+# per query: spark.read.parquet re-lists the path and re-reads footers on
+# every call (~100 ms here), which a 6-table join pays 6 times over.
+# DataFrames are immutable plans, so handing out the same object is safe —
+# to the session that built it: a plan from one session must not be joined
+# into another's (newSession() shares the application id). A cached frame
+# holds its session, so that session's id() is never reused while cached.
+_RESOLVED: dict[tuple[str, int, str, str], DataFrame] = {}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -58,7 +61,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a session-UTC TIMESTAMP so event-time ops (watermarks require LTZ) and
     the DuckDB oracle (naive micros) see identical instants.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
     cached = _RESOLVED.get(key)
     if cached is not None:
         return cached

@@ -39,7 +39,17 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    CharType,
+    DataType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    VarcharType,
+)
 
 from plan_spark.dataset.commit import (
     CasConflict,
@@ -100,6 +110,26 @@ def _apply_filters(df: DataFrame, filters) -> DataFrame:
         }
         df = df.filter(ops[op])
     return df
+
+
+def char_as_string(dt: DataType) -> DataType:
+    """``dt`` with every CHAR(n) and VARCHAR(n), at any depth, as STRING.
+    A stored schema never holds them: Spark refuses a plan that outputs
+    them, and DuckDB, the oracle, neither pads CHAR nor checks length."""
+    if isinstance(dt, (CharType, VarcharType)):
+        return StringType()
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, char_as_string(f.dataType), f.nullable, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(char_as_string(dt.elementType), dt.containsNull)
+    if isinstance(dt, MapType):
+        return MapType(
+            char_as_string(dt.keyType), char_as_string(dt.valueType), dt.valueContainsNull
+        )
+    return dt
 
 
 def _stat_key(v: Any) -> Any:
@@ -1147,17 +1177,6 @@ class Dataset:
         intervals.sort()
         return intervals, always
 
-    @staticmethod
-    def _stab_intervals(
-        intervals: list[tuple[int, int, int]], ids, hits: set[int]
-    ) -> None:
-        """Point form of _stab_interval_overlaps: an id is the degenerate
-        run [id, id] (kept as a named face so probe call sites read as
-        what they are)."""
-        Dataset._stab_interval_overlaps(
-            intervals, ((rid, rid) for rid in ids), hits
-        )
-
     def _uncovered(self, name: str, stop_early: bool = False) -> list[Fragment] | None:
         """Fragments of this version whose live rows index ``name`` may
         lack — None when a manifest since its covers_version was vacuumed
@@ -1456,9 +1475,9 @@ class Dataset:
     ) -> None:
         """Add to ``hits`` every fragment whose row-id interval OVERLAPS any
         probe run [lo, hi] — THE driver-side id/run -> fragment mapping
-        (point probes pass [id, id] via _stab_intervals). Fragment
-        intervals may OVERLAP (compaction/update/merge rewrites produce
-        files whose __rowid footer ranges interleave), so a single bisect
+        (point probes pass [id, id]). Fragment intervals may OVERLAP
+        (compaction/update/merge rewrites produce files whose __rowid
+        footer ranges interleave), so a single bisect
         match is not enough: walk back from the insertion point while any
         earlier interval can still reach the run (prefix-max of interval
         ends) — O(log n + overlap depth) per run, exact for any layout."""
@@ -1539,7 +1558,9 @@ class Dataset:
             # carry OVERLAPPING row-id footer ranges — every containing
             # interval must be scanned or rows silently vanish.
             intervals, hits = self._rowid_interval_table()
-            self._stab_intervals(intervals, probe_driver(), hits)
+            self._stab_interval_overlaps(
+                intervals, ((rid, rid) for rid in probe_driver()), hits
+            )
             return hits
         # wide range: distributed probe, ids mapped to fragments as
         # degenerate [id, id] runs through the ONE shared overlap join
@@ -1783,17 +1804,10 @@ class Dataset:
             idset = sorted({int(i) for i in ids})
             intervals = [(i, i) for i in idset]
         sel: list[Fragment] = []
-        for f in m.fragments if intervals else []:  # no intervals, no rows
-            if f.row_start is not None and f.row_start >= 0:
-                lo, hi = f.row_start, f.row_start + f.rows - 1
-            else:
-                st = f.stats.get(_ROWID_STORED)
-                if st is None:
-                    sel.append(f)  # no stats: cannot prove absence
-                    continue
-                lo, hi = st["min"], st["max"]
-            if any(rlo <= hi and rhi >= lo for rlo, rhi in intervals):
-                sel.append(f)
+        if intervals:  # no intervals, no rows
+            ivs, hits = self._rowid_interval_table()
+            self._stab_interval_overlaps(ivs, intervals, hits)
+            sel = [f for f in m.fragments if f.id in hits]  # manifest order
         if not sel:
             by_name = {f.name: f for f in self.schema.fields}
             fields = (
@@ -2382,7 +2396,7 @@ class Dataset:
         existing fragments lack the column; scans fill it with the default."""
         # parse via DDL so any SQL type spelling ("int", "decimal(10,2)")
         # round-trips through the manifest's schema JSON
-        field = StructType.fromDDL(f"{name} {dtype}").fields[0]
+        field = char_as_string(StructType.fromDDL(f"{name} {dtype}")).fields[0]
         schema = self.schema.add(field)
         defaults = dict(self.manifest.column_defaults)
         defaults[name] = default

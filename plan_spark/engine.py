@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from plan_spark.dataset import Dataset
+from plan_spark.dataset.dataset import char_as_string
 from plan_spark.session import driver_sized, parse_expression, parse_plan, plan_frame
 
 
@@ -544,7 +545,7 @@ class Engine:
                 "(PRIMARY KEY / UNIQUE / NOT NULL / CHECK / FOREIGN KEY)"
             )
         root = os.path.join(self.warehouse, schema, name)
-        struct = (
+        struct = char_as_string(
             schema_ddl if isinstance(schema_ddl, StructType)
             else StructType.fromDDL(schema_ddl)
         )
@@ -1659,6 +1660,10 @@ class Engine:
         BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE, MERGE, the other
         ALTER forms, ``t@branch`` refs, ``WITH (ENFORCE)``).
 
+        CHAR(n) and VARCHAR(n) columns — in CREATE TABLE, CTAS and ADD
+        COLUMN — are stored as STRING, as DuckDB stores them: no padding,
+        no length check.
+
         Queries (SELECT/WITH/VALUES/TABLE/EXPLAIN): every catalog table is
         registered as a view and the text is delegated to Catalyst (the
         reference's parse/bind/optimize/execute, SURVEY.md §3.1 steps 3-9,
@@ -2109,6 +2114,26 @@ class Engine:
                 q.end()
             else:
                 raise q.error("expected INSERT * / DO NOTHING")
+        upd_cols = (
+            update_columns
+            if update_columns is not None
+            else [c for c in source.columns if c not in keys]
+        )
+
+        def matched_post_image(old: DataFrame) -> DataFrame:
+            """The target rows a matched UPDATE rewrites, with the updated
+            columns replaced by the source's values — merge_insert's
+            post-image of the matched rows. Shared by the NOT NULL/CHECK/FK
+            and the RESTRICT checks."""
+            cols = [c for c in upd_cols if c in old.columns]
+            src_r = source.select(
+                *keys, *[F.col(c).alias(f"__src_{c}") for c in cols]
+            )
+            out = old.join(src_r, on=keys, how="inner")
+            for c in cols:
+                out = out.withColumn(c, F.col(f"__src_{c}")).drop(f"__src_{c}")
+            return out
+
         entry = self._entry(tgt, "main")
         pk = entry.get("primary_key") or []
         if entry.get("enforce_pk"):
@@ -2166,23 +2191,8 @@ class Engine:
                 or entry.get("foreign_keys")
             ):
                 # validate the POST-update matched rows (NOT NULL / CHECK /
-                # FK — key reassignment was refused above): target rows
-                # with the updated columns replaced by the source's values
-                tdf0 = self.dataset(tgt).to_df()
-                upd_cols = (
-                    update_columns
-                    if update_columns is not None
-                    else [c for c in source.columns if c not in keys]
-                )
-                upd_cols = [c for c in upd_cols if c in tdf0.columns]
-                src_r = source.select(
-                    *keys, *[F.col(c).alias(f"__src_{c}") for c in upd_cols]
-                )
-                updated = tdf0.join(src_r, on=keys, how="inner")
-                for c in upd_cols:
-                    updated = updated.withColumn(c, F.col(f"__src_{c}")).drop(
-                        f"__src_{c}"
-                    )
+                # FK — key reassignment was refused above)
+                updated = matched_post_image(self.dataset(tgt).to_df())
                 self._check_row_constraints(tgt, entry, updated)
                 # FK probe only when an FK column is actually updated —
                 # untouched FK values were valid when written, and the
@@ -2213,13 +2223,8 @@ class Engine:
                 for u in entry.get("unique") or []:
                     self._check_key_frames(tgt, u, tdf, inserts, kind="UNIQUE")
         if when_matched == "update" and self._fk_children(tgt):
-            upd_cols_m = (
-                update_columns
-                if update_columns is not None
-                else [c for c in source.columns if c not in keys]
-            )
             ref_touched = any(
-                c in upd_cols_m
+                c in upd_cols
                 for _, _, fk in self._fk_children(tgt)
                 for c in fk["ref_columns"]
             )
@@ -2233,20 +2238,11 @@ class Engine:
                 # = untouched rows ∪ matched rows with the source's values
                 # substituted, merge_insert's exact semantics.
                 old = self.dataset(tgt).to_df()
-                cols_m = [c for c in upd_cols_m if c in old.columns]
-                src_r = source.select(
-                    *keys, *[F.col(c).alias(f"__src_{c}") for c in cols_m]
-                )
-                matched_m = old.join(src_r, on=keys, how="inner")
-                for c in cols_m:
-                    matched_m = matched_m.withColumn(
-                        c, F.col(f"__src_{c}")
-                    ).drop(f"__src_{c}")
                 untouched_m = old.join(
                     source.select(*keys).distinct(), on=keys, how="left_anti"
                 )
                 self._check_fk_restrict(
-                    tgt, old, untouched_m.unionByName(matched_m)
+                    tgt, old, untouched_m.unionByName(matched_post_image(old))
                 )
         if when_matched == "delete" and self._fk_children(tgt):
             # matched-DELETE on a referenced parent takes the same RESTRICT
@@ -2330,6 +2326,18 @@ class Engine:
             q = _Stmt(text[end:])
             q.kw("WHERE")
             pred = q.rest()
+
+        def post_image(full: DataFrame) -> DataFrame:
+            """The rows of ``full`` the UPDATE matches, with every
+            assignment evaluated against the OLD row — one select, exactly
+            Dataset.update's post-image (a chained withColumn would check
+            a different post-image than the one that commits). Shared by
+            the NOT NULL/CHECK/FK and the RESTRICT checks."""
+            assigned = {c: F.expr(e) for c, e in assignments.items()}
+            return full.filter(F.expr(pred)).select(
+                *[assigned.get(c, F.col(c)).alias(c) for c in full.columns]
+            )
+
         entry = self._entry(name.partition("@")[0], "main")
         if entry.get("enforce_pk"):
             keyed = (entry.get("primary_key") or []) + [
@@ -2353,19 +2361,8 @@ class Engine:
             touch_fk = any(c in assignments for c in fk_cols)
             if entry.get("not_null") or entry.get("checks") or touch_fk:
                 # validate the POST-assignment rows (limit-1 witness jobs)
-                # before the commit — built with ONE select
-                # so every assignment reads the OLD row, exactly mirroring
-                # Dataset.update (a chained withColumn here would validate
-                # a different post-image than the one that commits)
-                ds = self._dataset_ref(name)
-                matched = ds.to_df().filter(F.expr(pred))
-                assigned = {c: F.expr(e) for c, e in assignments.items()}
-                updated = matched.select(
-                    *[
-                        assigned.get(c, F.col(c)).alias(c)
-                        for c in matched.columns
-                    ]
-                )
+                # before the commit
+                updated = post_image(self._dataset_ref(name).to_df())
                 self._check_row_constraints(name, entry, updated)
                 if touch_fk:
                     self._check_foreign_keys(
@@ -2379,20 +2376,14 @@ class Engine:
         if ref_touched:
             # an UPDATE that reassigns a column referenced by an enforced
             # child's FK can remove key VALUES from the parent — exactly a
-            # RESTRICT event. Build the post-image (matched rows with every
-            # assignment evaluated against the OLD row — one select,
-            # mirroring Dataset.update — unioned with untouched rows) and
-            # run the vanished-key scan. Child-driven: runs whether or not
-            # the parent itself is enforced.
-            ds0 = self._dataset_ref(name)
-            full = ds0.to_df()
-            matched = full.filter(F.expr(pred))
+            # RESTRICT event. Run the vanished-key scan over the post-image
+            # unioned with the untouched rows. Child-driven: runs whether
+            # or not the parent itself is enforced.
+            full = self._dataset_ref(name).to_df()
             untouched = full.filter(~F.coalesce(F.expr(pred), F.lit(False)))
-            assigned = {c: F.expr(e) for c, e in assignments.items()}
-            post = matched.select(
-                *[assigned.get(c, F.col(c)).alias(c) for c in full.columns]
+            self._check_fk_restrict(
+                base, full, untouched.unionByName(post_image(full))
             )
-            self._check_fk_restrict(base, full, untouched.unionByName(post))
         self._dataset_ref(name).update(assignments, pred)
 
     def _stmt_meta(self, s: str) -> DataFrame:

@@ -101,7 +101,7 @@ class IvfIndex:
         idx = cls(spark, path)
         os.makedirs(idx.path, exist_ok=True)
         # persisted so insert-time centroid assignment and the search-time
-        # default follow the SAME geometry (ADVICE r4: a cosine-assigned
+        # default follow the SAME geometry (a cosine-assigned
         # insert under l2/dot search can land in a cluster the probe never
         # visits) — mirrors HnswIndex, which stores metric in meta
         with open(os.path.join(idx.path, "meta.json"), "w") as fh:

@@ -403,6 +403,31 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final
 
 
+def _flush_bound(out: DataFrame, sf_dir: str) -> DataFrame:
+    """One-row ``flush_bound``: the final watermark (min over sides of max
+    event time, minus the 1h delay) less a 1-minute safety margin, for the
+    outer joins' tail filter.
+
+    The bound rides the output plan as a broadcast scalar instead of a
+    blocking driver collect before the streaming run (one sequential batch
+    job and driver round-trip removed), so the bounds scan executes
+    alongside the final aggregate. It is built on the session that owns
+    ``out``'s memory sink, so the join never mixes two sessions' plans."""
+    ev = table(out.sparkSession, sf_dir, "events").filter(
+        F.col("user_id") % _JOIN_USER_MOD == 0
+    )
+    return ev.agg(
+        (
+            F.least(
+                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+            )
+            - F.expr("interval 1 hour")
+            - F.expr("interval 1 minute")
+        ).alias("flush_bound")
+    )
+
+
 _STREAM_OUTER_JOIN_SQL = f"""
 WITH c AS (
   SELECT event_id AS click_id, user_id AS c_user, ts AS c_ts
@@ -449,26 +474,6 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are unaffected (the inner part of an outer join never waits)."""
     from plan_spark.streaming.windows import click_purchase_left_join_stream
 
-    # The final-watermark bound rides the plan as a broadcast scalar
-    # instead of a blocking driver collect: the old bounds.collect() was a
-    # separate sequential batch job (a full events pass + driver round-trip)
-    # before the streaming run; folding it into the output plan removes
-    # that round-trip and lets the bounds scan execute alongside the final
-    # aggregate (guide §5 — the driver should do almost no data work).
-    ev = table(spark, sf_dir, "events").filter(
-        F.col("user_id") % _JOIN_USER_MOD == 0
-    )
-    bounds = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("interval 1 hour")
-            - F.expr("interval 1 minute")
-        ).alias("flush_bound")
-    )
-
     out = _gated_available_now(
         spark,
         sf_dir,
@@ -476,7 +481,7 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_outer_join_sink",
         output_mode="append",
     )
-    closed = out.crossJoin(F.broadcast(bounds)).filter(
+    closed = out.crossJoin(F.broadcast(_flush_bound(out, sf_dir))).filter(
         F.col("purchase_id").isNotNull()
         | (F.col("c_ts") + F.expr("interval 2 hours") < F.col("flush_bound"))
     )
@@ -545,23 +550,6 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary."""
     from plan_spark.streaming.windows import click_purchase_full_join_stream
 
-    # Same bounds fold-in as stream_outer_join: the flush bound becomes a
-    # broadcast scalar in the output plan instead of a blocking driver
-    # collect before the streaming run (one sequential batch job removed).
-    ev = table(spark, sf_dir, "events").filter(
-        F.col("user_id") % _JOIN_USER_MOD == 0
-    )
-    bounds = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("interval 1 hour")
-            - F.expr("interval 1 minute")
-        ).alias("flush_bound")
-    )
-
     out = _gated_available_now(
         spark,
         sf_dir,
@@ -570,7 +558,7 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
     )
     delay_margin = F.col("flush_bound")
-    closed = out.crossJoin(F.broadcast(bounds)).filter(
+    closed = out.crossJoin(F.broadcast(_flush_bound(out, sf_dir))).filter(
         (F.col("click_id").isNotNull() & F.col("purchase_id").isNotNull())
         | (
             F.col("purchase_id").isNull()

@@ -966,13 +966,19 @@ def tpcds_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the fact): 7 fact scans -> 3, 5 orders scans -> 2, and every
     # CTE aggregate runs exactly once at any scale (guide §3.3/§5 —
     # materialize a reused intermediate instead of recomputing it).
+    # The checkpoints are lazy: each one's last stage runs inside the
+    # consumer's job instead of a job of its own (at sf0.01: 19 jobs per
+    # call instead of 22, lineitem still read 3 times). Building the frame
+    # is not job-free even so — under AQE, checkpointing a plan runs its
+    # shuffle stages (7 jobs at sf0.01). Checkpointed blocks carry no
+    # lineage: a lost executor fails the query instead of recomputing them.
     frequent = (
         li.join(pt, li.l_partkey == pt.p_partkey)
         .groupBy(F.substring("p_name", 1, 10).alias("pfx"), "l_partkey")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") > 30)
         .select("l_partkey")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     yr = F.year("o_orderdate")
     # a 2-year orders slice is also fact-sized at corpus scale: pin shuffle
@@ -981,14 +987,14 @@ def tpcds_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(ords_window, li.l_orderkey == ords_window.o_orderkey)
         .groupBy("o_custkey")
         .agg(F.sum(rev_col()).alias("csales"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     cmax = cust_sales.agg(F.max("csales").cast("double").alias("cmax"))
     best = (
         cust_sales.crossJoin(F.broadcast(cmax))
         .filter(F.col("csales").cast("double") > 0.95 * F.col("cmax"))
         .select("o_custkey")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     # the month-filtered orders slice is fact-sized at corpus scale (1/84 of
     # orders is still ~1 TB at 100 TB): pin the lineitem join to shuffle —

@@ -1,8 +1,8 @@
 """ANN quality ledger: recall@10 vs exact brute-force for every vector
 index family (r8 verdict item 7).
 
-Wall time is tracked per round in BENCH_r{N}.json; this ledger tracks the
-OTHER axis an approximate index can silently lose — result quality. The
+Wall time is what the benchmarks track; this ledger tracks the OTHER
+axis an approximate index can silently lose — result quality. The
 measured table lives in BASELINE.md ("Measured recall"); the pytest floors
 here assert recall never drops below recorded - epsilon, so a refactor
 that speeds an index up by quietly degrading its walks/codes fails CI.

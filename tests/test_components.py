@@ -65,3 +65,35 @@ def test_chain_min_reaches_far_end(spark):
     # stop early — pointer jumping shortcut must still reach the end)
     out = _labels(spark, GRAPHS["chain"], threshold=10**9)
     assert {lbl for _, lbl in out} == {1}
+
+
+# The single-task gate takes integral same-type edge ids only: string ids
+# fall through to the distributed loop, and narrow int ids keep their
+# type on either side of the gate.
+def test_components_string_ids_fall_through_to_distributed(spark):
+    from plan_spark.operators.components import min_label_components
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "da string, db string"
+    )
+    out = min_label_components(edges, single_threshold=1000)
+    got = {(r.node, r.label) for r in out.collect()}
+    assert got == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
+    }
+
+
+def test_components_int32_ids_keep_dtype_on_both_gate_sides(spark):
+    from plan_spark.operators.components import min_label_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "da int, db int"
+    )
+    small = min_label_components(edges, single_threshold=1000)
+    large = min_label_components(edges, single_threshold=1)  # force distributed
+    assert [f.dataType.simpleString() for f in small.schema.fields] == [
+        f.dataType.simpleString() for f in large.schema.fields
+    ]
+    s = {(r.node, r.label) for r in small.collect()}
+    l = {(r.node, r.label) for r in large.collect()}
+    assert s == l == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}

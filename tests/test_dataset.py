@@ -1018,3 +1018,66 @@ def test_compaction_stats_recorded(spark, tmp_path):
     # a no-op pass records None
     ds.compact(strategy="count", target_files=8)
     assert ds.last_compaction_stats is None
+
+
+# `col BETWEEN a AND b` yields both bound conjuncts for zonemap pruning;
+# NOT BETWEEN and text inside literals yield nothing.
+def test_between_extracts_bounds(spark):
+    def p(pred):
+        return Dataset._parse_filter_string(spark, pred)
+
+    assert p("x BETWEEN 1 AND 5") == [("x", ">=", 1), ("x", "<=", 5)]
+    assert p("ts BETWEEN '2020-01-01' AND '2020-06-30'") == [
+        ("ts", ">=", "2020-01-01"),
+        ("ts", "<=", "2020-06-30"),
+    ]
+    # composes with other conjuncts, case-insensitive
+    got = p("a = 7 AND x between 1.5 AND 2.5")
+    assert ("a", "=", 7) in got and ("x", ">=", 1.5) in got and ("x", "<=", 2.5) in got
+    # NOT BETWEEN cannot prune on min/max: no conjunct, no corruption
+    assert p("x NOT BETWEEN 1 AND 5") == []
+    # BETWEEN inside a string literal is opaque
+    got = p("name = 'a BETWEEN 1 AND 2' AND c = 3")
+    assert got == [("name", "=", "a BETWEEN 1 AND 2"), ("c", "=", 3)]
+    # a top-level OR still disables extraction entirely
+    assert p("x BETWEEN 1 AND 5 OR y = 2") == []
+
+
+def test_between_prunes_fragments_and_results_match(spark, tmp_path):
+    """Range-partitioned table: a BETWEEN predicate prunes non-overlapping
+    fragments (fragment-spy) and the scan result equals the residual
+    filter applied to the full table."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 1000).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    ).repartitionByRange(10, "id")
+    ds = Dataset.create(spark, str(tmp_path / "btw"), df)
+    sel, pruned = ds.plan_scan("id BETWEEN 100 AND 199")
+    assert len(pruned) > 0  # non-overlapping fragments dropped
+    assert len(sel) < len(ds.manifest.fragments)
+    got = sorted(r.id for r in ds.to_df(filters="id BETWEEN 100 AND 199").collect())
+    assert got == list(range(100, 200))
+
+
+# count_rows(filter) is corpus-sized data-plane work: it plans with AQE on.
+def test_filtered_count_rows_keeps_aqe(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 100).select(F.col("id"), (F.col("id") % 3).alias("g"))
+    ds = Dataset.create(spark, str(tmp_path / "cnt"), df)
+    # instrument: driver_sized would flip the session conf during planning
+    flips: list[str] = []
+    orig_set = spark.conf.set
+
+    def spy_set(k, v):
+        if k == "spark.sql.adaptive.enabled":
+            flips.append(str(v))
+        return orig_set(k, v)
+
+    spark.conf.set = spy_set
+    try:
+        assert ds.count_rows("g = 1") == sum(1 for i in range(100) if i % 3 == 1)
+    finally:
+        spark.conf.set = orig_set
+    assert flips == []  # the filtered count never toggled AQE

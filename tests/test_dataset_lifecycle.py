@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import tempfile
 
 import pytest
@@ -430,3 +431,51 @@ def test_vacuum_age_grace_protects_young_files(spark, tmp_path_ds, base_df):
     assert any(r.startswith(("data/", "deletes/")) for r in removed), removed
     # the surviving snapshot is intact
     assert ds.to_df().count() == ds.count_rows()
+
+
+# Crashed-writer ``*.cas.<pid>.<tid>`` / ``*.tmp.<pid>.<tid>`` residue in
+# the control dirs (root, _versions, _staged) is reclaimed by vacuum and
+# cleanup_expired through the shared dead-pid-gated sweep.
+def _dead_pid() -> int:
+    p = subprocess.Popen(["true"])
+    p.wait()
+    return p.pid
+
+
+class TestControlTmpSweep:
+    @pytest.mark.parametrize("handler", ["local", "cas"])
+    def test_vacuum_reclaims_dead_control_tmps(self, spark, tmp_path, handler):
+        ds = Dataset.create(
+            spark,
+            str(tmp_path / "ds"),
+            spark.range(4).toDF("id"),
+            commit_handler=handler,
+        )
+        dead = _dead_pid()
+        suffix = "cas" if handler == "cas" else "tmp"
+        strands = [
+            os.path.join(ds.path, f"_refs.json.{suffix}.{dead}.7"),
+            os.path.join(ds._versions_dir, f"00000009.manifest.json.{suffix}.{dead}.7"),
+        ]
+        os.makedirs(os.path.join(ds.path, "_staged"), exist_ok=True)
+        strands.append(os.path.join(ds.path, "_staged", f"s1.json.{suffix}.{dead}.7"))
+        for p in strands:
+            with open(p, "w") as fh:
+                fh.write("{}")
+        live = os.path.join(ds.path, f"_refs.json.{suffix}.{os.getpid()}.7")
+        with open(live, "w") as fh:
+            fh.write("{}")
+        ds.vacuum(keep_versions=10, grace_seconds=0.0)
+        for p in strands:
+            assert not os.path.exists(p), f"dead residue survived: {p}"
+        assert os.path.exists(live), "live writer's in-flight temp was yanked"
+        os.remove(live)
+
+    def test_cleanup_expired_also_sweeps(self, spark, tmp_path):
+        ds = Dataset.create(spark, str(tmp_path / "ds"), spark.range(2).toDF("id"))
+        dead = _dead_pid()
+        stranded = os.path.join(ds._versions_dir, f"x.json.tmp.{dead}.1")
+        with open(stranded, "w") as fh:
+            fh.write("{}")
+        ds.cleanup_expired()
+        assert not os.path.exists(stranded)

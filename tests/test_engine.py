@@ -130,8 +130,8 @@ def test_sql_insert_select(engine):
 
 def test_schema_qualified_views_do_not_clobber(engine):
     """Two same-named tables in different schemas: bare name = main's table,
-    qualified names reach both (ADVICE round-1: iteration order must not
-    decide which table a query reads)."""
+    qualified names reach both (iteration order must not decide which
+    table a query reads)."""
     engine.create_schema("other")
     engine.create_table("t2", "a INT")
     engine.insert_values("t2", [(1,)])
@@ -546,8 +546,8 @@ def test_describe_detail(engine):
 def test_snapshot_views_cannot_clobber_real_tables(engine):
     """Snapshot views live in the reserved __tt__ namespace: a catalog table
     legally named t__v1 keeps serving its own rows after a time-travel read
-    of t version 1 (ADVICE r4: the old {tbl}__v{N} naming silently replaced
-    the real table's view)."""
+    of t version 1 (the old {tbl}__v{N} naming silently replaced the real
+    table's view)."""
     engine.create_table("t", "a INT")
     engine.insert_values("t", [(1,)])
     v1 = engine.dataset("t").version
@@ -1267,3 +1267,101 @@ def test_bitmap_index_sql_face_routes_and_traces(engine):
     ids = [i for lo, hi in idx.equality_runs("rare") for i in range(lo, hi + 1)]
     got = sorted(r.k for r in ds.take_rows(ids, columns=["k"]).collect())
     assert got == [7, 107, 207, 307]
+
+
+# _check_mentions reads a CHECK's identifiers through Spark's own parser,
+# so a backslash-escaped quote inside a literal cannot hide a real
+# identifier after it.
+class TestCheckMentionsEscapes:
+    def test_identifier_after_escaped_quote_literal_is_seen(self, spark):
+        # repro: with a literal pattern blind to escapes the boundary shifted
+        # and `mycol` was blanked, letting RENAME/DROP proceed while a
+        # stored CHECK still referenced it.
+        assert Engine._check_mentions(spark, "mycol", "c = 'a\\'' AND mycol = 'x'")
+
+    def test_name_inside_escaped_literal_not_a_mention(self, spark):
+        assert not Engine._check_mentions(spark, "k", "c = 'it\\'s k' AND d = 2")
+
+    def test_plain_literal_still_blanked(self, spark):
+        assert not Engine._check_mentions(spark, "k", "status IN ('k', 'v')")
+
+    def test_doubled_quote_literal_still_blanked(self, spark):
+        assert not Engine._check_mentions(spark, "k", "c = 'it''s k' AND d = 2")
+
+    def test_plain_mention_still_detected(self, spark):
+        assert Engine._check_mentions(spark, "k", "k > 0 AND j < 'z'")
+
+    def test_mentions_resolve_like_spark(self, spark):
+        # names compare case-insensitively, and identifiers in lambda
+        # bodies and subqueries count
+        assert Engine._check_mentions(spark, "K", "k > 0")
+        assert Engine._check_mentions(spark, "k", "exists(arr, x -> x = k)")
+        assert Engine._check_mentions(spark, "k", "(SELECT max(k) FROM t) > 0")
+        assert not Engine._check_mentions(spark, "k", "upper(j) = 'K'")
+
+
+# COPY's driver-side footer pinning skips hidden ('.'/'_') files and
+# falls back to Spark's inference on per-file schema drift.
+def _copy_engine(spark, tmp_path, name):
+    from plan_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "warehouse"))
+    eng.sql(f"CREATE TABLE {name} (k BIGINT, v DOUBLE)")
+    return eng
+
+
+def test_copy_skips_hidden_parquet_entries(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "srcdir"
+    os.makedirs(src)
+    # hidden/temp entries sort FIRST lexicographically; they carry a
+    # DIFFERENT schema — pinning one would null-fill or fail the real file
+    pq.write_table(
+        pa.table({"zzz": ["nope"]}), str(src / "_temporary.parquet")
+    )
+    pq.write_table(
+        pa.table({"other": [1]}), str(src / ".hidden.parquet")
+    )
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2], "int64"), "v": pa.array([0.5, 1.5], "float64")}),
+        str(src / "part-0.parquet"),
+    )
+    eng = _copy_engine(spark, tmp_path, "t_hidden")
+    eng.sql(f"COPY t_hidden FROM '{src}' WITH (FORMAT 'parquet')")
+    rows = sorted(tuple(r) for r in eng.sql("SELECT k, v FROM t_hidden").collect())
+    assert rows == [(1, 0.5), (2, 1.5)]
+
+
+def test_copy_schema_drift_fails_loudly_not_silently(spark, tmp_path):
+    """Per-file type drift inside a COPY directory: the footer fast path
+    detects the first-vs-last footer mismatch and bails to Spark's own
+    inference, which errors LOUDLY on the conflicting file — the
+    before-fix hazard was the fast path silently pinning one file's types
+    for every file. Either a loud error or correct rows is acceptable;
+    silently wrong/null-filled data is not."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "driftdir"
+    os.makedirs(src)
+    pq.write_table(
+        pa.table({"k": pa.array([1], "int32"), "v": pa.array([0.5], "float64")}),
+        str(src / "a.parquet"),
+    )
+    pq.write_table(
+        pa.table({"k": pa.array([2], "int64"), "v": pa.array([1.5], "float64")}),
+        str(src / "b.parquet"),
+    )
+    eng = _copy_engine(spark, tmp_path, "t_drift")
+    try:
+        eng.sql(f"COPY t_drift FROM '{src}' WITH (FORMAT 'parquet')")
+    except Exception:
+        return  # loud failure: correct (matches plain spark.read.parquet)
+    rows = sorted(tuple(r) for r in eng.sql("SELECT k, v FROM t_drift").collect())
+    assert rows == [(1, 0.5), (2, 1.5)]

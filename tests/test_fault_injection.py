@@ -37,7 +37,7 @@ from plan_spark.dataset.dataset import (
     Dataset,
     StageExpiredError,
 )
-from plan_spark.faults import InjectedCrash, arm_fault, clear_faults
+from plan_spark.faults import InjectedCrash, arm_fault, clear_faults, fault_point
 
 
 @pytest.fixture(autouse=True)
@@ -1116,3 +1116,34 @@ def test_landed_expired_stage_cleanup_consumes_payload_only(spark):
         F.col("k") >= 10_000
     ).count() == 10
     _chain_consistent(Dataset.open(spark, path))
+
+
+# arm_fault keeps the firing MODE per site: arming 'b' in exit mode must
+# not switch an already-armed 'a' to exit.
+class TestPerSiteFaultMode:
+    def test_mixed_modes_keep_their_mechanism(self):
+        # Arming 'b' in exit mode after 'a' in raise mode must not flip
+        # 'a' to os._exit — 'a' still raises InjectedCrash in-process.
+        clear_faults()
+        try:
+            arm_fault("advice_a", mode="raise")
+            arm_fault("advice_b", mode="exit")
+            with pytest.raises(InjectedCrash):
+                fault_point("advice_a")
+        finally:
+            clear_faults()
+
+    def test_exit_mode_survives_in_child(self):
+        # 'b' (exit mode) fires as a real crash image in a child process
+        # even though a raise-mode site was armed after it.
+        code = (
+            "from plan_spark.faults import arm_fault, fault_point\n"
+            "arm_fault('b', mode='exit')\n"
+            "arm_fault('a', mode='raise')\n"
+            "fault_point('b')\n"
+            "print('unreachable')\n"
+        )
+        r = subprocess.run(
+            ["python", "-c", code], cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), capture_output=True
+        )
+        assert r.returncode == 77 and b"unreachable" not in r.stdout

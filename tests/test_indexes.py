@@ -756,7 +756,7 @@ def test_ivf_batch_search_df_scales_past_driver_probe(spark, tmp_idx):
 
 
 def test_ivf_insert_follows_persisted_metric(spark, tmp_idx):
-    """ADVICE r4: insert-time centroid assignment must use the BUILD metric.
+    """Insert-time centroid assignment must use the BUILD metric.
     Under metric="l2" an inserted vector must land in the cluster the
     l2 probe visits — assert the vector is its own l2 nearest neighbor at
     nprobe=1 (the probe and the insert assignment agree on geometry)."""

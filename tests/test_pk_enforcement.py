@@ -611,3 +611,29 @@ def test_alter_add_fk_validates_parent_even_unenforced(engine):
     engine.sql("ALTER TABLE nc ADD FOREIGN KEY (pk) REFERENCES np (k)")  # valid
     ddl = engine.sql("SHOW CREATE TABLE nc").collect()[0].create_stmt
     assert "REFERENCES np (k)" in ddl
+
+
+# An IntegrityError whose witness probe returns no row degrades to a
+# witness-less message instead of IndexError (or a silently passed
+# violation).
+def test_witness_empty_probe_degrades():
+    from plan_spark.engine import _witness
+
+    assert _witness([]) == "(witness row not reproducible)"
+    assert _witness([(1, "x")]) == "(1, 'x')"
+
+
+def test_integrity_messages_unchanged_with_witness(spark, tmp_path):
+    """The witness-present path produces byte-identical messages."""
+    from plan_spark.engine import Engine, IntegrityError
+
+    eng = Engine(spark, str(tmp_path / "w2"))
+    eng.sql(
+        "CREATE TABLE t (k BIGINT PRIMARY KEY, v BIGINT, CHECK (v > 0))"
+        " WITH (ENFORCE)"
+    )
+    eng.sql("INSERT INTO t VALUES (1, 5)")
+    with pytest.raises(IntegrityError, match=r"CHECK \(v > 0\) violated on t: \(2, -1\)"):
+        eng.sql("INSERT INTO t VALUES (2, -1)")
+    with pytest.raises(IntegrityError, match=r"already contains PRIMARY KEY \('k',\) = \(1,\)"):
+        eng.sql("INSERT INTO t VALUES (1, 7)")

@@ -8,12 +8,13 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import subprocess
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from plan_spark.indexes.btree import BtreeIndex
+from plan_spark.indexes.btree import BtreeIndex, recover_dir, sweep_dead_tmps
 from plan_spark.indexes.rtree import RtreeIndex
 
 
@@ -924,3 +925,42 @@ def test_plan_scan_explain_selection_trace(spark):
     _, _, t5 = ds.plan_scan(explain=True)
     assert {t["index"] for t in t5} == {"bt_k", "bm_grp", "ann"}
     assert "no filters" in {t["index"]: t for t in t5}["bt_k"]["reason"]
+
+
+# A crashed publish_fences strands ``fences.parquet.tmp.<pid>.<tid>``;
+# recover_dir sweeps temps whose owning pid is dead, and never a live
+# publisher's in-flight temp.
+class TestFenceTempSweep:
+    def test_dead_pid_temp_swept_live_kept(self, tmp_path):
+        idx = tmp_path / "idx"
+        (idx / "runs").mkdir(parents=True)
+        # a genuinely dead pid: a child that has already exited and been
+        # reaped (so ProcessLookupError, not a zombie)
+        p = subprocess.Popen(["true"])
+        p.wait()
+        dead_pid = p.pid
+        dead_tmp = idx / f"fences.parquet.tmp.{dead_pid}.123"
+        live_tmp = idx / f"fences.parquet.tmp.{os.getpid()}.123"
+        dead_tmp.write_bytes(b"x")
+        live_tmp.write_bytes(b"x")
+        sweep_dead_tmps(str(idx))
+        assert not dead_tmp.exists(), "dead publisher's temp must be reclaimed"
+        assert live_tmp.exists(), "live publisher's in-flight temp untouched"
+
+    def test_recover_dir_invokes_sweep(self, tmp_path):
+        idx = tmp_path / "idx"
+        (idx / "runs").mkdir(parents=True)
+        p = subprocess.Popen(["true"])
+        p.wait()
+        stranded = idx / f"fences.parquet.tmp.{p.pid}.9"
+        stranded.write_bytes(b"x")
+        recover_dir(str(idx), "runs")
+        assert not stranded.exists()
+
+    def test_non_temp_files_never_touched(self, tmp_path):
+        idx = tmp_path / "idx"
+        idx.mkdir()
+        keep = idx / "fences.parquet"
+        keep.write_bytes(b"x")
+        sweep_dead_tmps(str(idx))
+        assert keep.exists()

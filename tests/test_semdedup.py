@@ -63,8 +63,8 @@ def test_flags_match_bruteforce(spark):
 
 def test_k_knob_bounds_pair_join(spark):
     """The scale contract: growing k shrinks the pair-join row count
-    (sum of c_i^2 falls as clusters split) — the knob VERDICT r4 flagged as
-    hard-coded is now a real parameter."""
+    (sum of c_i^2 falls as clusters split) — k is a real parameter, not a
+    hard-coded constant."""
     emb = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
 
     def pairs(k):

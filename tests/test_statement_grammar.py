@@ -75,3 +75,28 @@ def test_ctas_that_spark_cannot_parse_raises_value_error(engine):
     with pytest.raises(ValueError, match="unsupported statement"):
         engine.sql("CREATE TABLE bad AS SELEC 1")
     assert "bad" not in engine.tables()
+
+
+def test_char_and_varchar_columns_are_stored_as_string(engine):
+    # DuckDB's reading: no padding, no length check
+    engine.sql("CREATE TABLE t (k INT, v VARCHAR(5), c CHAR(3))")
+    engine.sql("INSERT INTO t VALUES (1, 'ab', 'x'), (2, 'longer', 'wide')")
+    engine.sql("ALTER TABLE t ADD COLUMN d VARCHAR(2) DEFAULT 'dd'")
+    engine.sql("INSERT INTO t VALUES (3, 'v', 'c', 'dvalue')")
+    engine.sql(
+        "CREATE TABLE u AS SELECT k, CAST(v AS VARCHAR(3)) AS v, "
+        "CAST(c AS CHAR(2)) AS c, ARRAY(CAST(d AS CHAR(1))) AS a FROM t"
+    )
+    for name in ("t", "u"):
+        schema = engine.dataset(name).schema
+        assert all(
+            f.dataType.simpleString() in ("int", "string", "array<string>")
+            for f in schema.fields
+        ), schema
+    assert sorted(tuple(r) for r in engine.sql("SELECT k, v, c, d FROM t").collect()) == [
+        (1, "ab", "x", "dd"), (2, "longer", "wide", "dd"), (3, "v", "c", "dvalue"),
+    ]
+    assert sorted(tuple(r) for r in engine.sql("SELECT k, v, c, a FROM u").collect()) == [
+        (1, "ab", "x", ["dd"]), (2, "longer", "wide", ["dd"]),
+        (3, "v", "c", ["dvalue"]),
+    ]

@@ -260,3 +260,18 @@ def test_stream_static_enrichment_matches_batch(spark):
         .toPandas()
     )
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_outer_join_flush_bound_reads_on_the_sink_session(spark):
+    """The outer joins' flush bound is built on the session that owns the
+    memory sink (the gated newSession() at fixture scale), never joined in
+    from another session's plan — even after the base session has read
+    the same table (the resolved-relation cache is per session)."""
+    from plan_spark.queries.streaming_q import _flush_bound
+
+    assert table(spark, SF_DIR, "events").sparkSession is spark
+    gated = spark.newSession()
+    bound = _flush_bound(gated.range(1), SF_DIR)
+    assert bound.sparkSession is gated
+    assert table(gated, SF_DIR, "events").sparkSession is gated
+    assert bound.collect()[0].flush_bound is not None
