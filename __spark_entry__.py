@@ -11,6 +11,7 @@ registry (plan_spark/registry.py) to the driver's calling convention.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -18,9 +19,23 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 # the harness may import this file from any cwd; the package lives beside it
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from plan_spark.registry import load_all  # noqa: E402
+
+
+def _on_workers(spark: SparkSession) -> SparkSession:
+    """Put the package's directory on the ``PYTHONPATH`` of ``spark``'s
+    Python workers too: they unpickle plan_spark functions by module path.
+    ``sparkContext.environment`` travels with every Python function built
+    after this, and workers with a new environment are started apart, so
+    this holds for a session that is already running."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _HERE not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_HERE, *paths])
+    return spark
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -28,6 +43,7 @@ def entry(spark: SparkSession) -> DataFrame:
     (scan -> pushed filter -> grouped aggregate -> sort)."""
     from plan_spark.queries.tpch import q1
 
+    _on_workers(spark)
     return q1(spark, "/root/testdata/sf0.001")
 
 
@@ -45,7 +61,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     family, dataset lifecycle incl. transactional, auto-selected, and
     incrementally-refreshed indexes).
     See SURVEY.md §8 for the inventory-to-query matrix."""
-    return {name: spec.fn for name, spec in load_all().items()}
+    def on_workers(fn):
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(_on_workers(spark), sf_dir)
+
+        return run
+
+    return {name: on_workers(spec.fn) for name, spec in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -164,16 +164,19 @@ class _Stmt:
 
     Routing rule: a statement that is Spark grammar — CREATE TABLE (and
     CTAS), INSERT, UPDATE, DELETE, CREATE INDEX, ALTER TABLE ... ADD
-    COLUMN — is read from Spark's own parse (``Engine._parse``); the
-    cursor only picks the statement family and reads the engine's dialect
-    around it: a DML ``t@branch`` ref (``quoted_ref``), CREATE TABLE's
-    trailing ``WITH (ENFORCE)``, and whether an INSERT source is VALUES
-    (read as written) or a query (read in the dialect, as top-level
-    queries are). It reads whole statements only where Spark cannot: the
-    verbs it has no grammar for (COPY, OPTIMIZE, VACUUM, RESTORE, TAG,
-    BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE) and the forms it
-    rejects or misreads (MERGE's ``ON k`` / ``UPDATE SET c`` / ``DO
-    NOTHING``, the other ALTER forms, ``DESCRIBE HISTORY``).
+    COLUMN, ALTER TABLE ... ADD [CONSTRAINT name] PRIMARY KEY / UNIQUE /
+    CHECK / FOREIGN KEY — is read from Spark's own parse
+    (``Engine._parse``); the cursor only picks the statement family and
+    reads the engine's dialect around it: a DML ``t@branch`` ref
+    (``quoted_ref``), CREATE TABLE's trailing ``WITH (ENFORCE)``, and
+    whether an INSERT source is VALUES (read as written) or a query (read
+    in the dialect, as top-level queries are). It reads whole statements
+    only where Spark cannot: the verbs it has no grammar for (COPY,
+    OPTIMIZE, VACUUM, RESTORE, TAG, BRANCH, REFRESH INDEX, EXPLAIN SCAN,
+    SHOW/DESCRIBE) and the forms it rejects or misreads (MERGE's ``ON k``
+    / ``UPDATE SET c`` / ``DO NOTHING``, the other ALTER forms such as ADD
+    NOT NULL, SET ENFORCE and the unnamed constraint DROPs, ``DESCRIBE
+    HISTORY``).
     Keywords are word-bounded and literal-blind; expression text (SELECT
     bodies, predicates) is handed through raw via ``rest()`` /
     ``paren_body()``."""
@@ -325,8 +328,8 @@ def _names(seq, what: str) -> list[str]:
 def _complete_references(body: str) -> str:
     """Spark 4.1's parser fails (a NullPointerException) on ``REFERENCES
     p`` without a column list, which the engine reads as the parent's
-    key: the list is written as ``(`*`)`` first, which ``_table_args``
-    reads back as that."""
+    key: the list is written as ``(`*`)`` first, which
+    ``_constraint_args`` reads back as that."""
     for i in reversed(list(_iter_top_level_kw(body, "REFERENCES"))):
         q = _Stmt(body[i:])
         q.kw("REFERENCES")
@@ -336,12 +339,46 @@ def _complete_references(body: str) -> str:
     return body
 
 
+def _constraint_args(constraints) -> dict:
+    """The PRIMARY KEY / UNIQUE / CHECK (as its source text) / FOREIGN KEY
+    arguments of ``create_table`` from Spark's parsed constraints — CREATE
+    TABLE's ``tableSpec().constraints()`` and ALTER TABLE ... ADD's one
+    constraint alike. A constraint name is accepted and not kept; a
+    characteristic ([NOT] ENFORCED, [NO]RELY) is refused, since the engine
+    enforces per table (``WITH (ENFORCE)`` / ``SET ENFORCE``) and would
+    otherwise ignore it."""
+    out = {"primary_key": [], "unique": [], "checks": [], "foreign_keys": []}
+    for c in constraints:
+        ch = c.userProvidedCharacteristic()
+        if ch.enforced().isDefined() or ch.rely().isDefined():
+            raise ValueError(
+                "unsupported constraint characteristic ([NOT] ENFORCED / [NO]RELY): "
+                "constraints are enforced per table (WITH (ENFORCE) / SET ENFORCE)"
+            )
+        kind = c.getClass().getSimpleName()
+        if kind == "PrimaryKeyConstraint":
+            out["primary_key"] = _names(c.columns(), "PRIMARY KEY columns")
+        elif kind == "UniqueConstraint":
+            out["unique"].append(_names(c.columns(), "UNIQUE columns"))
+        elif kind == "CheckConstraint":
+            out["checks"].append(c.condition())
+        elif kind == "ForeignKeyConstraint":
+            parent = c.parentColumns()
+            out["foreign_keys"].append({
+                "columns": _names(c.childColumns(), "FOREIGN KEY columns"),
+                "ref_table": _name(c.parentTableId().mkString("\n"), "REFERENCES table"),
+                "ref_columns": None if parent.mkString("\n") == "*"
+                else _names(parent, "REFERENCES columns"),
+            })
+    return out
+
+
 def _table_args(plan) -> dict:
     """``create_table``'s arguments from Spark's CreateTable plan: the
     columns (type, COMMENT, DEFAULT as its source text, NOT NULL) and
-    every column- and table-level PRIMARY KEY / UNIQUE / CHECK (as its
-    source text) / FOREIGN KEY. Spark marks key columns non-nullable, so a
-    NOT NULL on a key column is the key's own, not a separate constraint."""
+    every column- and table-level constraint (``_constraint_args``). Spark
+    marks key columns non-nullable, so a NOT NULL on a key column is the
+    key's own, not a separate constraint."""
     fields, defaults, not_null = [], {}, []
     for col, *_ in json.loads(plan.toJSON())[0]["columns"]:
         name = _name(col["name"], "column name")
@@ -357,33 +394,14 @@ def _table_args(plan) -> dict:
             defaults[name] = col["defaultValue"][0]["originalSQL"]
         if not col["nullable"]:
             not_null.append(name)
-    pk, uniques, checks, fks = [], [], [], []
     constraints = plan.tableSpec().constraints()
-    for i in range(constraints.size()):
-        c = constraints.apply(i)
-        kind = c.getClass().getSimpleName()
-        if kind == "PrimaryKeyConstraint":
-            pk = _names(c.columns(), "PRIMARY KEY columns")
-        elif kind == "UniqueConstraint":
-            uniques.append(_names(c.columns(), "UNIQUE columns"))
-        elif kind == "CheckConstraint":
-            checks.append(c.condition())
-        elif kind == "ForeignKeyConstraint":
-            parent = c.parentColumns()
-            fks.append({
-                "columns": _names(c.childColumns(), "FOREIGN KEY columns"),
-                "ref_table": _name(c.parentTableId().mkString("\n"), "REFERENCES table"),
-                "ref_columns": None if parent.mkString("\n") == "*"
-                else _names(parent, "REFERENCES columns"),
-            })
+    args = _constraint_args(constraints.apply(i) for i in range(constraints.size()))
+    pk = args["primary_key"]
     return {
         "schema_ddl": StructType.fromJson({"fields": fields}),
-        "primary_key": pk or None,
         "column_defaults": defaults or None,
-        "unique": uniques or None,
         "not_null": [c for c in not_null if c not in pk] or None,
-        "checks": checks or None,
-        "foreign_keys": fks or None,
+        **{k: v or None for k, v in args.items()},
     }
 
 
@@ -515,8 +533,10 @@ class Engine:
         set (SQL semantics: rows with a NULL key component are exempt from
         UNIQUE, never from PK), NOT NULL columns, and CHECK expressions
         (violated only when the predicate is FALSE — UNKNOWN passes, per
-        the standard); UPDATE re-validates NOT NULL + CHECK on the
-        post-assignment rows. All raise IntegrityError. Validation is a
+        the standard), and FOREIGN KEYs; UPDATE and MERGE's matched UPDATE
+        re-validate NOT NULL + CHECK on the post-assignment rows, and the
+        FOREIGN KEYs when they assign an FK column (key columns cannot be
+        reassigned). All raise IntegrityError (``_validate``). Validation is a
         distributed anti-join against the target's CURRENT snapshot (AQE
         broadcasts the small side), giving Delta-CHECK-class guarantees:
         sound under snapshot isolation for any single writer; two
@@ -549,55 +569,11 @@ class Engine:
             schema_ddl if isinstance(schema_ddl, StructType)
             else StructType.fromDDL(schema_ddl)
         )
-        known = {f.name for f in struct.fields}
-        for cols in [primary_key or []] + list(unique or []):
-            bad = [c for c in cols if c not in known]
-            if bad:
-                raise ValueError(f"constraint references unknown columns {bad}")
-        bad = [c for c in (not_null or []) if c not in known]
-        if bad:
-            raise ValueError(f"NOT NULL references unknown columns {bad}")
-        fks: list[dict] = []
-        if foreign_keys and schema != "main":
-            # the DML surface (and the RESTRICT scans guarding parents) is
-            # main-scoped; a half-enforced FK in another schema would dodge
-            # DELETE/DROP protection silently
-            raise ValueError("FOREIGN KEY constraints are supported in schema main only")
-        for fk in foreign_keys or []:
-            cols = list(fk["columns"])
-            ref_table = fk["ref_table"]
-            bad = [c for c in cols if c not in known]
-            if bad:
-                raise ValueError(f"FOREIGN KEY references unknown columns {bad}")
-            if ref_table == name:
-                ref_fields = known  # self-referential FK (org charts etc.)
-                parent_pk = primary_key or []
-                parent_uniques = [list(u) for u in (unique or [])]
-            else:
-                parent = self._entry(ref_table, "main")  # must exist, like any engine
-                pschema = Dataset.open(self.spark, parent["root"]).schema
-                ref_fields = {f.name for f in pschema.fields}
-                parent_pk = parent.get("primary_key") or []
-                parent_uniques = parent.get("unique") or []
-            ref_cols = list(fk.get("ref_columns") or parent_pk)
-            if not ref_cols:
-                raise ValueError(
-                    f"FOREIGN KEY REFERENCES {ref_table} needs explicit "
-                    "columns (the parent declares no PRIMARY KEY)"
-                )
-            bad = [c for c in ref_cols if c not in ref_fields]
-            if bad:
-                raise ValueError(
-                    f"FOREIGN KEY references unknown {ref_table} columns {bad}"
-                )
-            if len(cols) != len(ref_cols):
-                raise ValueError(
-                    f"FOREIGN KEY column count mismatch: {cols} vs {ref_cols}"
-                )
-            self._require_key_of_parent(ref_table, ref_cols, parent_pk, parent_uniques)
-            fks.append(
-                {"columns": cols, "ref_table": ref_table, "ref_columns": ref_cols}
-            )
+        fks = self._check_declaration(
+            name, schema, {f.name for f in struct.fields},
+            {"primary_key": primary_key, "unique": unique, "not_null": not_null,
+             "foreign_keys": foreign_keys},
+        )
         # stable row ids on every SQL table (reference rowids.go — core
         # storage2, not an option there): Range segments cost zero storage
         # and they are what make SQL-created scalar indexes auto-routable
@@ -689,8 +665,82 @@ class Engine:
         cast = df.select(
             *[df[f.name].cast(f.dataType) for f in ds.schema.fields]
         )
-        self._check_constraints(name, schema, ds, cast)
+        entry = self._entry(name.partition("@")[0], schema)
+        if entry.get("enforce_pk"):
+            self._validate(name, entry, cast, existing=ds)
         ds.append(cast)
+
+    def _check_declaration(
+        self, name: str, schema: str, known: set[str], decl: dict,
+        entry: dict | None = None,
+    ) -> list[dict]:
+        """The declaration check of new constraints ``decl`` (PRIMARY KEY,
+        UNIQUE, NOT NULL and FOREIGN KEY lists, as catalog entries hold
+        them) on table ``name`` with columns ``known``: one check for
+        CREATE TABLE and ALTER TABLE ... ADD, where ``entry`` is the
+        table's existing declaration. Returns ``decl``'s FOREIGN KEYs with
+        their REFERENCES columns resolved (the parent's PRIMARY KEY when
+        none are written). The parent must exist and its columns be real,
+        or bogus metadata persists and explodes far from the statement (at
+        SET ENFORCE or a later INSERT)."""
+        entry = entry or {}
+        pk = decl.get("primary_key") or []
+        if pk and entry.get("primary_key"):
+            raise ValueError(f"table {name} already has a PRIMARY KEY")
+        for cols in [pk] + list(decl.get("unique") or []):
+            bad = [c for c in cols if c not in known]
+            if bad:
+                raise ValueError(f"constraint references unknown columns {bad}")
+        bad = [c for c in (decl.get("not_null") or []) if c not in known]
+        if bad:
+            raise ValueError(f"NOT NULL references unknown columns {bad}")
+        foreign_keys = decl.get("foreign_keys") or []
+        if foreign_keys and schema != "main":
+            # the DML surface (and the RESTRICT scans guarding parents) is
+            # main-scoped; a half-enforced FK in another schema would dodge
+            # DELETE/DROP protection silently
+            raise ValueError("FOREIGN KEY constraints are supported in schema main only")
+        fks: list[dict] = []
+        for fk in foreign_keys:
+            cols = list(fk["columns"])
+            ref_table = fk["ref_table"]
+            bad = [c for c in cols if c not in known]
+            if bad:
+                raise ValueError(f"FOREIGN KEY references unknown columns {bad}")
+            if ref_table == name:
+                # self-referential FK (org charts etc.): the table's own
+                # keys, declared before or in this statement
+                ref_fields = known
+                parent_pk = pk or entry.get("primary_key") or []
+                parent_uniques = [
+                    list(u) for u in (entry.get("unique") or []) + (decl.get("unique") or [])
+                ]
+            else:
+                parent = self._entry(ref_table, "main")  # must exist, like any engine
+                pschema = Dataset.open(self.spark, parent["root"]).schema
+                ref_fields = {f.name for f in pschema.fields}
+                parent_pk = parent.get("primary_key") or []
+                parent_uniques = parent.get("unique") or []
+            ref_cols = list(fk.get("ref_columns") or parent_pk)
+            if not ref_cols:
+                raise ValueError(
+                    f"FOREIGN KEY REFERENCES {ref_table} needs explicit "
+                    "columns (the parent declares no PRIMARY KEY)"
+                )
+            bad = [c for c in ref_cols if c not in ref_fields]
+            if bad:
+                raise ValueError(
+                    f"FOREIGN KEY references unknown {ref_table} columns {bad}"
+                )
+            if len(cols) != len(ref_cols):
+                raise ValueError(
+                    f"FOREIGN KEY column count mismatch: {cols} vs {ref_cols}"
+                )
+            self._require_key_of_parent(ref_table, ref_cols, parent_pk, parent_uniques)
+            fks.append(
+                {"columns": cols, "ref_table": ref_table, "ref_columns": ref_cols}
+            )
+        return fks
 
     @staticmethod
     def _require_key_of_parent(
@@ -722,25 +772,48 @@ class Engine:
             pred = p if pred is None else (pred | p)
         return pred
 
-    def _check_constraints(
-        self, name: str, schema: str, ds: Dataset, batch: DataFrame
+    def _validate(
+        self,
+        name: str,
+        entry: dict,
+        batch: DataFrame,
+        existing: Dataset | None = None,
+        changed: set[str] | None = None,
     ) -> None:
-        """Opt-in constraint validation before an append (reference: the
-        ART index per unique constraint rejects violations with "duplicate
-        key", pkg/storage/index.go:329; the declared surface is
-        table_constraint.go:10-16 — NOT NULL / CHECK / UNIQUE / PK). Each
-        check is a bounded distributed job that short-circuits at the
-        first witness (limit 1). The existing-vs-batch key probe is a
-        plain inner join so AQE broadcasts whichever side is small — a
-        point INSERT never shuffles the table, a 1 TB COPY never tries to
-        broadcast itself."""
-        entry = self._entry(name.partition("@")[0], schema)
-        if not entry.get("enforce_pk"):
-            return
+        """Check that the rows of ``batch`` satisfy ``entry``'s constraints
+        (reference: the ART index per unique constraint rejects violations
+        with "duplicate key", pkg/storage/index.go:329; the declared
+        surface is table_constraint.go:10-16), raising IntegrityError at
+        the first violation in the order NOT NULL, CHECK, FOREIGN KEY,
+        PRIMARY KEY, UNIQUE. Every enforced write, ADD constraint, SET
+        ENFORCE and RESTORE checks its rows here.
+
+        ONE aggregate job answers every batch-local question (each NOT
+        NULL column, each CHECK, and each key set's null and distinct
+        counts): a job per constraint would be a scheduler round-trip
+        apiece. Witness rows, which exist only to put the offending row in
+        the message, are fetched on the failure path. CHECK is violated
+        only when the predicate is FALSE — NULL/UNKNOWN passes, per the SQL
+        standard. Then the FK probe, then the key probe against
+        ``existing``, the table the batch joins (None: the batch is all of
+        the table's rows); an empty table holds no key to collide with and
+        is not probed. The probe is a plain inner join so AQE broadcasts
+        whichever side is small — a point INSERT never shuffles the table,
+        a 1 TB COPY never tries to broadcast itself.
+
+        ``changed`` names the columns an UPDATE or MERGE post-image
+        assigns: its keys are not checked (key reassignment is refused
+        before), and its FKs only when it assigns an FK column — untouched
+        FK values were valid when written, and the child-vs-parent join is
+        the expensive part."""
         not_null = entry.get("not_null") or []
         checks = entry.get("checks") or []
         pk = entry.get("primary_key") or []
-        uniques = entry.get("unique") or []
+        keysets = ([("PRIMARY KEY", list(pk))] if pk else []) + [
+            ("UNIQUE", list(u)) for u in entry.get("unique") or []
+        ]
+        if changed is not None:
+            keysets = []
         for c in not_null:
             if c not in batch.columns:
                 # never skip silently: an absent constrained column means
@@ -751,18 +824,7 @@ class Engine:
                     f"NOT NULL column {c!r} of {name} is absent from the "
                     "write batch (constraint metadata out of sync?)"
                 )
-        # ONE aggregate job answers EVERY batch-local question (each NOT
-        # NULL column, each CHECK, and each key's null/duplicate stats) —
-        # the r11 job-count finding: the sequential per-constraint probes
-        # cost a Spark job apiece, so a 2-row INSERT on an enforced table
-        # paid 6+ scheduler round-trips before its write. Witness probes
-        # (which exist only to put the offending row in the error message)
-        # run on the rare failure path. Violation precedence is identical
-        # to the old sequential path: NOT NULL, CHECK, FK, PK, UNIQUE.
-        keyset = ([("PRIMARY KEY", list(pk))] if pk else []) + [
-            ("UNIQUE", list(u)) for u in uniques
-        ]
-        aggs = [F.count(F.lit(1)).alias("__n")]
+        aggs = []
         for i, c in enumerate(not_null):
             aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn{i}"))
         for i, chk in enumerate(checks):
@@ -771,7 +833,7 @@ class Engine:
                     (~F.coalesce(F.expr(chk), F.lit(True))).cast("long")
                 ).alias(f"__ck{i}")
             )
-        for i, (_, cols) in enumerate(keyset):
+        for i, (_, cols) in enumerate(keysets):
             np_ = self._any_null_pred(cols)
             aggs.append(F.sum(np_.cast("long")).alias(f"__kn{i}"))
             # count_distinct skips NULL inputs, and the when() maps every
@@ -780,35 +842,40 @@ class Engine:
             aggs.append(
                 F.count_distinct(F.when(~np_, F.struct(*cols))).alias(f"__kd{i}")
             )
-        # driver_sized: the count_distinct Expand costs 2 exchanges, which
-        # AQE would run as 3 sequential jobs for a 1-row stats answer
-        with driver_sized(self.spark):
-            stats = batch.agg(*aggs).collect()[0]
-        n_rows = stats["__n"]
-        for i, c in enumerate(not_null):
-            if stats[f"__nn{i}"] or 0:
-                raise IntegrityError(f"NULL in NOT NULL column {c!r} of {name}")
-        for i, chk in enumerate(checks):
-            if stats[f"__ck{i}"] or 0:
-                bad = (
-                    batch.filter(~F.coalesce(F.expr(chk), F.lit(True)))
-                    .limit(1)
-                    .collect()
-                )
-                raise IntegrityError(
-                    f"CHECK ({chk}) violated on {name}: {_witness(bad)}"
-                )
-        if not n_rows:
-            return  # an empty batch can violate no FK or key constraint
-        self._check_foreign_keys(name.partition("@")[0], entry, batch)
-        if not keyset:
+        if aggs:
+            # driver_sized: the count_distinct Expand costs 2 exchanges,
+            # which AQE would run as 3 sequential jobs for a 1-row answer
+            with driver_sized(self.spark):
+                stats = batch.agg(F.count(F.lit(1)).alias("__n"), *aggs).collect()[0]
+            for i, c in enumerate(not_null):
+                if stats[f"__nn{i}"] or 0:
+                    raise IntegrityError(f"NULL in NOT NULL column {c!r} of {name}")
+            for i, chk in enumerate(checks):
+                if stats[f"__ck{i}"] or 0:
+                    bad = (
+                        batch.filter(~F.coalesce(F.expr(chk), F.lit(True)))
+                        .limit(1)
+                        .collect()
+                    )
+                    raise IntegrityError(
+                        f"CHECK ({chk}) violated on {name}: {_witness(bad)}"
+                    )
+            if not stats["__n"]:
+                return  # an empty batch can violate no FK or key constraint
+        fk_cols = {c for fk in entry.get("foreign_keys") or [] for c in fk["columns"]}
+        if changed is None or fk_cols & changed:
+            self._check_foreign_keys(name.partition("@")[0], entry, batch)
+        if not keysets:
             return
-        # an empty table holds no key to collide with: skip the probe job
-        existing = ds.to_df() if ds.manifest.fragments else None
-        for i, (kind, cols) in enumerate(keyset):
+        existing_df = (
+            existing.to_df()
+            if existing is not None and existing.manifest.fragments
+            else None
+        )
+        for i, (kind, cols) in enumerate(keysets):
             self._check_key_stats(
                 name, cols, kind, batch,
-                n_rows, stats[f"__kn{i}"] or 0, stats[f"__kd{i}"], existing,
+                stats["__n"], stats[f"__kn{i}"] or 0, stats[f"__kd{i}"], existing_df,
             )
 
     def _check_foreign_keys(self, base: str, entry: dict, batch: DataFrame) -> None:
@@ -850,23 +917,6 @@ class Engine:
                     f"{_witness(orphan)} has no match in "
                     f"{ref_table}{tuple(ref_cols)}"
                 )
-
-    def _validate_current_rows(self, tbl: str, entry: dict) -> None:
-        """Validate the table's CURRENT rows against ``entry``'s declared
-        constraints (the ADD CONSTRAINT / SET ENFORCE contract: a table is
-        never 'enforced' while already violating a declaration). Uniqueness
-        runs as the intra-batch check over the whole table; FKs validate
-        the full child against its parents."""
-        ds = self.dataset(tbl)
-        full = ds.to_df()
-        empty = full.limit(0)
-        self._check_row_constraints(tbl, entry, full)
-        self._check_foreign_keys(tbl, entry, full)
-        pk = entry.get("primary_key") or []
-        if pk:
-            self._check_key_frames(tbl, pk, empty, full, kind="PRIMARY KEY")
-        for u in entry.get("unique") or []:
-            self._check_key_frames(tbl, u, empty, full, kind="UNIQUE")
 
     def _fk_children(self, parent: str) -> list[tuple[str, dict, dict]]:
         """Every ENFORCED foreign key (child table, entry, fk) that
@@ -925,85 +975,6 @@ class Engine:
                     f"{_witness(hit)}"
                 )
 
-    def _check_row_constraints(self, name: str, entry: dict, batch: DataFrame) -> None:
-        """NOT NULL + CHECK over one batch of candidate rows (also run on
-        UPDATE's post-assignment rows). CHECK is violated only when the
-        predicate is FALSE — NULL/UNKNOWN passes, per the SQL standard."""
-        not_null = entry.get("not_null") or []
-        checks = entry.get("checks") or []
-        for c in not_null:
-            if c not in batch.columns:
-                # never skip silently: an absent constrained column means
-                # the metadata and the live schema have diverged (or a
-                # caller built a partial frame) — both are bugs to surface,
-                # not enforcement to disable
-                raise IntegrityError(
-                    f"NOT NULL column {c!r} of {name} is absent from the "
-                    "write batch (constraint metadata out of sync?)"
-                )
-        if not not_null and not checks:
-            return
-        # ONE aggregate job answers every question (same fusion as the
-        # INSERT front door's _check_constraints): the old shape ran a
-        # sequential probe job per declared constraint on every enforced
-        # UPDATE/MERGE batch. Witness probes run on the failure path only;
-        # violation precedence (NOT NULL before CHECK, declaration order
-        # within each) and every message are unchanged.
-        aggs = []
-        for i, c in enumerate(not_null):
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn{i}"))
-        for i, chk in enumerate(checks):
-            aggs.append(
-                F.sum(
-                    (~F.coalesce(F.expr(chk), F.lit(True))).cast("long")
-                ).alias(f"__ck{i}")
-            )
-        with driver_sized(self.spark):
-            stats = batch.agg(*aggs).collect()[0]
-        for i, c in enumerate(not_null):
-            if stats[f"__nn{i}"] or 0:
-                raise IntegrityError(f"NULL in NOT NULL column {c!r} of {name}")
-        for i, chk in enumerate(checks):
-            if stats[f"__ck{i}"] or 0:
-                bad = (
-                    batch.filter(~F.coalesce(F.expr(chk), F.lit(True)))
-                    .limit(1)
-                    .collect()
-                )
-                raise IntegrityError(
-                    f"CHECK ({chk}) violated on {name}: {_witness(bad)}"
-                )
-
-    def _check_key_frames(
-        self,
-        name: str,
-        cols: list[str],
-        existing: DataFrame,
-        batch: DataFrame,
-        kind: str = "PRIMARY KEY",
-    ) -> None:
-        null_pred = self._any_null_pred(cols)
-        # fast path: ONE aggregate job answers both batch-local questions
-        # (any NULL component? any intra-batch duplicate?); witness probes
-        # run only on the rare failure path (_check_key_stats). The
-        # enforced-INSERT front door (_check_constraints) fuses these
-        # stats for EVERY constraint into one shared aggregate instead.
-        with driver_sized(self.spark):
-            stats = batch.select(*cols).agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.sum(null_pred.cast("long")).alias("__n_null"),
-                # count_distinct skips NULL inputs, and the when() maps every
-                # any-NULL-component row to NULL — so this is the distinct
-                # count over exactly the NULL-free rows (SQL UNIQUE's domain)
-                F.count_distinct(
-                    F.when(~null_pred, F.struct(*cols))
-                ).alias("__n_dist"),
-            ).collect()[0]
-        # empty batch (INSERT ... SELECT with 0 rows): SUM aggregates to NULL
-        self._check_key_stats(
-            name, cols, kind, batch, stats[0], stats[1] or 0, stats[2], existing
-        )
-
     def _check_key_stats(
         self,
         name: str,
@@ -1017,7 +988,8 @@ class Engine:
     ) -> None:
         """Key-constraint verdicts from precomputed batch stats: raise the
         witness-carrying IntegrityError on a violation, probe ``existing``
-        (None = known-empty table, probe skipped) for cross-batch dups."""
+        (None: an empty table, or the batch is all its rows) for
+        cross-batch dups."""
         keys = batch.select(*cols)
         null_pred = self._any_null_pred(cols)
         n_nonnull = n_rows - n_null
@@ -1653,12 +1625,14 @@ class Engine:
 
         One grammar, Spark's: a statement Spark's parser reads — CREATE
         TABLE (and CTAS), INSERT, UPDATE, DELETE, CREATE INDEX, ALTER TABLE
-        ... ADD COLUMN — is read from its parse (``_parse``), and text that
+        ... ADD COLUMN, ALTER TABLE ... ADD PRIMARY KEY / UNIQUE / CHECK /
+        FOREIGN KEY — is read from its parse (``_parse``), and text that
         parse refuses raises ValueError with Spark's ParseException
         chained. The statement cursor (``_Stmt``) reads only the engine's
         own verbs and dialect forms (COPY, OPTIMIZE, VACUUM, RESTORE, TAG,
         BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE, MERGE, the other
-        ALTER forms, ``t@branch`` refs, ``WITH (ENFORCE)``).
+        ALTER forms such as ADD NOT NULL, SET ENFORCE and the constraint
+        DROPs, ``t@branch`` refs, ``WITH (ENFORCE)``).
 
         CHAR(n) and VARCHAR(n) columns — in CREATE TABLE, CTAS and ADD
         COLUMN — are stored as STRING, as DuckDB stores them: no padding,
@@ -1710,16 +1684,16 @@ class Engine:
     # ------------------------------------------------- statement handlers
     _QUERY_HEADS = ("SELECT", "WITH", "TABLE", "VALUES")
 
-    def _parse(self, text: str, kind: str):
+    def _parse(self, text: str, *kinds: str):
         """``parse_plan(text)``, the engine's one call of it: text Spark
-        cannot parse, or reads as other than plan node ``kind``, raises
-        ValueError (Spark's ParseException chained)."""
+        cannot parse, or reads as other than one of the plan nodes
+        ``kinds``, raises ValueError (Spark's ParseException chained)."""
         try:
             plan = parse_plan(self.spark, text)
         except ParseException as e:
             msg = str(e).strip().splitlines()[0]
             raise ValueError(f"unsupported statement {text[:120]!r}: {msg}") from e
-        if plan.nodeName() != kind:
+        if plan.nodeName() not in kinds:
             raise ValueError(f"unsupported statement {text[:120]!r}")
         return plan
 
@@ -2185,43 +2159,23 @@ class Engine:
                         f"{tuple(dup[0])[:-1] if dup else _witness(dup)} "
                         "(matched-UPDATE would fan out the target row)"
                     )
-            if when_matched == "update" and (
-                entry.get("not_null")
-                or entry.get("checks")
-                or entry.get("foreign_keys")
-            ):
-                # validate the POST-update matched rows (NOT NULL / CHECK /
-                # FK — key reassignment was refused above)
-                updated = matched_post_image(self.dataset(tgt).to_df())
-                self._check_row_constraints(tgt, entry, updated)
-                # FK probe only when an FK column is actually updated —
-                # untouched FK values were valid when written, and the
-                # child-vs-parent join is the expensive part
-                fk_cols = {
-                    c
-                    for fk in entry.get("foreign_keys") or []
-                    for c in fk["columns"]
-                }
-                if fk_cols & set(upd_cols):
-                    self._check_foreign_keys(tgt, entry, updated)
+            if when_matched == "update":
+                # validate the POST-update matched rows (key reassignment
+                # was refused above)
+                self._validate(
+                    tgt, entry, matched_post_image(self.dataset(tgt).to_df()),
+                    changed=set(upd_cols),
+                )
             if when_not_matched == "insert":
-                tdf = self.dataset(tgt).to_df()
+                ds = self.dataset(tgt)
                 inserts = source.join(
-                    tdf.select(*keys).distinct(), on=keys, how="left_anti"
+                    ds.to_df().select(*keys).distinct(), on=keys, how="left_anti"
                 )
                 # ON == PK already guarantees no collision with existing
                 # rows (inserts are the anti-join) — but NULL-free and
                 # intra-source uniqueness still need the checks; for
-                # ON != PK the full three-way validation applies, and
-                # UNIQUE sets + NOT NULL + CHECK + FKs validate the frame
-                self._check_row_constraints(tgt, entry, inserts)
-                self._check_foreign_keys(tgt, entry, inserts)
-                if pk:
-                    self._check_key_frames(
-                        tgt, pk, tdf, inserts, kind="PRIMARY KEY"
-                    )
-                for u in entry.get("unique") or []:
-                    self._check_key_frames(tgt, u, tdf, inserts, kind="UNIQUE")
+                # ON != PK the full three-way validation applies
+                self._validate(tgt, entry, inserts, existing=ds)
         if when_matched == "update" and self._fk_children(tgt):
             ref_touched = any(
                 c in upd_cols
@@ -2353,21 +2307,11 @@ class Engine:
                     f"UPDATE on enforced table {name} may not reassign "
                     f"key columns {hit} (DELETE + INSERT instead)"
                 )
-            fk_cols = {
-                c
-                for fk in entry.get("foreign_keys") or []
-                for c in fk["columns"]
-            }
-            touch_fk = any(c in assignments for c in fk_cols)
-            if entry.get("not_null") or entry.get("checks") or touch_fk:
-                # validate the POST-assignment rows (limit-1 witness jobs)
-                # before the commit
-                updated = post_image(self._dataset_ref(name).to_df())
-                self._check_row_constraints(name, entry, updated)
-                if touch_fk:
-                    self._check_foreign_keys(
-                        name.partition("@")[0], entry, updated
-                    )
+            # validate the POST-assignment rows before the commit
+            self._validate(
+                name, entry, post_image(self._dataset_ref(name).to_df()),
+                changed=set(assignments),
+            )
         base = name.partition("@")[0]
         children = self._fk_children(base)
         ref_touched = any(
@@ -2573,11 +2517,16 @@ class Engine:
         ADD COLUMN a type [DEFAULT expr] | DROP COLUMN a — the SQL face of
         the Dataset schema-evolution surface (reference sdk/dataset.go:623
         AddColumns/AlterColumns/DropColumns) — plus the deferred-constraint
-        surface: ADD PRIMARY KEY/UNIQUE/CHECK/FOREIGN KEY/NOT NULL
-        (validated against the CURRENT rows when the table is enforced —
-        the Postgres ADD CONSTRAINT contract) and SET ENFORCE/NOENFORCE
-        (ENFORCE validates every declared constraint first, so a table can
-        never be 'enforced' while already violating its own declarations)."""
+        surface: ADD [CONSTRAINT name] PRIMARY KEY/UNIQUE/CHECK/FOREIGN KEY,
+        read from Spark's parse with CREATE TABLE's constraint reader and
+        declaration check, and ADD NOT NULL c (validated against the
+        CURRENT rows when the table is enforced — the Postgres ADD
+        CONSTRAINT contract); SET ENFORCE/NOENFORCE (ENFORCE validates
+        every declared constraint first, so a table can never be 'enforced'
+        while already violating its own declarations); and DROP PRIMARY
+        KEY/UNIQUE (cols)/CHECK (expr)/NOT NULL c/FOREIGN KEY (cols). ADD
+        COLUMN is Spark grammar too; the other forms, which Spark has no
+        grammar for or reads otherwise, are read by the cursor."""
         p = _Stmt(s)
         p.kw("ALTER")
         p.kw("TABLE")
@@ -2599,7 +2548,7 @@ class Engine:
                     or entry.get("foreign_keys")
                 ):
                     raise ValueError("SET ENFORCE requires at least one constraint")
-                self._validate_current_rows(tbl, entry)
+                self._validate(tbl, entry, self.dataset(tbl).to_df())
             entry["enforce_pk"] = enforce
             self._save_catalog()
             return
@@ -2620,91 +2569,29 @@ class Engine:
             )
             return
         if p.try_kw("ADD"):
-            p.try_kw("CONSTRAINT")
             entry = self._entry(tbl, "main")
-            probe = dict(entry)
-            if p.try_kw("PRIMARY", "KEY"):
-                if entry.get("primary_key"):
-                    raise ValueError(f"table {tbl} already has a PRIMARY KEY")
-                cols = [c.strip() for c in p.paren_body().split(",")]
-                probe = {**entry, "primary_key": cols, "unique": [],
-                         "not_null": [], "checks": [], "foreign_keys": []}
-                apply = lambda: entry.__setitem__("primary_key", cols)  # noqa: E731
-            elif p.try_kw("UNIQUE"):
-                cols = [c.strip() for c in p.paren_body().split(",")]
-                probe = {**entry, "primary_key": [], "unique": [cols],
-                         "not_null": [], "checks": [], "foreign_keys": []}
-                apply = lambda: entry.setdefault("unique", []).append(cols)  # noqa: E731
-            elif p.try_kw("CHECK"):
-                chk = p.paren_body().strip()
-                probe = {**entry, "primary_key": [], "unique": [],
-                         "not_null": [], "checks": [chk], "foreign_keys": []}
-                apply = lambda: entry.setdefault("checks", []).append(chk)  # noqa: E731
-            elif p.try_kw("NOT", "NULL"):
-                col = p.ident("column name")
-                probe = {**entry, "primary_key": [], "unique": [],
-                         "not_null": [col], "checks": [], "foreign_keys": []}
-                apply = lambda: entry.setdefault("not_null", []).append(col)  # noqa: E731
-            elif p.try_kw("FOREIGN", "KEY"):
-                cols = [c.strip() for c in p.paren_body().split(",")]
-                p.kw("REFERENCES")
-                ref_table = p.ident("parent table")
-                # same validation as create_table's FK loop: the parent
-                # must exist and the referenced columns must be real, or
-                # bogus metadata persists and explodes far from this
-                # statement (at SET ENFORCE or a later INSERT)
-                if ref_table == tbl:
-                    ref_fields = {
-                        f.name for f in self.dataset(tbl).schema.fields
-                    }
-                    parent_pk = entry.get("primary_key") or []
-                    parent_uniques = entry.get("unique") or []
-                else:
-                    parent = self._entry(ref_table, "main")
-                    ref_fields = {
-                        f.name
-                        for f in Dataset.open(self.spark, parent["root"]).schema.fields
-                    }
-                    parent_pk = parent.get("primary_key") or []
-                    parent_uniques = parent.get("unique") or []
-                ref_cols = (
-                    [c.strip() for c in p.paren_body().split(",")]
-                    if p.has_paren()
-                    else parent_pk
-                )
-                if not ref_cols or len(ref_cols) != len(cols):
-                    raise ValueError("FOREIGN KEY needs matching parent columns")
-                bad = [c for c in ref_cols if c not in ref_fields]
-                if bad:
-                    raise ValueError(
-                        f"FOREIGN KEY references unknown {ref_table} columns {bad}"
-                    )
-                self._require_key_of_parent(
-                    ref_table, ref_cols, parent_pk, parent_uniques
-                )
-                fk = {"columns": cols, "ref_table": ref_table, "ref_columns": ref_cols}
-                probe = {**entry, "primary_key": [], "unique": [],
-                         "not_null": [], "checks": [], "foreign_keys": [fk]}
-                apply = lambda: entry.setdefault("foreign_keys", []).append(fk)  # noqa: E731
+            if p.try_kw("NOT", "NULL") or p.try_kw("CONSTRAINT", "NOT", "NULL"):
+                # no Spark grammar for a deferred NOT NULL
+                decl = {"not_null": [p.ident("column name")]}
+                p.end()
             else:
-                raise p.error("expected PRIMARY KEY / UNIQUE / CHECK / "
-                              "NOT NULL / FOREIGN KEY")
-            p.end()
-            known = {f.name for f in self.dataset(tbl).schema.fields}
-            ref_cols_here = [
-                c
-                for c in (probe.get("primary_key") or [])
-                + [c for u in probe.get("unique") or [] for c in u]
-                + (probe.get("not_null") or [])
-                + [c for fk in probe.get("foreign_keys") or [] for c in fk["columns"]]
-            ]
-            bad = [c for c in ref_cols_here if c not in known]
-            if bad:
-                raise ValueError(f"constraint references unknown columns {bad}")
+                plan = self._parse(
+                    s[: p.i] + _complete_references(s[p.i :]),
+                    "AddConstraint", "AddCheckConstraint",
+                )
+                decl = _constraint_args([
+                    plan.checkConstraint() if plan.nodeName() == "AddCheckConstraint"
+                    else plan.tableConstraint()
+                ])
+            ds = self.dataset(tbl)
+            decl["foreign_keys"] = self._check_declaration(
+                tbl, "main", {f.name for f in ds.schema.fields}, decl, entry
+            )
             if entry.get("enforce_pk"):
                 # existing rows must already satisfy the new constraint
-                self._validate_current_rows(tbl, probe)
-            apply()
+                self._validate(tbl, decl, ds.to_df())
+            for k, v in decl.items():
+                entry[k] = (entry.get(k) or []) + v
             self._save_catalog()
             return
         if p.try_kw("RENAME", "COLUMN"):
@@ -2969,15 +2856,7 @@ class Engine:
             # ENFORCE validates current rows
             if restored is None:
                 restored = ds.checkout(ver).to_df()
-            self._check_row_constraints(tbl, entry, restored)
-            self._check_foreign_keys(tbl, entry, restored)
-            for key_set, kname in [(entry.get("primary_key") or [], "PRIMARY KEY")] + [
-                (u, "UNIQUE") for u in entry.get("unique") or []
-            ]:
-                if key_set:
-                    self._check_key_frames(
-                        tbl, key_set, restored.limit(0), restored, kind=kname
-                    )
+            self._validate(tbl, entry, restored)
         ds.restore(ver)
         self._registered.pop(("main", tbl), None)
 

@@ -155,3 +155,61 @@ def test_driver_sized_overlapping_threads_restore_aqe(spark):
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+# Job counts of these statements before the constraint checks were fused
+# into one validator (status tracker, local[4]): SET ENFORCE 5, RESTORE 5,
+# the 1-row MERGE insert 17, the 1-row INSERT 6, the non-key UPDATE 4; on
+# the unconstrained table INSERT 1, UPDATE 3, MERGE 7. SET ENFORCE ran a
+# row aggregate, an aggregate per key set and a probe per key set against
+# an empty frame.
+def _constrained(eng):
+    """50 rows under PRIMARY KEY k, UNIQUE u, CHECK (v > 0), NOT NULL w."""
+    eng.sql(
+        "CREATE TABLE t (k BIGINT, u BIGINT, v BIGINT, w STRING, "
+        "PRIMARY KEY (k), UNIQUE (u), CHECK (v > 0))"
+    )
+    eng.sql("ALTER TABLE t ADD NOT NULL w")
+    eng.sql(
+        "INSERT INTO t VALUES "
+        + ", ".join(f"({i}, {i}, {i + 1}, 'w{i}')" for i in range(50))
+    )
+
+
+def test_set_enforce_is_one_aggregate(spark, eng):
+    _constrained(eng)
+    # one fused aggregate answers NOT NULL, CHECK and both key sets over
+    # the whole table, and nothing is probed against an empty frame
+    n = _jobs_for(spark, lambda: eng.sql("ALTER TABLE t SET ENFORCE"))
+    assert n == 1, f"SET ENFORCE ran {n} jobs (budget 1)"
+
+
+def test_restore_and_merge_insert_validate_in_fewer_jobs(spark, eng):
+    _constrained(eng)
+    eng.sql("ALTER TABLE t SET ENFORCE")
+    head = max(eng.dataset("t").versions())
+    n = _jobs_for(spark, lambda: eng.sql(f"RESTORE TABLE t TO VERSION AS OF {head}"))
+    assert n < 5, f"RESTORE ran {n} jobs (5 before the fused validator)"
+    n = _jobs_for(spark, lambda: eng.sql(
+        "MERGE INTO t USING (SELECT 100 AS k, 100 AS u, 5 AS v, 'w' AS w) s "
+        "ON t.k = s.k WHEN NOT MATCHED THEN INSERT *"
+    ))
+    assert n < 17, f"1-row MERGE insert ran {n} jobs (17 before)"
+    n = _jobs_for(spark, lambda: eng.sql("INSERT INTO t VALUES (200, 200, 3, 'w')"))
+    assert n <= 6, f"1-row INSERT ran {n} jobs (6 before)"
+    n = _jobs_for(spark, lambda: eng.sql("UPDATE t SET v = v + 1 WHERE k = 3"))
+    assert n <= 4, f"non-key UPDATE ran {n} jobs (4 before)"
+
+
+def test_unconstrained_writes_run_no_validation_jobs(spark, eng):
+    eng.sql("CREATE TABLE lk (k BIGINT, v BIGINT)")
+    eng.sql("INSERT INTO lk VALUES (1, 1), (2, 2)")
+    n = _jobs_for(spark, lambda: eng.sql("INSERT INTO lk VALUES (3, 3)"))
+    assert n <= 1, f"unconstrained INSERT ran {n} jobs (1 before)"
+    n = _jobs_for(spark, lambda: eng.sql("UPDATE lk SET v = v + 1 WHERE k = 1"))
+    assert n <= 3, f"unconstrained UPDATE ran {n} jobs (3 before)"
+    n = _jobs_for(spark, lambda: eng.sql(
+        "MERGE INTO lk USING (SELECT 4 AS k, 4 AS v UNION ALL SELECT 1, 9) s "
+        "ON k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    ))
+    assert n <= 7, f"unconstrained MERGE ran {n} jobs (7 before)"

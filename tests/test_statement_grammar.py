@@ -9,7 +9,7 @@ import tempfile
 
 import pytest
 
-from plan_spark.engine import Engine
+from plan_spark.engine import Engine, IntegrityError
 
 # wider than Spark's printed trees list (spark.sql.debug.maxToStringFields, 25)
 _WIDE = [f"c{i}" for i in range(30)]
@@ -100,3 +100,72 @@ def test_char_and_varchar_columns_are_stored_as_string(engine):
         (1, "ab", "x", ["dd"]), (2, "longer", "wide", ["dd"]),
         (3, "v", "c", ["dvalue"]),
     ]
+
+
+# ALTER TABLE ... ADD reads its constraint with CREATE TABLE's reader
+def test_alter_add_reads_backquoted_names_and_constraint_names(engine):
+    engine.sql("CREATE TABLE c (a BIGINT, b BIGINT, s STRING)")
+    engine.sql("ALTER TABLE c ADD UNIQUE (`a`)")
+    engine.sql("ALTER TABLE c ADD CONSTRAINT c_u UNIQUE (b)")
+    engine.sql("ALTER TABLE c ADD CONSTRAINT c_pk PRIMARY KEY (`a`, b)")
+    entry = engine._entry("c", "main")
+    assert entry["unique"] == [["a"], ["b"]]
+    assert entry["primary_key"] == ["a", "b"]
+
+
+def test_alter_add_check_with_comma_and_paren_in_a_literal(engine):
+    engine.sql("CREATE TABLE c (k BIGINT PRIMARY KEY, s STRING) WITH (ENFORCE)")
+    engine.sql("ALTER TABLE c ADD CHECK (s <> 'a,b)')")
+    assert engine._entry("c", "main")["checks"] == ["s <> 'a,b)'"]
+    engine.sql("INSERT INTO c VALUES (1, 'a,b')")
+    with pytest.raises(IntegrityError, match="CHECK"):
+        engine.sql("INSERT INTO c VALUES (2, 'a,b)')")
+
+
+def test_alter_add_check_then_drop_check_round_trips(engine):
+    engine.sql("CREATE TABLE c (v BIGINT, s STRING)")
+    text = "  v>0 AND  s <> ')'  "
+    engine.sql(f"ALTER TABLE c ADD CHECK ({text})")
+    assert engine._entry("c", "main")["checks"] == [text.strip()]
+    engine.sql(f"ALTER TABLE c DROP CHECK ({text})")
+    assert engine._entry("c", "main")["checks"] == []
+
+
+def test_alter_add_foreign_key_without_column_list(engine):
+    engine.sql("CREATE TABLE p (k BIGINT PRIMARY KEY)")
+    engine.sql("CREATE TABLE c (id BIGINT, pk BIGINT)")
+    engine.sql("ALTER TABLE c ADD FOREIGN KEY (pk) REFERENCES p")
+    assert engine._entry("c", "main")["foreign_keys"] == [
+        {"columns": ["pk"], "ref_table": "p", "ref_columns": ["k"]}
+    ]
+
+
+def test_alter_add_reads_a_wide_unique_list_whole(engine):
+    cols = [f"c{i}" for i in range(26)]
+    engine.sql(f"CREATE TABLE w ({', '.join(c + ' INT' for c in cols)})")
+    engine.sql(f"ALTER TABLE w ADD UNIQUE ({', '.join(cols)})")
+    assert engine._entry("w", "main")["unique"] == [cols]
+
+
+def test_create_refuses_a_constraint_characteristic(engine):
+    # the engine enforces per table: a NOT ENFORCED UNIQUE of an enforced
+    # table would be enforced all the same
+    with pytest.raises(ValueError, match="constraint characteristic"):
+        engine.sql(
+            "CREATE TABLE t (k BIGINT, v BIGINT, UNIQUE (v) NOT ENFORCED, "
+            "PRIMARY KEY (k)) WITH (ENFORCE)"
+        )
+    assert "t" not in engine.tables()
+
+
+def test_alter_add_refuses_a_constraint_characteristic(engine):
+    engine.sql("CREATE TABLE t (k BIGINT PRIMARY KEY, v BIGINT) WITH (ENFORCE)")
+    for stmt in (
+        "ALTER TABLE t ADD UNIQUE (v) NOT ENFORCED",
+        "ALTER TABLE t ADD CHECK (v > 0) ENFORCED",
+        "ALTER TABLE t ADD CONSTRAINT t_u UNIQUE (v) RELY",
+    ):
+        with pytest.raises(ValueError, match="constraint characteristic"):
+            engine.sql(stmt)
+    entry = engine._entry("t", "main")
+    assert (entry["unique"], entry["checks"]) == ([], [])
