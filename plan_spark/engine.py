@@ -163,18 +163,19 @@ class _Stmt:
     quoting rules (_scan_top_level).
 
     Routing rule: a statement that is Spark grammar — CREATE TABLE (and
-    CTAS), INSERT, UPDATE, DELETE, CREATE INDEX, ALTER TABLE ... ADD
-    COLUMN, ALTER TABLE ... ADD [CONSTRAINT name] PRIMARY KEY / UNIQUE /
-    CHECK / FOREIGN KEY — is read from Spark's own parse
+    CTAS), INSERT, UPDATE, DELETE, MERGE, CREATE INDEX, ALTER TABLE ...
+    ADD COLUMN, ALTER TABLE ... ADD [CONSTRAINT name] PRIMARY KEY / UNIQUE
+    / CHECK / FOREIGN KEY — is read from Spark's own parse
     (``Engine._parse``); the cursor only picks the statement family and
     reads the engine's dialect around it: a DML ``t@branch`` ref
     (``quoted_ref``), CREATE TABLE's trailing ``WITH (ENFORCE)``, and
     whether an INSERT source is VALUES (read as written) or a query (read
-    in the dialect, as top-level queries are). It reads whole statements
-    only where Spark cannot: the verbs it has no grammar for (COPY,
-    OPTIMIZE, VACUUM, RESTORE, TAG, BRANCH, REFRESH INDEX, EXPLAIN SCAN,
-    SHOW/DESCRIBE) and the forms it rejects or misreads (MERGE's ``ON k``
-    / ``UPDATE SET c`` / ``DO NOTHING``, the other ALTER forms such as ADD
+    in the dialect, as top-level queries are). MERGE's ``DO NOTHING``
+    clauses are cut out by the top-level scanner (``_iter_top_level_kw``)
+    before its parse. The cursor reads whole statements only where Spark
+    cannot: the verbs it has no grammar for (COPY, OPTIMIZE, VACUUM,
+    RESTORE, TAG, BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE) and
+    the forms it rejects or misreads (the other ALTER forms such as ADD
     NOT NULL, SET ENFORCE and the unnamed constraint DROPs, ``DESCRIBE
     HISTORY``).
     Keywords are word-bounded and literal-blind; expression text (SELECT
@@ -273,6 +274,16 @@ class _Stmt:
                 return body
         raise self.error("unbalanced parentheses")
 
+    def name_list(self, what: str) -> list[str]:
+        """The next parenthesised list of plain or backquoted names."""
+        names = []
+        for part in _split_top_level_commas(self.paren_body()):
+            part = part.strip()
+            if len(part) > 1 and part[0] == part[-1] == "`":
+                part = part[1:-1].replace("``", "`")
+            names.append(_name(part, what))
+        return names
+
     def has_paren(self) -> bool:
         self._ws()
         return self.i < len(self.s) and self.s[self.i] == "("
@@ -323,6 +334,17 @@ def _names(seq, what: str) -> list[str]:
     if len(names) != n:
         raise ValueError(f"{what} must be plain names, got {names}")
     return [_name(x, what) for x in names]
+
+
+def _seq(seq) -> list:
+    """The elements of a JVM ``Seq`` of Spark's plan."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _attr_name(e) -> str | None:
+    """The last name part of a parsed column reference (``k`` of ``s.k``),
+    or None when the expression ``e`` is not one."""
+    return e.nameParts().last() if e.nodeName() == "UnresolvedAttribute" else None
 
 
 def _complete_references(body: str) -> str:
@@ -394,8 +416,7 @@ def _table_args(plan) -> dict:
             defaults[name] = col["defaultValue"][0]["originalSQL"]
         if not col["nullable"]:
             not_null.append(name)
-    constraints = plan.tableSpec().constraints()
-    args = _constraint_args(constraints.apply(i) for i in range(constraints.size()))
+    args = _constraint_args(_seq(plan.tableSpec().constraints()))
     pk = args["primary_key"]
     return {
         "schema_ddl": StructType.fromJson({"fields": fields}),
@@ -1624,15 +1645,17 @@ class Engine:
         raise. Multi-statement text raises (no implicit batching).
 
         One grammar, Spark's: a statement Spark's parser reads — CREATE
-        TABLE (and CTAS), INSERT, UPDATE, DELETE, CREATE INDEX, ALTER TABLE
-        ... ADD COLUMN, ALTER TABLE ... ADD PRIMARY KEY / UNIQUE / CHECK /
-        FOREIGN KEY — is read from its parse (``_parse``), and text that
-        parse refuses raises ValueError with Spark's ParseException
-        chained. The statement cursor (``_Stmt``) reads only the engine's
-        own verbs and dialect forms (COPY, OPTIMIZE, VACUUM, RESTORE, TAG,
-        BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE, MERGE, the other
-        ALTER forms such as ADD NOT NULL, SET ENFORCE and the constraint
-        DROPs, ``t@branch`` refs, ``WITH (ENFORCE)``).
+        TABLE (and CTAS), INSERT, UPDATE, DELETE, MERGE, CREATE INDEX,
+        ALTER TABLE ... ADD COLUMN, ALTER TABLE ... ADD PRIMARY KEY /
+        UNIQUE / CHECK / FOREIGN KEY — is read from its parse (``_parse``),
+        and text that parse refuses raises ValueError with Spark's
+        ParseException chained. The statement cursor (``_Stmt``) reads only
+        the engine's own verbs and dialect forms (COPY, OPTIMIZE, VACUUM,
+        RESTORE, TAG, BRANCH, REFRESH INDEX, EXPLAIN SCAN, SHOW/DESCRIBE,
+        the other ALTER forms such as ADD NOT NULL, SET ENFORCE and the
+        constraint DROPs, ``t@branch`` refs, ``WITH (ENFORCE)``); of MERGE,
+        only its DO NOTHING clauses are cut out by the scanner before the
+        parse.
 
         CHAR(n) and VARCHAR(n) columns — in CREATE TABLE, CTAS and ADD
         COLUMN — are stored as STRING, as DuckDB stores them: no padding,
@@ -1744,8 +1767,7 @@ class Engine:
             kind = plan.indexType().lower()
             if not kind:
                 raise ValueError(f"CREATE INDEX expected USING <kind>: {s[:120]!r}")
-            spec = plan.columns()
-            spec = [spec.apply(i) for i in range(spec.size())]
+            spec = _seq(plan.columns())
             if plan.ignoreIfExists() or any(
                 not o.isEmpty() for o in [plan.properties()] + [c._2() for c in spec]
             ):
@@ -1963,131 +1985,101 @@ class Engine:
             self.copy_to(name, path, fmt=fmt, overwrite=overwrite, **options)
 
     def _stmt_merge(self, s: str) -> None:
-        """MERGE INTO t USING (src query | src_table) ON key[, key...]
-        WHEN MATCHED THEN (UPDATE SET * | UPDATE SET c1[, c2...] |
-        UPDATE SET c1 = s.c1[, ...] | DELETE | DO NOTHING) WHEN NOT
-        MATCHED THEN (INSERT * | DO NOTHING) — the SQL face of
-        Dataset.merge_insert covering the reference's full WhenMatched x
-        WhenNotMatched matrix (reference
-        merge_insert.go:19-134; the column-list SET form is
-        MatchedUpdateColumns, merge_insert.go:97). ON accepts bare key
-        columns or t.k = s.k equality conjuncts on same-named columns.
+        """MERGE INTO t [[AS] a] USING (query) | src [[AS] b] ON k | a.k =
+        b.k [AND ...] WHEN MATCHED THEN (UPDATE SET * | UPDATE SET c = b.c
+        [, ...] | DELETE | DO NOTHING) WHEN NOT MATCHED THEN (INSERT * | DO
+        NOTHING) — the SQL face of Dataset.merge_insert covering the
+        reference's full WhenMatched x WhenNotMatched matrix (reference
+        merge_insert.go:19-134; the assignment SET form is
+        MatchedUpdateColumns, merge_insert.go:97). ON takes bare key
+        columns or equality conjuncts on same-named columns.
 
-        The USING source is extracted with the cursor's quote-aware
-        balanced-paren scan, not a regex: a nested subquery (or a ')'
-        inside a string literal) would make a non-greedy regex split the
-        source at the wrong parenthesis and hand Catalyst a truncated
-        query."""
-        p = _Stmt(s)
-        p.kw("MERGE")
-        p.kw("INTO")
-        tgt = p.ident("target table")
-        p.kw("USING")
-        src_q = src_table = None
-        if p.has_paren():
-            src_q = p.paren_body()
-        else:
-            src_table = p.ident("source table")
-        if p.try_kw("AS"):
-            p.ident("source alias")  # alias accepted, binding is by name
-        elif p.peek_word() not in ("ON", ""):
-            p.ident("source alias")
-        p.kw("ON")
-        tail = p.rest()
-        # WHEN clauses split at top-level WHEN keywords (a WHEN inside a
-        # CASE expression sits under parens or inside the USING subquery,
-        # both invisible at top level)
-        cut = list(_iter_top_level_kw(tail, "WHEN"))
-        on = tail[: cut[0]].strip() if cut else tail.strip()
-        clauses = [
-            tail[a : b].strip()
-            for a, b in zip(cut, cut[1:] + [len(tail)])
-        ]
-        if not on:
-            raise ValueError(f"MERGE missing ON keys: {s[:120]!r}")
-        if not clauses:
-            raise ValueError(f"MERGE needs at least one WHEN clause: {s[:120]!r}")
-        matched_clause = not_matched_clause = None
-        for c in clauses:
-            q = _Stmt(c)
-            q.kw("WHEN")
-            if q.try_kw("NOT", "MATCHED"):
-                q.kw("THEN")
-                if not_matched_clause is not None:
-                    raise ValueError("duplicate WHEN NOT MATCHED clause")
-                not_matched_clause = q.rest()
-            elif q.try_kw("MATCHED"):
-                q.kw("THEN")
-                if matched_clause is not None:
-                    raise ValueError("duplicate WHEN MATCHED clause")
-                matched_clause = q.rest()
-            else:
-                raise q.error("expected MATCHED or NOT MATCHED")
+        The statement is read from Spark's parse, its source run as
+        parsed. DO NOTHING (MatchedDoNothing / NotMatchedSkip,
+        merge_insert.go:37,47) is the reference dialect's spelling, which
+        Spark has no grammar for: those clauses are cut out at the
+        top-level WHEN boundaries first (a WHEN inside parentheses or a
+        quoted literal is not one)."""
+        cut = list(_iter_top_level_kw(s, "WHEN"))
+        text, nothing = s, {"MATCHED": 0, "NOT MATCHED": 0}
+        for a, b in reversed(list(zip(cut, cut[1:] + [len(s)]))):
+            m = re.fullmatch(r"(?is)WHEN\s+(NOT\s+)?MATCHED\s+THEN\s+DO\s+NOTHING\s*", s[a:b])
+            if m:
+                nothing["NOT MATCHED" if m.group(1) else "MATCHED"] += 1
+                text = text[:a] + text[b:]
+        # Spark refuses a MERGE without a WHEN clause: one that does
+        # nothing on both sides is read with a stand-in action, dropped
+        # below, so its target, source and ON are checked all the same
+        stand_in = bool(cut) and len(cut) == sum(nothing.values())
+        if stand_in:
+            text += " WHEN MATCHED THEN DELETE"
         self._register_views()
-        # MERGE USING (subquery) takes the time-travel rewrite as well
-        source = (
-            self.spark.sql(self._prep_query(src_q))
-            if src_q
-            else self.spark.table(src_table)
-        )
+        # the statement is read in the dialect (time travel, "x" names a
+        # column), as a top-level query is
+        plan = self._parse(self._prep_query(text), "MergeIntoTable")
+        matched = [] if stand_in else _seq(plan.matchedActions())
+        not_matched = _seq(plan.notMatchedActions())
+        for side, acts in (("MATCHED", matched), ("NOT MATCHED", not_matched)):
+            if len(acts) + nothing[side] > 1:
+                raise ValueError(f"duplicate WHEN {side} clause")
+        if (
+            plan.withSchemaEvolution()
+            or plan.notMatchedBySourceActions().nonEmpty()
+            or any(a.condition().isDefined() for a in matched + not_matched)
+        ):
+            raise ValueError(
+                "unsupported MERGE form (WITH SCHEMA EVOLUTION, WHEN NOT "
+                f"MATCHED BY SOURCE or a WHEN ... AND condition): {s[:120]!r}"
+            )
+        target = plan.targetTable()
+        if target.nodeName() == "SubqueryAlias":
+            target = target.child()
+        if target.nodeName() != "UnresolvedRelation":
+            raise ValueError(f"unsupported MERGE target: {s[:120]!r}")
+        tgt = _name(target.multipartIdentifier().mkString("\n"), "MERGE target table")
+        source = plan_frame(self.spark, plan.sourceTable())
+
+        def conjuncts(e) -> list:
+            if e.nodeName() == "And":
+                return conjuncts(e.left()) + conjuncts(e.right())
+            return [e]
+
         keys = []
-        # key lists may be AND-separated equality conjuncts or comma-
-        # separated bare column names (the docstring's "ON key[, key...]")
-        for part in re.split(r"(?i)\s+AND\s+|\s*,\s*", on.strip()):
-            part = part.strip()
-            em = re.match(r"(?is)^(?:\w+\.)?(\w+)\s*=\s*(?:\w+\.)?(\w+)$", part)
-            if em and em.group(1) == em.group(2):
-                keys.append(em.group(1))
-            elif re.match(r"^\w+$", part):
-                keys.append(part)
-            else:
+        for e in conjuncts(plan.mergeCondition()):
+            # ON k is the key shorthand; a.k = b.k joins same-named columns
+            key = None
+            if e.nodeName() == "UnresolvedAttribute" and e.nameParts().size() == 1:
+                key = _attr_name(e)
+            elif e.nodeName() == "EqualTo" and _attr_name(e.left()) == _attr_name(e.right()):
+                key = _attr_name(e.left())
+            if key is None:
                 raise ValueError(
-                    f"MERGE ON must be same-named equality conjuncts: {part!r}"
+                    f"MERGE ON must be same-named equality conjuncts: {e.toString()}"
                 )
-        when_matched, update_columns = None, None
-        if matched_clause is not None:
-            q = _Stmt(matched_clause)
-            if q.try_kw("DO", "NOTHING"):
-                q.end()
-                when_matched = None  # MatchedDoNothing (merge_insert.go:37)
-            elif q.try_kw("DELETE"):
-                q.end()
-                when_matched = "delete"
-            elif q.try_kw("UPDATE", "SET"):
-                when_matched = "update"
-                sets = q.rest()
-                if sets != "*":
-                    # UpdateColumns subset (reference merge_insert.go:97):
-                    # `SET c1, c2` or `SET c1 = s.c1, c2 = s.c2` — the
-                    # assignment form must be the same-named source column
-                    # (arbitrary expressions are the UPDATE statement's job)
-                    update_columns = []
-                    for part in _split_top_level_commas(sets):
-                        part = part.strip()
-                        am = re.match(
-                            r"(?is)^(?:\w+\.)?(\w+)(?:\s*=\s*(?:\w+\.)?(\w+))?$", part
+            keys.append(_name(key, "MERGE ON key"))
+        when_matched = update_columns = when_not_matched = None
+        for a in matched:
+            kind = a.nodeName()
+            when_matched = "delete" if kind == "DeleteAction" else "update"
+            if kind == "UpdateAction":
+                # UpdateColumns subset (reference merge_insert.go:97): each
+                # assignment takes the same-named source column (arbitrary
+                # expressions are the UPDATE statement's job)
+                update_columns = []
+                for x in _seq(a.assignments()):
+                    col = _attr_name(x.key())
+                    if col is None or _attr_name(x.value()) != col:
+                        raise ValueError(
+                            "MERGE UPDATE SET takes * or same-named src "
+                            f"assignments (c = s.c); got {x.toString()}"
                         )
-                        if not am or (am.group(2) and am.group(1) != am.group(2)):
-                            raise ValueError(
-                                "MERGE UPDATE SET takes *, column names, or "
-                                f"same-named src assignments; got {part!r}"
-                            )
-                        update_columns.append(am.group(1))
-            else:
-                raise q.error("expected UPDATE SET / DELETE / DO NOTHING")
-        when_not_matched = None
-        if not_matched_clause is not None:
-            q = _Stmt(not_matched_clause)
-            if q.try_kw("INSERT"):
-                if not q.try_punct("*"):
-                    raise q.error("expected INSERT *")
-                q.end()
-                when_not_matched = "insert"
-            elif q.try_kw("DO", "NOTHING"):
-                # NotMatchedSkip (merge_insert.go:47), the explicit form
-                q.end()
-            else:
-                raise q.error("expected INSERT * / DO NOTHING")
+                    update_columns.append(_name(col, "MERGE UPDATE SET column"))
+        for a in not_matched:
+            if a.nodeName() != "InsertStarAction":
+                raise ValueError(
+                    f"MERGE WHEN NOT MATCHED takes INSERT * or DO NOTHING: {s[:120]!r}"
+                )
+            when_not_matched = "insert"
         upd_cols = (
             update_columns
             if update_columns is not None
@@ -2259,8 +2251,7 @@ class Engine:
         p.kw("UPDATE")
         name, text = p.quoted_ref()
         plan = self._parse(text, "UpdateTable")
-        sets = plan.assignments()
-        sets = [sets.apply(i) for i in range(sets.size())]
+        sets = _seq(plan.assignments())
         keys = [
             _name(a.key().nameParts().mkString("\n"), "UPDATE SET column")
             for a in sets
@@ -2691,7 +2682,7 @@ class Engine:
                 self._refuse_referenced_key(tbl, entry, pk, drop_pk=True)
                 entry["primary_key"] = []
             elif p.try_kw("UNIQUE"):
-                cols = [c.strip() for c in p.paren_body().split(",")]
+                cols = p.name_list("UNIQUE columns")
                 uniques = entry.get("unique") or []
                 if not any(set(u) == set(cols) for u in uniques):
                     raise ValueError(f"table {tbl} has no UNIQUE {tuple(cols)}")
@@ -2708,7 +2699,7 @@ class Engine:
                     raise ValueError(f"table {tbl} has no NOT NULL on {col!r}")
                 entry["not_null"] = [c for c in entry["not_null"] if c != col]
             elif p.try_kw("FOREIGN", "KEY"):
-                cols = [c.strip() for c in p.paren_body().split(",")]
+                cols = p.name_list("FOREIGN KEY columns")
                 fks = entry.get("foreign_keys") or []
                 # set comparison, like DROP UNIQUE and every other key
                 # face: the column LIST order is presentation, not identity
@@ -2788,7 +2779,7 @@ class Engine:
         tbl = p.ident("table name")
         zcols = None
         if p.try_kw("ZORDER", "BY"):
-            zcols = [c.strip() for c in p.paren_body().split(",")]
+            zcols = p.name_list("ZORDER BY columns")
         p.end()
         ds = self.dataset(tbl)
         if zcols:

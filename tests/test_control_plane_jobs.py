@@ -213,3 +213,13 @@ def test_unconstrained_writes_run_no_validation_jobs(spark, eng):
         "ON k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
     ))
     assert n <= 7, f"unconstrained MERGE ran {n} jobs (7 before)"
+
+
+def test_merge_that_does_nothing_runs_no_job(spark, eng):
+    eng.sql("CREATE TABLE lk (k BIGINT, v BIGINT)")
+    eng.sql("INSERT INTO lk VALUES (1, 1), (2, 2)")
+    n = _jobs_for(spark, lambda: eng.sql(
+        "MERGE INTO lk USING (SELECT 1 AS k, 9 AS v) s ON k "
+        "WHEN MATCHED THEN DO NOTHING WHEN NOT MATCHED THEN DO NOTHING"
+    ))
+    assert n == 0, f"MERGE that does nothing ran {n} jobs (0 before)"

@@ -590,15 +590,16 @@ def test_time_travel_in_embedded_queries(engine):
 
 
 def test_sql_merge_update_columns(engine):
-    """WHEN MATCHED THEN UPDATE SET c1[, c2] — the MatchedUpdateColumns SQL
-    face (reference merge_insert.go:97): unnamed target columns survive."""
+    """WHEN MATCHED THEN UPDATE SET c1 = s.c1[, ...] — the
+    MatchedUpdateColumns SQL face (reference merge_insert.go:97): unnamed
+    target columns survive."""
     engine.create_table("uc", "k INT, v STRING, created STRING")
     engine.insert_values("uc", [(1, "a", "t0"), (2, "b", "t0")])
     engine.create_table("ucs", "k INT, v STRING, created STRING")
     engine.insert_values("ucs", [(2, "B", "t9"), (3, "c", "t9")])
     engine.sql(
         "MERGE INTO uc USING ucs ON k "
-        "WHEN MATCHED THEN UPDATE SET v WHEN NOT MATCHED THEN INSERT *"
+        "WHEN MATCHED THEN UPDATE SET v = ucs.v WHEN NOT MATCHED THEN INSERT *"
     )
     rows = {r.k: (r.v, r.created) for r in engine.sql("SELECT * FROM uc").collect()}
     # k=2: v updated, created PRESERVED; k=3 inserted whole
@@ -615,6 +616,9 @@ def test_sql_merge_update_columns(engine):
             "MERGE INTO uc USING ucs ON k "
             "WHEN MATCHED THEN UPDATE SET v = s.created"
         )
+    # a bare column list is not Spark grammar
+    with pytest.raises(ValueError):
+        engine.sql("MERGE INTO uc USING ucs ON k WHEN MATCHED THEN UPDATE SET v")
 
 
 def test_create_drop_branch_sql(engine):

@@ -1,6 +1,6 @@
 """Statements read through Spark's parser keep the engine's meaning: name
 lists of any length, the dialect's quoting in INSERT queries and CTAS,
-and VALUES rows as written."""
+VALUES rows as written, and MERGE's keys and actions."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from plan_spark.engine import Engine, IntegrityError
 
@@ -169,3 +170,118 @@ def test_alter_add_refuses_a_constraint_characteristic(engine):
             engine.sql(stmt)
     entry = engine._entry("t", "main")
     assert (entry["unique"], entry["checks"]) == ([], [])
+
+
+# names the statement cursor reads (DROP UNIQUE / FOREIGN KEY, ZORDER BY)
+# may be backquoted, as the names Spark's parse reads may
+def test_add_and_drop_unique_with_backquoted_names(engine):
+    engine.sql("CREATE TABLE c (a BIGINT, b BIGINT, UNIQUE (`a`))")
+    engine.sql("ALTER TABLE c ADD UNIQUE (`a`, `b`)")
+    engine.sql("ALTER TABLE c DROP UNIQUE (`a`)")
+    assert engine._entry("c", "main")["unique"] == [["a", "b"]]
+    engine.sql("ALTER TABLE c DROP UNIQUE (`b`, a)")
+    assert engine._entry("c", "main")["unique"] == []
+
+
+def test_add_and_drop_foreign_key_with_backquoted_names(engine):
+    engine.sql("CREATE TABLE p (k BIGINT PRIMARY KEY)")
+    engine.sql("CREATE TABLE c (id BIGINT, pk BIGINT)")
+    engine.sql("ALTER TABLE c ADD FOREIGN KEY (`pk`) REFERENCES p (`k`)")
+    assert engine._entry("c", "main")["foreign_keys"] == [
+        {"columns": ["pk"], "ref_table": "p", "ref_columns": ["k"]}
+    ]
+    engine.sql("ALTER TABLE c DROP FOREIGN KEY (`pk`)")
+    assert engine._entry("c", "main")["foreign_keys"] == []
+
+
+def test_optimize_zorder_by_backquoted_names(engine):
+    engine.sql("CREATE TABLE c (a BIGINT, b BIGINT)")
+    for i in range(3):
+        engine.sql(f"INSERT INTO c VALUES ({i}, {10 - i})")
+    engine.sql("OPTIMIZE c ZORDER BY (`a`, b)")
+    assert engine.dataset("c").manifest.operation == "rewrite"
+    assert sorted(tuple(r) for r in engine.sql("SELECT a, b FROM c").collect()) == [
+        (0, 10), (1, 9), (2, 8),
+    ]
+
+
+# MERGE is read from Spark's parse; DO NOTHING clauses are cut out first
+def _merge_tables(engine):
+    engine.sql("CREATE TABLE m (k BIGINT, j BIGINT, v STRING, c STRING)")
+    engine.sql("INSERT INTO m VALUES (1, 1, 'a', 'c1'), (1, 2, 'b', 'c2'), (2, 1, 'x', 'c3')")
+
+
+def _rows(engine):
+    return sorted(tuple(r) for r in engine.sql("SELECT k, j, v, c FROM m").collect())
+
+
+def test_merge_reads_backquoted_names_in_on_and_set(engine):
+    _merge_tables(engine)
+    engine.sql(
+        "MERGE INTO m USING (SELECT 2 AS `k`, 1 AS j, 'X' AS v, 'cX' AS c) s "
+        "ON `m`.`k` = s.`k` WHEN MATCHED THEN UPDATE SET `v` = s.`v`"
+    )
+    assert _rows(engine) == [(1, 1, "a", "c1"), (1, 2, "b", "c2"), (2, 1, "X", "c3")]
+
+
+def test_merge_with_a_target_alias(engine):
+    _merge_tables(engine)
+    engine.sql(
+        "MERGE INTO m AS t USING (SELECT 2 AS k) s ON t.k = s.k "
+        "WHEN MATCHED THEN DELETE"
+    )
+    assert _rows(engine) == [(1, 1, "a", "c1"), (1, 2, "b", "c2")]
+
+
+def test_merge_on_two_keys(engine):
+    _merge_tables(engine)
+    engine.sql(
+        "MERGE INTO m t USING (SELECT 1 AS k, 2 AS j, 'B' AS v, 'cB' AS c "
+        "UNION ALL SELECT 3, 1, 'n', 'cn') s ON t.k = s.k AND t.j = s.j "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert _rows(engine) == [
+        (1, 1, "a", "c1"), (1, 2, "B", "cB"), (2, 1, "x", "c3"), (3, 1, "n", "cn"),
+    ]
+
+
+def test_merge_keeps_do_nothing_text_inside_a_source_literal(engine):
+    _merge_tables(engine)
+    text = "WHEN MATCHED THEN DO NOTHING"
+    engine.sql(
+        f"MERGE INTO m USING (SELECT 2 AS k, 1 AS j, '{text}' AS v, 'c' AS c) s "
+        "ON k AND j WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN DO NOTHING"
+    )
+    assert _rows(engine)[-1] == (2, 1, text, "c")
+
+
+def test_merge_that_does_nothing_still_reads_its_source(engine):
+    _merge_tables(engine)
+    with pytest.raises(AnalysisException, match="nosuch"):
+        engine.sql(
+            "MERGE INTO m USING nosuch ON k "
+            "WHEN MATCHED THEN DO NOTHING WHEN NOT MATCHED THEN DO NOTHING"
+        )
+
+
+@pytest.mark.parametrize("stmt", [
+    # an action condition
+    "MERGE INTO m USING s ON k WHEN MATCHED AND s.v > 'a' THEN DELETE",
+    "MERGE INTO m USING s ON k WHEN NOT MATCHED BY SOURCE THEN DELETE",
+    "MERGE INTO m USING s ON k WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)",
+    "MERGE INTO m USING s ON k WHEN MATCHED THEN DELETE "
+    "WHEN MATCHED THEN DO NOTHING",
+    "MERGE INTO m USING s ON k, j WHEN MATCHED THEN DELETE",
+    "MERGE INTO m USING s ON k WHEN MATCHED THEN UPDATE SET v",
+    "MERGE INTO m USING s ON k WHEN MATCHED THEN UPDATE SET v = s.c",
+    "MERGE WITH SCHEMA EVOLUTION INTO m USING s ON k "
+    "WHEN NOT MATCHED THEN INSERT *",
+])
+def test_merge_refuses_forms_outside_its_matrix(engine, stmt):
+    _merge_tables(engine)
+    engine.sql("CREATE TABLE s (k BIGINT, j BIGINT, v STRING, c STRING)")
+    engine.sql("INSERT INTO s VALUES (1, 1, 'z', 'cz'), (5, 5, 'y', 'cy')")
+    version = engine.dataset("m").version
+    with pytest.raises(ValueError):
+        engine.sql(stmt)
+    assert engine.dataset("m").version == version
