@@ -248,6 +248,100 @@ def _collect_stats(
     return md.num_rows, nbytes, stats
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable at any depth:
+    the schema Spark's file reader gives a user-declared read schema."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _conform(col, typ):
+    """``col``, one fragment's Arrow column, as the Arrow type ``typ`` of
+    the read schema, read as Spark's parquet reader reads it: struct fields
+    match by name (a field the file lacks is null, one the schema dropped
+    is left out), a timestamp without a zone is UTC (Spark's INT96), and a
+    narrower stored type widens."""
+    import pyarrow as pa
+
+    if col.type == typ:
+        return col
+    if pa.types.is_struct(typ) and pa.types.is_struct(col.type):
+        col = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+        have = {col.type.field(i).name for i in range(col.type.num_fields)}
+        kids = [
+            _conform(col.field(f.name), f.type) if f.name in have else pa.nulls(len(col), f.type)
+            for f in typ
+        ]
+        return pa.StructArray.from_arrays(
+            kids, fields=list(typ), mask=col.is_null() if col.null_count else None
+        )
+    if pa.types.is_timestamp(typ) and typ.tz and pa.types.is_timestamp(col.type) and not col.type.tz:
+        col = col.cast(pa.timestamp(col.type.unit, "UTC"))
+    return col.cast(typ)
+
+
+def _rowid_hits(pf, row_start: int | None, los, his, gone):
+    """(row group, positions in it, stable row ids) of one fragment file's
+    live rows whose id falls in a run ``[los[k], his[k]]`` (sorted,
+    disjoint numpy arrays); ``gone`` holds the file's sidecar-deleted
+    positions. A stored ``__rowid`` wins over ``row_start + position``, as
+    in _scan_with_lineage's coalesce. A Range file finds its positions by
+    arithmetic over the footer's row-group row counts; an Array file reads
+    ``__rowid`` only from the row groups whose footer min/max admit a run."""
+    import numpy as np
+
+    md = pf.metadata
+    starts = np.cumsum([0] + [md.row_group(g).num_rows for g in range(md.num_row_groups)])
+    stored = next(
+        (j for j in range(md.num_columns) if md.schema.column(j).path == _ROWID_STORED), None
+    )
+    found = []  # (row group, positions in it, ids)
+    if stored is None:
+        if row_start is None:
+            return []  # no row in this file has an id
+        a = np.maximum(los, row_start)
+        b = np.minimum(his, row_start + starts[-1] - 1)
+        a, n = a[a <= b], (b - a + 1)[a <= b]
+        # every id of every clipped run, as file positions
+        pos = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n) + np.repeat(a - row_start, n)
+        groups = np.searchsorted(starts, pos, side="right") - 1
+        for g in np.unique(groups):
+            p = pos[groups == g]
+            found.append((g, p - starts[g], p + row_start))
+    else:
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(stored).statistics
+            if st is not None and st.has_min_max and (st.null_count == 0 or row_start is None):
+                k = np.searchsorted(los, st.max, side="right") - 1
+                if k < 0 or his[k] < st.min:
+                    continue
+            arr = pf.read_row_group(g, columns=[_ROWID_STORED]).column(0).combine_chunks()
+            ids = arr.fill_null(-1).to_numpy()
+            valid = np.asarray(arr.is_valid()) if arr.null_count else None
+            if valid is not None and row_start is not None:
+                ids = np.where(valid, ids, row_start + starts[g] + np.arange(len(ids)))
+                valid = None
+            k = np.searchsorted(los, ids, side="right") - 1
+            hit = (k >= 0) & (ids <= his[k])
+            p = np.flatnonzero(hit if valid is None else hit & valid)
+            found.append((g, p, ids[p]))
+    out = []
+    for g, p, ids in found:
+        if len(gone):
+            keep = ~np.isin(p + starts[g], gone)
+            p, ids = p[keep], ids[keep]
+        if len(p):
+            out.append((int(g), p, ids))
+    return out
+
+
 _NO_BOUNDS = object()
 
 # Catalyst comparison node -> conjunct operator (Dataset._parse_filter_string)
@@ -1504,21 +1598,16 @@ class Dataset:
         EVERY containing interval, matching _stab_interval_overlaps'
         semantics on the driver path (the two must never drift)."""
         ivs, hits = self._rowid_interval_table()
-        intervals = [(fid, lo, hi) for lo, hi, fid in ivs]
-        if intervals:
-            from pyspark.sql.types import (
-                LongType as _L,
-                StructField as _SF,
-                StructType as _ST,
-            )
+        if ivs:
+            import pyarrow as pa
 
+            flo, fhi, fid = zip(*ivs)
             itab = self.spark.createDataFrame(
-                intervals,
-                _ST([
-                    _SF("fid", _L(), False),
-                    _SF("flo", _L(), False),
-                    _SF("fhi", _L(), False),
-                ]),
+                pa.table({
+                    "fid": pa.array(fid, pa.int64()),
+                    "flo": pa.array(flo, pa.int64()),
+                    "fhi": pa.array(fhi, pa.int64()),
+                })
             )
             with driver_sized(self.spark):
                 rows = (
@@ -1761,22 +1850,25 @@ class Dataset:
 
         ``runs`` is the interval form: inclusive ``(lo, hi)`` row-id runs —
         the currency the scalar indexes already speak (bitmap/btree probes
-        return runs, never row lists). Driver-side work stays O(runs) at
-        ANY selectivity: fragments prune by interval overlap and the scan
-        filters with OR-of-BETWEEN (or a broadcast interval join past 256
-        runs), so a million-row probe never materializes a million-element
-        Python list. Exactly one of ``ids``/``runs`` must be given.
+        return runs, never row lists). Exactly one of ``ids``/``runs`` must
+        be given.
 
-        ``columns`` projects the lookup: Catalyst prunes the parquet
-        ReadSchema to exactly the requested columns (+ the row-id
-        machinery), so a 2-column point lookup on a 500-column table never
-        decodes the other 498.
+        Fragment pruning happens first: Range segments prune by interval
+        arithmetic on the manifest alone; Array segments (rewrite outputs)
+        prune via the ``__rowid`` footer min/max already collected into
+        fragment stats — so a point lookup touches O(1) files, not
+        O(fragments).
 
-        Fragment pruning happens BEFORE the scan: Range segments prune by
-        interval arithmetic on the manifest alone; Array segments (rewrite
-        outputs) prune via the ``__rowid`` footer min/max already collected
-        into fragment stats — so a point lookup touches O(1) files, not
-        O(fragments)."""
+        A statement-sized lookup — at most ``_IN_LIST_MAX`` ids, or runs
+        covering at most that many ids — is read on the driver with
+        pyarrow, like Lance ``take`` (_take_arrow): only the row groups
+        holding hits, only the projected columns, and the result is a
+        local relation whose ``collect`` runs no Spark job. A larger
+        lookup scans the pruned fragments in Spark, filtering by
+        OR-of-BETWEEN over the runs, or by a broadcast semi join with the
+        ids (or with more than 256 runs), so driver work stays O(runs) at
+        any selectivity. Either way ``columns`` projects the read: a
+        2-column lookup on a 500-column table never decodes the other 498."""
         m = self.manifest
         if not m.row_ids:
             raise ValueError("dataset was not created with row_ids=True")
@@ -1799,65 +1891,108 @@ class Dataset:
                 else:
                     norm.append([lo, hi])
             intervals = [(lo, hi) for lo, hi in norm]
-            idset: list[int] = []
         else:
-            idset = sorted({int(i) for i in ids})
-            intervals = [(i, i) for i in idset]
+            intervals = [(i, i) for i in sorted({int(i) for i in ids})]
         sel: list[Fragment] = []
         if intervals:  # no intervals, no rows
             ivs, hits = self._rowid_interval_table()
             self._stab_interval_overlaps(ivs, intervals, hits)
             sel = [f for f in m.fragments if f.id in hits]  # manifest order
-        if not sel:
-            by_name = {f.name: f for f in self.schema.fields}
-            fields = (
-                self.schema.fields
-                if columns is None
-                else [by_name[c] for c in columns]  # requested order, like below
-            )
-            return self.spark.createDataFrame(
-                [], StructType(fields + [StructField(_ROWID, LongType(), True)])
-            )
-        df = self._scan_with_lineage(sel, with_row_id=True).drop(
-            _FILE_COL, _POS_COL
-        )
-        for colname, default_expr in m.column_defaults.items():
-            if colname in df.columns and (columns is None or colname in columns):
-                df = df.withColumn(
-                    colname, F.coalesce(F.col(colname), F.expr(default_expr))
-                )
-        if runs is not None:
-            if len(intervals) <= 256:
-                pred = None
-                for lo, hi in intervals:
-                    p = F.col(_ROWID).between(F.lit(lo), F.lit(hi))
-                    pred = p if pred is None else (pred | p)
-                out = df.filter(pred)
-            else:
-                # many runs: broadcast the interval table and range-join —
-                # the predicate tree stays bounded and the runs ship once
-                rdf = self.spark.createDataFrame(
-                    intervals, schema="__run_lo long, __run_hi long"
-                )
-                out = df.join(
-                    F.broadcast(rdf),
-                    (F.col(_ROWID) >= F.col("__run_lo"))
-                    & (F.col(_ROWID) <= F.col("__run_hi")),
-                    "leftsemi",
-                )
-        elif len(idset) > _IN_LIST_MAX:
+        if not sel or sum(hi - lo + 1 for lo, hi in intervals) <= _IN_LIST_MAX:
+            return self._take_arrow(sel, intervals, columns)
+        import pyarrow as pa
+
+        df = self._physical_scan(sel, with_row_id=True).drop(_FILE_COL, _POS_COL)
+        if runs is None:
             # a literal IN list this size bloats the plan (and its
             # serialized form) linearly — ship the ids once as a broadcast
             # relation instead; the semi join stays a single scan
             idf = self.spark.createDataFrame(
-                [(int(i),) for i in idset], schema=f"{_ROWID} long"
+                pa.table({_ROWID: pa.array([lo for lo, _ in intervals], pa.int64())})
             )
-            out = df.join(F.broadcast(idf), on=_ROWID, how="leftsemi")
+            df = df.join(F.broadcast(idf), on=_ROWID, how="leftsemi")
+        elif len(intervals) <= 256:
+            pred = None
+            for lo, hi in intervals:
+                p = F.col(_ROWID).between(F.lit(lo), F.lit(hi))
+                pred = p if pred is None else (pred | p)
+            df = df.filter(pred)
         else:
-            out = df.filter(F.col(_ROWID).isin(idset))
-        if columns is not None:
-            out = out.select(*columns, _ROWID)
-        return out
+            # many runs: broadcast the interval table and range-join —
+            # the predicate tree stays bounded and the runs ship once
+            rdf = self.spark.createDataFrame(
+                pa.table({
+                    "__run_lo": pa.array([lo for lo, _ in intervals], pa.int64()),
+                    "__run_hi": pa.array([hi for _, hi in intervals], pa.int64()),
+                })
+            )
+            df = df.join(
+                F.broadcast(rdf),
+                (F.col(_ROWID) >= F.col("__run_lo"))
+                & (F.col(_ROWID) <= F.col("__run_hi")),
+                "leftsemi",
+            )
+        return self._logical_rows(df, columns)
+
+    def _take_arrow(
+        self,
+        frags: list[Fragment],
+        intervals: list[tuple[int, int]],
+        columns: list[str] | None,
+    ) -> DataFrame:
+        """take_rows read on the driver: each fragment's hits
+        (_rowid_hits, sidecar-deleted positions dropped), the projected
+        columns read from only the row groups holding them and conformed
+        to the physical read schema. ``spark.createDataFrame`` makes the
+        table a local relation, so ``collect`` runs no Spark job."""
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        by_name = {f.name: f for f in self.schema.fields}
+        fields = [by_name[c] for c in columns] if columns is not None else self.schema.fields
+        read = _nullable(
+            self._read_schema(StructType(fields + [StructField(_ROWID, LongType(), True)]))
+        )
+        target = to_arrow_schema(read)
+        los = np.array([lo for lo, _ in intervals], np.int64)
+        his = np.array([hi for _, hi in intervals], np.int64)
+        dead = self._deleted_positions(frags)
+        parts = []
+        for f in frags:
+            rs = f.row_start if f.row_start is not None and f.row_start >= 0 else None
+            gone = np.array(dead.get(os.path.basename(f.path), []), np.int64)
+            with _open_parquet(os.path.join(self.path, f.path))[0] as pf:
+                stored = set(pf.schema_arrow.names)
+                cols = [n for n in target.names[:-1] if n in stored]
+                for g, pos, ids in _rowid_hits(pf, rs, los, his, gone):
+                    t = pf.read_row_group(g, columns=cols).take(pos) if cols else None
+                    parts.append(pa.Table.from_arrays(
+                        [
+                            _conform(t.column(fld.name), fld.type)
+                            if fld.name in cols else pa.nulls(len(pos), fld.type)
+                            for fld in list(target)[:-1]
+                        ] + [pa.array(ids, pa.int64())],
+                        schema=target,
+                    ))
+        table = pa.concat_tables(parts) if parts else target.empty_table()
+        return self._logical_rows(self.spark.createDataFrame(table, read), columns)
+
+    def _logical_rows(self, df: DataFrame, columns: list[str] | None) -> DataFrame:
+        """A take's rows as the caller sees them, from a frame in physical
+        names carrying ``_rowid``: logical names, column defaults over
+        missing values, and ``columns`` (all by default) in the requested
+        order with ``_rowid`` last. Both take paths end here, so they
+        cannot drift; over a local relation Catalyst folds it away."""
+        df = self._to_logical(df)
+        defaults = self.manifest.column_defaults
+        return df.select(
+            *[
+                F.coalesce(F.col(c), F.expr(defaults[c])).alias(c) if c in defaults else F.col(c)
+                for c in (columns if columns is not None else self.schema.fieldNames())
+            ],
+            _ROWID,
+        )
 
     def _scan_with_lineage(
         self, frags: list[Fragment], with_row_id: bool = False
@@ -1871,6 +2006,12 @@ class Dataset:
         fragments read their physical ``__rowid`` column. The two compose
         via coalesce because the read schema fills the missing physical
         column with nulls on Range files."""
+        return self._to_logical(self._physical_scan(frags, with_row_id))
+
+    def _physical_scan(
+        self, frags: list[Fragment], with_row_id: bool = False
+    ) -> DataFrame:
+        """_scan_with_lineage with the stored (physical) column names."""
         schema = self.schema
         if with_row_id:
             schema = StructType(
@@ -1885,7 +2026,7 @@ class Dataset:
             )
             .withColumn(_POS_COL, F.col("_metadata.row_index"))
         )
-        df = self._drop_deleted(self._to_logical(df), frags)
+        df = self._drop_deleted(df, frags)
         if with_row_id:
             # file -> row_start lookup as a broadcast join, not a map
             # literal: O(fragments) can reach 10^5 at scale and a giant
@@ -1917,25 +2058,18 @@ class Dataset:
             ).drop("__ds_rs_file", "__ds_rs_start", _ROWID_STORED)
         return df
 
-    def _drop_deleted(self, df: DataFrame, frags: list[Fragment]) -> DataFrame:
-        """Apply the fragments' deletion vectors to a scan carrying the
-        lineage columns. When the sidecars they reference hold at most
-        ``_IN_LIST_MAX`` rows in all (their footers say), the driver reads
-        them and drops the rows by a literal (file, position) filter — no
-        join, so no extra Spark job on every read; bigger sidecars take a
-        left-anti join."""
-        del_files = sorted({d for f in frags for d in f.deletion_files})
-        if not del_files:
-            return df
-        paths = [os.path.join(self.path, d) for d in del_files]
-        sidecars = [_open_parquet(p)[0] for p in paths]
-        if sum(pf.metadata.num_rows for pf in sidecars) > _IN_LIST_MAX:
-            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(*paths)
-            return df.join(
-                dels,
-                (df[_FILE_COL] == dels["file"]) & (df[_POS_COL] == dels["pos"]),
-                "left_anti",
-            )
+    def _deleted_positions(
+        self, frags: list[Fragment], limit: int | None = None
+    ) -> dict[str, list[int]] | None:
+        """The fragments' sidecar-deleted row positions by file basename,
+        read on the driver; None when the sidecars hold more than
+        ``limit`` rows in all (their footers say)."""
+        sidecars = [
+            _open_parquet(os.path.join(self.path, d))[0]
+            for d in sorted({d for f in frags for d in f.deletion_files})
+        ]
+        if limit is not None and sum(pf.metadata.num_rows for pf in sidecars) > limit:
+            return None
         names = {os.path.basename(f.path) for f in frags}
         by_file: dict[str, list[int]] = {}
         for pf in sidecars:
@@ -1943,6 +2077,27 @@ class Dataset:
             for fn, pos in zip(t.column("file").to_pylist(), t.column("pos").to_pylist()):
                 if fn in names:
                     by_file.setdefault(fn, []).append(pos)
+        return by_file
+
+    def _drop_deleted(self, df: DataFrame, frags: list[Fragment]) -> DataFrame:
+        """Apply the fragments' deletion vectors to a scan carrying the
+        lineage columns. When the sidecars they reference hold at most
+        ``_IN_LIST_MAX`` rows in all, the driver reads them and drops the
+        rows by a literal (file, position) filter — no join, so no extra
+        Spark job on every read; bigger sidecars take a left-anti join."""
+        del_files = sorted({d for f in frags for d in f.deletion_files})
+        if not del_files:
+            return df
+        by_file = self._deleted_positions(frags, limit=_IN_LIST_MAX)
+        if by_file is None:
+            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
+                *[os.path.join(self.path, d) for d in del_files]
+            )
+            return df.join(
+                dels,
+                (df[_FILE_COL] == dels["file"]) & (df[_POS_COL] == dels["pos"]),
+                "left_anti",
+            )
         if not by_file:
             return df
         # one SQL string, not a Column tree: each Column operator is a JVM

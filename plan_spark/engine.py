@@ -20,8 +20,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 
 from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -1710,12 +1712,26 @@ class Engine:
     def _parse(self, text: str, *kinds: str):
         """``parse_plan(text)``, the engine's one call of it: text Spark
         cannot parse, or reads as other than one of the plan nodes
-        ``kinds``, raises ValueError (Spark's ParseException chained)."""
+        ``kinds``, raises ValueError (Spark's ParseException chained).
+        PySpark logs a ParseException that carries a query context (a
+        refusal by Spark's AST builder, such as a MERGE without WHEN) as
+        an ERROR record with the JVM stack trace; the caller gets the
+        ValueError instead, so that logger drops this thread's records for
+        the parse."""
+        log = PySparkLogger.getLogger("SQLQueryContextLogger")
+        me = threading.get_ident()
+
+        def others(record) -> bool:
+            return record.thread != me
+
+        log.addFilter(others)
         try:
             plan = parse_plan(self.spark, text)
         except ParseException as e:
             msg = str(e).strip().splitlines()[0]
             raise ValueError(f"unsupported statement {text[:120]!r}: {msg}") from e
+        finally:
+            log.removeFilter(others)
         if plan.nodeName() not in kinds:
             raise ValueError(f"unsupported statement {text[:120]!r}")
         return plan

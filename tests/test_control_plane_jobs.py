@@ -223,3 +223,29 @@ def test_merge_that_does_nothing_runs_no_job(spark, eng):
         "WHEN MATCHED THEN DO NOTHING WHEN NOT MATCHED THEN DO NOTHING"
     ))
     assert n == 0, f"MERGE that does nothing ran {n} jobs (0 before)"
+
+
+def test_statement_sized_take_rows_runs_no_job(spark, eng):
+    # after UPDATE and MERGE a row id lives in two files (the deleted old
+    # image and the new one), and OPTIMIZE moves ids into a stored __rowid
+    eng.sql("CREATE TABLE tk (k BIGINT, v STRING)")
+    eng.sql("INSERT INTO tk VALUES " + ", ".join(f"({i}, 'v{i}')" for i in range(40)))
+    eng.sql("INSERT INTO tk VALUES " + ", ".join(f"({i}, 'v{i}')" for i in range(40, 60)))
+    eng.sql("UPDATE tk SET v = 'u' WHERE k = 5")
+    eng.sql(
+        "MERGE INTO tk USING (SELECT 6 AS k, 'm' AS v UNION ALL SELECT 99, 'n') s "
+        "ON k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    eng.sql("OPTIMIZE tk")
+    ds = eng.dataset("tk")
+    rid = ds.to_df(with_row_id=True).filter("k = 6").collect()[0]["_rowid"]
+    rows = []
+    n = _jobs_for(spark, lambda: rows.extend(ds.take_rows(ids=[rid]).collect()))
+    assert n == 0, f"one-id take_rows ran {n} jobs (2 before)"
+    assert [(r.k, r.v, r._rowid) for r in rows] == [(6, "m", rid)]
+    lo = min(rid, 50)
+    rows = []
+    n = _jobs_for(spark, lambda: rows.extend(ds.take_rows(runs=[(lo, lo + 9)]).collect()))
+    assert n == 0, f"10-id runs take_rows ran {n} jobs (2 before)"
+    want = ds.to_df(with_row_id=True).filter(f"_rowid BETWEEN {lo} AND {lo + 9}")
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))

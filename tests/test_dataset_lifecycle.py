@@ -174,14 +174,33 @@ def test_drop_index_retracts_declaration(spark, tmp_path_ds, base_df):
 
 
 # ------------------------------------------------------- projected take_rows
-def test_take_rows_projected(spark, tmp_path_ds, base_df):
+def test_take_rows_projected(spark, tmp_path_ds, base_df, monkeypatch):
+    import pyarrow.parquet as pq
+
+    import plan_spark.dataset.dataset as dsmod
+
     ds = Dataset.create(spark, tmp_path_ds, base_df, row_ids=True)
+    read_columns = []
+    read_row_group = pq.ParquetFile.read_row_group
+
+    def recorded(self, i, columns=None, **kw):
+        read_columns.append(columns)
+        return read_row_group(self, i, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", recorded)
     out = ds.take_rows([3, 7], columns=["val"])
     assert sorted(out.columns) == ["_rowid", "val"]
     rows = {r._rowid: r.val for r in out.collect()}
     assert rows == {3: 7.5, 7: 17.5}
-    # the projection reaches the parquet ReadSchema: untouched wide columns
-    # (grp) are absent from the scan schema
+    # a statement-sized take reads on the driver: the projection reaches
+    # the pyarrow read, and Spark plans no scan
+    assert read_columns and all("grp" not in c for c in read_columns)
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    # past the gate, the projection reaches the parquet ReadSchema:
+    # untouched wide columns (grp) are absent from the scan schema
+    monkeypatch.setattr(dsmod, "_IN_LIST_MAX", 1)
+    out = ds.take_rows([3, 7], columns=["val"])
+    assert {r._rowid: r.val for r in out.collect()} == {3: 7.5, 7: 17.5}
     plan = out._jdf.queryExecution().executedPlan().toString()
     import re
 

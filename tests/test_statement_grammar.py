@@ -285,3 +285,20 @@ def test_merge_refuses_forms_outside_its_matrix(engine, stmt):
     with pytest.raises(ValueError):
         engine.sql(stmt)
     assert engine.dataset("m").version == version
+
+
+@pytest.mark.parametrize("stmt", [
+    # refused by Spark's AST builder: PySpark logs these with their context
+    "MERGE INTO m USING s ON k",
+    "MERGE INTO m USING s ON k, j WHEN MATCHED THEN DELETE",
+])
+def test_refused_statement_logs_no_stack_trace(engine, capfd, stmt):
+    # PySpark logs the ParseException behind a refusal as an ERROR record
+    # carrying the JVM stack trace; the caller's ValueError is the answer
+    _merge_tables(engine)
+    engine.sql("CREATE TABLE s (k BIGINT, j BIGINT, v STRING, c STRING)")
+    capfd.readouterr()
+    with pytest.raises(ValueError):
+        engine.sql(stmt)
+    err = capfd.readouterr().err
+    assert "SQLQueryContextLogger" not in err and "JVM stacktrace" not in err, err[:2000]
