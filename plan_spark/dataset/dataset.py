@@ -82,6 +82,7 @@ class StageExpiredError(Exception):
 
 _FILE_COL = "__ds_file"
 _POS_COL = "__ds_pos"
+_SRC_ROW = "__ds_src_row"  # a small MERGE source's row number
 # deletion sidecars are written by _plan_delete with exactly this shape;
 # declaring it on every read skips parquet schema inference (one footer-
 # listing Spark job per scan construction when deletion files exist)
@@ -191,6 +192,15 @@ def _collect_stats(
 ) -> tuple[int, int, dict[str, dict[str, Any]]]:
     """Rows, bytes, per-column min/max/nulls from the parquet footer.
 
+    Stats are keyed by column path, and only a top-level primitive column
+    (its path is its name) gets them: a nested leaf shares its name with
+    whatever top-level column it shadows, and pruning reads top-level
+    columns only. A decimal column gets none: Spark stores precision <= 18
+    as INT32/INT64, whose footer stats pyarrow cannot decode, and wider
+    ones (and every pyarrow-written decimal) as FIXED_LEN_BYTE_ARRAY,
+    whose Decimal min/max the manifest's JSON cannot hold — so a decimal
+    never pruned and still does not, whichever writer wrote it.
+
     ``bitmap_columns`` (declared low-NDV columns) additionally get their
     per-fragment DISTINCT VALUE SET — the engine's bitmap scalar index
     (reference bitmap_index.go:14-56) at file granularity: an equality
@@ -202,14 +212,17 @@ def _collect_stats(
     md = pf.metadata
     stats: dict[str, dict[str, Any]] = {}
     for ci in range(md.num_columns):
-        name = md.schema.column(ci).name
+        col = md.schema.column(ci)
+        if col.path != col.name or col.logical_type.type == "DECIMAL":
+            continue
+        name = col.path
         mn = mx = None
         nulls = 0
         ok = True
         for ri in range(md.num_row_groups):
-            # some physical types (e.g. fixed-len-byte-array decimals) raise
-            # from the statistics accessor — stats are an optimization, so a
-            # column we can't read stats for just never prunes
+            # the statistics accessor may raise for a type pyarrow cannot
+            # decode — stats are an optimization, so a column we can't read
+            # stats for just never prunes
             try:
                 st = md.row_group(ri).column(ci).statistics
                 if st is None or not st.has_min_max:
@@ -246,6 +259,62 @@ def _collect_stats(
         entry = stats.setdefault(c, {"min": None, "max": None, "nulls": 0})
         entry["distinct"] = sorted(vals, key=_stat_key)
     return md.num_rows, nbytes, stats
+
+
+def _driver_rows(df: DataFrame) -> list | None:
+    """``df``'s rows when they already sit on the driver — its optimized
+    plan is a LocalRelation — and are statement-sized (at most
+    ``_IN_LIST_MAX``), else None. ``collect`` reads them without a Spark
+    job; ``toArrow`` would run one. Only a plan over local leaves (a local
+    relation, or VALUES before the optimizer folds it into one) is
+    optimized: optimizing a scan's plan costs tens of milliseconds."""
+    qe = df._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    if any(
+        leaves.apply(i).getClass().getSimpleName() not in ("LocalRelation", "ResolvedInlineTable")
+        for i in range(leaves.size())
+    ):
+        return None
+    plan = qe.optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation" or plan.data().size() > _IN_LIST_MAX:
+        return None
+    return df.collect()
+
+
+def _leaf_types(dt: DataType):
+    """Every non-container type in ``dt``, at any depth."""
+    if isinstance(dt, StructType):
+        for f in dt.fields:
+            yield from _leaf_types(f.dataType)
+    elif isinstance(dt, ArrayType):
+        yield from _leaf_types(dt.elementType)
+    elif isinstance(dt, MapType):
+        yield from _leaf_types(dt.keyType)
+        yield from _leaf_types(dt.valueType)
+    else:
+        yield dt
+
+
+def _spark_parquet_options(spark: SparkSession, schema: StructType) -> dict | None:
+    """``pq.write_table`` options under which pyarrow stores each column
+    of ``schema`` with the Parquet type Spark's writer gives it under
+    ``spark``'s conf, or None where it cannot. Decimals are left out: pyarrow
+    16 writes every one as FIXED_LEN_BYTE_ARRAY, which Spark reads back
+    alike and _collect_stats treats alike. TIMESTAMP follows
+    ``spark.sql.parquet.outputTimestampType``, but pyarrow applies INT96 or
+    millisecond units to every timestamp column, while Spark writes
+    TIMESTAMP_NTZ as INT64 microseconds under any setting."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    kinds = {type(t) for t in _leaf_types(schema)}
+    if TimestampType not in kinds:
+        return {}
+    out = spark.conf.get("spark.sql.parquet.outputTimestampType").upper()
+    if out == "TIMESTAMP_MICROS":
+        return {}
+    if out == "INT96" and TimestampNTZType not in kinds:
+        return {"use_deprecated_int96_timestamps": True}
+    return None
 
 
 def _nullable(dt: DataType) -> DataType:
@@ -292,7 +361,7 @@ def _rowid_hits(pf, row_start: int | None, los, his, gone):
     live rows whose id falls in a run ``[los[k], his[k]]`` (sorted,
     disjoint numpy arrays); ``gone`` holds the file's sidecar-deleted
     positions. A stored ``__rowid`` wins over ``row_start + position``, as
-    in _scan_with_lineage's coalesce. A Range file finds its positions by
+    in _rowid_join's coalesce. A Range file finds its positions by
     arithmetic over the footer's row-group row counts; an Array file reads
     ``__rowid`` only from the row groups whose footer min/max admit a run."""
     import numpy as np
@@ -340,6 +409,28 @@ def _rowid_hits(pf, row_start: int | None, los, his, gone):
         if len(p):
             out.append((int(g), p, ids))
     return out
+
+
+def _arrow_rowids(t, frags: list[Fragment]):
+    """Dataset._rowid_join on the driver: the Arrow table ``t`` of rows of
+    ``frags`` carrying lineage, its stored ``__rowid`` replaced by
+    ``_rowid`` (last), by _rowid_hits' rule — a stored id wins over
+    ``row_start + position``, and a file without a Range segment computes
+    no id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    starts = {
+        os.path.basename(f.path): f.row_start
+        for f in frags
+        if f.row_start is not None and f.row_start >= 0
+    }
+    computed = pc.add(
+        pa.array([starts.get(fn) for fn in t.column(_FILE_COL).to_pylist()], pa.int64()),
+        t.column(_POS_COL).cast(pa.int64()),
+    )
+    ids = pc.coalesce(t.column(_ROWID_STORED), computed)
+    return t.drop_columns([_ROWID_STORED]).append_column(_ROWID, ids)
 
 
 _NO_BOUNDS = object()
@@ -817,12 +908,18 @@ class Dataset:
         bloom_columns: list[str] | None = None,
         bitmap_columns: list[str] | None = None,
     ) -> list[Fragment]:
-        """Write a DataFrame as new fragment files (one per output
-        partition) and collect footer stats. The write is a Spark job; only
-        footer reads happen on the driver."""
-        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
+        """Write a DataFrame as new fragment files and collect footer stats.
+
+        A statement-sized frame already on the driver (_driver_rows: INSERT
+        ... VALUES, the UPDATE and MERGE images built over _few_rows' table,
+        a small MERGE source's inserts) lands as one file, written there by
+        pyarrow with the Parquet types Spark's writer would give it
+        (_spark_parquet_options): no Spark job. It keeps Spark's writer,
+        coalesced to one file, when it carries one of the manifest's bloom
+        columns (pyarrow 16 writes no parquet bloom filter) or a timestamp
+        pyarrow cannot type as Spark does. Any other frame is one Spark
+        write job, one file per output partition."""
         df = self._to_physical(df)  # fragments always store physical names
-        writer = df.write.mode("overwrite")
         # the manifest's declared point-lookup columns get parquet bloom
         # filters in every fragment footer (reference's BloomFilter index,
         # bloomfilter_index.go:16-76): equality predicates on these columns
@@ -833,35 +930,77 @@ class Dataset:
         if bitmap_columns is None:
             bitmap_columns = self._manifest.bitmap_columns if self._manifest else []
         mapping = self._manifest.column_mapping if self._manifest else {}
-        for c in bloom_columns:
-            c = mapping.get(c, c)
-            if c in df.columns:
-                writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+        bloom = [c for c in (mapping.get(c, c) for c in bloom_columns) if c in df.columns]
         bitmap_phys = [mapping.get(c, c) for c in bitmap_columns]
-        writer.parquet(staging)
-        # landing choreography through the data-plane Store seam: list the
-        # staged parts, move each under its immutable uuid name, drop
-        # zero-row parts, sweep the staging dir — POSIX renames locally,
-        # S3 copy+delete on an object-store root
+        rows = _driver_rows(df)
+        opts = None if rows is None or bloom else _spark_parquet_options(self.spark, df.schema)
+        if opts is not None:
+            names = self._put_parquet(rows, df.schema, opts)
+        else:
+            names = self._spark_write(df if rows is None else df.coalesce(1), bloom)
         st = self._data_store
         frags: list[Fragment] = []
         fid = start_id
-        for fn in sorted(st.list(staging)):
-            if not fn.endswith(".parquet"):
-                continue
-            name = f"{uuid.uuid4().hex}.parquet"
-            dst = os.path.join(self.path, "data", name)
-            st.move(os.path.join(staging, fn), dst)
-            rows, nbytes, stats = _collect_stats(dst, bitmap_columns=bitmap_phys)
-            if rows == 0:
+        for name in names:
+            dst = os.path.join(self.path, name)
+            nrows, nbytes, stats = _collect_stats(dst, bitmap_columns=bitmap_phys)
+            if nrows == 0:
                 st.delete(dst)
                 continue
-            frags.append(
-                Fragment(id=fid, path=f"data/{name}", rows=rows, bytes=nbytes, stats=stats)
-            )
+            frags.append(Fragment(id=fid, path=name, rows=nrows, bytes=nbytes, stats=stats))
             fid += 1
-        st.delete_prefix(staging)
         return frags
+
+    def _put_parquet(self, rows: list, schema: StructType, opts: dict) -> list[str]:
+        """Write driver-side ``rows`` of ``schema`` as one file under
+        ``data/`` with pyarrow, as Spark's writer writes them: all fields
+        nullable, Spark's schema and version in the footer (the version
+        tells Spark's reader the dates follow the proleptic Gregorian
+        calendar), and no Arrow schema, so pyarrow reads the file back as it
+        reads Spark's. Returns its dataset-relative path; no rows, no file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+
+        if not rows:
+            return []
+        schema = _nullable(schema)
+        meta = {
+            "org.apache.spark.version": self.spark.version,
+            "org.apache.spark.sql.parquet.row.metadata": schema.json(),
+        }
+        buf = pa.BufferOutputStream()
+        pq.write_table(
+            LocalDataToArrowConversion.convert(rows, schema, False).replace_schema_metadata(meta),
+            buf,
+            store_schema=False,
+            **opts,
+        )
+        name = f"data/{uuid.uuid4().hex}.parquet"
+        self._data_store.put_bytes(os.path.join(self.path, name), buf.getvalue().to_pybytes())
+        return [name]
+
+    def _spark_write(self, df: DataFrame, bloom: list[str]) -> list[str]:
+        """Write ``df`` with Spark's parquet writer, parquet bloom filters
+        on the ``bloom`` columns, and land the parts under ``data/``.
+        Returns the files' dataset-relative paths."""
+        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
+        writer = df.write.mode("overwrite")
+        for c in bloom:
+            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+        writer.parquet(staging)
+        # landing choreography through the data-plane Store seam: list the
+        # staged parts, move each under its immutable uuid name, sweep the
+        # staging dir — POSIX renames locally, S3 copy+delete on an
+        # object-store root
+        st = self._data_store
+        names = []
+        for fn in sorted(st.list(staging)):
+            if fn.endswith(".parquet"):
+                names.append(f"data/{uuid.uuid4().hex}.parquet")
+                st.move(os.path.join(staging, fn), os.path.join(self.path, names[-1]))
+        st.delete_prefix(staging)
+        return names
 
     # ------------------------------------------------------------- commit
     def _commit_new(self, m: Manifest) -> None:
@@ -1995,7 +2134,7 @@ class Dataset:
         )
 
     def _scan_with_lineage(
-        self, frags: list[Fragment], with_row_id: bool = False
+        self, frags: list[Fragment], with_row_id: bool = False, stored_row_id: bool = False
     ) -> DataFrame:
         """Scan given fragments with (file basename, row position) lineage
         columns, deletion vectors applied — the input to mutation planning.
@@ -2003,17 +2142,18 @@ class Dataset:
         ``with_row_id=True`` additionally materializes the stable-row-id
         column ``_rowid`` (reference rowids.go): Range-segment fragments
         compute ``row_start + position`` (zero storage), Array-segment
-        fragments read their physical ``__rowid`` column. The two compose
-        via coalesce because the read schema fills the missing physical
-        column with nulls on Range files."""
-        return self._to_logical(self._physical_scan(frags, with_row_id))
+        fragments read their physical ``__rowid`` column (_rowid_join).
+        ``stored_row_id=True`` reads only the physical column, null on
+        Range files, for the caller to finish: _rowid_join in Spark, or
+        _arrow_rowids once the rows are on the driver."""
+        return self._to_logical(self._physical_scan(frags, with_row_id, stored_row_id))
 
     def _physical_scan(
-        self, frags: list[Fragment], with_row_id: bool = False
+        self, frags: list[Fragment], with_row_id: bool = False, stored_row_id: bool = False
     ) -> DataFrame:
         """_scan_with_lineage with the stored (physical) column names."""
         schema = self.schema
-        if with_row_id:
+        if with_row_id or stored_row_id:
             schema = StructType(
                 schema.fields + [StructField(_ROWID_STORED, LongType(), True)]
             )
@@ -2027,36 +2167,33 @@ class Dataset:
             .withColumn(_POS_COL, F.col("_metadata.row_index"))
         )
         df = self._drop_deleted(df, frags)
-        if with_row_id:
-            # file -> row_start lookup as a broadcast join, not a map
-            # literal: O(fragments) can reach 10^5 at scale and a giant
-            # create_map expression tree would choke Catalyst, while a
-            # broadcast hash join of a kilobyte-sized table is free. Built
-            # from Arrow: a DataFrame of Python rows costs a Python worker
-            # round trip on every scan
-            import pyarrow as pa
+        return self._rowid_join(df, frags) if with_row_id else df
 
-            starts = self.spark.createDataFrame(
-                pa.table({
-                    "__ds_rs_file": pa.array(
-                        [os.path.basename(f.path) for f in frags], pa.string()
-                    ),
-                    "__ds_rs_start": pa.array([f.row_start for f in frags], pa.int64()),
-                })
-            )
-            df = df.join(
-                F.broadcast(starts),
-                df[_FILE_COL] == starts["__ds_rs_file"],
-                "left",
-            )
-            df = df.withColumn(
-                _ROWID,
-                F.coalesce(
-                    F.col(_ROWID_STORED),
-                    (F.col("__ds_rs_start") + F.col(_POS_COL)).cast("long"),
-                ),
-            ).drop("__ds_rs_file", "__ds_rs_start", _ROWID_STORED)
-        return df
+    def _rowid_join(self, df: DataFrame, frags: list[Fragment]) -> DataFrame:
+        """``df``, rows of ``frags`` carrying lineage and the stored
+        ``__rowid``, with ``_rowid = coalesce(__rowid, row_start + pos)``
+        in place of the stored column. The file -> row_start lookup is a
+        broadcast join, not a map literal: O(fragments) can reach 10^5 at
+        scale and a giant create_map expression tree would choke Catalyst,
+        while a broadcast hash join of a kilobyte-sized table is free.
+        Built from Arrow: a DataFrame of Python rows costs a Python worker
+        round trip on every scan."""
+        import pyarrow as pa
+
+        starts = self.spark.createDataFrame(
+            pa.table({
+                "__ds_rs_file": pa.array([os.path.basename(f.path) for f in frags], pa.string()),
+                "__ds_rs_start": pa.array([f.row_start for f in frags], pa.int64()),
+            })
+        )
+        df = df.join(F.broadcast(starts), df[_FILE_COL] == starts["__ds_rs_file"], "left")
+        return df.withColumn(
+            _ROWID,
+            F.coalesce(
+                F.col(_ROWID_STORED),
+                (F.col("__ds_rs_start") + F.col(_POS_COL)).cast("long"),
+            ),
+        ).drop("__ds_rs_file", "__ds_rs_start", _ROWID_STORED)
 
     def _deleted_positions(
         self, frags: list[Fragment], limit: int | None = None
@@ -2131,6 +2268,9 @@ class Dataset:
         if self.manifest.row_ids:
             for f in frags:
                 f.row_start = -1  # Range segment allocated at commit (_apply)
+        # crash window: the new files are on disk, no manifest references
+        # them — the table reads as before and vacuum reclaims them
+        fault_point("append.files_written")
         self._commit(
             _Txn(
                 op="append",
@@ -2326,22 +2466,31 @@ class Dataset:
     ) -> "Dataset":
         """The merge-on-read commit behind UPDATE and MERGE (reference
         storage2 deletion files + append, update.go / merge_insert.go):
-        ``matched`` target rows (lineage columns attached) are deleted
-        through deletion sidecars, their new ``images`` (columns selected
-        over a matched row) are appended keeping each row's stable id in
-        ``__rowid``, and ``inserts(matched)`` adds new rows that take fresh
-        ids at commit. One manifest commit lands it all, so the work is
-        O(rows changed), never O(fragment)."""
+        ``matched`` target rows (lineage columns and, on a row-id table,
+        the stored ``__rowid`` attached) are deleted through deletion
+        sidecars, their new ``images`` (columns selected over a matched
+        row) are appended keeping each row's stable id in ``__rowid``, and
+        ``inserts(matched, few)`` adds new rows that take fresh ids at
+        commit (``few``: the matched rows as an Arrow table when they came
+        to the driver, else None). One manifest commit lands it all, so
+        the work is O(rows changed), never O(fragment)."""
         few = None
         if matched is not None:
             # statement-sized matches move to the driver in one scan; the
-            # sidecar, images and inserts then come from local rows
+            # row ids, sidecar, images and inserts then come from local
+            # rows, and the images and inserts are written by the driver
             few = self._few_rows(matched)
-            matched = (
-                self.spark.createDataFrame(few, schema=matched.schema)
-                if few is not None
-                else matched.persist()
-            )
+            if few is None:
+                if m.row_ids:
+                    matched = self._rowid_join(matched, m.fragments)
+                matched = matched.persist()
+            else:
+                fields = matched.schema.fields
+                if m.row_ids:
+                    few = _arrow_rowids(few, m.fragments)
+                    fields = [f for f in fields if f.name != _ROWID_STORED]
+                    fields.append(StructField(_ROWID, LongType(), True))
+                matched = self.spark.createDataFrame(few, schema=StructType(fields))
         try:
             plan = None
             if matched is not None and delete_matched:
@@ -2360,14 +2509,14 @@ class Dataset:
             if images is not None and plan is not None:
                 # images carry their ids physically (Array segment)
                 rid = [F.col(_ROWID).alias(_ROWID_STORED)] if m.row_ids else []
-                n = sum(deleted_rows.values())
-                added = self._write_fragments(
-                    matched.select(*images, *rid).coalesce(-(-n // _ROWS_PER_FILE)),
-                    start_id=m.max_fragment_id + 1,
-                )
+                img = matched.select(*images, *rid)
+                if few is None:
+                    # a huge statement must not serialize through one task
+                    img = img.coalesce(-(-sum(deleted_rows.values()) // _ROWS_PER_FILE))
+                added = self._write_fragments(img, start_id=m.max_fragment_id + 1)
             if inserts is not None:
                 new = self._write_fragments(
-                    inserts(matched), start_id=m.max_fragment_id + 1 + len(added)
+                    inserts(matched, few), start_id=m.max_fragment_id + 1 + len(added)
                 )
                 for f in new if m.row_ids else []:
                     f.row_start = -1  # fresh Range segment allocated at commit
@@ -2411,7 +2560,7 @@ class Dataset:
         scan_frags, _ = self.plan_scan(predicate, use_indexes=False)
         if not scan_frags:
             return self
-        matched = self._scan_with_lineage(scan_frags, with_row_id=m.row_ids).filter(
+        matched = self._scan_with_lineage(scan_frags, stored_row_id=m.row_ids).filter(
             F.expr(predicate)
         )
         # ONE select: SQL UPDATE evaluates every assignment against the OLD
@@ -2429,16 +2578,24 @@ class Dataset:
     ) -> tuple[list[tuple[str, str, Any]], DataFrame, bool]:
         """(prunable conjuncts every target row matching some ``source``
         row satisfies, the source, whether it is small). A small source —
-        at most ``_IN_LIST_MAX`` rows — is read once into a local relation
-        and prunes by an IN-list of its key values; a larger one prunes by
-        each key's [min, max]. Only keys of the table's own integral,
-        string or date type prune; any other key would be compared after a
-        cast the manifest stats do not model."""
+        at most ``_IN_LIST_MAX`` rows — is read once into a local relation,
+        its rows numbered in ``_SRC_ROW`` so a matched row names the source
+        row it matched, and prunes by an IN-list of its key values; a
+        larger one prunes by each key's [min, max]. Only keys of the
+        table's own integral, string or date type prune; any other key
+        would be compared after a cast the manifest stats do not model."""
         from pyspark.sql.types import DateType, IntegralType
 
         rows = self._few_rows(source)
         if rows is not None:
-            source = self.spark.createDataFrame(rows, schema=source.schema)
+            import pyarrow as pa
+
+            source = self.spark.createDataFrame(
+                rows.append_column(_SRC_ROW, pa.array(range(rows.num_rows), pa.int64())),
+                schema=StructType(
+                    source.schema.fields + [StructField(_SRC_ROW, LongType(), True)]
+                ),
+            )
         tgt = {f.name: f.dataType for f in self.schema.fields}
         src = {f.name: f.dataType for f in source.schema.fields}
         cols = [
@@ -2485,7 +2642,9 @@ class Dataset:
         Merge-on-read: only the fragments the source's key IN-list (or
         key range) cannot prune are joined with the source (broadcast when
         small); matched rows are deleted through sidecars, their images
-        and the unmatched source rows appended, all in one commit."""
+        and the unmatched source rows appended, all in one commit. When a
+        small source's matches come to the driver, the unmatched rows are
+        the source rows no match names, found without a join."""
         if update_columns is not None:
             if when_matched != "update":
                 raise ValueError(
@@ -2522,22 +2681,33 @@ class Dataset:
             ]
         matched = None
         if frags:
-            src = source.select(*keys, *[F.col(c).alias(f"__src_{c}") for c in upd])
+            src = source.select(
+                *keys,
+                *[F.col(c).alias(f"__src_{c}") for c in upd],
+                *([_SRC_ROW] if small else []),
+            )
             # the key conjuncts also filter rows (parquet pushdown), so
             # only candidate rows reach the join
             scan = _apply_filters(
-                self._scan_with_lineage(frags, with_row_id=m.row_ids), filters
+                self._scan_with_lineage(frags, stored_row_id=m.row_ids), filters
             )
             matched = scan.join(F.broadcast(src) if small else src, keys)
 
-        def inserts(matched):
-            new = source.select(*[F.col(f.name).cast(f.dataType) for f in fields])
-            if matched is not None:
+        def inserts(matched, few):
+            new = source
+            named = few is not None and small
+            if named:
+                # a Filter over the local relation, which Catalyst runs on
+                # the driver; a NULL key matched nothing, so its row stays
+                done = few.column(_SRC_ROW).unique().to_pylist()
+                new = new.filter(~F.col(_SRC_ROW).isin(done))
+            new = new.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+            if matched is not None and not named:
                 hit = matched.select(*keys).distinct()
                 new = new.join(
                     F.broadcast(hit) if small else hit, keys, "left_anti"
                 ).select(*names)
-            return new.coalesce(1) if small else new
+            return new
 
         return self._replace_rows(
             "merge", m, matched, images,

@@ -1947,12 +1947,9 @@ class Engine:
         if plan.byName() or not plan.partitionSpec().isEmpty():
             raise ValueError(f"unsupported INSERT form: {s[:120]!r}")
         cols = _names(plan.userSpecifiedCols(), "INSERT columns") or None
-        # the source runs as parsed (VALUES text can be long); VALUES in
-        # one partition, so one fragment: the row count is bounded by the
-        # statement
+        # the source runs as parsed (VALUES text can be long); VALUES is a
+        # local relation, which lands as one fragment written by the driver
         src = plan_frame(self.spark, plan.query())
-        if values:
-            src = src.coalesce(1)
         self.insert_df(name, self._reorder_for_insert(name, src, cols))
 
     def _stmt_copy(self, s: str) -> None:

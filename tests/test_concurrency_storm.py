@@ -140,11 +140,13 @@ def _run_storm(spark, path, commit_handler):
                 ds = Dataset.open(spark, path)
                 if op == "append":
                     k = key_block()
-                    ds.append(
-                        spark.range(k, k + 10).select(
-                            F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
-                        ).coalesce(1)
-                    )
+                    rows = spark.range(k, k + 10).select(
+                        F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
+                    ).coalesce(1)
+                    if tid % 2:
+                        # a local relation: the driver writes its file
+                        rows = spark.createDataFrame(rows.toArrow(), rows.schema)
+                    ds.append(rows)
                     with lock:
                         appended.add(k)
                 elif op == "delete":

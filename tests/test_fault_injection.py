@@ -1000,6 +1000,36 @@ def test_dml_files_written_crash_reads_as_before(spark):
     assert sorted(map(tuple, Dataset.open(spark, path).to_df(with_row_id=True).collect())) == before
 
 
+def test_values_insert_files_written_crash_reads_as_before(spark):
+    """An INSERT ... VALUES, written by the driver, dies after its file
+    lands in data/ but before the manifest commit: the reopened table reads
+    as before the statement, and vacuum reclaims the orphaned file."""
+    from plan_spark.engine import Engine
+
+    d = _scratch("values_files")
+    eng = Engine(spark, d)
+    eng.sql("CREATE TABLE t (k BIGINT, v STRING)")
+    eng.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    ds = eng.dataset("t")
+    data = os.path.join(ds.path, "data")
+    kept, v = set(os.listdir(data)), ds.version
+    before = sorted(map(tuple, ds.to_df(with_row_id=True).collect()))
+    arm_fault("append.files_written")
+    with pytest.raises(InjectedCrash):
+        eng.sql("INSERT INTO t VALUES (3, 'c')")
+    ds = eng.dataset("t")
+    assert ds.version == v
+    _chain_consistent(ds)
+    assert sorted(map(tuple, ds.to_df(with_row_id=True).collect())) == before
+    orphans = set(os.listdir(data)) - kept
+    assert len(orphans) == 1
+    removed = ds.vacuum(keep_versions=1, grace_seconds=0.0)
+    assert {f"data/{o}" for o in orphans} <= set(removed)
+    assert set(os.listdir(data)) == kept
+    eng.sql("INSERT INTO t VALUES (3, 'c')")
+    assert sorted(r.k for r in eng.dataset("t").to_df().collect()) == [1, 2, 3]
+
+
 def test_vacuum_reclaims_stale_staging_dirs(spark):
     """A writer that died mid-_write_fragments leaves its _staging_<uuid>
     dir (never referenced by any manifest). vacuum reclaims it only past
