@@ -317,6 +317,47 @@ def _spark_parquet_options(spark: SparkSession, schema: StructType) -> dict | No
     return None
 
 
+def _has_nan(arr) -> bool:
+    """Whether the Arrow array ``arr`` holds a floating NaN at any depth."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = arr.type
+    if pa.types.is_floating(t):
+        return bool(pc.any(pc.is_nan(arr)).as_py())
+    if pa.types.is_struct(t):
+        return any(_has_nan(arr.field(i)) for i in range(t.num_fields))
+    if pa.types.is_map(t):
+        return _has_nan(arr.keys) or _has_nan(arr.items)
+    if pa.types.is_list(t):
+        return _has_nan(arr.flatten())
+    return False
+
+
+def _nested_leaf_names(schema: StructType) -> set[str]:
+    """The Parquet leaf name Spark's writer gives every leaf below a
+    top-level column of ``schema``: a struct field's own name, a list's
+    ``element``, a map's ``key`` and ``value``."""
+    out: set[str] = set()
+
+    def walk(dt: DataType, name: str) -> None:
+        if isinstance(dt, StructType):
+            for f in dt.fields:
+                walk(f.dataType, f.name)
+        elif isinstance(dt, ArrayType):
+            walk(dt.elementType, "element")
+        elif isinstance(dt, MapType):
+            walk(dt.keyType, "key")
+            walk(dt.valueType, "value")
+        else:
+            out.add(name)
+
+    for f in schema.fields:
+        if isinstance(f.dataType, (StructType, ArrayType, MapType)):
+            walk(f.dataType, f.name)
+    return out
+
+
 def _nullable(dt: DataType) -> DataType:
     """``dt`` with every field, element and value nullable at any depth:
     the schema Spark's file reader gives a user-declared read schema."""
@@ -916,9 +957,10 @@ class Dataset:
         pyarrow with the Parquet types Spark's writer would give it
         (_spark_parquet_options): no Spark job. It keeps Spark's writer,
         coalesced to one file, when it carries one of the manifest's bloom
-        columns (pyarrow 16 writes no parquet bloom filter) or a timestamp
-        pyarrow cannot type as Spark does. Any other frame is one Spark
-        write job, one file per output partition."""
+        columns (pyarrow 16 writes no parquet bloom filter), a timestamp
+        pyarrow cannot type as Spark does, or a floating NaN (_put_parquet).
+        Any other frame is one Spark write job, one file per output
+        partition."""
         df = self._to_physical(df)  # fragments always store physical names
         # the manifest's declared point-lookup columns get parquet bloom
         # filters in every fragment footer (reference's BloomFilter index,
@@ -934,9 +976,8 @@ class Dataset:
         bitmap_phys = [mapping.get(c, c) for c in bitmap_columns]
         rows = _driver_rows(df)
         opts = None if rows is None or bloom else _spark_parquet_options(self.spark, df.schema)
-        if opts is not None:
-            names = self._put_parquet(rows, df.schema, opts)
-        else:
+        names = None if opts is None else self._put_parquet(rows, df.schema, opts)
+        if names is None:
             names = self._spark_write(df if rows is None else df.coalesce(1), bloom)
         st = self._data_store
         frags: list[Fragment] = []
@@ -951,13 +992,19 @@ class Dataset:
             fid += 1
         return frags
 
-    def _put_parquet(self, rows: list, schema: StructType, opts: dict) -> list[str]:
+    def _put_parquet(self, rows: list, schema: StructType, opts: dict) -> list[str] | None:
         """Write driver-side ``rows`` of ``schema`` as one file under
         ``data/`` with pyarrow, as Spark's writer writes them: all fields
         nullable, Spark's schema and version in the footer (the version
         tells Spark's reader the dates follow the proleptic Gregorian
         calendar), and no Arrow schema, so pyarrow reads the file back as it
-        reads Spark's. Returns its dataset-relative path; no rows, no file."""
+        reads Spark's. Returns its dataset-relative path; no rows, no file.
+
+        None, and no file, when a floating value anywhere in ``rows`` is
+        NaN: pyarrow's footer min/max leave NaN out where Spark's writer
+        orders it above every number, so a pyarrow file would prove a NaN
+        row absent from ``e > 5`` to _prunable and to Spark's row-group
+        filter alike."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.conversion import LocalDataToArrowConversion
@@ -969,12 +1016,12 @@ class Dataset:
             "org.apache.spark.version": self.spark.version,
             "org.apache.spark.sql.parquet.row.metadata": schema.json(),
         }
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+        if any(_has_nan(chunk) for col in table.columns for chunk in col.chunks):
+            return None
         buf = pa.BufferOutputStream()
         pq.write_table(
-            LocalDataToArrowConversion.convert(rows, schema, False).replace_schema_metadata(meta),
-            buf,
-            store_schema=False,
-            **opts,
+            table.replace_schema_metadata(meta), buf, store_schema=False, **opts
         )
         name = f"data/{uuid.uuid4().hex}.parquet"
         self._data_store.put_bytes(os.path.join(self.path, name), buf.getvalue().to_pybytes())
@@ -1826,9 +1873,14 @@ class Dataset:
         hits = (
             self._auto_index_hits(filters, trace=trace) if use_indexes else None
         )
+        # a fragment written before _collect_stats keyed stats by path may
+        # hold a nested leaf's min/max under the name of a top-level column,
+        # so a column a nested leaf is named after never prunes by stats
+        shadowed = _nested_leaf_names(self.schema) if filters else set()
+        zone = [c for c in filters or [] if self._phys(c[0]) not in shadowed]
         sel, pruned = [], []
         for f in self.manifest.fragments:
-            if self._prunable(f, filters) or (hits is not None and f.id not in hits):
+            if self._prunable(f, zone) or (hits is not None and f.id not in hits):
                 pruned.append(f)
             else:
                 sel.append(f)
@@ -2459,6 +2511,7 @@ class Dataset:
         self,
         op: str,
         m: Manifest,
+        frags: list[Fragment],
         matched: DataFrame | None,
         images: list | None = None,
         delete_matched: bool = True,
@@ -2466,14 +2519,14 @@ class Dataset:
     ) -> "Dataset":
         """The merge-on-read commit behind UPDATE and MERGE (reference
         storage2 deletion files + append, update.go / merge_insert.go):
-        ``matched`` target rows (lineage columns and, on a row-id table,
-        the stored ``__rowid`` attached) are deleted through deletion
-        sidecars, their new ``images`` (columns selected over a matched
-        row) are appended keeping each row's stable id in ``__rowid``, and
-        ``inserts(matched, few)`` adds new rows that take fresh ids at
-        commit (``few``: the matched rows as an Arrow table when they came
-        to the driver, else None). One manifest commit lands it all, so
-        the work is O(rows changed), never O(fragment)."""
+        ``matched`` rows of the target fragments ``frags`` (lineage columns
+        and, on a row-id table, the stored ``__rowid`` attached) are deleted
+        through deletion sidecars, their new ``images`` (columns selected
+        over a matched row) are appended keeping each row's stable id in
+        ``__rowid``, and ``inserts(matched, few)`` adds new rows that take
+        fresh ids at commit (``few``: the matched rows as an Arrow table
+        when they came to the driver, else None). One manifest commit lands
+        it all, so the work is O(rows changed), never O(fragment)."""
         few = None
         if matched is not None:
             # statement-sized matches move to the driver in one scan; the
@@ -2482,12 +2535,12 @@ class Dataset:
             few = self._few_rows(matched)
             if few is None:
                 if m.row_ids:
-                    matched = self._rowid_join(matched, m.fragments)
+                    matched = self._rowid_join(matched, frags)
                 matched = matched.persist()
             else:
                 fields = matched.schema.fields
                 if m.row_ids:
-                    few = _arrow_rowids(few, m.fragments)
+                    few = _arrow_rowids(few, frags)
                     fields = [f for f in fields if f.name != _ROWID_STORED]
                     fields.append(StructField(_ROWID, LongType(), True))
                 matched = self.spark.createDataFrame(few, schema=StructType(fields))
@@ -2571,7 +2624,7 @@ class Dataset:
             else F.col(f.name)
             for f in fields
         ]
-        return self._replace_rows("update", m, matched, images)
+        return self._replace_rows("update", m, scan_frags, matched, images)
 
     def _source_key_filters(
         self, source: DataFrame, keys: list[str]
@@ -2710,7 +2763,7 @@ class Dataset:
             return new
 
         return self._replace_rows(
-            "merge", m, matched, images,
+            "merge", m, frags, matched, images,
             delete_matched=when_matched is not None,
             inserts=inserts if when_not_matched == "insert" else None,
         )

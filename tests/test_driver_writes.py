@@ -5,7 +5,9 @@ the same Parquet types (decimals aside: pyarrow 16 writes every decimal as
 FIXED_LEN_BYTE_ARRAY), the same manifest stats, the same rows read back
 and the same pruning decisions. Footer stats come from top-level primitive
 columns only, so a nested field never speaks for a top-level column of the
-same name, and no decimal records a min/max the manifest cannot hold."""
+same name, and no decimal records a min/max the manifest cannot hold. A
+frame holding a floating NaN keeps Spark's writer: pyarrow's min/max leave
+NaN out, Spark's order it above every number."""
 
 from __future__ import annotations
 
@@ -204,6 +206,77 @@ def test_nested_field_stats_do_not_shadow_top_level_column(spark, eng, writer):
     eng.sql("UPDATE t SET k = 20 WHERE k = 2")
     got = [(r.k, r.s.k) for r in eng.dataset("t").to_df().collect()]
     assert got == [(20, 200)]
+
+
+def test_legacy_nested_stats_do_not_prune_shadowed_column(spark, eng, monkeypatch):
+    # a fragment written before stats were keyed by path holds s.k's range
+    # under "k"; pruning must not trust it while a nested leaf is named k
+    real = dsmod._collect_stats
+
+    def legacy(path, bitmap_columns=None):
+        rows, nbytes, stats = real(path, bitmap_columns)
+        md = pq.ParquetFile(path).metadata
+        for ci in range(md.num_columns):
+            st = md.row_group(0).column(ci).statistics
+            if st is not None and st.has_min_max:
+                stats[md.schema.column(ci).name] = {
+                    "min": st.min, "max": st.max, "nulls": st.null_count
+                }
+        return rows, nbytes, stats
+
+    eng.sql("CREATE TABLE t (k BIGINT, s STRUCT<k: BIGINT>, m MAP<STRING, BIGINT>)")
+    monkeypatch.setattr(dsmod, "_collect_stats", legacy)
+    eng.sql(
+        "INSERT INTO t VALUES (1, named_struct('k', 100), map('a', 7)), "
+        "(2, named_struct('k', 200), map('b', 8))"
+    )
+    monkeypatch.undo()
+    (f,) = eng.dataset("t").manifest.fragments
+    assert f.stats["k"]["min"] == 100  # the shadowed stats of the old writer
+    assert dsmod._nested_leaf_names(eng.dataset("t").schema) == {"k", "key", "value"}
+    eng.sql("DELETE FROM t WHERE k = 1")
+    eng.sql("UPDATE t SET k = 20 WHERE k = 2")
+    got = [(r.k, r.s.k) for r in eng.dataset("t").to_df().collect()]
+    assert got == [(20, 200)]
+
+
+_NAN = "CAST('NaN' AS DOUBLE)"
+_NAN_CASES = {  # column, its value in the NaN row and in a 1.0 row, predicate
+    "double": ("e DOUBLE", _NAN, "1.0", "e > 5"),
+    "float": ("e FLOAT", "CAST('NaN' AS FLOAT)", "1.0", "e > 5"),
+    "struct": ("e STRUCT<x: DOUBLE>", f"named_struct('x', {_NAN})", "named_struct('x', 1.0)",
+               "e.x > 5"),
+    "array": ("e ARRAY<DOUBLE>", f"array({_NAN})", "array(1.0)", "e[0] > 5"),
+    "map": ("e MAP<STRING, DOUBLE>", f"map('a', {_NAN})", "map('a', 1.0)", "e['a'] > 5"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_NAN_CASES))
+def test_nan_rows_keep_spark_writer_and_match_range_predicates(spark, eng, case):
+    # pyarrow's footer min/max leave NaN out (a [NaN, 1.0] file says max
+    # 1.0); Spark orders NaN above every number, so `e > 5` holds for it
+    ddl, nan, one, pred = _NAN_CASES[case]
+    eng.sql(f"CREATE TABLE t (k BIGINT, {ddl})")
+    n = _jobs_for(spark, lambda: eng.sql(f"INSERT INTO t VALUES (1, {nan}), (2, {one})"))
+    assert n > 0, "a NaN row was written by the driver"
+    (f,) = eng.dataset("t").manifest.fragments
+    created = pq.ParquetFile(os.path.join(eng.dataset("t").path, f.path)).metadata.created_by
+    assert created.startswith("parquet-mr"), created
+    assert [r.k for r in eng.sql(f"SELECT k FROM t WHERE {pred}").collect()] == [1]
+    assert _jobs_for(spark, lambda: eng.sql(f"INSERT INTO t VALUES (3, {one})")) == 0
+    eng.sql(f"DELETE FROM t WHERE {pred}")
+    assert sorted(r.k for r in eng.sql("SELECT k FROM t").collect()) == [2, 3]
+
+
+def test_nan_update_image_is_found_by_range_delete(spark, eng):
+    eng.sql("CREATE TABLE u (k BIGINT, e DOUBLE)")
+    eng.sql("INSERT INTO u VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+    eng.sql(f"UPDATE u SET e = IF(k = 1, {_NAN}, 1.0) WHERE k <= 2")
+    assert [r.k for r in eng.sql("SELECT k FROM u WHERE e > 5").collect()] == [1]
+    eng.sql("DELETE FROM u WHERE e > 5")
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM u").collect()) == [
+        (2, 1.0), (3, 3.0)
+    ]
 
 
 def test_decimal_tables_commit_with_spark_writer_stats(spark, eng):
