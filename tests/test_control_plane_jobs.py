@@ -23,10 +23,12 @@ import pytest
 from plan_spark.engine import Engine, IntegrityError
 
 
-def _n_jobs(spark):
-    return spark._jvm.scala.collection.JavaConverters.seqAsJavaList(
-        spark._jsc.sc().statusStore().jobsList(None)
-    ).size()
+def _n_jobs(spark) -> int:
+    # jobs the session has started: the newest job's id + 1. The status
+    # store lists jobs newest first and drops old ones past
+    # spark.ui.retainedJobs, so its size stops counting in a long session
+    jobs = spark._jsc.sc().statusStore().jobsList(None)
+    return 0 if jobs.isEmpty() else jobs.head().jobId() + 1
 
 
 @pytest.fixture()

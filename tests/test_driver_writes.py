@@ -29,9 +29,11 @@ from plan_spark.engine import Engine
 
 
 def _n_jobs(spark) -> int:
-    return spark._jvm.scala.collection.JavaConverters.seqAsJavaList(
-        spark._jsc.sc().statusStore().jobsList(None)
-    ).size()
+    # jobs the session has started: the newest job's id + 1. The status
+    # store lists jobs newest first and drops old ones past
+    # spark.ui.retainedJobs, so its size stops counting in a long session
+    jobs = spark._jsc.sc().statusStore().jobsList(None)
+    return 0 if jobs.isEmpty() else jobs.head().jobId() + 1
 
 
 def _jobs_for(spark, fn) -> int:
