@@ -31,6 +31,7 @@ import datetime as _dt
 import functools
 import json
 import os
+import re
 import shutil
 import uuid
 from dataclasses import dataclass, field, replace
@@ -152,6 +153,12 @@ _ROWS_PER_FILE = 10_000_000
 # at most this many literal values travel in a plan as an IN list; beyond
 # it ids ship as a broadcast relation and keys prune by [min, max]
 _IN_LIST_MAX = 10_000
+# rows per Parquet row group in every data file, from both writers: the
+# footer's per-group min/max then bound a statement-sized read of a large
+# fragment (Dataset._driver_scan). A steady point read admits one group of
+# a compacted fragment plus the small recent files, so a group holds well
+# under _IN_LIST_MAX rows and the read stays under that gate.
+_ROW_GROUP_ROWS = 4096
 
 # Detached-txn expiry grace: file-reclaiming paths (vacuum unpinning,
 # cleanup_expired) act only this many seconds AFTER expires_at, while
@@ -187,6 +194,43 @@ def _open_parquet(path: str):
     )
 
 
+def _stat_column(col) -> bool:
+    """Whether a footer column gets min/max stats: a top-level primitive
+    column (its path is its name) that is not a decimal."""
+    return col.path == col.name and col.logical_type.type != "DECIMAL"
+
+
+def _chunk_stats(md, ci: int, groups) -> dict[str, Any] | None:
+    """min/max/nulls of footer column ``ci`` over the row groups
+    ``groups``, or None when any of them lacks a readable, non-NaN min/max.
+    A date or timestamp bound is kept as its ISO string."""
+    mn = mx = None
+    nulls = 0
+    for ri in groups:
+        # the statistics accessor may raise for a type pyarrow cannot
+        # decode — stats are an optimization, so a column we can't read
+        # stats for just never prunes
+        try:
+            st = md.row_group(ri).column(ci).statistics
+            if st is None or not st.has_min_max:
+                return None
+            nulls += st.null_count or 0
+            cmn, cmx = st.min, st.max
+        except Exception:
+            return None
+        # Spark's writer can record NaN as a bound, and NaN orders against
+        # nothing: a merged max would lose it
+        if isinstance(cmn, bytes) or cmn != cmn or cmx != cmx:
+            return None
+        mn = cmn if mn is None or _stat_key(cmn) < _stat_key(mn) else mn
+        mx = cmx if mx is None or _stat_key(cmx) > _stat_key(mx) else mx
+    if mn is None:
+        return None
+    if isinstance(mn, (_dt.datetime, _dt.date)):
+        mn, mx = mn.isoformat(), mx.isoformat()
+    return {"min": mn, "max": mx, "nulls": nulls}
+
+
 def _collect_stats(
     local_path: str, bitmap_columns: list[str] | None = None
 ) -> tuple[int, int, dict[str, dict[str, Any]]]:
@@ -199,7 +243,8 @@ def _collect_stats(
     as INT32/INT64, whose footer stats pyarrow cannot decode, and wider
     ones (and every pyarrow-written decimal) as FIXED_LEN_BYTE_ARRAY,
     whose Decimal min/max the manifest's JSON cannot hold — so a decimal
-    never pruned and still does not, whichever writer wrote it.
+    never pruned and still does not, whichever writer wrote it. A column
+    with a NaN bound in any row group gets none either.
 
     ``bitmap_columns`` (declared low-NDV columns) additionally get their
     per-fragment DISTINCT VALUE SET — the engine's bitmap scalar index
@@ -213,35 +258,10 @@ def _collect_stats(
     stats: dict[str, dict[str, Any]] = {}
     for ci in range(md.num_columns):
         col = md.schema.column(ci)
-        if col.path != col.name or col.logical_type.type == "DECIMAL":
-            continue
-        name = col.path
-        mn = mx = None
-        nulls = 0
-        ok = True
-        for ri in range(md.num_row_groups):
-            # the statistics accessor may raise for a type pyarrow cannot
-            # decode — stats are an optimization, so a column we can't read
-            # stats for just never prunes
-            try:
-                st = md.row_group(ri).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                nulls += st.null_count or 0
-                cmn, cmx = st.min, st.max
-            except Exception:
-                ok = False
-                break
-            if isinstance(cmn, bytes):
-                ok = False
-                break
-            mn = cmn if mn is None or _stat_key(cmn) < _stat_key(mn) else mn
-            mx = cmx if mx is None or _stat_key(cmx) > _stat_key(mx) else mx
-        if ok and mn is not None:
-            if isinstance(mn, (_dt.datetime, _dt.date)):
-                mn, mx = mn.isoformat(), mx.isoformat()
-            stats[name] = {"min": mn, "max": mx, "nulls": nulls}
+        if _stat_column(col):
+            st = _chunk_stats(md, ci, range(md.num_row_groups))
+            if st is not None:
+                stats[col.path] = st
     for c in bitmap_columns or []:
         if c not in pf.schema_arrow.names:
             continue
@@ -259,6 +279,78 @@ def _collect_stats(
         entry = stats.setdefault(c, {"min": None, "max": None, "nulls": 0})
         entry["distinct"] = sorted(vals, key=_stat_key)
     return md.num_rows, nbytes, stats
+
+
+def _footer_schema(md) -> StructType | None:
+    """The Spark schema the parquet footer ``md`` records in its key-value
+    metadata, as Spark's writer does; None when it records none."""
+    raw = (md.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def _prunable(stats: dict[str, dict[str, Any]], zone) -> bool:
+    """True if min/max/distinct ``stats`` (keyed by stored column name, a
+    fragment's or one row group's) prove no row satisfies every (stored
+    column, op, literal) conjunct of ``zone`` (zonemap pruning — reference
+    zonemap_index.go:18-63, index_selector.go:36). ``zone`` holds only
+    conjuncts whose literal compares with the column's stats
+    (Dataset._zone); a datetime literal compares with the stored ISO
+    bounds read back as datetimes, and a pair Python cannot order (a
+    zone-aware bound against a naive literal) proves nothing."""
+    for col, op, val in zone:
+        st = stats.get(col)
+        if not st:
+            continue
+        vals = val if op == "in" else [val]
+        if vals and isinstance(vals[0], _dt.datetime):
+            def k(x):
+                return _dt.datetime.fromisoformat(x) if isinstance(x, str) else x
+        else:
+            k = _stat_key
+        try:
+            # bitmap index: the fragment's distinct value set proves absence
+            # even when min/max ranges interleave across fragments
+            if op in ("=", "in") and st.get("distinct") is not None:
+                dset = {k(x) for x in st["distinct"]}
+                if all(k(v) not in dset for v in vals):
+                    return True
+            if st.get("min") is None or st.get("max") is None:
+                continue
+            lo, hi = k(st["min"]), k(st["max"])
+            if lo != lo or hi != hi:
+                continue  # a NaN bound proves nothing
+            if op == "in":
+                if all(k(v) < lo or k(v) > hi for v in vals):
+                    return True
+                continue
+            v = k(val)
+            if op == "=" and (v < lo or v > hi):
+                return True
+            if op in (">", ">=") and (hi < v or (op == ">" and hi == v)):
+                return True
+            if op in ("<", "<=") and (lo > v or (op == "<" and lo == v)):
+                return True
+        except TypeError:
+            continue
+    return False
+
+
+def _admitted_groups(md, zone) -> list[int]:
+    """Row groups of the file with footer ``md`` whose own footer stats,
+    read as _collect_stats reads them, do not exclude ``zone``: the
+    reference's per-block ZoneMap on Parquet row groups."""
+    cols = {c for c, _, _ in zone}
+    idx = {
+        md.schema.column(ci).path: ci
+        for ci in range(md.num_columns)
+        if md.schema.column(ci).path in cols and _stat_column(md.schema.column(ci))
+    }
+    out = []
+    for g in range(md.num_row_groups):
+        st = {c: _chunk_stats(md, ci, [g]) for c, ci in idx.items()}
+        if not _prunable({c: s for c, s in st.items() if s is not None}, zone):
+            out.append(g)
+    return out
 
 
 def _driver_rows(df: DataFrame) -> list | None:
@@ -356,6 +448,21 @@ def _nested_leaf_names(schema: StructType) -> set[str]:
         if isinstance(f.dataType, (StructType, ArrayType, MapType)):
             walk(f.dataType, f.name)
     return out
+
+
+def _readable(have: DataType, want: DataType) -> bool:
+    """Whether Spark's parquet reader reads a column stored as ``have``
+    under the read-schema type ``want`` as stored: equal types, nullability
+    aside, with struct fields matched by name (a field only one side has is
+    left out or read as null)."""
+    if isinstance(have, StructType) and isinstance(want, StructType):
+        by_name = {f.name: f.dataType for f in want.fields}
+        return all(_readable(f.dataType, by_name[f.name]) for f in have.fields if f.name in by_name)
+    if isinstance(have, ArrayType) and isinstance(want, ArrayType):
+        return _readable(have.elementType, want.elementType)
+    if isinstance(have, MapType) and isinstance(want, MapType):
+        return _readable(have.keyType, want.keyType) and _readable(have.valueType, want.valueType)
+    return have.simpleString() == want.simpleString()
 
 
 def _nullable(dt: DataType) -> DataType:
@@ -475,6 +582,10 @@ def _arrow_rowids(t, frags: list[Fragment]):
 
 
 _NO_BOUNDS = object()
+
+# a timestamp literal's text that Spark's cast and Python's fromisoformat
+# read alike: a date, then optionally a zone-less time
+_TS_TEXT = r"\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d{1,6})?)?)?"
 
 # Catalyst comparison node -> conjunct operator (Dataset._parse_filter_string)
 _CMP_OPS = {
@@ -948,9 +1059,17 @@ class Dataset:
         start_id: int,
         bloom_columns: list[str] | None = None,
         bitmap_columns: list[str] | None = None,
+        conform: bool = True,
     ) -> list[Fragment]:
         """Write a DataFrame as new fragment files and collect footer stats.
 
+        With ``conform`` (every write but create and overwrite, which set
+        the schema) each column of the table is first cast to the table's
+        type where it differs in a way the parquet reader cannot read, by
+        Spark's ANSI store assignment — what SQL INSERT's cast does — and
+        a column that assignment refuses raises ValueError (_conformed).
+
+        Every file holds row groups of at most ``_ROW_GROUP_ROWS`` rows.
         A statement-sized frame already on the driver (_driver_rows: INSERT
         ... VALUES, the UPDATE and MERGE images built over _few_rows' table,
         a small MERGE source's inserts) lands as one file, written there by
@@ -961,6 +1080,8 @@ class Dataset:
         pyarrow cannot type as Spark does, or a floating NaN (_put_parquet).
         Any other frame is one Spark write job, one file per output
         partition."""
+        if conform and self._manifest is not None:
+            df = self._conformed(df)
         df = self._to_physical(df)  # fragments always store physical names
         # the manifest's declared point-lookup columns get parquet bloom
         # filters in every fragment footer (reference's BloomFilter index,
@@ -992,6 +1113,35 @@ class Dataset:
             fid += 1
         return frags
 
+    def _conformed(self, df: DataFrame) -> DataFrame:
+        """``df`` with each column the table has cast to the table's type
+        where the parquet reader could not read it as written (_readable),
+        by Spark's ANSI store assignment; a column that assignment refuses
+        (a string into a number, say) raises ValueError."""
+        jvm = self.spark._jvm
+        jtype = jvm.org.apache.spark.sql.types.DataType.fromJson
+        assignable = jvm.org.apache.spark.sql.catalyst.expressions.Cast.canANSIStoreAssign
+        want = {f.name: f.dataType for f in self.schema.fields}
+        cast = {
+            f.name: want[f.name]
+            for f in df.schema.fields
+            if f.name in want and not _readable(f.dataType, want[f.name])
+        }
+        refused = [
+            f"{f.name} {f.dataType.simpleString()} -> {want[f.name].simpleString()}"
+            for f in df.schema.fields
+            if f.name in cast and not assignable(jtype(f.dataType.json()), jtype(cast[f.name].json()))
+        ]
+        if refused:
+            raise ValueError(f"cannot store {', '.join(refused)} in {self.path}")
+        if not cast:
+            return df
+
+        def col(c: str):
+            return F.col("`" + c.replace("`", "``") + "`")
+
+        return df.select(*[col(c).cast(cast[c]).alias(c) if c in cast else col(c) for c in df.columns])
+
     def _put_parquet(self, rows: list, schema: StructType, opts: dict) -> list[str] | None:
         """Write driver-side ``rows`` of ``schema`` as one file under
         ``data/`` with pyarrow, as Spark's writer writes them: all fields
@@ -1021,20 +1171,31 @@ class Dataset:
             return None
         buf = pa.BufferOutputStream()
         pq.write_table(
-            table.replace_schema_metadata(meta), buf, store_schema=False, **opts
+            table.replace_schema_metadata(meta),
+            buf,
+            store_schema=False,
+            row_group_size=_ROW_GROUP_ROWS,
+            **opts,
         )
         name = f"data/{uuid.uuid4().hex}.parquet"
         self._data_store.put_bytes(os.path.join(self.path, name), buf.getvalue().to_pybytes())
         return [name]
 
     def _spark_write(self, df: DataFrame, bloom: list[str]) -> list[str]:
-        """Write ``df`` with Spark's parquet writer, parquet bloom filters
-        on the ``bloom`` columns, and land the parts under ``data/``.
-        Returns the files' dataset-relative paths."""
+        """Write ``df`` with Spark's parquet writer, row groups of at most
+        ``_ROW_GROUP_ROWS`` rows and parquet bloom filters on the ``bloom``
+        columns, and land the parts under ``data/``. A bloom filter is per
+        row group and sized for one group's rows: unsized, parquet-mr gives
+        each one its 1 MiB maximum. Returns the files' dataset-relative
+        paths."""
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite").option(
+            "parquet.block.row.count.limit", _ROW_GROUP_ROWS
+        )
         for c in bloom:
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
+                f"parquet.bloom.filter.expected.ndv#{c}", _ROW_GROUP_ROWS
+            )
         writer.parquet(staging)
         # landing choreography through the data-plane Store seam: list the
         # staged parts, move each under its immutable uuid name, sweep the
@@ -1055,10 +1216,33 @@ class Dataset:
         # commit.go:20): O_EXCL locally, conditional-put on an object store
         self._handler.commit(self._manifest_path(m.version), m.to_json())
 
+    def _check_footers(self, txn: _Txn, read_m: Manifest) -> None:
+        """Refuse ``txn`` when a file it adds stores a table column as a
+        type the parquet reader cannot read under the schema it commits
+        into (_readable): that commit would make every later read of the
+        table fail. Only the new files' footers are read. A file that
+        records no Spark schema (the driver writer's: pyarrow 16 writes no
+        key-value metadata without the Arrow schema) is not checked; its
+        types are the conformed frame's."""
+        schema = StructType.fromJson(json.loads(txn.schema_json or read_m.schema_json))
+        mapping = read_m.column_mapping if txn.column_mapping is None else txn.column_mapping
+        want = {mapping.get(f.name, f.name): f.dataType for f in schema.fields}
+        for f in txn.added:
+            with _open_parquet(os.path.join(self.path, f.path))[0] as pf:
+                have = _footer_schema(pf.metadata)
+            for c in have.fields if have is not None else []:
+                if c.name in want and not _readable(c.dataType, want[c.name]):
+                    raise ValueError(
+                        f"{f.path} stores {c.name} as {c.dataType.simpleString()}, "
+                        f"which the table reads as {want[c.name].simpleString()}; "
+                        f"{txn.op} not committed"
+                    )
+
     def _commit(self, txn: _Txn) -> None:
         """Optimistic commit: atomically create manifest v+1; on collision,
         rebase the diff onto the winner when the ops are compatible
-        (reference: commit_txn.go:11 + conflict.go:33-364 Rebase)."""
+        (reference: commit_txn.go:11 + conflict.go:33-364 Rebase). A file
+        the table could not read refuses the commit first (_check_footers)."""
         base = self._load(self._latest_version())
         try:
             read_m = self._load(txn.read_version)
@@ -1073,6 +1257,7 @@ class Dataset:
                     f"verify {txn.op} against it"
                 ) from None
             read_m = base
+        self._check_footers(txn, read_m)
         while True:
             new_m = self._apply(txn, base, read_m)
             try:
@@ -1359,7 +1544,13 @@ class Dataset:
         literals that compare exactly (``_literal``). The full predicate
         always applies as a residual, so pruning may read too much, never
         too little. Text Spark cannot parse raises its ParseException."""
-        nodes = parse_expression(spark, pred)
+        return Dataset._conjuncts(parse_expression(spark, pred))
+
+    @staticmethod
+    def _conjuncts(nodes: list[dict]) -> list[tuple[str, str, Any]]:
+        """_parse_filter_string's reading of a parsed predicate: ``nodes``
+        is its tree as ``parse_expression`` (or a parsed plan node's
+        ``toJSON()``) gives it."""
         # kids[i]: node i's children; a reverse pass over the pre-order
         # list has finished every child subtree when it reaches the parent
         kids: list[list[int]] = [[] for _ in nodes]
@@ -1390,38 +1581,67 @@ class Dataset:
                 out += [(col, ">=", vals[0]), (col, "<=", vals[1])]
         return out
 
-    def _prunable(self, f: Fragment, filters) -> bool:
-        """True if fragment stats prove no row can match (zonemap pruning —
-        reference zonemap_index.go:18-63, index_selector.go:36). ``filters``
-        are (col, op, literal) conjuncts every matching row satisfies: a
-        caller's tuples or _parse_filter_string's reading of a predicate."""
-        for col, op, val in filters or []:
-            # stats are keyed by the stored (physical) column name
-            st = f.stats.get(self._phys(col))
-            if not st:
+    def _zone(self, filters) -> list[tuple[str, str, Any]]:
+        """The conjuncts of ``filters`` that footer stats may prune by, on
+        stored column names. A column a nested leaf is named after never
+        prunes: a fragment written before _collect_stats keyed stats by
+        path may hold the leaf's min/max under its name. A literal prunes
+        only a column whose stats it orders with as Spark compares them: a
+        number an integral or floating column, a string a string column, a
+        date or 'YYYY-MM-DD' string a date column, and a datetime or a
+        zone-less ISO date-time string a timestamp column, as a datetime
+        in the session time zone (TIMESTAMP) or none (TIMESTAMP_NTZ): the
+        ISO text of a timestamp's bound orders unlike its SQL text. Any
+        other pair (a string compared with a number, say) would compare
+        after a cast the stats do not model."""
+        from zoneinfo import ZoneInfo
+
+        from pyspark.sql.types import (
+            DateType,
+            DoubleType,
+            FloatType,
+            IntegralType,
+            TimestampNTZType,
+            TimestampType,
+        )
+
+        def key(t: DataType, v):
+            if isinstance(v, bool):
+                return None
+            if isinstance(t, (IntegralType, FloatType, DoubleType)):
+                return v if isinstance(v, (int, float)) else None
+            if isinstance(t, StringType):
+                return v if isinstance(v, str) else None
+            if isinstance(t, DateType):
+                if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+                    return v
+                return v if isinstance(v, str) and re.fullmatch(r"\d{4}-\d{2}-\d{2}", v) else None
+            if isinstance(t, (TimestampType, TimestampNTZType)):
+                if isinstance(v, str) and re.fullmatch(_TS_TEXT, v):
+                    v = _dt.datetime.fromisoformat(v)
+                    if isinstance(t, TimestampType):
+                        try:
+                            v = v.replace(tzinfo=ZoneInfo(self.spark.conf.get(
+                                "spark.sql.session.timeZone"
+                            )))
+                        except (ValueError, KeyError):  # a zone Python does not know
+                            return None
+                ok = isinstance(v, _dt.datetime) and (v.tzinfo is None) == isinstance(t, TimestampNTZType)
+                return v if ok else None
+            return None
+
+        if not filters:
+            return []
+        types = {f.name: f.dataType for f in self.schema.fields}
+        shadowed = _nested_leaf_names(self.schema)
+        out = []
+        for c, op, v in filters:
+            if c not in types or self._phys(c) in shadowed:
                 continue
-            # bitmap index: the fragment's distinct value set proves absence
-            # even when min/max ranges interleave across fragments
-            if op in ("=", "in") and st.get("distinct") is not None:
-                vals = val if op == "in" else [val]
-                dset = {_stat_key(x) for x in st["distinct"]}
-                if all(_stat_key(v) not in dset for v in vals):
-                    return True
-            if st.get("min") is None or st.get("max") is None:
-                continue
-            if op == "in":
-                lo, hi = _stat_key(st["min"]), _stat_key(st["max"])
-                if all(_stat_key(v) < lo or _stat_key(v) > hi for v in val):
-                    return True
-                continue
-            lo, hi, v = _stat_key(st["min"]), _stat_key(st["max"]), _stat_key(val)
-            if op == "=" and (v < lo or v > hi):
-                return True
-            if op in (">", ">=") and (hi < v or (op == ">" and hi == v)):
-                return True
-            if op in ("<", "<=") and (lo > v or (op == "<" and lo == v)):
-                return True
-        return False
+            keys = [key(types[c], x) for x in (v if op == "in" else [v])]
+            if None not in keys:
+                out.append((self._phys(c), op, keys if op == "in" else keys[0]))
+        return out
 
     # Reference index_selector.go:62 MaxIndexScanRatio: route through an
     # index only when its fence-estimated match fraction is at most this —
@@ -1873,14 +2093,10 @@ class Dataset:
         hits = (
             self._auto_index_hits(filters, trace=trace) if use_indexes else None
         )
-        # a fragment written before _collect_stats keyed stats by path may
-        # hold a nested leaf's min/max under the name of a top-level column,
-        # so a column a nested leaf is named after never prunes by stats
-        shadowed = _nested_leaf_names(self.schema) if filters else set()
-        zone = [c for c in filters or [] if self._phys(c[0]) not in shadowed]
+        zone = self._zone(filters)
         sel, pruned = [], []
         for f in self.manifest.fragments:
-            if self._prunable(f, zone) or (hits is not None and f.id not in hits):
+            if _prunable(f.stats, zone) or (hits is not None and f.id not in hits):
                 pruned.append(f)
             else:
                 sel.append(f)
@@ -1962,7 +2178,13 @@ class Dataset:
         ``columns=`` / ``limit=`` complete the reference scanner's builder
         faces (sdk/scanner.go WithColumns/WithLimit): the projection reaches
         the parquet ReadSchema via Catalyst pruning, and the limit becomes
-        a CollectLimit over the pruned scan."""
+        a CollectLimit over the pruned scan.
+
+        The result is always a lazy Spark scan, whatever its size: the
+        engine registers it as each table's view. The statement-sized read
+        that SQL point reads and the DML matched scans take instead — the
+        admitted row groups read with pyarrow into a local relation, no
+        Spark job — is statement_scan (_driver_scan)."""
         pred_str = filters if isinstance(filters, str) else None
         m = self.manifest
         schema = self.schema
@@ -2052,14 +2274,15 @@ class Dataset:
 
         A statement-sized lookup — at most ``_IN_LIST_MAX`` ids, or runs
         covering at most that many ids — is read on the driver with
-        pyarrow, like Lance ``take`` (_take_arrow): only the row groups
+        pyarrow, like Lance ``take`` (_driver_scan): only the row groups
         holding hits, only the projected columns, and the result is a
         local relation whose ``collect`` runs no Spark job. A larger
         lookup scans the pruned fragments in Spark, filtering by
         OR-of-BETWEEN over the runs, or by a broadcast semi join with the
-        ids (or with more than 256 runs), so driver work stays O(runs) at
-        any selectivity. Either way ``columns`` projects the read: a
-        2-column lookup on a 500-column table never decodes the other 498."""
+        ids, or (over 256 runs) with the runs bucketed by id range, so
+        driver work stays O(runs) at any selectivity. Either way
+        ``columns`` projects the read: a 2-column lookup on a 500-column
+        table never decodes the other 498."""
         m = self.manifest
         if not m.row_ids:
             raise ValueError("dataset was not created with row_ids=True")
@@ -2090,7 +2313,9 @@ class Dataset:
             self._stab_interval_overlaps(ivs, intervals, hits)
             sel = [f for f in m.fragments if f.id in hits]  # manifest order
         if not sel or sum(hi - lo + 1 for lo, hi in intervals) <= _IN_LIST_MAX:
-            return self._take_arrow(sel, intervals, columns)
+            df = self._driver_scan(sel, intervals=intervals, columns=columns)
+            if df is not None:
+                return self._logical_rows(df, columns)
         import pyarrow as pa
 
         df = self._physical_scan(sel, with_row_id=True).drop(_FILE_COL, _POS_COL)
@@ -2109,72 +2334,181 @@ class Dataset:
                 pred = p if pred is None else (pred | p)
             df = df.filter(pred)
         else:
-            # many runs: broadcast the interval table and range-join —
-            # the predicate tree stays bounded and the runs ship once
+            # many runs: broadcast the interval table, each run listed under
+            # every id bucket of ``width`` ids it touches, and join on the
+            # bucket plus the range — a hash join whose probe meets only
+            # the runs of a row's own bucket, where a bare range condition
+            # is a nested loop over every run. The width is the mean run
+            # span, so the table holds at most three rows per run on average
+            width = -(-sum(hi - lo + 1 for lo, hi in intervals) // len(intervals))
+            runs = [(b, lo, hi) for lo, hi in intervals for b in range(lo // width, hi // width + 1)]
             rdf = self.spark.createDataFrame(
                 pa.table({
-                    "__run_lo": pa.array([lo for lo, _ in intervals], pa.int64()),
-                    "__run_hi": pa.array([hi for _, hi in intervals], pa.int64()),
+                    "__run_b": pa.array([b for b, _, _ in runs], pa.int64()),
+                    "__run_lo": pa.array([lo for _, lo, _ in runs], pa.int64()),
+                    "__run_hi": pa.array([hi for _, _, hi in runs], pa.int64()),
                 })
             )
             df = df.join(
                 F.broadcast(rdf),
-                (F.col(_ROWID) >= F.col("__run_lo"))
+                (F.expr(f"{_ROWID} div {width}") == F.col("__run_b"))
+                & (F.col(_ROWID) >= F.col("__run_lo"))
                 & (F.col(_ROWID) <= F.col("__run_hi")),
                 "leftsemi",
             )
         return self._logical_rows(df, columns)
 
-    def _take_arrow(
+    def _row_group_plan(self, frags: list[Fragment], zone):
+        """(fragment, open ParquetFile, row groups _admitted_groups admits
+        for ``zone``) for each of ``frags``, the row groups they hold in
+        all, and the rows the admitted ones hold — footers only."""
+        plan, groups, rows = [], 0, 0
+        for f in frags:
+            pf = _open_parquet(os.path.join(self.path, f.path))[0]
+            md = pf.metadata
+            keep = _admitted_groups(md, zone)
+            plan.append((f, pf, keep))
+            groups += md.num_row_groups
+            rows += sum(md.row_group(g).num_rows for g in keep)
+        return plan, groups, rows
+
+    def _driver_scan(self, *args, **kwargs) -> DataFrame | None:
+        """_driver_table's rows as a local relation, or None."""
+        got = self._driver_table(*args, **kwargs)
+        return None if got is None else self.spark.createDataFrame(*got)
+
+    def _driver_table(
         self,
         frags: list[Fragment],
-        intervals: list[tuple[int, int]],
-        columns: list[str] | None,
-    ) -> DataFrame:
-        """take_rows read on the driver: each fragment's hits
-        (_rowid_hits, sidecar-deleted positions dropped), the projected
-        columns read from only the row groups holding them and conformed
-        to the physical read schema. ``spark.createDataFrame`` makes the
-        table a local relation, so ``collect`` runs no Spark job."""
+        zone=(),
+        intervals: list[tuple[int, int]] | None = None,
+        columns: list[str] | None = None,
+    ):
+        """The one driver-side read of a statement-sized scan: the live rows
+        of ``frags`` read with pyarrow, as (Arrow table, its Spark schema)
+        in stored column names, with their lineage (``__ds_file``,
+        ``__ds_pos``) and ``_rowid`` last (_arrow_rowids' rule; null without
+        a row id). ``spark.createDataFrame`` makes it a LocalRelation
+        (_driver_scan), so Catalyst runs a Filter or Project over it on the
+        driver and ``collect`` runs no Spark job; the statement's own
+        predicate is still Spark's.
+
+        The rows are those of the row groups whose footer stats admit the
+        stored-name conjuncts ``zone`` (_row_group_plan) — None, with only
+        footers read, when those groups hold more than ``_IN_LIST_MAX``
+        rows or the fragments' sidecars delete more than that many — or,
+        given ``intervals`` (take_rows, which gates by id count), those
+        whose row id falls in a run (_rowid_hits). Sidecar-deleted positions
+        are dropped, ``columns`` projects the read, and each column is
+        conformed to the read schema as Spark's reader reads it (_conform);
+        None as well when a column has no Arrow form or will not conform."""
         import numpy as np
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         by_name = {f.name: f for f in self.schema.fields}
         fields = [by_name[c] for c in columns] if columns is not None else self.schema.fields
-        read = _nullable(
-            self._read_schema(StructType(fields + [StructField(_ROWID, LongType(), True)]))
-        )
-        target = to_arrow_schema(read)
-        los = np.array([lo for lo, _ in intervals], np.int64)
-        his = np.array([hi for _, hi in intervals], np.int64)
-        dead = self._deleted_positions(frags)
+        lineage = [
+            StructField(_FILE_COL, StringType(), True),
+            StructField(_POS_COL, LongType(), True),
+            StructField(_ROWID, LongType(), True),
+        ]
+        read = _nullable(self._read_schema(StructType(fields + lineage)))
+        try:
+            target = to_arrow_schema(read)
+        except Exception:  # a type with no Arrow form here
+            return None
+        if intervals is None:
+            plan, _, rows = self._row_group_plan(frags, zone)
+            dead = None if rows > _IN_LIST_MAX else self._deleted_positions(frags, _IN_LIST_MAX)
+            if dead is None:
+                return None
+        else:
+            plan = [(f, _open_parquet(os.path.join(self.path, f.path))[0], None) for f in frags]
+            dead = self._deleted_positions(frags)
+            los = np.array([lo for lo, _ in intervals], np.int64)
+            his = np.array([hi for _, hi in intervals], np.int64)
+        data = list(target)[: -len(lineage)]
         parts = []
-        for f in frags:
-            rs = f.row_start if f.row_start is not None and f.row_start >= 0 else None
+        for f, pf, groups in plan:
+            md = pf.metadata
+            starts = np.cumsum([0] + [md.row_group(g).num_rows for g in range(md.num_row_groups)])
             gone = np.array(dead.get(os.path.basename(f.path), []), np.int64)
-            with _open_parquet(os.path.join(self.path, f.path))[0] as pf:
-                stored = set(pf.schema_arrow.names)
-                cols = [n for n in target.names[:-1] if n in stored]
-                for g, pos, ids in _rowid_hits(pf, rs, los, his, gone):
-                    t = pf.read_row_group(g, columns=cols).take(pos) if cols else None
-                    parts.append(pa.Table.from_arrays(
-                        [
-                            _conform(t.column(fld.name), fld.type)
-                            if fld.name in cols else pa.nulls(len(pos), fld.type)
-                            for fld in list(target)[:-1]
-                        ] + [pa.array(ids, pa.int64())],
-                        schema=target,
-                    ))
-        table = pa.concat_tables(parts) if parts else target.empty_table()
-        return self._logical_rows(self.spark.createDataFrame(table, read), columns)
+            if groups is None:
+                rs = f.row_start if f.row_start is not None and f.row_start >= 0 else None
+                hits = [(g, pos) for g, pos, _ in _rowid_hits(pf, rs, los, his, gone)]
+            else:
+                hits = []
+                for g in groups:
+                    pos = np.arange(starts[g + 1] - starts[g])
+                    hits.append((g, pos[~np.isin(pos + starts[g], gone)] if len(gone) else pos))
+            stored = set(pf.schema_arrow.names)
+            cols = [c.name for c in data if c.name in stored]
+            cols += [_ROWID_STORED] if _ROWID_STORED in stored else []
+            for g, pos in hits:
+                t = pf.read_row_group(g, columns=cols) if cols else None
+                if t is not None and len(pos) < t.num_rows:
+                    t = t.take(pos)
+                try:
+                    arrays = [
+                        _conform(t.column(c.name), c.type) if c.name in stored
+                        else pa.nulls(len(pos), c.type)
+                        for c in data
+                    ]
+                except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError):
+                    return None
+                parts.append(pa.Table.from_arrays(
+                    arrays + [
+                        pa.array([os.path.basename(f.path)] * len(pos), pa.string()),
+                        pa.array(pos + starts[g], pa.int64()),
+                        t.column(_ROWID_STORED) if _ROWID_STORED in stored
+                        else pa.nulls(len(pos), pa.int64()),
+                    ],
+                    names=[c.name for c in data] + [_FILE_COL, _POS_COL, _ROWID_STORED],
+                ))
+        table = _arrow_rowids(pa.concat_tables(parts), frags) if parts else target.empty_table()
+        return table.cast(target), read
 
-    def _logical_rows(self, df: DataFrame, columns: list[str] | None) -> DataFrame:
-        """A take's rows as the caller sees them, from a frame in physical
+    def statement_scan(self, filters) -> DataFrame | None:
+        """The rows of a statement-sized read of this table, as to_df()
+        gives them — logical names, column defaults — but as a local
+        relation read by _driver_scan over the fragments zonemaps keep for
+        the (col, op, literal) conjuncts ``filters`` (every returned row
+        satisfying them is the caller's to check). None, having read only
+        footers, when that scan is over the gate: the caller keeps Spark's
+        scan."""
+        sel, _ = self.plan_scan(filters, use_indexes=False)
+        df = self._driver_scan(sel, self._zone(filters))
+        return None if df is None else self._logical_rows(df, None, row_id=False)
+
+    def driver_scan_plan(self, filters) -> dict[str, Any]:
+        """What statement_scan(filters) would read: the fragments zonemaps
+        keep, the row groups their footers admit of all they hold, the
+        admitted rows, and whether the admitted rows and the fragments'
+        sidecar deletes are both within the driver gate."""
+        if isinstance(filters, str):
+            filters = self._parse_filter_string(self.spark, filters)
+        sel, _ = self.plan_scan(filters, use_indexes=False)
+        plan, groups, rows = self._row_group_plan(sel, self._zone(filters))
+        return {
+            "fragments": len(sel),
+            "row_groups": sum(len(keep) for _, _, keep in plan),
+            "total_row_groups": groups,
+            "rows": rows,
+            "gate": _IN_LIST_MAX,
+            "driver": rows <= _IN_LIST_MAX
+            and self._deleted_positions(sel, _IN_LIST_MAX) is not None,
+        }
+
+    def _logical_rows(
+        self, df: DataFrame, columns: list[str] | None, row_id: bool = True
+    ) -> DataFrame:
+        """A read's rows as the caller sees them, from a frame in physical
         names carrying ``_rowid``: logical names, column defaults over
         missing values, and ``columns`` (all by default) in the requested
-        order with ``_rowid`` last. Both take paths end here, so they
-        cannot drift; over a local relation Catalyst folds it away."""
+        order, with ``_rowid`` last when ``row_id``. Both take paths and
+        statement_scan end here, so they cannot drift; over a local
+        relation Catalyst folds it away."""
         df = self._to_logical(df)
         defaults = self.manifest.column_defaults
         return df.select(
@@ -2182,14 +2516,23 @@ class Dataset:
                 F.coalesce(F.col(c), F.expr(defaults[c])).alias(c) if c in defaults else F.col(c)
                 for c in (columns if columns is not None else self.schema.fieldNames())
             ],
-            _ROWID,
+            *([_ROWID] if row_id else []),
         )
 
     def _scan_with_lineage(
-        self, frags: list[Fragment], with_row_id: bool = False, stored_row_id: bool = False
+        self,
+        frags: list[Fragment],
+        with_row_id: bool = False,
+        stored_row_id: bool = False,
+        filters=None,
     ) -> DataFrame:
         """Scan given fragments with (file basename, row position) lineage
         columns, deletion vectors applied — the input to mutation planning.
+
+        Given the (col, op, literal) conjuncts ``filters`` every wanted row
+        satisfies (DELETE, UPDATE), a statement-sized read of the row groups
+        they admit is _driver_scan's local relation, carrying ``_rowid``
+        whatever the flags below ask; a read over the gate is Spark's scan.
 
         ``with_row_id=True`` additionally materializes the stable-row-id
         column ``_rowid`` (reference rowids.go): Range-segment fragments
@@ -2198,6 +2541,9 @@ class Dataset:
         ``stored_row_id=True`` reads only the physical column, null on
         Range files, for the caller to finish: _rowid_join in Spark, or
         _arrow_rowids once the rows are on the driver."""
+        local = None if filters is None else self._driver_scan(frags, self._zone(filters))
+        if local is not None:
+            return self._to_logical(local)
         return self._to_logical(self._physical_scan(frags, with_row_id, stored_row_id))
 
     def _physical_scan(
@@ -2334,7 +2680,9 @@ class Dataset:
         return self
 
     def overwrite(self, df: DataFrame) -> "Dataset":
-        frags = self._write_fragments(df, start_id=self.manifest.max_fragment_id + 1)
+        frags = self._write_fragments(
+            df, start_id=self.manifest.max_fragment_id + 1, conform=False
+        )
         if self.manifest.row_ids:
             # fresh content gets fresh ids — next_row_id is monotone and
             # never rewinds, so pre-overwrite ids are retired forever
@@ -2361,12 +2709,13 @@ class Dataset:
         # fragment whose stats prove no row can match contributes no hits,
         # so the find-hits scan skips it — same pruning the filtered SELECT
         # path gets, now on the write path's predicate scan
-        scan_frags, _ = self.plan_scan(predicate, use_indexes=False)
+        filters = self._parse_filter_string(self.spark, predicate)
+        scan_frags, _ = self.plan_scan(filters, use_indexes=False)
         if not scan_frags:
             return self
         plan = self._plan_hits(
             m,
-            self._scan_with_lineage(scan_frags)
+            self._scan_with_lineage(scan_frags, filters=filters)
             .filter(F.expr(predicate))
             .select(F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos")),
         )
@@ -2390,7 +2739,18 @@ class Dataset:
         to the driver in one scan, so the rest of its commit needs no
         shuffle and no second scan; a DataFrame made back from the table
         (``spark.createDataFrame(table, schema)``) runs without Python
-        workers."""
+        workers. Rows already on the driver (_driver_rows: a local
+        relation, such as _driver_scan's, under a Filter or Project) are
+        collected, which runs no Spark job where ``toArrow`` runs one."""
+        rows = _driver_rows(df)
+        if rows == []:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            return to_arrow_schema(df.schema).empty_table()
+        if rows is not None:
+            from pyspark.sql.conversion import LocalDataToArrowConversion
+
+            return LocalDataToArrowConversion.convert(rows, df.schema, False)
         with driver_sized(self.spark):
             t = df.limit(_IN_LIST_MAX + 1).toArrow()
         return t if t.num_rows <= _IN_LIST_MAX else None
@@ -2534,12 +2894,12 @@ class Dataset:
             # rows, and the images and inserts are written by the driver
             few = self._few_rows(matched)
             if few is None:
-                if m.row_ids:
+                if _ROWID_STORED in matched.columns:
                     matched = self._rowid_join(matched, frags)
                 matched = matched.persist()
             else:
                 fields = matched.schema.fields
-                if m.row_ids:
+                if _ROWID_STORED in few.column_names:  # a Spark scan's rows
                     few = _arrow_rowids(few, frags)
                     fields = [f for f in fields if f.name != _ROWID_STORED]
                     fields.append(StructField(_ROWID, LongType(), True))
@@ -2610,12 +2970,13 @@ class Dataset:
             )
         # zonemap pre-prune, as in delete(): only fragments whose stats
         # admit a match are scanned
-        scan_frags, _ = self.plan_scan(predicate, use_indexes=False)
+        filters = self._parse_filter_string(self.spark, predicate)
+        scan_frags, _ = self.plan_scan(filters, use_indexes=False)
         if not scan_frags:
             return self
-        matched = self._scan_with_lineage(scan_frags, stored_row_id=m.row_ids).filter(
-            F.expr(predicate)
-        )
+        matched = self._scan_with_lineage(
+            scan_frags, stored_row_id=m.row_ids, filters=filters
+        ).filter(F.expr(predicate))
         # ONE select: SQL UPDATE evaluates every assignment against the OLD
         # row (SET a = b, b = a swaps)
         images = [
@@ -2628,23 +2989,27 @@ class Dataset:
 
     def _source_key_filters(
         self, source: DataFrame, keys: list[str]
-    ) -> tuple[list[tuple[str, str, Any]], DataFrame, bool]:
+    ) -> tuple[list[tuple[str, str, Any]], DataFrame, Any]:
         """(prunable conjuncts every target row matching some ``source``
-        row satisfies, the source, whether it is small). A small source —
-        at most ``_IN_LIST_MAX`` rows — is read once into a local relation,
-        its rows numbered in ``_SRC_ROW`` so a matched row names the source
-        row it matched, and prunes by an IN-list of its key values; a
-        larger one prunes by each key's [min, max]. Only keys of the
-        table's own integral, string or date type prune; any other key
-        would be compared after a cast the manifest stats do not model."""
+        row satisfies, the source, its rows as an Arrow table when it is
+        small, else None). A small source — at most ``_IN_LIST_MAX`` rows —
+        is read once into a local relation, its rows numbered in
+        ``_SRC_ROW`` so a matched row names the source row it matched, and
+        prunes by an IN-list of its key values; a larger one prunes by each
+        key's [min, max]. Only an integral key
+        (of any integral type on either side: Spark compares them widened,
+        as Python compares ints) and a string or date key of the table's
+        own type prune; any other key would be compared after a cast the
+        manifest stats do not model."""
         from pyspark.sql.types import DateType, IntegralType
 
         rows = self._few_rows(source)
         if rows is not None:
             import pyarrow as pa
 
+            rows = rows.append_column(_SRC_ROW, pa.array(range(rows.num_rows), pa.int64()))
             source = self.spark.createDataFrame(
-                rows.append_column(_SRC_ROW, pa.array(range(rows.num_rows), pa.int64())),
+                rows,
                 schema=StructType(
                     source.schema.fields + [StructField(_SRC_ROW, LongType(), True)]
                 ),
@@ -2653,16 +3018,16 @@ class Dataset:
         src = {f.name: f.dataType for f in source.schema.fields}
         cols = [
             k for k in keys
-            if src.get(k) == tgt.get(k)
-            and isinstance(tgt[k], (IntegralType, StringType, DateType))
+            if isinstance(src.get(k), IntegralType) and isinstance(tgt.get(k), IntegralType)
+            or src.get(k) == tgt.get(k) and isinstance(tgt[k], (StringType, DateType))
         ]
         if rows is not None:
             return [
                 (c, "in", sorted({v for v in rows.column(c).to_pylist() if v is not None}))
                 for c in cols
-            ], source, True
+            ], source, rows
         if not cols:
-            return [], source, False
+            return [], source, None
         with driver_sized(self.spark):
             b = source.agg(
                 *[F.min(c) for c in cols], *[F.max(c) for c in cols]
@@ -2670,9 +3035,50 @@ class Dataset:
         out: list[tuple[str, str, Any]] = []
         for i, c in enumerate(cols):
             if b[i] is None:
-                return [(c, "in", [])], source, False  # all-NULL keys match nothing
+                return [(c, "in", [])], source, None  # all-NULL keys match nothing
             out += [(c, ">=", b[i]), (c, "<=", b[len(cols) + i])]
-        return out, source, False
+        return out, source, None
+
+    def _driver_join(self, table, read: StructType, source, rows, keys, upd) -> DataFrame:
+        """MERGE's matched rows as a local relation: the target rows
+        ``table`` (_driver_table's, of Spark schema ``read``) inner-joined
+        on ``keys`` with the small source's Arrow ``rows``, carrying the
+        source's ``__src_<c>`` for each updated column ``c`` and
+        ``_SRC_ROW`` — the shape of the Spark join, made by Arrow's hash
+        join, where a NULL key matches nothing as in Spark. Only the keys
+        _source_key_filters prunes by come here — integral keys, joined as
+        int64, and string and date keys of the table's own type — so
+        equality is Spark's."""
+        import numpy as np
+        import pyarrow as pa
+
+        rev = {p: l for l, p in self.manifest.column_mapping.items() if p != l}
+        table = table.rename_columns([rev.get(n, n) for n in table.column_names])
+        fields = [StructField(rev.get(f.name, f.name), f.dataType, True) for f in read.fields]
+        src = {f.name: f for f in source.schema.fields}
+        def key(k):
+            t = table.schema.field(k).type
+            return pa.int64() if pa.types.is_integer(t) else t
+
+        pairs = pa.table({
+            **{k: table.column(k).cast(key(k)) for k in keys},
+            "__l": pa.array(np.arange(table.num_rows)),
+        }).join(
+            pa.table({
+                **{k: rows.column(k).cast(key(k)) for k in keys},
+                "__r": pa.array(np.arange(rows.num_rows)),
+            }),
+            keys,
+            join_type="inner",
+        )
+        hit = rows.take(pairs.column("__r"))
+        out = table.take(pairs.column("__l"))
+        for c in upd:
+            out = out.append_column(f"__src_{c}", hit.column(c))
+            fields.append(StructField(f"__src_{c}", src[c].dataType, True))
+        out = out.append_column(_SRC_ROW, hit.column(_SRC_ROW))
+        fields.append(StructField(_SRC_ROW, LongType(), True))
+        return self.spark.createDataFrame(out, StructType(fields))
 
     def merge_insert(
         self,
@@ -2717,7 +3123,8 @@ class Dataset:
         m = self.manifest
         fields = self.schema.fields
         names = [f.name for f in fields]
-        filters, source, small = self._source_key_filters(source, keys)
+        filters, source, rows = self._source_key_filters(source, keys)
+        small = rows is not None
         frags, _ = self.plan_scan(filters, use_indexes=False)
         upd = []
         images = None
@@ -2733,7 +3140,16 @@ class Dataset:
                 for f in fields
             ]
         matched = None
-        if frags:
+        # every key prunes by the source's IN-list: a statement-sized
+        # target read joins the source on the driver
+        local = (
+            self._driver_table(frags, self._zone(filters))
+            if frags and small and {c for c, _, _ in filters} == set(keys)
+            else None
+        )
+        if local is not None:
+            matched = self._driver_join(*local, source, rows, keys, upd)
+        elif frags:
             src = source.select(
                 *keys,
                 *[F.col(c).alias(f"__src_{c}") for c in upd],
@@ -4120,7 +4536,7 @@ class Dataset:
         data is written now; the commit later succeeds only if no other
         commit landed since this read version (overwrite's strict conflict
         rule, same as the immediate path)."""
-        frags = self._write_fragments(df, start_id=0)  # ids assigned at commit
+        frags = self._write_fragments(df, start_id=0, conform=False)  # ids at commit
         sid = uuid.uuid4().hex
         payload = {
             "op": "overwrite",

@@ -1666,9 +1666,19 @@ class Engine:
         Queries (SELECT/WITH/VALUES/TABLE/EXPLAIN): every catalog table is
         registered as a view and the text is delegated to Catalyst (the
         reference's parse/bind/optimize/execute, SURVEY.md §3.1 steps 3-9,
-        collapsed into one call). Expression and query text inside a
+        collapsed into one call). A SELECT whose parse is Project, Filter
+        and Limit nodes over one main-schema table skips the views when its
+        read is statement-sized (``_driver_select``): the table's rows the
+        WHERE conjuncts' row groups admit are read here, on the driver, and
+        Spark runs the parsed query over them as a local relation — no
+        Spark job. That read moves into this call, which a lazy view scan
+        defers to the first action. Expression and query text inside a
         statement reaches Catalyst as written — the engine never grows its
         own expression parser."""
+        return self._sql(text)
+
+    def _sql(self, text: str, driver_reads: bool = True) -> DataFrame | None:
+        """sql(); ``driver_reads=False`` plans every query over the views."""
         stmts = self._split_statements(text)
         if not stmts:
             raise ValueError("empty SQL text")
@@ -1687,11 +1697,16 @@ class Engine:
             # falls through to Catalyst's plan output below
             p = _Stmt(s)
             if p.try_kw("EXPLAIN", "SCAN"):
+                if p.peek_word().upper() == "SELECT":
+                    return self._explain_scan(query=p.rest())
                 tbl = p.ident("table name")
                 pred = p.rest() if p.try_kw("WHERE") else None
                 p.end()
                 return self._explain_scan(tbl, pred or None)
         if first in self._QUERY_TOKENS:
+            df = self._driver_select(s) if driver_reads and first == "select" else None
+            if df is not None:
+                return df
             self._register_views()
             s = self._prep_query(s)
             return self.spark.sql(s)
@@ -1705,6 +1720,61 @@ class Engine:
         handler = getattr(self, f"_stmt_{first}")
         handler(s)
         return None
+
+    # the plan nodes a SELECT may stack over its one table and still take
+    # the driver scan; Catalyst runs each over a local relation on the driver
+    _LOCAL_NODES = ("Project", "Filter", "GlobalLimit", "LocalLimit", "SubqueryAlias")
+
+    def _select_shape(self, s: str):
+        """(table, WHERE conjuncts, plan nodes over the table, top first)
+        of a SELECT whose Spark parse is ``_LOCAL_NODES`` over one plain
+        main-schema table with no subquery; else why not, as a string. The
+        conjuncts (Dataset._conjuncts) are those of the Filters right over
+        the table or its alias: a Filter over a Project or a Limit tests
+        that node's output, not the table's rows."""
+        try:
+            plan = parse_plan(self.spark, self._rewrite_quoted_idents(s))
+        except ParseException:
+            return "Spark cannot parse it"
+        chain, node = [], plan
+        while node.nodeName() in self._LOCAL_NODES:
+            chain.append(node)
+            node = node.child()
+        if node.nodeName() != "UnresolvedRelation":
+            return f"{node.nodeName()} under {'/'.join(self._LOCAL_NODES)}"
+        pattern = self.spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        if plan.containsPattern(pattern.PLAN_EXPRESSION()):
+            return "a subquery reads another relation"
+        parts = _seq(node.multipartIdentifier())
+        if len(parts) != 1 or parts[0] not in self._catalog["schemas"]["main"]["tables"]:
+            return f"{'.'.join(parts)} is not a main-schema table"
+        filters = []
+        for i, n in enumerate(reversed(chain)):
+            if n.nodeName() == "Filter":
+                filters += Dataset._conjuncts(json.loads(n.condition().toJSON()))
+            elif i > 0 or n.nodeName() != "SubqueryAlias":
+                break
+        return parts[0], filters, chain
+
+    def _driver_select(self, s: str) -> DataFrame | None:
+        """The SELECT ``s`` run over a local relation of its table's
+        statement-sized read (Dataset.statement_scan): that relation takes
+        the place of the table in Spark's own parse, which then runs as
+        parsed (``plan_frame``), so the text is never rewritten and Spark
+        evaluates every clause. None, with no view registered, when the
+        query's shape or the read's size does not qualify."""
+        shape = self._select_shape(s)
+        if isinstance(shape, str):
+            return None
+        name, filters, chain = shape
+        local = self.dataset(name).statement_scan(filters)
+        if local is None:
+            return None
+        plan = local.alias(name)._jdf.queryExecution().analyzed()
+        to_seq = self.spark._jvm.org.apache.spark.api.python.PythonUtils.toSeq
+        for node in reversed(chain):
+            plan = node.withNewChildren(to_seq([plan]))
+        return plan_frame(self.spark, plan)
 
     # ------------------------------------------------- statement handlers
     _QUERY_HEADS = ("SELECT", "WITH", "TABLE", "VALUES")
@@ -2903,24 +2973,40 @@ class Engine:
         p.end()
         self.analyze(tbl, cache=cache)
 
-    def _explain_scan(self, name: str, pred: str | None) -> DataFrame:
+    def _explain_scan(
+        self, name: str | None = None, pred: str | None = None, query: str | None = None
+    ) -> DataFrame:
         """EXPLAIN SCAN result set: one row per registered index with the
         planner's (est_fraction, chosen, reason) triple, plus a leading
-        '(scan)' summary row with the fragment selection outcome."""
+        '(scan)' summary row: the fragment selection outcome, and the read
+        a SELECT of those rows takes — the row groups whose footer stats
+        admit the conjuncts, of all the zonemap-kept fragments hold, their
+        rows, and whether that is the driver scan or, over the gate, a
+        Spark scan. ``query`` (EXPLAIN SCAN SELECT ...) explains that
+        SELECT's read instead, or why its shape keeps Spark's scan."""
+        filters = pred
+        if query is not None:
+            shape = self._select_shape(query)
+            if isinstance(shape, str):
+                return self._scan_rows([], f"Spark scan: plan shape does not qualify ({shape})")
+            name, filters, _ = shape
         ds = self.dataset(name)
-        sel, pruned, trace = ds.plan_scan(pred, explain=True)
-        rows = [
-            (
-                "(scan)",
-                "",
-                "",
-                None,
-                None,
-                None,
-                None,
-                f"selected {len(sel)} of {len(sel) + len(pruned)} fragments",
-            )
-        ] + [
+        sel, pruned, trace = ds.plan_scan(filters, explain=True)
+        d = ds.driver_scan_plan(filters)
+        how = (
+            "driver scan"
+            if d["driver"]
+            else f"Spark scan: over the {d['gate']}-row gate"
+        )
+        return self._scan_rows(
+            trace,
+            f"selected {len(sel)} of {len(sel) + len(pruned)} fragments; "
+            f"{d['row_groups']} of {d['total_row_groups']} row groups admitted "
+            f"({d['rows']} rows) over {d['fragments']} zonemap-kept fragments; {how}",
+        )
+
+    def _scan_rows(self, trace: list[dict], summary: str) -> DataFrame:
+        rows = [("(scan)", "", "", None, None, None, None, summary)] + [
             (
                 t["index"],
                 t["kind"] or "",
@@ -2942,8 +3028,11 @@ class Engine:
 
     def explain(self, text: str, mode: str = "formatted") -> str:
         """EXPLAIN surface (reference explain.go:118): returns the formatted
-        plan — scans show PushedFilters/ReadSchema so pushdown is auditable."""
-        df = self.sql(text)
+        plan — scans show PushedFilters/ReadSchema so pushdown is auditable.
+        A query is planned over the registered views, as Spark would scan
+        it; whether ``sql`` reads a SELECT on the driver instead is EXPLAIN
+        SCAN SELECT's answer."""
+        df = self._sql(text, driver_reads=False)
         if df is None:
             raise ValueError("EXPLAIN applies to queries, not DDL/DML statements")
         return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]

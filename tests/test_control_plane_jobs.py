@@ -206,21 +206,66 @@ def test_restore_and_merge_insert_validate_in_fewer_jobs(spark, eng):
 def test_unconstrained_writes_run_no_validation_jobs(spark, eng):
     eng.sql("CREATE TABLE lk (k BIGINT, v BIGINT)")
     eng.sql("INSERT INTO lk VALUES (1, 1), (2, 2)")
-    # statement-sized rows are written by the driver, and the matched rows'
-    # ids come from the manifest: UPDATE scans once, MERGE reads its source
-    # and scans (the source broadcast is the third job)
+    # statement-sized rows are written by the driver, and the matched rows
+    # are read there (Dataset._driver_scan): UPDATE runs no job, MERGE only
+    # the one that evaluates its UNION ALL source
     n = _jobs_for(spark, lambda: eng.sql("INSERT INTO lk VALUES (3, 3)"))
     assert n == 0, f"unconstrained INSERT ran {n} jobs (1 before)"
     n = _jobs_for(spark, lambda: eng.sql("UPDATE lk SET v = v + 1 WHERE k = 1"))
-    assert n <= 1, f"unconstrained UPDATE ran {n} jobs (3 before)"
+    assert n == 0, f"unconstrained UPDATE ran {n} jobs (1 before)"
     n = _jobs_for(spark, lambda: eng.sql(
         "MERGE INTO lk USING (SELECT 4 AS k, 4 AS v UNION ALL SELECT 1, 9) s "
         "ON k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
     ))
-    assert n <= 3, f"unconstrained MERGE ran {n} jobs (7 before)"
+    assert n <= 2, f"unconstrained MERGE ran {n} jobs (3 before)"
+    n = _jobs_for(spark, lambda: eng.sql("DELETE FROM lk WHERE k = 2"))
+    assert n == 0, f"unconstrained DELETE ran {n} jobs (1 before)"
     assert sorted(map(tuple, eng.sql("SELECT * FROM lk").collect())) == [
-        (1, 9), (2, 2), (3, 3), (4, 4)
+        (1, 9), (3, 3), (4, 4)
     ]
+
+
+def test_statement_sized_sql_read_runs_no_job(spark, eng):
+    # a point read right after a commit reads the admitted row groups on
+    # the driver and Spark filters the local relation; an aggregate, a
+    # sort or a second table keeps the registered view
+    eng.sql("CREATE TABLE pr (k BIGINT, v STRING)")
+    eng.sql("INSERT INTO pr VALUES " + ", ".join(f"({i}, 'v{i}')" for i in range(100)))
+    eng.sql("INSERT INTO pr VALUES (100, 'x')")
+    rows = []
+    n = _jobs_for(spark, lambda: rows.extend(eng.sql("SELECT k, v FROM pr WHERE k = 42").collect()))
+    assert n == 0, f"SQL point read ran {n} jobs (1 before)"
+    assert [tuple(r) for r in rows] == [(42, "v42")]
+    eng.sql("DELETE FROM pr WHERE k = 42")
+    n = _jobs_for(spark, lambda: rows.extend(
+        eng.sql("SELECT p.v FROM pr p WHERE p.k >= 41 AND k <= 43 LIMIT 5").collect()
+    ))
+    assert n == 0, f"aliased range read ran {n} jobs"
+    assert sorted(r[0] for r in rows[1:]) == ["v41", "v43"]
+    plan = eng.sql("SELECT k FROM pr WHERE k = 7")._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "LocalTableScan" in plan
+    plan = eng.sql("SELECT k FROM pr WHERE k = 7 ORDER BY k")._jdf.queryExecution()
+    assert "FileScan" in plan.executedPlan().toString()
+
+
+def test_optimize_output_has_bounded_row_groups(spark, eng):
+    import pyarrow.parquet as pq
+
+    import plan_spark.dataset.dataset as dsmod
+
+    n = 2 * dsmod._ROW_GROUP_ROWS + 7
+    eng.sql("CREATE TABLE rg (k BIGINT, v DOUBLE)")
+    for part in range(2):
+        eng.dataset("rg").append(
+            spark.range(part * n, (part + 1) * n).selectExpr("id AS k", "id * 0.5 AS v")
+        )
+    eng.sql("OPTIMIZE rg")
+    ds = eng.dataset("rg")
+    (frag,) = ds.manifest.fragments
+    md = pq.ParquetFile(f"{ds.path}/{frag.path}").metadata
+    assert frag.rows == 2 * n
+    assert md.num_row_groups == -(-2 * n // dsmod._ROW_GROUP_ROWS)
+    assert max(md.row_group(g).num_rows for g in range(md.num_row_groups)) == dsmod._ROW_GROUP_ROWS
 
 
 def test_merge_that_does_nothing_runs_no_job(spark, eng):

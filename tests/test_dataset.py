@@ -881,19 +881,53 @@ def _dml_story(spark, path, base_df):
     return seen
 
 
+def _sql_story(spark, root):
+    """SQL point reads after each statement of a DML story: each read's
+    rows, and whether Spark scanned files for it."""
+    from plan_spark.engine import Engine
+
+    eng = Engine(spark, root)
+    eng.sql("CREATE TABLE t (id BIGINT, grp BIGINT, val DOUBLE)")
+    eng.dataset("t").append(
+        spark.range(0, 1000).selectExpr("id", "id % 3 AS grp", "id * -1.0 AS val").coalesce(1)
+    )
+    reads = []
+    for stmt in (
+        "DELETE FROM t WHERE id % 7 = 0",
+        "UPDATE t SET val = val + 1 WHERE grp = 2 AND id < 300",
+        "MERGE INTO t USING (SELECT id, 9 AS grp, 0.5 AS val FROM range(990, 1010)) s "
+        "ON id WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        "DELETE FROM t WHERE id BETWEEN 100 AND 110",
+    ):
+        eng.sql(stmt)
+        for q in ("SELECT * FROM t WHERE id = 995", "SELECT id, val FROM t WHERE id >= 280 AND id < 320",
+                  "SELECT * FROM t WHERE grp = 9 LIMIT 100"):
+            df = eng.sql(q)
+            scanned = "FileScan" in df._jdf.queryExecution().executedPlan().toString()
+            reads.append((scanned, sorted(map(tuple, df.collect()))))
+    return reads
+
+
 def test_large_statement_path_matches_small(spark, tmp_path_ds, base_df, monkeypatch):
     """Statements above the driver gate (_IN_LIST_MAX matched rows or
     source rows, sidecars over it on read) take the distributed path:
     persisted hits, Spark-written sidecars, a non-broadcast MERGE join and
     the anti-join read. Shrinking the gate sends every step of the same
-    story there; the answers must equal the driver path's."""
+    story there; the answers must equal the driver path's. SQL point reads
+    over the gate keep Spark's scan of the registered view."""
     import plan_spark.dataset.dataset as dsmod
 
     small = _dml_story(spark, tmp_path_ds + "/small", base_df)
+    small_sql = _sql_story(spark, tmp_path_ds + "/small_sql")
     monkeypatch.setattr(dsmod, "_IN_LIST_MAX", 5)
     large = _dml_story(spark, tmp_path_ds + "/large", base_df)
+    large_sql = _sql_story(spark, tmp_path_ds + "/large_sql")
     assert large == small
     assert len(small[-1]) > 0 and len(small[0]) == 1000 - 143
+    assert [rows for _, rows in large_sql] == [rows for _, rows in small_sql]
+    assert not any(scanned for scanned, _ in small_sql)
+    assert all(scanned for scanned, rows in large_sql if rows)
+    assert all(rows for i, (_, rows) in enumerate(small_sql) if i % 3 < 2)
 
 
 def test_binpack_tiers_merge_files_of_distinct_sizes(spark, tmp_path_ds):

@@ -190,3 +190,26 @@ def test_to_df_without_flag_hides_rowid(spark, tmp_path_ds, base_df):
             plain.to_df(with_row_id=True)
     finally:
         shutil.rmtree(d2, ignore_errors=True)
+
+
+def test_take_rows_over_256_runs_plans_a_hash_join(spark, tmp_path_ds, monkeypatch):
+    # over the driver gate, more than 256 runs ship as a broadcast table
+    # joined on an id bucket: a hash join, not a nested loop over every run
+    import plan_spark.dataset.dataset as dsmod
+
+    df = spark.range(0, 3000).selectExpr("id AS k", "id % 7 AS g").repartition(3)
+    ds = Dataset.create(spark, tmp_path_ds, df, row_ids=True)
+    ds.delete("k % 11 = 0")
+    runs = [(i * 9, i * 9 + (i % 4)) for i in range(300)] + [(2990, 2999), (5000, 5003)]
+    monkeypatch.setattr(dsmod, "_IN_LIST_MAX", 100)
+    got = ds.take_rows(runs=runs)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan and "BroadcastHashJoin" in plan
+    halves = [ds.take_rows(runs=runs[:150]), ds.take_rows(runs=runs[150:])]
+    for h in halves:
+        assert "__run_lo" not in h._jdf.queryExecution().executedPlan().toString()
+    want = sorted(tuple(r) for h in halves for r in h.collect())
+    assert sorted(tuple(r) for r in got.collect()) == want
+    covered = {i for lo, hi in runs for i in range(lo, hi + 1)}
+    truth = [tuple(r) for r in ds.to_df(with_row_id=True).collect() if r["_rowid"] in covered]
+    assert want == sorted(truth) and len(want) > 600

@@ -357,3 +357,72 @@ def test_merge_keeps_row_ids_and_inserts_null_keys_on_both_paths(
     assert kept == ids
     fresh = [r._rowid for r in got if r.v in (11, 12)]
     assert len(set(fresh)) == 2 and not set(fresh) & set(ids.values())
+
+
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_append_conforms_frame_types_to_the_table(spark, eng, writer):
+    # a DECIMAL(22,1) frame appended to a DOUBLE column is stored as the
+    # table's DOUBLE, as SQL INSERT of the same rows stores it; before, the
+    # commit landed and every later read raised a column type mismatch
+    eng.sql("CREATE TABLE pc (id BIGINT, price DOUBLE)")
+    eng.sql("CREATE TABLE pi (id BIGINT, price DOUBLE)")
+    frame = spark.range(5).selectExpr("id", "id * 0.5 AS price").coalesce(1)
+    if writer == "driver":
+        frame = spark.createDataFrame(frame.toArrow(), frame.schema)
+    assert (dsmod._driver_rows(frame) is not None) == (writer == "driver")
+    eng.dataset("pc").append(frame)
+    eng.sql("INSERT INTO pi SELECT id, id * 0.5 FROM range(5)")
+    got = sorted(map(tuple, eng.dataset("pc").to_df().collect()))
+    assert got == sorted(map(tuple, eng.dataset("pi").to_df().collect()))
+    assert got == [(i, i * 0.5) for i in range(5)]
+    (frag,) = eng.dataset("pc").manifest.fragments
+    pf = pq.ParquetFile(os.path.join(eng.dataset("pc").path, frag.path))
+    assert pf.schema_arrow.field("price").type == pa.float64()
+
+
+def test_append_refuses_unassignable_types_and_bumps_no_version(spark, eng):
+    eng.sql("CREATE TABLE pr (id BIGINT, price DOUBLE)")
+    ds = eng.dataset("pr")
+    v = ds.version
+    with pytest.raises(ValueError, match=r"price string -> double"):
+        ds.append(spark.range(3).selectExpr("id", "CAST(id AS STRING) AS price"))
+    assert eng.dataset("pr").version == v
+    # a struct reads by field name, so a reordered or partial struct needs no cast
+    eng.sql("CREATE TABLE ps (id BIGINT, s STRUCT<a: BIGINT, b: STRING>)")
+    eng.dataset("ps").append(spark.sql("SELECT 1L AS id, named_struct('b', 'x', 'a', 2L) AS s"))
+    assert [tuple(r) for r in eng.sql("SELECT s.a, s.b FROM ps").collect()] == [(2, "x")]
+
+
+def test_commit_refuses_a_file_the_table_cannot_read(spark, eng, monkeypatch):
+    # the footer check backs the conform step: a file whose stored type the
+    # reader refuses never reaches a manifest, through either commit path
+    eng.sql("CREATE TABLE pf (id BIGINT, price DOUBLE)")
+    eng.sql("INSERT INTO pf VALUES (1, 1.5)")
+    ds = eng.dataset("pf")
+    v = ds.version
+    monkeypatch.setattr(Dataset, "_conformed", lambda self, df: df)
+    bad = spark.range(3).selectExpr("id", "id * 0.5 AS price")
+    with pytest.raises(ValueError, match=r"stores price as decimal\(22,1\).*double"):
+        ds.append(bad)
+    sid = ds.stage_append(bad)
+    with pytest.raises(ValueError, match=r"stores price as decimal\(22,1\)"):
+        ds.commit_staged(sid)
+    assert eng.dataset("pf").version == v
+    assert [tuple(r) for r in eng.sql("SELECT * FROM pf").collect()] == [(1, 1.5)]
+
+
+def test_nan_in_a_later_row_group_is_found(spark, eng):
+    # Spark's writer bounds each row group; a NaN in the last one must not
+    # be lost when the fragment's bounds merge the groups'
+    n = 2 * dsmod._ROW_GROUP_ROWS + 10
+    eng.sql("CREATE TABLE nr (k BIGINT, e DOUBLE)")
+    eng.dataset("nr").append(
+        spark.range(n)
+        .selectExpr("id AS k", f"IF(id = {n - 3}, double('NaN'), id % 5) AS e")
+        .coalesce(1)
+    )
+    assert "e" not in eng.dataset("nr").manifest.fragments[0].stats
+    assert [r.k for r in eng.sql("SELECT k FROM nr WHERE e > 5").collect()] == [n - 3]
+    eng.sql("DELETE FROM nr WHERE e > 5")
+    assert eng.sql("SELECT k FROM nr WHERE e > 5").collect() == []
+    assert eng.dataset("nr").count_rows() == n - 1

@@ -1369,3 +1369,36 @@ def test_copy_schema_drift_fails_loudly_not_silently(spark, tmp_path):
         return  # loud failure: correct (matches plain spark.read.parquet)
     rows = sorted(tuple(r) for r in eng.sql("SELECT k, v FROM t_drift").collect())
     assert rows == [(1, 0.5), (2, 1.5)]
+
+
+def test_explain_scan_reports_the_driver_scan(engine, monkeypatch):
+    """EXPLAIN SCAN's (scan) row says which row groups a SELECT of the
+    predicate reads, how many rows that is, and whether it is the driver
+    scan or Spark's; EXPLAIN SCAN SELECT says why a query shape keeps
+    Spark's scan."""
+    import plan_spark.dataset.dataset as dsmod
+
+    eng = engine
+    eng.sql("CREATE TABLE rgx (k BIGINT, v STRING)")
+    n = 3 * dsmod._ROW_GROUP_ROWS
+    eng.dataset("rgx").append(
+        eng.spark.range(n).selectExpr("id AS k", "CAST(id AS STRING) AS v").coalesce(1)
+    )
+    eng.sql("INSERT INTO rgx VALUES (5, 'x')")
+
+    def scan(q):
+        return {r.index_name: r for r in eng.sql(q).collect()}["(scan)"].reason
+
+    why = scan("EXPLAIN SCAN rgx WHERE k = 5")
+    assert "selected 2 of 2 fragments" in why
+    assert f"2 of 4 row groups admitted ({dsmod._ROW_GROUP_ROWS + 1} rows)" in why
+    assert why.endswith("driver scan")
+    assert scan("EXPLAIN SCAN SELECT v FROM rgx WHERE k = 5") == why
+    assert f"4 of 4 row groups admitted ({n + 1} rows)" in scan("EXPLAIN SCAN rgx")
+    assert scan("EXPLAIN SCAN rgx").endswith("Spark scan: over the 10000-row gate")
+    assert "plan shape does not qualify (Aggregate" in scan(
+        "EXPLAIN SCAN SELECT k, count(*) FROM rgx GROUP BY k"
+    )
+    assert "does not qualify (Join" in scan("EXPLAIN SCAN SELECT * FROM rgx a JOIN rgx b ON a.k = b.k")
+    monkeypatch.setattr(dsmod, "_IN_LIST_MAX", 100)
+    assert scan("EXPLAIN SCAN rgx WHERE k = 5").endswith("Spark scan: over the 100-row gate")

@@ -1,7 +1,8 @@
 """Property: over any history of commits, ``take_rows`` returns exactly the
 rows a full scan with row ids returns for the same ids — on both sides of
 the statement-sized gate (``_IN_LIST_MAX``): the driver-side Arrow read
-and the Spark scan. Histories mix INSERT, DELETE, UPDATE, MERGE, OPTIMIZE,
+and the Spark scan. Likewise DELETE, UPDATE, MERGE and SQL point reads
+give the same answers on both sides of the gate. Histories mix INSERT, DELETE, UPDATE, MERGE, OPTIMIZE,
 ADD COLUMN with a default, RENAME COLUMN (column mapping) and a widening
 retype, so ids move between Range fragments, stored ``__rowid`` files and
 deletion sidecars; sampled ids are live, deleted, never assigned, and at
@@ -136,3 +137,84 @@ def test_take_rows_equals_filtered_scan(spark, ops, data):
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+# SQL statements over a table whose namesake columns never prune by stats
+# (``k`` beside STRUCT<k>, ``key`` beside a MAP) and whose DOUBLE holds NaN
+# and NULL; ``j`` prunes fragments and row groups
+_DDL = "k BIGINT, j BIGINT, e DOUBLE, key BIGINT, m MAP<STRING, BIGINT>, s STRUCT<k: BIGINT>"
+_PREDS = (
+    "e > 5", "e IS NULL", "e = double('NaN')", "key = 2", "key IN (1, 3)", "k = {a}",
+    "j BETWEEN {a} AND {b}", "j < {a} AND e >= 1", "j = {a} OR key IS NULL",
+)
+
+
+def _values(lo: int, hi: int) -> str:
+    def row(i):
+        e = "double('NaN')" if i % 7 == 0 else "NULL" if i % 7 == 1 else f"{i / 2}"
+        key = "NULL" if i % 6 == 0 else str(i % 5)
+        return f"({i}, {i}, {e}, {key}, map('key', {i}), named_struct('k', {10 * i}))"
+
+    return ", ".join(row(i) for i in range(lo, hi))
+
+
+def _statement(op: str, step: int, pred: str) -> str:
+    if op == "insert":
+        return f"INSERT INTO t VALUES {_values(100 + 10 * step, 106 + 10 * step)}"
+    if op == "delete":
+        return f"DELETE FROM t WHERE {pred}"
+    if op == "update":
+        return f"UPDATE t SET e = e + 1, key = key * 2 WHERE {pred}"
+    if op == "merge":
+        src = _values(step, step + 2) + ", " + _values(500 + step, 501 + step)
+        return (
+            f"MERGE INTO t USING (SELECT * FROM VALUES {src} AS v(k, j, e, key, m, s)) src "
+            "ON k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+    return "OPTIMIZE t"
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    ops=st.lists(st.sampled_from(("insert", "delete", "update", "merge", "optimize")), min_size=2, max_size=4),
+    data=st.data(),
+)
+def test_statements_equal_on_both_sides_of_the_gate(spark, ops, data):
+    """The same history of SQL statements, run once with the driver scan
+    (the default gate) and once over Spark's scans (a gate of 1 row), gives
+    the same point-read answers after every statement and the same table."""
+    from plan_spark.engine import Engine
+
+    root = tempfile.mkdtemp(prefix="plan_spark_gate_prop_")
+    try:
+        side = {n: Engine(spark, f"{root}/{n}") for n in ("driver", "spark")}
+        gate = {"driver": dsmod._IN_LIST_MAX, "spark": 1}
+
+        def run(name, text):
+            with mock.patch.object(dsmod, "_IN_LIST_MAX", gate[name]):
+                df = side[name].sql(text)
+                if df is None:
+                    return None
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                return "FileScan" in plan, sorted(repr(tuple(r)) for r in df.collect())
+
+        for name in side:
+            side[name].sql(f"CREATE TABLE t ({_DDL})")
+            side[name].sql(f"INSERT INTO t VALUES {_values(0, 40)}")
+        for step, op in enumerate(ops):
+            a = data.draw(st.integers(0, 60))
+            pred = data.draw(st.sampled_from(_PREDS)).format(a=a, b=a + data.draw(st.integers(0, 9)))
+            text = _statement(op, step, pred)
+            for name in side:
+                run(name, text)
+            read = f"SELECT * FROM t WHERE {data.draw(st.sampled_from(_PREDS))}".format(a=a, b=a + 4)
+            (scanned, got), (_, want) = run("driver", read), run("spark", read)
+            assert not scanned, read
+            assert got == want, (text, read)
+        assert run("driver", "SELECT * FROM t WHERE true")[1] == run("spark", "SELECT * FROM t")[1]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
