@@ -34,6 +34,7 @@ import os
 import re
 import shutil
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field, replace
 from decimal import Decimal
 from typing import Any
@@ -62,7 +63,7 @@ from plan_spark.dataset.commit import (
     store_for_path,
     write_handler_marker,
 )
-from plan_spark.dataset.manifest import Fragment, Manifest
+from plan_spark.dataset.manifest import FORMAT, Fragment, Manifest
 from plan_spark.faults import fault_point
 from plan_spark.session import driver_sized, parse_expression
 
@@ -180,16 +181,17 @@ def _open_parquet(path: str):
     dataset's file (s3://, s3a://): ParquetFile alone treats a URI as a
     local path, so URIs resolve through pyarrow's own filesystem layer.
     s3a:// is Hadoop's connector name for the same bucket; pyarrow knows
-    it as s3://."""
+    it as s3://. An INT96 timestamp reads in microseconds, as Spark holds
+    it: pyarrow's default nanoseconds overflow outside 1677-2262."""
     import pyarrow.parquet as pq
 
     if "://" not in path:
-        return pq.ParquetFile(path), os.path.getsize(path)
+        return pq.ParquetFile(path, coerce_int96_timestamp_unit="us"), os.path.getsize(path)
     from pyarrow import fs as pafs
 
     filesystem, inner = pafs.FileSystem.from_uri(path.replace("s3a://", "s3://", 1))
     return (
-        pq.ParquetFile(filesystem.open_input_file(inner)),
+        pq.ParquetFile(filesystem.open_input_file(inner), coerce_int96_timestamp_unit="us"),
         filesystem.get_file_info(inner).size,
     )
 
@@ -426,6 +428,58 @@ def _has_nan(arr) -> bool:
     return False
 
 
+def _default_id_col(kind: str, row_ids: bool, names: list[str], column: str) -> str | None:
+    """The id column create_index gives an index of ``kind`` over
+    ``column`` (``x,y`` for an rtree) when none is passed, as the SQL face
+    (CREATE INDEX ... USING kind (col)) passes none: the stable row id for
+    the scalar and spatial kinds on a row-id table, so probes return
+    take_rows ids; else the conventional name among the table's column
+    ``names``, else the first column not indexed; else None."""
+    if kind in ("btree", "rtree", "bitmap") and row_ids:
+        return _ROWID
+    conventional = "doc_id" if kind == "fts" else "vec_id"
+    # a coordinate column of an rtree must never become the index id
+    indexed = {c.strip() for c in column.split(",")}
+    return conventional if conventional in names else next(
+        (n for n in names if n not in indexed), None
+    )
+
+
+def _upgrade_manifest(d: dict, root: str) -> dict:
+    """The stored manifest ``d`` of the table at ``root``, parsed from its
+    JSON, brought from format 1 to FORMAT:
+
+    - a fragment's writer may have keyed stats by a nested leaf's Parquet
+      name (``key``/``value`` of a map, ``element`` of an array, a struct
+      field's own name), so each stats entry named like a nested leaf of
+      the version's schema goes: that column does not prune there;
+    - a fragment without ``deleted_rows`` gets the count of distinct
+      positions its deletion sidecars hold, read on the driver;
+    - an index descriptor without ``phys`` gets its column, and one with
+      files but no ``params.id_col`` gets create_index's default."""
+    schema = StructType.fromJson(json.loads(d["schema_json"]))
+    shadowed = _nested_leaf_names(schema)
+    uncounted = {os.path.basename(f["path"]): f for f in d["fragments"] if "deleted_rows" not in f}
+    dead = set()
+    for side in {x for f in uncounted.values() for x in f.get("deletion_files", [])}:
+        t = _open_parquet(os.path.join(root, side))[0].read(columns=["file", "pos"])
+        dead.update(zip(t.column("file").to_pylist(), t.column("pos").to_pylist()))
+    per_file = Counter(fn for fn, _ in dead)
+    for fn, f in uncounted.items():
+        f["deleted_rows"] = per_file[fn]
+    for f in d["fragments"]:
+        f["stats"] = {c: st for c, st in f.get("stats", {}).items() if c not in shadowed}
+    for desc in d.get("indexes", {}).values():
+        desc.setdefault("phys", desc["column"])
+        params = desc.setdefault("params", {})
+        if desc.get("path") and "id_col" not in params:
+            params["id_col"] = _default_id_col(
+                desc["kind"], d.get("row_ids", False), schema.fieldNames(), desc["column"]
+            )
+    d["format"] = FORMAT
+    return d
+
+
 def _nested_leaf_names(schema: StructType) -> set[str]:
     """The Parquet leaf name Spark's writer gives every leaf below a
     top-level column of ``schema``: a struct field's own name, a list's
@@ -654,8 +708,7 @@ class _Txn:
     added: list[Fragment] = field(default_factory=list)
     removed_ids: set[int] = field(default_factory=set)
     new_deletes: dict[int, list[str]] = field(default_factory=dict)
-    # fragment id -> rows its new_deletes delete (absent: unknown, e.g. a
-    # stage written before the count was kept)
+    # fragment id -> rows its new_deletes delete
     deleted_rows: dict[int, int] = field(default_factory=dict)
     schema_json: str | None = None
     column_defaults: dict[str, str] | None = None
@@ -763,7 +816,10 @@ class Dataset:
         return max(vs, default=0)
 
     def _load(self, version: int) -> Manifest:
-        return Manifest.from_json(self._store.get(self._manifest_path(version)).decode())
+        d = json.loads(self._store.get(self._manifest_path(version)).decode())
+        if d.get("format", 1) != FORMAT:
+            d = _upgrade_manifest(d, self.path)
+        return Manifest.from_dict(d)
 
     # --------------------------------------------------------- construction
     @classmethod
@@ -1359,14 +1415,10 @@ class Dataset:
                 if f.id in txn.removed_ids:
                     continue
                 if f.id in txn.new_deletes:
-                    n = txn.deleted_rows.get(f.id)
                     f = replace(
                         f,
                         deletion_files=list(f.deletion_files) + txn.new_deletes[f.id],
-                        deleted_rows=(
-                            None if n is None or f.deleted_rows is None
-                            else f.deleted_rows + n
-                        ),
+                        deleted_rows=f.deleted_rows + txn.deleted_rows[f.id],
                     )
                 fragments.append(f)
             added = list(txn.added)
@@ -1444,9 +1496,9 @@ class Dataset:
             bitmap_cols = sorted(set(bitmap_cols) | {txn.bitmap_add})
         if dropped_desc is not None and dropped_desc.get("kind") in ("bitmap", "bloom"):
             kind = dropped_desc["kind"]
-            col = dropped_desc.get("phys") or dropped_desc.get("column")
+            col = dropped_desc["phys"]
             still_covered = any(
-                d.get("kind") == kind and (d.get("phys") or d.get("column")) == col
+                d.get("kind") == kind and d["phys"] == col
                 for d in indexes.values()
             )
             if not still_covered:
@@ -1583,17 +1635,15 @@ class Dataset:
 
     def _zone(self, filters) -> list[tuple[str, str, Any]]:
         """The conjuncts of ``filters`` that footer stats may prune by, on
-        stored column names. A column a nested leaf is named after never
-        prunes: a fragment written before _collect_stats keyed stats by
-        path may hold the leaf's min/max under its name. A literal prunes
-        only a column whose stats it orders with as Spark compares them: a
-        number an integral or floating column, a string a string column, a
-        date or 'YYYY-MM-DD' string a date column, and a datetime or a
-        zone-less ISO date-time string a timestamp column, as a datetime
-        in the session time zone (TIMESTAMP) or none (TIMESTAMP_NTZ): the
-        ISO text of a timestamp's bound orders unlike its SQL text. Any
-        other pair (a string compared with a number, say) would compare
-        after a cast the stats do not model."""
+        stored column names. A literal prunes only a column whose stats it
+        orders with as Spark compares them: a number an integral or
+        floating column, a string a string column, a date or 'YYYY-MM-DD'
+        string a date column, and a datetime or a zone-less ISO date-time
+        string a timestamp column, as a datetime in the session time zone
+        (TIMESTAMP) or none (TIMESTAMP_NTZ): the ISO text of a timestamp's
+        bound orders unlike its SQL text. Any other pair (a string compared
+        with a number, say) would compare after a cast the stats do not
+        model."""
         from zoneinfo import ZoneInfo
 
         from pyspark.sql.types import (
@@ -1633,10 +1683,9 @@ class Dataset:
         if not filters:
             return []
         types = {f.name: f.dataType for f in self.schema.fields}
-        shadowed = _nested_leaf_names(self.schema)
         out = []
         for c, op, v in filters:
-            if c not in types or self._phys(c) in shadowed:
+            if c not in types:
                 continue
             keys = [key(types[c], x) for x in (v if op == "in" else [v])]
             if None not in keys:
@@ -1776,8 +1825,7 @@ class Dataset:
             # id column is the stable row id (the SQL-face default).
             # _routing_usable is weaker than index_fresh: delete-only and
             # compaction histories keep routing sound (superset probes)
-            id_col = desc.get("params", {}).get("id_col", _ROWID)
-            if id_col != _ROWID:
+            if desc["params"]["id_col"] != _ROWID:
                 note(name, desc, reason="id column is not the stable row id")
                 continue
             if not self._routing_usable(name):
@@ -1794,7 +1842,7 @@ class Dataset:
                 # (built-time; the pending tail is added conservatively)
                 vals = None
                 for col, op, val in filters:
-                    if self._phys(col) != desc.get("phys", desc.get("column")):
+                    if self._phys(col) != desc["phys"]:
                         continue
                     if op == "=":
                         s = {val}
@@ -1828,7 +1876,7 @@ class Dataset:
                 in_vals = None
                 bounded = False
                 for col, op, val in filters:
-                    if self._phys(col) != desc.get("phys", desc.get("column")):
+                    if self._phys(col) != desc["phys"]:
                         continue
                     clo, chi = _conjunct_bounds(op, val)
                     if clo is _NO_BOUNDS:
@@ -2772,30 +2820,6 @@ class Dataset:
         finally:
             hits.unpersist()
 
-    def _deleted_counts(self, frags: list[Fragment]) -> dict[int, int]:
-        """Rows each fragment's sidecars delete: the manifest's count, or,
-        for fragments committed before the count was kept, one distributed
-        pass over just their sidecars."""
-        out = {f.id: f.deleted_rows for f in frags if f.deleted_rows is not None}
-        unknown = {os.path.basename(f.path): f.id for f in frags if f.deleted_rows is None}
-        if unknown:
-            sidecars = sorted(
-                {d for f in frags if f.deleted_rows is None for d in f.deletion_files}
-            )
-            dels = self.spark.read.schema(_DELETES_SCHEMA).parquet(
-                *[os.path.join(self.path, d) for d in sidecars]
-            )
-            with driver_sized(self.spark):
-                rows = (
-                    dels.filter(F.col("file").isin(list(unknown)))
-                    .groupBy("file")
-                    .agg(F.count_distinct("pos").alias("cnt"))
-                    .collect()
-                )
-            out.update({fid: 0 for fid in unknown.values()})
-            out.update({unknown[r["file"]]: r["cnt"] for r in rows})
-        return out
-
     def _plan_delete(
         self, m: Manifest, hits: DataFrame | list[tuple[str, int]]
     ) -> tuple[set[int], dict[int, list[str]], dict[int, int]] | None:
@@ -2826,9 +2850,8 @@ class Dataset:
         by_name = {os.path.basename(f.path): f for f in m.fragments}
         hit = {fn: by_name[fn] for fn in per_file}
         # live rows from the manifest's deleted-row counts: no sidecar reads
-        deleted = self._deleted_counts(list(hit.values()))
         dead_ids = {
-            f.id for fn, f in hit.items() if per_file[fn] >= f.rows - deleted[f.id]
+            f.id for fn, f in hit.items() if per_file[fn] >= f.rows - f.deleted_rows
         }
         partial = {fn for fn, f in hit.items() if f.id not in dead_ids}
         names: list[str] = []
@@ -3591,11 +3614,10 @@ class Dataset:
         # a fragment is also rewritten, alone if no bin took it, once
         # _REWRITE_DELETED_FRAC of its rows are deleted (materializing them)
         binned = {f.id for b in bins for f in b}
-        deleted = self._deleted_counts([f for f in m.fragments if f.deletion_files])
         bins += [
             [f] for f in m.fragments
             if f.id not in binned
-            and deleted.get(f.id, 0) >= _REWRITE_DELETED_FRAC * f.rows
+            and f.deleted_rows >= _REWRITE_DELETED_FRAC * f.rows
         ]
         if not bins:
             return self
@@ -4036,31 +4058,15 @@ class Dataset:
             rel = os.path.join("_indexes", f"{name}_{uuid.uuid4().hex[:12]}")
             desc["path"] = rel
             full = os.path.join(self.path, rel)
-            id_col = params.pop("id_col", None)
+            id_col = params.pop("id_col", None) or _default_id_col(
+                kind, m.row_ids, self.schema.fieldNames(), column
+            )
             if id_col is None:
-                # the SQL face (CREATE INDEX ... USING kind (col)) has no
-                # id_col parameter: prefer the conventional name, else the
-                # first non-indexed column (tables have a leading key here)
-                names = [f.name for f in self.schema.fields]
-                if kind in ("btree", "rtree", "bitmap") and m.row_ids:
-                    # scalar/spatial probes return row ids for take_rows —
-                    # the reference contract (Search -> []uint64 row IDs)
-                    id_col = _ROWID
-                else:
-                    conventional = "doc_id" if kind == "fts" else "vec_id"
-                    # compare against the individual indexed columns —
-                    # ``column`` is a comma-joined pair for rtree, and a
-                    # coordinate column must never become the index id
-                    indexed = {c.strip() for c in column.split(",")}
-                    id_col = conventional if conventional in names else next(
-                        (n for n in names if n not in indexed), None
-                    )
-                    if id_col is None:
-                        raise ValueError(
-                            f"create_index({name!r}): no non-indexed column "
-                            "to use as the id; pass id_col= explicitly or "
-                            "create the dataset with row_ids=True"
-                        )
+                raise ValueError(
+                    f"create_index({name!r}): no non-indexed column "
+                    "to use as the id; pass id_col= explicitly or "
+                    "create the dataset with row_ids=True"
+                )
             # persist the RESOLVED id column (caller-passed or fallback):
             # refresh_index must insert new rows under the same id namespace
             # the build used — re-deriving the fallback there risks a silent
@@ -4266,23 +4272,7 @@ class Dataset:
                 f"refresh_index({name!r}): intermediate manifests vacuumed; "
                 "rebuild with drop_index + create_index"
             )
-        id_col = desc.get("params", {}).get("id_col")
-        if id_col is None:
-            # legacy descriptor (created before id_col was persisted):
-            # mirror create_index's fallback chain EXACTLY — _ROWID only
-            # for the scalar/spatial kinds on row_ids tables, else the
-            # conventional name / first non-indexed column. A different
-            # chain here would insert new rows under a different id
-            # namespace than the build used (silent mixed-id index).
-            if kind in ("btree", "rtree", "bitmap") and self.manifest.row_ids:
-                id_col = _ROWID
-            else:
-                names = [f.name for f in self.schema.fields]
-                conventional = "doc_id" if kind == "fts" else "vec_id"
-                indexed = {c.strip() for c in desc["column"].split(",")}
-                id_col = conventional if conventional in names else next(
-                    (n for n in names if n not in indexed), None
-                )
+        id_col = desc["params"]["id_col"]
         if not (kind in ("btree", "rtree", "bitmap") and id_col == _ROWID):
             ops = {
                 self._load(v).operation for v in range(base_v + 1, self.version + 1)
@@ -4888,9 +4878,7 @@ class Dataset:
                 new_deletes={
                     int(fid): names for fid, names in payload["new_deletes"].items()
                 },
-                deleted_rows={
-                    int(fid): n for fid, n in payload.get("deleted_rows", {}).items()
-                },
+                deleted_rows={int(fid): n for fid, n in payload["deleted_rows"].items()},
                 stream_commit=dedup,
             )
         else:

@@ -18,6 +18,8 @@ import time
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
+FORMAT = 2  # the format of every manifest written now
+
 
 @dataclass
 class Fragment:
@@ -30,9 +32,8 @@ class Fragment:
     # deletion-vector sidecars (relative paths), applied merge-on-read
     deletion_files: list[str] = field(default_factory=list)
     # rows of this file the sidecars delete (reference DeletionFile
-    # num_deleted_rows); None when unknown (written before the count was
-    # kept) -- readers then count the sidecars themselves
-    deleted_rows: int | None = 0
+    # num_deleted_rows)
+    deleted_rows: int = 0
     # stable-row-id segment descriptor (meaningful only when the manifest
     # has row_ids). The two segment kinds mirror the reference's
     # RowIdSequence (pkg/storage2/rowids.go:11-201):
@@ -48,6 +49,11 @@ class Fragment:
 
 @dataclass
 class Manifest:
+    """One version of the table. ``format`` is FORMAT on every manifest
+    written now; a stored manifest without it is format 1, which
+    ``Dataset._load`` brings up to format 2 in memory, before any reader
+    sees it, with one function: ``dataset._upgrade_manifest``."""
+
     version: int
     parent: int | None
     operation: str  # create|append|overwrite|delete|update|merge|rewrite|schema
@@ -93,17 +99,14 @@ class Manifest:
     # future — stores it, so a rename never rewrites data and old versions
     # keep reading under time travel. Absent entries mean logical==physical.
     column_mapping: dict[str, str] = field(default_factory=dict)
+    format: int = FORMAT
 
     def to_json(self) -> str:
         d = asdict(self)
         return json.dumps(d, indent=1, sort_keys=True)
 
     @staticmethod
-    def from_json(s: str) -> "Manifest":
-        d = json.loads(s)
-        for f in d["fragments"]:
-            if "deleted_rows" not in f and f.get("deletion_files"):
-                f["deleted_rows"] = None
+    def from_dict(d: dict) -> "Manifest":
         d["fragments"] = [Fragment(**f) for f in d["fragments"]]
         return Manifest(**d)
 

@@ -2010,7 +2010,10 @@ class Engine:
         if p.has_paren():
             p.paren_body()
         values = p.peek_word() == "VALUES"
-        self._register_views()
+        if not values:
+            # Spark refuses a VALUES list whose subquery reads a relation,
+            # so only a query source reads the table views
+            self._register_views()
         # a query is read in the dialect (time travel, "x" names a column),
         # as a top-level query is; VALUES as written ("x" is a string)
         plan = self._parse(text if values else self._prep_query(text), "InsertIntoStatement")

@@ -80,3 +80,47 @@ def compare(spark_df, oracle_pdf: pd.DataFrame, name: str = "") -> None:
                 raise AssertionError(
                     f"{name}.{c}: mismatch at row {bad}: {g[bad]!r} != {w[bad]!r}"
                 )
+
+
+def to_format1(
+    ds_path: str,
+    leaf_stats: bool = False,
+    uncount: bool = False,
+    drop_id_col: bool = False,
+) -> int:
+    """Rewrite the dataset at ``ds_path``'s latest manifest on disk as a
+    format-1 manifest (one written before the ``format`` field), and
+    return its version. ``leaf_stats`` keys each fragment's footer stats
+    by Parquet leaf name, as the old writer did, so a nested leaf's range
+    overwrites a top-level column's of the same name; ``uncount`` drops
+    every fragment's ``deleted_rows``; ``drop_id_col`` drops every index
+    descriptor's ``params.id_col``. Handles opened before the rewrite keep
+    the manifest they loaded."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    vdir = os.path.join(ds_path, "_versions")
+    name = max(f for f in os.listdir(vdir) if f.endswith(".manifest.json"))
+    with open(os.path.join(vdir, name)) as fh:
+        d = json.load(fh)
+    del d["format"]
+    for f in d["fragments"]:
+        if leaf_stats:
+            md = pq.ParquetFile(os.path.join(ds_path, f["path"])).metadata
+            for ci in range(md.num_columns):
+                sts = [md.row_group(g).column(ci).statistics for g in range(md.num_row_groups)]
+                if sts and all(st is not None and st.has_min_max for st in sts):
+                    f["stats"][md.schema.column(ci).name] = {
+                        "min": min(st.min for st in sts),
+                        "max": max(st.max for st in sts),
+                        "nulls": sum(st.null_count for st in sts),
+                    }
+        if uncount:
+            del f["deleted_rows"]
+    if drop_id_col:
+        for desc in d["indexes"].values():
+            desc["params"].pop("id_col", None)
+    with open(os.path.join(vdir, name), "w") as fh:
+        json.dump(d, fh)
+    return d["version"]

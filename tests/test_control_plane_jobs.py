@@ -248,6 +248,23 @@ def test_statement_sized_sql_read_runs_no_job(spark, eng):
     assert "FileScan" in plan.executedPlan().toString()
 
 
+def test_insert_values_registers_no_views(spark, eng, monkeypatch):
+    # a VALUES list reads no table (Spark refuses a subquery over one
+    # there); a query source, such as a scalar subquery, reads the views
+    eng.sql("CREATE TABLE iv (k BIGINT, v BIGINT)")
+    eng.sql("INSERT INTO iv VALUES (1, 10)")
+    calls = []
+    real = eng._register_views
+    monkeypatch.setattr(eng, "_register_views", lambda: calls.append(1) or real())
+    eng.sql("INSERT INTO iv VALUES (2, 20)")
+    assert calls == []
+    eng.sql("INSERT INTO iv SELECT 3, (SELECT MAX(v) FROM iv) + 1")
+    assert calls == [1]
+    assert sorted(map(tuple, eng.sql("SELECT * FROM iv").collect())) == [
+        (1, 10), (2, 20), (3, 21)
+    ]
+
+
 def test_optimize_output_has_bounded_row_groups(spark, eng):
     import pyarrow.parquet as pq
 

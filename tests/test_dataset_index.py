@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from plan_spark.dataset import ConflictError, Dataset
+from tests.conftest import to_format1
 
 
 @pytest.fixture()
@@ -212,17 +213,19 @@ def test_refresh_fts_on_rowids_table_keeps_id_namespace(spark, tmp_ds):
 
 
 def test_refresh_legacy_descriptor_rederives_create_fallback(spark, tmp_ds):
-    """Descriptors written before id_col was persisted: refresh_index must
-    re-derive with create_index's EXACT chain (_ROWID only for scalar/
-    spatial kinds on row_ids tables — never for fts/vector kinds)."""
+    """Descriptors of a format-1 manifest may lack id_col: opening the table
+    fills it with create_index's EXACT default (_ROWID only for scalar/
+    spatial kinds on row_ids tables — never for fts/vector kinds), and
+    refresh_index inserts under it."""
     docs = spark.createDataFrame(
         [(9001, "alpha words here"), (9002, "beta words there")],
         "doc_id long, text string",
     ).coalesce(1)
     ds = Dataset.create(spark, tmp_ds, docs, row_ids=True)
     ds.create_index("fi", kind="fts", column="text")
-    # simulate a legacy manifest: the resolved id_col was never recorded
-    ds.manifest.indexes["fi"]["params"].pop("id_col")
+    to_format1(tmp_ds, drop_id_col=True)
+    ds = Dataset.open(spark, tmp_ds)
+    assert ds.manifest.indexes["fi"]["params"]["id_col"] == "doc_id"
     ds.append(
         spark.createDataFrame(
             [(9003, "gamma zebraword unique")], "doc_id long, text string"

@@ -12,6 +12,7 @@ NaN out, Spark's order it above every number."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import shutil
 from decimal import Decimal
@@ -26,6 +27,7 @@ from pyspark.sql.types import StructType
 import plan_spark.dataset.dataset as dsmod
 from plan_spark.dataset import Dataset
 from plan_spark.engine import Engine
+from tests.conftest import to_format1
 
 
 def _n_jobs(spark) -> int:
@@ -210,36 +212,55 @@ def test_nested_field_stats_do_not_shadow_top_level_column(spark, eng, writer):
     assert got == [(20, 200)]
 
 
-def test_legacy_nested_stats_do_not_prune_shadowed_column(spark, eng, monkeypatch):
-    # a fragment written before stats were keyed by path holds s.k's range
-    # under "k"; pruning must not trust it while a nested leaf is named k
-    real = dsmod._collect_stats
-
-    def legacy(path, bitmap_columns=None):
-        rows, nbytes, stats = real(path, bitmap_columns)
-        md = pq.ParquetFile(path).metadata
-        for ci in range(md.num_columns):
-            st = md.row_group(0).column(ci).statistics
-            if st is not None and st.has_min_max:
-                stats[md.schema.column(ci).name] = {
-                    "min": st.min, "max": st.max, "nulls": st.null_count
-                }
-        return rows, nbytes, stats
-
+def test_legacy_nested_stats_do_not_prune_shadowed_column(spark, eng):
+    # a format-1 fragment may hold s.k's range under "k"; opening the table
+    # drops every stats entry named like a nested leaf, so k never prunes
+    # by it, and the next commit stores the upgraded manifest
     eng.sql("CREATE TABLE t (k BIGINT, s STRUCT<k: BIGINT>, m MAP<STRING, BIGINT>)")
-    monkeypatch.setattr(dsmod, "_collect_stats", legacy)
     eng.sql(
         "INSERT INTO t VALUES (1, named_struct('k', 100), map('a', 7)), "
         "(2, named_struct('k', 200), map('b', 8))"
     )
-    monkeypatch.undo()
-    (f,) = eng.dataset("t").manifest.fragments
-    assert f.stats["k"]["min"] == 100  # the shadowed stats of the old writer
-    assert dsmod._nested_leaf_names(eng.dataset("t").schema) == {"k", "key", "value"}
+    path = eng.dataset("t").path
+    v = to_format1(path, leaf_stats=True)
+    with open(eng.dataset("t")._manifest_path(v)) as fh:
+        (stored,) = json.load(fh)["fragments"]
+    assert stored["stats"]["k"]["min"] == 100  # the shadowed stats of the old writer
+    assert stored["stats"]["key"]["min"] == "a"
+    ds = eng.dataset("t")
+    assert dsmod._nested_leaf_names(ds.schema) == {"k", "key", "value"}
+    (f,) = ds.manifest.fragments
+    assert ds.manifest.format == 2 and not {"k", "key", "value"} & set(f.stats)
     eng.sql("DELETE FROM t WHERE k = 1")
     eng.sql("UPDATE t SET k = 20 WHERE k = 2")
     got = [(r.k, r.s.k) for r in eng.dataset("t").to_df().collect()]
     assert got == [(20, 200)]
+    with open(eng.dataset("t")._manifest_path(v + 1)) as fh:
+        assert json.load(fh)["format"] == 2
+
+
+def test_top_level_columns_named_like_nested_leaves_prune(spark, eng):
+    # key and value beside a MAP, k beside STRUCT<k>: fragments written
+    # with path-keyed stats prune on them, so a point read over more rows
+    # than the driver gate keeps one fragment and reads it on the driver
+    eng.sql("CREATE TABLE t (key BIGINT, k BIGINT, m MAP<STRING, BIGINT>, s STRUCT<k: BIGINT>)")
+    n = 4000
+    for i in range(3):
+        eng.sql(
+            f"INSERT INTO t SELECT id, id + 100000, map('a', -id), named_struct('k', -id) "
+            f"FROM range({i * n}, {(i + 1) * n}, 1, 1)"
+        )
+    assert 3 * n > dsmod._IN_LIST_MAX
+    ds = eng.dataset("t")
+    full = ds.to_df()
+    for pred in ("key = 5000", "k = 109000"):
+        sel, pruned = ds.plan_scan(pred, use_indexes=False)
+        assert (len(sel), len(pruned)) == (1, 2), pred
+        (scan,) = eng.sql(f"EXPLAIN SCAN SELECT * FROM t WHERE {pred}").collect()[:1]
+        assert scan.reason.endswith("; driver scan"), scan.reason
+        rows = []
+        assert _jobs_for(spark, lambda: rows.extend(eng.sql(f"SELECT * FROM t WHERE {pred}").collect())) == 0
+        assert rows == full.filter(pred).collect() and len(rows) == 1
 
 
 _NAN = "CAST('NaN' AS DOUBLE)"
@@ -319,6 +340,21 @@ def test_values_insert_is_one_driver_written_fragment(spark, eng):
     eng.dataset("v").append(empty)
     assert len(eng.dataset("v").manifest.fragments) == 1
     assert [Row(k=5, s="s5")] == eng.sql("SELECT * FROM v WHERE k = 5").collect()
+    # pyarrow's footer records no Spark metadata, so no rebase mode: an
+    # ancient date and timestamp read back as written through the driver
+    # scan and through Spark's scan (Spark 4 reads it CORRECTED)
+    eng.sql("CREATE TABLE old (k BIGINT, d DATE, t TIMESTAMP)")
+    lits = "DATE '1000-01-01', TIMESTAMP '1000-01-01 00:00:00'"
+    assert _jobs_for(spark, lambda: eng.sql(f"INSERT INTO old VALUES (1, {lits})")) == 0
+    (f,) = eng.dataset("old").manifest.fragments
+    assert pq.ParquetFile(os.path.join(eng.dataset("old").path, f.path)).metadata.metadata is None
+    want = [(1, *spark.sql(f"SELECT {lits}").first())]
+    rows = []
+    assert _jobs_for(spark, lambda: rows.extend(eng.sql("SELECT * FROM old WHERE k = 1").collect())) == 0
+    assert [tuple(r) for r in rows] == want and want[0][1] == dt.date(1000, 1, 1)
+    spark_read = eng.sql("SELECT * FROM old WHERE k = 1 ORDER BY k")
+    assert "FileScan" in spark_read._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in spark_read.collect()] == want
 
 
 def test_local_relation_over_statement_size_keeps_spark_writer(spark, tmp_path, monkeypatch):
