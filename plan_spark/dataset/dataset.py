@@ -453,13 +453,15 @@ def _upgrade_manifest(d: dict, root: str) -> dict:
       name (``key``/``value`` of a map, ``element`` of an array, a struct
       field's own name), so each stats entry named like a nested leaf of
       the version's schema goes: that column does not prune there;
-    - a fragment without ``deleted_rows`` gets the count of distinct
-      positions its deletion sidecars hold, read on the driver;
+    - a fragment whose ``deleted_rows`` is absent or null gets the count of
+      distinct positions its deletion sidecars hold, read on the driver;
     - an index descriptor without ``phys`` gets its column, and one with
       files but no ``params.id_col`` gets create_index's default."""
     schema = StructType.fromJson(json.loads(d["schema_json"]))
     shadowed = _nested_leaf_names(schema)
-    uncounted = {os.path.basename(f["path"]): f for f in d["fragments"] if "deleted_rows" not in f}
+    uncounted = {
+        os.path.basename(f["path"]): f for f in d["fragments"] if f.get("deleted_rows") is None
+    }
     dead = set()
     for side in {x for f in uncounted.values() for x in f.get("deletion_files", [])}:
         t = _open_parquet(os.path.join(root, side))[0].read(columns=["file", "pos"])

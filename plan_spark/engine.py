@@ -2010,19 +2010,22 @@ class Engine:
         if p.has_paren():
             p.paren_body()
         values = p.peek_word() == "VALUES"
-        if not values:
-            # Spark refuses a VALUES list whose subquery reads a relation,
-            # so only a query source reads the table views
-            self._register_views()
         # a query is read in the dialect (time travel, "x" names a column),
         # as a top-level query is; VALUES as written ("x" is a string)
         plan = self._parse(text if values else self._prep_query(text), "InsertIntoStatement")
         if plan.byName() or not plan.partitionSpec().isEmpty():
             raise ValueError(f"unsupported INSERT form: {s[:120]!r}")
+        src = plan.query()
+        if src.nodeName() not in ("LocalRelation", "UnresolvedInlineTable") or src.containsPattern(
+            self.spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION()
+        ):
+            # a bare VALUES list reads no table view unless a subquery in it
+            # does; a query, a VALUES-led set operation included, reads them
+            self._register_views()
         cols = _names(plan.userSpecifiedCols(), "INSERT columns") or None
         # the source runs as parsed (VALUES text can be long); VALUES is a
         # local relation, which lands as one fragment written by the driver
-        src = plan_frame(self.spark, plan.query())
+        src = plan_frame(self.spark, src)
         self.insert_df(name, self._reorder_for_insert(name, src, cols))
 
     def _stmt_copy(self, s: str) -> None:

@@ -85,15 +85,18 @@ def compare(spark_df, oracle_pdf: pd.DataFrame, name: str = "") -> None:
 def to_format1(
     ds_path: str,
     leaf_stats: bool = False,
-    uncount: bool = False,
+    uncount: str | None = None,
     drop_id_col: bool = False,
 ) -> int:
     """Rewrite the dataset at ``ds_path``'s latest manifest on disk as a
     format-1 manifest (one written before the ``format`` field), and
     return its version. ``leaf_stats`` keys each fragment's footer stats
     by Parquet leaf name, as the old writer did, so a nested leaf's range
-    overwrites a top-level column's of the same name; ``uncount`` drops
-    every fragment's ``deleted_rows``; ``drop_id_col`` drops every index
+    overwrites a top-level column's of the same name; ``uncount`` leaves
+    every fragment's ``deleted_rows`` uncounted: ``"absent"`` drops the
+    key, as a table never committed to since had it, and ``"null"`` stores
+    null, as the old reader wrote a missing count back on its next
+    commit; ``drop_id_col`` drops every index
     descriptor's ``params.id_col``. Handles opened before the rewrite keep
     the manifest they loaded."""
     import json
@@ -116,8 +119,10 @@ def to_format1(
                         "max": max(st.max for st in sts),
                         "nulls": sum(st.null_count for st in sts),
                     }
-        if uncount:
+        if uncount == "absent":
             del f["deleted_rows"]
+        elif uncount == "null":
+            f["deleted_rows"] = None
     if drop_id_col:
         for desc in d["indexes"].values():
             desc["params"].pop("id_col", None)

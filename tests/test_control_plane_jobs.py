@@ -263,6 +263,16 @@ def test_insert_values_registers_no_views(spark, eng, monkeypatch):
     assert sorted(map(tuple, eng.sql("SELECT * FROM iv").collect())) == [
         (1, 10), (2, 20), (3, 21)
     ]
+    # a VALUES-led set operation is a query: it reads src's current
+    # version, though src's last commit registered no view
+    eng.sql("CREATE TABLE src (k BIGINT, v BIGINT)")
+    eng.sql("INSERT INTO src VALUES (4, 40)")
+    eng._register_views()
+    eng.sql("INSERT INTO src VALUES (5, 50)")
+    eng.sql("INSERT INTO iv VALUES (0, 0) UNION ALL SELECT k, v FROM src")
+    assert sorted(map(tuple, eng.sql("SELECT * FROM iv WHERE k = 0 OR k > 3").collect())) == [
+        (0, 0), (4, 40), (5, 50)
+    ]
 
 
 def test_optimize_output_has_bounded_row_groups(spark, eng):

@@ -49,13 +49,18 @@ def _stored(ds) -> dict:
         return json.load(fh)
 
 
-def test_format1_manifest_upgrades_on_load(spark, eng, tmp_path):
+@pytest.mark.parametrize("uncount", ["absent", "null"])
+def test_format1_manifest_upgrades_on_load(spark, eng, tmp_path, uncount):
     for name in ("t", "u"):
         _build(eng, name)
-    v1 = to_format1(eng.dataset("t").path, leaf_stats=True, uncount=True, drop_id_col=True)
+    v1 = to_format1(eng.dataset("t").path, leaf_stats=True, uncount=uncount, drop_id_col=True)
     stored = _stored(eng.dataset("t"))
     assert "format" not in stored
-    assert all("deleted_rows" not in f and f["stats"]["k"]["max"] < 0 for f in stored["fragments"])
+    assert all(
+        (uncount == "null") == ("deleted_rows" in f) and f.get("deleted_rows") is None
+        and f["stats"]["k"]["max"] < 0
+        for f in stored["fragments"]
+    )
     eng = Engine(spark, str(tmp_path / "db"))  # no view registered from before
 
     t, u = eng.dataset("t"), eng.dataset("u")
